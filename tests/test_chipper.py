@@ -2,6 +2,7 @@
 (/root/reference/zen3geo/tests/test_datapipes_xbatcher.py and
 docs/chipping.md:137-184)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from zen3geo_spark.operators.chipper import assign_chips, chip_grid, chip_stats
@@ -120,6 +121,12 @@ def test_chip_grid_nd_overlap_and_drop(spark):
                      overlaps={"y": 256, "x": 256}).collect()
     # band: floor((3-2)/2)+1 = 1; y: floor((1024-512)/256)+1 = 3; x: 5
     assert len(g) == 1 * 3 * 5
+
+    # the 2-D path shares the N-D overlap check: a zero stride fails at
+    # call time, not as DIVIDE_BY_ZERO inside the first action
+    px = _scene_pixels(spark, 0, 1, 64, 64, 1.0)
+    with pytest.raises(ValueError):
+        assign_chips(px, meta, 64, 64, 64, 0)
 
 
 def test_to_graph_returns_plan(spark):

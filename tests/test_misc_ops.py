@@ -3,6 +3,8 @@
 import glob
 import os
 
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from zen3geo_spark.operators.multimodal import (
@@ -51,7 +53,7 @@ def test_checkpoint_resume(spark, tmp_path):
 
 
 def test_checkpoint_release_scoped_to_stage(spark, tmp_path):
-    """release_cache must drop only blocks created DURING the stage:
+    """The stage's block release must drop only blocks created DURING it:
     a caller-owned localCheckpoint-ed frame (truncated lineage — cannot
     recompute) has to stay usable after stage() completes."""
     outside = synth_pages(spark, 50).select("url").localCheckpoint(eager=True)
@@ -90,6 +92,71 @@ def test_checkpoint_partitioned_resume(spark, tmp_path):
     m = runner.metrics("bylang")
     assert len(m["partitions"]) == 5
     assert sum(p["rows"] for p in m["partitions"]) == 200
+    # a changed fingerprint replaces the partitioned data dir: the old
+    # 200 rows must not survive next to the new 20
+    out = runner.stage("bylang", "fp2",
+                       lambda: synth_pages(spark, 20).select("url", "lang"),
+                       partition_col="lang")
+    assert out.count() == 20
+    assert sum(p["rows"] for p in runner.metrics("bylang")["partitions"]) == 20
+
+
+def test_checkpoint_failed_rewrite_reruns(spark, tmp_path):
+    """A rewrite that fails mid-write must not leave the previous
+    manifest vouching for the emptied data dir: the next run under the
+    old fingerprint rebuilds instead of resuming nothing."""
+    runner = CheckpointRunner(spark, str(tmp_path / "ckpt4"))
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return synth_pages(spark, 100).select("url", "lang")
+
+    @F.udf("string")
+    def boom(url):
+        raise RuntimeError("build failed")
+
+    assert runner.stage("s", "fp1", build).count() == 100
+    with pytest.raises(PythonException, match="build failed"):
+        runner.stage("s", "fp2", lambda: synth_pages(spark, 100).select(
+            boom("url").alias("url"), "lang"))
+    out = runner.stage("s", "fp1", build)
+    assert calls["n"] == 2
+    assert out.count() == 100
+
+
+def _jobs_in_group(spark, group, action) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_stage_runs_no_extra_jobs(spark, tmp_path):
+    """A fresh stage costs what a plain write plus a plain read of the
+    written table cost: the manifest's row counts add no Spark job."""
+    inp = synth_pages(spark, 400).select("url", "lang").localCheckpoint(eager=True)
+    runner = CheckpointRunner(spark, str(tmp_path / "ckpt5"))
+    for part in (None, "lang"):
+        plain_dir = str(tmp_path / f"plain_{part}")
+
+        def plain():
+            w = inp.write.mode("overwrite")
+            (w.partitionBy(part) if part else w).parquet(plain_dir)
+            spark.read.parquet(plain_dir)
+
+        n_plain = _jobs_in_group(spark, f"plain_{part}", plain)
+        n_stage = _jobs_in_group(
+            spark, f"stage_{part}",
+            lambda: runner.stage(f"s_{part}", "fp1", lambda: inp, partition_col=part))
+        assert n_stage == n_plain, (part, n_stage, n_plain)
+        m = runner.metrics(f"s_{part}")
+        assert sum(p["rows"] for p in m["partitions"]) == 400
+    inp.unpersist()
 
 
 def test_streaming_available_now_incremental(spark, tmp_path):

@@ -1,9 +1,9 @@
 """Checkpointed end-to-end pipeline, runnable via spark-submit --py-files.
 
 The north rule's operational shape (BASELINE.json): every stage
-checkpoints with per-partition lineage + metrics so runs resume mid-job,
-and the whole pipeline ships as ``spark-submit --py-files zen3geo_spark.zip
-tools/run_pipeline.py``.
+checkpoints with per-partition lineage + metrics so a rerun resumes
+from the last completed stage, and the whole pipeline ships as
+``spark-submit --py-files zen3geo_spark.zip tools/run_pipeline.py``.
 
     spark-submit --master 'local[8]' --py-files /path/zen3geo_spark.zip \
         tools/run_pipeline.py --pages synth:100000 --out /tmp/z3s_ckpt

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 # Deterministic geotag grammar used by the synthetic pages table and the
 # extractor. 6-decimal fixed point; the extractor must skip malformed tags.
 LAT_LON_PATTERN = r"lat=(-?\d+\.\d{6}) lon=(-?\d+\.\d{6})"
+# page id in the url; runs as Java regex (prefiltered path) and Python re
+URL_ID_PATTERN = r"/page/(\d+)"
 
 # engine tokens: integer division + string cast differ between engines
 _DIV = {"spark": " div ", "duckdb": " // "}
@@ -190,8 +192,7 @@ def geotag_extract_pandas(texts):
     return ext
 
 
-def extract_points_arrow(pages, url_id_pattern: str = r"/page/(\d+)",
-                         prefilter: bool = True):
+def extract_points_arrow(pages, prefilter: bool = True):
     """Arrow-vectorized scan→points: (url, text) → (point_id, lat_us,
     lon_us) via mapInPandas.
 
@@ -212,20 +213,6 @@ def extract_points_arrow(pages, url_id_pattern: str = r"/page/(\d+)",
     the whole extraction in pandas — same rows, kept as the
     parity/fallback kernel for sources whose tag grammar the JVM regexp
     can't express. No shuffle in either path.
-
-    Regex-dialect contract: with ``prefilter=True`` the patterns run in
-    JAVA regex (JVM ``regexp_extract``); with ``prefilter=False`` (and in
-    the pandas re-parse of the prefiltered tag) they run in PYTHON ``re``.
-    A caller-supplied ``url_id_pattern`` must therefore be valid AND
-    equivalent in both dialects: no Python-only syntax such as
-    ``(?P<name>...)`` (Java spells it ``(?<name>...)``), and beware that
-    ``\\d``/``\\w``/``\\s`` are Unicode-aware in Java but ASCII-oriented
-    in Python ``re`` on str for ``\\d`` digits — on non-ASCII text prefer
-    explicit classes like ``[0-9]``. The defaults satisfy this
-    (ASCII digits/dot/minus only). A pattern inexpressible in both
-    dialects should use ``prefilter=False`` to stay entirely in Python
-    ``re``; the pattern is validated against both engines up front so a
-    dialect mismatch fails at plan time, not mid-job on an executor.
     """
     import re as _re
 
@@ -233,23 +220,10 @@ def extract_points_arrow(pages, url_id_pattern: str = r"/page/(\d+)",
     import pandas as pd
 
     pat = _re.compile(LAT_LON_PATTERN)
-    idpat = _re.compile(url_id_pattern)  # Python-dialect check (both paths)
 
     if prefilter:
-        # Java-dialect check: the default path hands url_id_pattern to JVM
-        # regexp_extract, which would otherwise fail at runtime on the
-        # first executor task for Python-only syntax like (?P<name>...)
-        try:
-            jvm = pages.sparkSession._jvm
-            jvm.java.util.regex.Pattern.compile(url_id_pattern)
-        except Exception as e:  # py4j wraps PatternSyntaxException
-            raise ValueError(
-                f"url_id_pattern {url_id_pattern!r} is not valid Java "
-                "regex (prefilter=True runs it in JVM regexp_extract); "
-                "use dialect-portable syntax or pass prefilter=False: "
-                f"{e}") from None
         pre = pages.select(
-            F.regexp_extract("url", url_id_pattern, 1).try_cast("long")
+            F.regexp_extract("url", URL_ID_PATTERN, 1).try_cast("long")
             .alias("point_id"),
             F.regexp_extract("text", LAT_LON_PATTERN, 0).alias("tag"),
         ).filter((F.col("tag") != "") & F.col("point_id").isNotNull())
@@ -269,6 +243,8 @@ def extract_points_arrow(pages, url_id_pattern: str = r"/page/(\d+)",
 
         return pre.mapInPandas(
             run_tag, schema="point_id long, lat_us long, lon_us long")
+
+    idpat = _re.compile(URL_ID_PATTERN)
 
     def run(batches):
         for pdf in batches:
@@ -477,54 +453,6 @@ def crs_forward_np(crs: str):
         return lambda lat, lon: tmerc_np(lat, lon, lon0)
     raise NotImplementedError(f"unsupported CRS {crs!r} (CRS84/4326, "
                               "EPSG:3857, EPSG:326xx supported)")
-
-
-def tmerc_sql(lat_deg: str, lon_deg: str, lon0: float, which: str,
-              engine: str = "duckdb") -> str:
-    """Engine-SQL twin of :func:`tmerc_np` (``which`` = 'e' or 'n').
-    Hyperbolics spelled via exp/ln so Spark and DuckDB share one
-    formulation; agreement with numpy is to ~1e-9 m (libm ulp) — oracle
-    queries round reprojected coordinates to 4 decimals (0.1 mm)."""
-    lat = f"radians({lat_deg})"
-    lam = f"radians(({lon_deg}) - ({lon0!r}))"
-    s = f"sin({lat})"
-    ath = f"(0.5 * ln((1.0 + {s}) / (1.0 - {s})))"
-    athe = f"(0.5 * ln((1.0 + {TM_E!r} * {s}) / (1.0 - {TM_E!r} * {s})))"
-    u = f"({ath} - {TM_E!r} * {athe})"
-    t = f"((exp({u}) - exp(-{u})) / 2.0)"
-    xi_p = f"atan2({t}, cos({lam}))"
-    sl = f"(sin({lam}) / sqrt({t} * {t} + cos({lam}) * cos({lam})))"
-    eta_p = f"ln({sl} + sqrt({sl} * {sl} + 1.0))"
-    if which == "n":
-        terms = [xi_p] + [
-            f"{aj!r} * sin({2 * j} * {xi_p}) * ((exp({2 * j} * {eta_p}) + exp(-({2 * j} * {eta_p}))) / 2.0)"
-            for j, aj in enumerate(TM_ALPHA, start=1)]
-        return f"({UTM_K0!r} * {TM_A!r} * ({' + '.join(terms)}))"
-    terms = [eta_p] + [
-        f"{aj!r} * cos({2 * j} * {xi_p}) * ((exp({2 * j} * {eta_p}) - exp(-({2 * j} * {eta_p}))) / 2.0)"
-        for j, aj in enumerate(TM_ALPHA, start=1)]
-    return f"({UTM_FE!r} + {UTM_K0!r} * {TM_A!r} * ({' + '.join(terms)}))"
-
-
-# ---------------------------------------------------------------------------
-# distances
-# ---------------------------------------------------------------------------
-
-def sq_euclidean_micro(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Squared planar distance in micro-degrees (bigint-exact for ranking)."""
-    dy = (lat1 - lat2).cast("long")
-    dx = (lon1 - lon2).cast("long")
-    return dy * dy + dx * dx
-
-
-def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Great-circle metres from degree columns (doubles)."""
-    r = 6371008.8
-    p1, p2 = F.radians(lat1), F.radians(lat2)
-    dp = F.radians(lat2 - lat1)
-    dl = F.radians(lon2 - lon1)
-    a = F.sin(dp / 2) ** 2 + F.cos(p1) * F.cos(p2) * F.sin(dl / 2) ** 2
-    return F.lit(2 * r) * F.asin(F.sqrt(a))
 
 
 # ---------------------------------------------------------------------------

@@ -31,16 +31,3 @@ def month_key(ts: Column) -> Column:
     """Month-boundary split key (FlatMapper on month boundaries ≙ explode
     by this key / groupBy it)."""
     return F.date_trunc("month", ts)
-
-
-def linear_to_decibel_sql(col: str, engine: str) -> str:
-    if engine == "spark":
-        return f"10.0 * log10(nullif({col}, 0.0))"
-    return f"10.0 * log(10, nullif({col}, 0.0))"
-
-
-def shift_longitude_sql(col: str, engine: str) -> str:
-    if engine == "spark":
-        return f"pmod({col} + 180.0, 360.0) - 180.0"
-    # DuckDB's % follows the dividend sign; emulate pmod
-    return f"((({col} + 180.0) % 360.0 + 360.0) % 360.0) - 180.0"

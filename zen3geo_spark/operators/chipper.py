@@ -29,78 +29,38 @@ def _n_chips(size: Column, window: int, stride: int) -> Column:
 
 def chip_grid(scenes_meta: DataFrame, window_y: int, window_x: int,
               overlap_y: int = 0, overlap_x: int = 0) -> DataFrame:
-    """Per-scene chip index table from scene metadata (scene_id, n_y, n_x).
-
-    Output: (scene_id, chip_id, chip_y, chip_x, y0, x0) with
-    chip_id = chip_y * n_chips_x + chip_x (row-major, matching xbatcher's
-    nested y-then-x generator order, xbatcher.py:105-110).
-    """
-    sy, sx = window_y - overlap_y, window_x - overlap_x
-    if sy <= 0 or sx <= 0:
-        raise ValueError("input_overlap must be smaller than input_dims")
-    g = scenes_meta.select(
-        "*",
-        _n_chips(F.col("n_y"), window_y, sy).alias("n_chips_y"),
-        _n_chips(F.col("n_x"), window_x, sx).alias("n_chips_x"),
-    )
-    g = g.select(
-        "*", F.explode(F.sequence(F.lit(0), F.col("n_chips_y") - 1)).alias("chip_y")
-    ).select(
-        "*", F.explode(F.sequence(F.lit(0), F.col("n_chips_x") - 1)).alias("chip_x")
-    )
-    return g.select(
-        "scene_id",
-        (F.col("chip_y") * F.col("n_chips_x") + F.col("chip_x")).cast("long").alias("chip_id"),
-        "chip_y", "chip_x",
-        (F.col("chip_y") * F.lit(sy)).alias("y0"),
-        (F.col("chip_x") * F.lit(sx)).alias("x0"),
-        "n_chips_y", "n_chips_x",
-    )
+    """2-D :func:`chip_grid_nd` over (y, x): (scene_id, chip_id, chip_y,
+    y0, chip_x, x0, n_chips_y, n_chips_x) from scene metadata (scene_id,
+    n_y, n_x), chip_id = chip_y * n_chips_x + chip_x (row-major, matching
+    xbatcher's nested y-then-x generator order, xbatcher.py:105-110)."""
+    return chip_grid_nd(scenes_meta, {"y": window_y, "x": window_x},
+                        {"y": overlap_y, "x": overlap_x})
 
 
 def assign_chips(pixels: DataFrame, scenes_meta: DataFrame, window_y: int,
                  window_x: int, overlap_y: int = 0, overlap_x: int = 0) -> DataFrame:
-    """Tag each long-form pixel row with the chip(s) containing it.
+    """2-D :func:`assign_chips_nd` over (y_idx, x_idx). Non-overlapping:
+    pure floor division, NO join fan-out and NO shuffle (chip assignment
+    rides along with the scan). Overlapping: each pixel explodes into its
+    ≤ceil(window/stride)² candidate chips. Pixels in a dropped trailing
+    partial window get no chip (filtered)."""
+    return assign_chips_nd(pixels, scenes_meta, {"y": window_y, "x": window_x},
+                           {"y": overlap_y, "x": overlap_x})
 
-    Non-overlapping: pure floor division, NO join and NO shuffle (the common
-    100 TB path — chip assignment rides along with the scan). Overlapping:
-    each pixel explodes into its ≤ceil(window/stride)² candidate chips.
-    Pixels in a dropped trailing partial window get no chip (filtered).
-    """
-    sy, sx = window_y - overlap_y, window_x - overlap_x
-    meta = F.broadcast(
-        scenes_meta.select(
-            "scene_id",
-            _n_chips(F.col("n_y"), window_y, sy).alias("n_chips_y"),
-            _n_chips(F.col("n_x"), window_x, sx).alias("n_chips_x"),
-        )
-    )
-    px = pixels.join(meta, "scene_id")
-    # candidate chip range per dim: ceil((idx - window + 1)/stride) .. idx//stride
-    lo_y = F.ceil((F.col("y_idx") - F.lit(window_y) + 1) / F.lit(sy)).cast("int")
-    lo_x = F.ceil((F.col("x_idx") - F.lit(window_x) + 1) / F.lit(sx)).cast("int")
-    hi_y = F.floor(F.col("y_idx") / F.lit(sy)).cast("int")
-    hi_x = F.floor(F.col("x_idx") / F.lit(sx)).cast("int")
-    lo_y_c = F.greatest(lo_y, F.lit(0))
-    hi_y_c = F.least(hi_y, F.col("n_chips_y") - 1)
-    lo_x_c = F.greatest(lo_x, F.lit(0))
-    hi_x_c = F.least(hi_x, F.col("n_chips_x") - 1)
-    # guard: Spark's sequence(a,b) runs BACKWARD when a > b; an empty
-    # candidate range must yield no rows (explode of NULL drops the row)
-    px = px.select(
-        "*",
-        F.explode(F.when(lo_y_c <= hi_y_c, F.sequence(lo_y_c, hi_y_c))).alias("chip_y"),
-    ).select(
-        "*",
-        F.explode(F.when(lo_x_c <= hi_x_c, F.sequence(lo_x_c, hi_x_c))).alias("chip_x"),
-    )
-    return px.select(
-        pixels["*"],
-        "chip_y", "chip_x",
-        (F.col("chip_y") * F.col("n_chips_x") + F.col("chip_x")).cast("long").alias("chip_id"),
-        (F.col("y_idx") - F.col("chip_y") * F.lit(sy)).alias("in_chip_y"),
-        (F.col("x_idx") - F.col("chip_x") * F.lit(sx)).alias("in_chip_x"),
-    )
+
+def _strides(windows: dict[str, int], overlaps: dict[str, int] | None) -> dict[str, int]:
+    strides = {d: w - (overlaps or {}).get(d, 0) for d, w in windows.items()}
+    if any(s <= 0 for s in strides.values()):
+        raise ValueError("input_overlap must be smaller than input_dims")
+    return strides
+
+
+def _chip_id(dims: list[str]) -> Column:
+    """Row-major chip index over ``dims`` (bigint)."""
+    cid = F.col(f"chip_{dims[0]}").cast("long")
+    for d in dims[1:]:
+        cid = cid * F.col(f"n_chips_{d}") + F.col(f"chip_{d}")
+    return cid.alias("chip_id")
 
 
 def chip_grid_nd(scenes_meta: DataFrame, windows: dict[str, int],
@@ -112,23 +72,15 @@ def chip_grid_nd(scenes_meta: DataFrame, windows: dict[str, int],
     ``<dim>0`` columns and a row-major ``chip_id`` over the dims in
     ``windows`` order. Pure explode(sequence(...)) — no UDF, no shuffle.
     """
-    overlaps = overlaps or {}
+    strides = _strides(windows, overlaps)
     dims = list(windows)
-    strides: dict[str, int] = {}
-    g = scenes_meta
-    for d, w in windows.items():
-        s = w - overlaps.get(d, 0)
-        if s <= 0:
-            raise ValueError("input_overlap must be smaller than input_dims")
-        strides[d] = s
-        g = g.select("*", _n_chips(F.col(f"n_{d}"), w, s).alias(f"n_chips_{d}"))
+    g = scenes_meta.select(
+        "*", *[_n_chips(F.col(f"n_{d}"), windows[d], strides[d]).alias(f"n_chips_{d}")
+               for d in dims])
     for d in dims:
         g = g.select(
             "*", F.explode(F.sequence(F.lit(0), F.col(f"n_chips_{d}") - 1)).alias(f"chip_{d}"))
-    cid = F.lit(0).cast("long")
-    for d in dims:
-        cid = cid * F.col(f"n_chips_{d}") + F.col(f"chip_{d}")
-    outs = [F.col("scene_id"), cid.cast("long").alias("chip_id")]
+    outs = [F.col("scene_id"), _chip_id(dims)]
     for d in dims:
         outs.append(F.col(f"chip_{d}"))
         outs.append((F.col(f"chip_{d}") * F.lit(strides[d])).alias(f"{d}0"))
@@ -145,11 +97,8 @@ def assign_chips_nd(pixels: DataFrame, scenes_meta: DataFrame,
     meta); overlapping dims explode into their bounded candidate ranges.
     Pixels in dropped trailing partial windows get no chip.
     """
-    overlaps = overlaps or {}
+    strides = _strides(windows, overlaps)
     dims = list(windows)
-    strides = {d: windows[d] - overlaps.get(d, 0) for d in dims}
-    if any(s <= 0 for s in strides.values()):
-        raise ValueError("input_overlap must be smaller than input_dims")
     meta = scenes_meta.select(
         "scene_id",
         *[_n_chips(F.col(f"n_{d}"), windows[d], strides[d]).alias(f"n_chips_{d}")
@@ -157,22 +106,22 @@ def assign_chips_nd(pixels: DataFrame, scenes_meta: DataFrame,
     )
     px = pixels.join(F.broadcast(meta), "scene_id")
     for d in dims:
+        # candidate chip range: ceil((idx - window + 1)/stride) .. idx//stride
         w, s = windows[d], strides[d]
         lo = F.greatest(F.ceil((F.col(f"{d}_idx") - F.lit(w) + 1) / F.lit(s)).cast("int"),
                         F.lit(0))
         hi = F.least(F.floor(F.col(f"{d}_idx") / F.lit(s)).cast("int"),
                      F.col(f"n_chips_{d}") - 1)
+        # guard: Spark's sequence(a,b) runs BACKWARD when a > b; an empty
+        # candidate range must yield no rows (explode of NULL drops the row)
         px = px.select(
             "*",
             F.explode(F.when(lo <= hi, F.sequence(lo, hi))).alias(f"chip_{d}"),
         )
-    cid = F.lit(0).cast("long")
-    for d in dims:
-        cid = cid * F.col(f"n_chips_{d}") + F.col(f"chip_{d}")
     return px.select(
         pixels["*"],
         *[F.col(f"chip_{d}") for d in dims],
-        cid.cast("long").alias("chip_id"),
+        _chip_id(dims),
         *[(F.col(f"{d}_idx") - F.col(f"chip_{d}") * F.lit(strides[d])).alias(f"in_chip_{d}")
           for d in dims],
     )

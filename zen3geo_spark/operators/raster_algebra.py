@@ -288,19 +288,6 @@ def contour_crossings_sql(pixels_sql: str, width: int, height: int,
 # IDW grid interpolation (integer-exact accumulation)
 # ---------------------------------------------------------------------------
 
-def cell_center_us_sql(cell: str, res: int, engine: str) -> tuple[str, str]:
-    """(lat_us, lon_us) of the cell's center, closed-form bigint math
-    (midpoint of the cell's index interval under the encode's scaling)."""
-    n = 1 << res
-    base = 1 << (2 * res)
-    d = _DIV[engine]
-    iy = f"((({cell}) - {base}){d}{n})"
-    ix = f"((({cell}) - {base}) - {iy} * {n})"
-    lat = f"(((2 * {iy} + 1) * 180000001){d}{2 * n} - 90000000)"
-    lon = f"(((2 * {ix} + 1) * 360000001){d}{2 * n} - 180000000)"
-    return lat, lon
-
-
 def idw_accumulate(points: DataFrame, res: int, value_col: str,
                    scale: int = 10 ** 15) -> DataFrame:
     """Truncated-support IDW accumulation at grid-cell centers.

@@ -168,27 +168,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.randn(n_planes, dim).tolist()
 
 
-def lsh_bucket_pd(planes: list[list[float]]):
-    """Arrow-vectorized sign-signature bucket: one (batch x dim) @ (dim x
-    planes) matmul per Arrow batch instead of per-row fold lambdas.
-    Same bits as ``lsh_bucket`` up to float summation order (a sign can
-    only differ when |dot| is at rounding noise — irrelevant for an
-    approximate index)."""
-    P = np.asarray(planes, dtype=np.float64)
-    shifts = np.arange(P.shape[0])
-
-    @F.pandas_udf("long")
-    def bucket(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        M = np.array(vecs.tolist(), dtype=np.float64)
-        d = M @ P.T
-        bits = ((d >= 0).astype(np.int64) << shifts).sum(axis=1)
-        return pd.Series(bits)
-
-    return bucket
-
-
 def lsh_buckets_multi_pd(planes_list: list[list[list[float]]]):
     """All hash tables' buckets in ONE Arrow pass: returns an array of
     ``len(planes_list)`` bucket ids per vector (posexplode downstream).
@@ -207,15 +186,6 @@ def lsh_buckets_multi_pd(planes_list: list[list[list[float]]]):
         return pd.Series(list(bits))
 
     return buckets
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-signature bucket id from fixed random hyperplanes."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        d = dot(vec, F.array(*[F.lit(float(x)) for x in p]))
-        bucket = bucket + F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
 
 
 def _unit_rows(M: np.ndarray) -> np.ndarray:

@@ -19,13 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def read_items(spark, path: str) -> DataFrame:
-    """PySTACItemReader analogue: scan an item-metadata table (json/parquet)."""
-    if path.endswith(".json") or path.endswith(".jsonl"):
-        return spark.read.json(path)
-    return spark.read.parquet(path)
-
-
 def search(items: DataFrame, bbox: tuple[float, float, float, float] | None = None,
            datetime_range: tuple[str, str] | None = None,
            collections: list[str] | None = None) -> DataFrame:

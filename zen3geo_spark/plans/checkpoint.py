@@ -9,41 +9,36 @@ wall ms); swapping in a real Iceberg catalog changes
 ``format('parquet')`` → ``format('iceberg')`` and drops the manifest —
 a config change, not a code change.
 
-Resume semantics: a stage whose (name, input_fingerprint) manifest entry
-exists and is COMPLETE is read back instead of recomputed; with a
-partition column, completed partitions are skipped via anti-join and only
-missing partitions are computed and appended (idempotent per-partition
-writes → mid-job resume).
+Resume semantics: resume is per STAGE, keyed by the caller's input
+fingerprint. A stage whose manifest carries the same fingerprint and is
+complete is read back instead of recomputed. Otherwise the manifest is
+deleted first, then the whole data dir is overwritten (``partitionBy``
+when a partition column is given), so a failed or changed rerun can never
+resume stale data. There is no partition-level resume: a stage is either
+complete or rebuilt. The manifest's per-partition row counts come from
+the written files' Parquet footers, read on the driver, so a stage costs
+its write job plus the schema read of the returned frame — no read-back
+count jobs.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 from collections.abc import Callable
+from contextlib import suppress
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class CheckpointRunner:
-    def __init__(self, spark: SparkSession, root: str,
-                 release_cache: bool = True):
-        """release_cache: after each stage materializes, drop the
-        persistent RDDs *created during the stage* (persist() blocks and
-        localCheckpoint blocks alike) — downstream stages read the
-        checkpoint table, so the intra-stage intermediates are dead
-        weight that would otherwise accumulate across a long multi-stage
-        run. RDDs persisted BEFORE the stage started are left untouched:
-        operators such as ``minhash_lsh_candidates`` / ``with_global_pos``
-        return localCheckpoint-ed frames with truncated lineage, and
-        unpersisting those out from under the caller would make the next
-        action fail with "Checkpoint block not found" instead of
-        recomputing. Set False to skip cleanup entirely."""
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.release_cache = release_cache
         os.makedirs(root, exist_ok=True)
 
     def _persistent_rdd_ids(self) -> set[int]:
@@ -52,12 +47,14 @@ class CheckpointRunner:
 
     def _release_blocks(self, before_ids: set[int]) -> None:
         """Unpersist persistent RDDs that appeared since ``before_ids``
-        was snapshotted (persist()/localCheckpoint blocks created inside
-        the stage build — catalog.clearCache would NOT cover raw RDD
-        blocks, and a blanket sweep would kill caller-owned checkpoint
-        blocks whose lineage is truncated and cannot recompute). Safe
-        post-materialization: the stage output lives in the checkpoint
-        table."""
+        was snapshotted: persist()/localCheckpoint blocks created inside
+        the stage build are dead weight once the stage output lives in
+        the checkpoint table. The release is scoped to the stage because
+        RDDs persisted BEFORE it may be caller-owned localCheckpoint-ed
+        frames (``minhash_lsh_candidates``, ``with_global_pos``) whose
+        truncated lineage cannot recompute: unpersisting them would make
+        the caller's next action fail with "Checkpoint block not found".
+        catalog.clearCache would not cover raw RDD blocks anyway."""
         jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
         for rdd_id in list(jmap.keys()):
             if rdd_id not in before_ids:
@@ -81,6 +78,19 @@ class CheckpointRunner:
             json.dump(manifest, f, indent=1, sort_keys=True)
         os.replace(tmp, mpath)
 
+    @staticmethod
+    def _partition_rows(dpath: str, partition_col: str | None) -> dict[str, int]:
+        """Rows per partition from the written files' Parquet footers
+        (driver-side metadata reads, no Spark job). Hidden and ``_``
+        files (checksums, ``_SUCCESS``) do not match the glob."""
+        rows: dict[str, int] = {} if partition_col else {"__all__": 0}
+        for path in glob.glob(f"{dpath}/**/*.parquet", recursive=True):
+            part = "__all__"
+            if partition_col is not None:
+                part = unquote(os.path.basename(os.path.dirname(path)).split("=", 1)[1])
+            rows[part] = rows.get(part, 0) + pq.read_metadata(path).num_rows
+        return rows
+
     def stage(self, name: str, fingerprint: str, build: Callable[[], DataFrame],
               partition_col: str | None = None) -> DataFrame:
         """Run (or resume) a checkpointed stage and return its output.
@@ -88,49 +98,35 @@ class CheckpointRunner:
         fingerprint: caller-supplied lineage key of the stage's INPUT (e.g.
         upstream stage fingerprints + parameters). Any change reruns.
         """
-        dpath, _ = self._paths(name)
+        dpath, mpath = self._paths(name)
         m = self._read_manifest(name)
         if m.get("fingerprint") == fingerprint and m.get("complete"):
             return self.spark.read.parquet(dpath)
 
-        before_ids = self._persistent_rdd_ids() if self.release_cache else set()
-        df = build()
-        t0 = time.time()
+        # the data dir is about to be replaced: a rewrite that fails must
+        # not leave behind a manifest vouching for it
+        with suppress(FileNotFoundError):
+            os.remove(mpath)
+        before_ids = self._persistent_rdd_ids()
+        writer = build().write.mode("overwrite")
         if partition_col is not None:
-            done_parts = {
-                p["partition"] for p in m.get("partitions", [])
-            } if m.get("fingerprint") == fingerprint else set()
-            if done_parts:
-                df = df.filter(~F.col(partition_col).isin(list(done_parts)))
-            writer = df.write.mode("append").partitionBy(partition_col)
-        else:
-            writer = df.write.mode("overwrite")
+            writer = writer.partitionBy(partition_col)
+        t0 = time.time()
         writer.parquet(dpath)
         wall_ms = int((time.time() - t0) * 1000)
-        if self.release_cache:
-            self._release_blocks(before_ids)
+        self._release_blocks(before_ids)
 
-        out = self.spark.read.parquet(dpath)
-        if partition_col is not None:
-            parts = (
-                out.groupBy(partition_col).agg(F.count("*").alias("n")).collect()
-            )
-            manifest_parts = [
-                {"partition": str(r[0]), "rows": r["n"], "wall_ms": wall_ms}
-                for r in parts
-            ]
-        else:
-            manifest_parts = [{"partition": "__all__", "rows": out.count(),
-                               "wall_ms": wall_ms}]
+        rows = self._partition_rows(dpath, partition_col)
         self._write_manifest(name, {
             "stage": name,
             "fingerprint": fingerprint,
             "complete": True,
             "wall_ms": wall_ms,
-            "partitions": manifest_parts,
+            "partitions": [{"partition": p, "rows": n, "wall_ms": wall_ms}
+                           for p, n in sorted(rows.items())],
             "written_at_unix_ms": int(time.time() * 1000),
         })
-        return out
+        return self.spark.read.parquet(dpath)
 
     def metrics(self, stage: str) -> dict:
         return self._read_manifest(stage)

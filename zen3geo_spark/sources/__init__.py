@@ -1,1 +1,1 @@
-from zen3geo_spark.sources import fixtures, pages, tables  # noqa: F401
+from zen3geo_spark.sources import fixtures, pages  # noqa: F401
