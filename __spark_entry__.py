@@ -471,7 +471,7 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pip_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = points_in_polygons(_points_df(spark), _polys_df(spark), res=4,
-                             salt_factor=4, broadcast_polys=True)
+                             salt_factor=4, broadcast_polys=False)
     return out.select("point_id", "geom_id")
 
 
@@ -480,8 +480,8 @@ def q_pip_multi_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner ring are OUTSIDE the geometry), geometry 1 a two-part
     multipolygon — the OGC interior test the refine kernel implements
     for arbitrary ring sets (ray-cast crossing parity over the union of
-    ring edges). Exercises the multi-ring path of _pip_refine_group that
-    the single-ring fixtures never touch."""
+    ring edges). Exercises the multi-ring path of ring_edges/pip_inside
+    that the single-ring fixtures never touch."""
     out = points_in_polygons(_points_df(spark), _multi_polys_df(spark),
                              res=4, broadcast_polys=True)
     return out.select("point_id", "geom_id")

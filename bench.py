@@ -85,9 +85,9 @@ def ensure_pages_parquet(spark, n_pages: int, partitions: int = 64) -> str:
 
 
 def flagship_pages_pipeline(spark, n_pages: int) -> int:
-    """pages scan → Arrow-UDF extract → cell-encode → salted PIP join →
-    counts. Returns rows processed (pages), the unit of the headline
-    throughput metric.
+    """pages scan → Arrow-UDF extract → cell-encode → broadcast PIP join
+    with a map-side refine → counts. Returns rows processed (pages), the
+    unit of the headline throughput metric.
 
     The Arrow extraction node materializes (point_id, lat_us, lon_us), so
     the downstream cell/bbox/refine references don't re-run the page-text
@@ -107,42 +107,13 @@ def flagship_pages_pipeline(spark, n_pages: int) -> int:
     keeping the semantic parse in the vectorized Arrow kernel the north
     rule specifies.
     """
-    from pyspark.sql import functions as F
-
-    from zen3geo_spark.functions.geo import (
-        extract_first_geotag, extract_points_arrow, micro_from_str,
-    )
-    from zen3geo_spark.operators.spatial_join import (
-        find_hot_cells, points_in_polygons,
-    )
+    from zen3geo_spark.functions.geo import extract_points_arrow
+    from zen3geo_spark.operators.spatial_join import points_in_polygons
     import __spark_entry__ as E
 
     pages = spark.read.parquet(ensure_pages_parquet(spark, n_pages))
     pts = extract_points_arrow(pages)
-    # explicit skew handling (north rule), but HOT CELLS ONLY: a cheap
-    # planning pass over a 2% page sample estimates per-cell point counts;
-    # only cells whose full-scale count would exceed the per-task refine
-    # budget get the salt_factor-way split. On skewless input the hot set
-    # is empty and the join degenerates to the unsalted plan (measured
-    # ~25% faster than blanket salting at 6.4M pages — blanket salting
-    # paid pcs fanout + per-(geom,salt) refine groups with nothing to
-    # spread). The planning estimate runs PURE JVM (regexp + fixed-point
-    # cast in whole-stage codegen — the advisory count needs no Arrow
-    # parity), so it costs one sub-second sample job. On a production
-    # table it rides the checkpoint manifest's per-partition counts
-    # instead.
-    budget = max(50_000, n_pages // (CPUS * 4))
-    frac = 0.02
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    sample_pts = (pages.sample(frac, seed=7)
-                  .select(micro_from_str(lat_s).alias("lat_us"),
-                          micro_from_str(lon_s).alias("lon_us"))
-                  .filter(F.col("lat_us").isNotNull()))
-    hot = find_hot_cells(sample_pts, res=4,
-                         threshold=max(1, int(budget * frac))
-                         ).localCheckpoint(eager=True)
-    pip = points_in_polygons(pts, E._polys_df(spark), res=4, salt_factor=CPUS,
-                             hot_cells=hot, broadcast_polys=True)
+    pip = points_in_polygons(pts, E._polys_df(spark), res=4, broadcast_polys=True)
     pip.groupBy("geom_id").count().collect()
     return n_pages
 
@@ -545,7 +516,7 @@ def measure_scaling() -> dict:
 
 North rule: throughput scaling efficiency >= 0.8 from N to 4N executors.
 Sandbox proxy: the same flagship job (pages scan → Arrow-UDF geotag
-extract → cell-encode → salted PIP join → counts, {N_PAGES_BENCH:,} pages)
+extract → cell-encode → broadcast PIP join → counts, {N_PAGES_BENCH:,} pages)
 at local[{SCALE_N}] vs local[{hi}], fresh JVM each, steady-state (best of
 2 timed runs after a warm run — codegen/JIT compile is a one-time cost a
 long-running job never sees again).

@@ -99,6 +99,15 @@ def test_checkpoint_partitioned_resume(spark, tmp_path):
                        partition_col="lang")
     assert out.count() == 20
     assert sum(p["rows"] for p in runner.metrics("bylang")["partitions"]) == 20
+    # a zero-padded string partition value comes back as the same string,
+    # fresh and resumed (directory-name inference would read 7 and 10)
+    padded = spark.createDataFrame([(1, "007"), (2, "010"), (3, "007")],
+                                   "id long, code string")
+    for _ in range(2):
+        out = runner.stage("bycode", "fp1", lambda: padded, partition_col="code")
+        assert dict(out.dtypes)["code"] == "string"
+        assert sorted((r["id"], r["code"]) for r in out.collect()) == [
+            (1, "007"), (2, "010"), (3, "007")]
 
 
 def test_checkpoint_failed_rewrite_reruns(spark, tmp_path):
@@ -137,17 +146,21 @@ def _jobs_in_group(spark, group, action) -> int:
 
 
 def test_checkpoint_stage_runs_no_extra_jobs(spark, tmp_path):
-    """A fresh stage costs what a plain write plus a plain read of the
-    written table cost: the manifest's row counts add no Spark job."""
+    """A fresh stage costs exactly what a plain write of the built frame
+    costs: the manifest's row counts and the returned frame's schema add
+    no Spark job. A resumed stage runs no job at all."""
     inp = synth_pages(spark, 400).select("url", "lang").localCheckpoint(eager=True)
     runner = CheckpointRunner(spark, str(tmp_path / "ckpt5"))
+
+    def not_resumed():
+        raise AssertionError("stage rebuilt on resume")
+
     for part in (None, "lang"):
         plain_dir = str(tmp_path / f"plain_{part}")
 
         def plain():
             w = inp.write.mode("overwrite")
             (w.partitionBy(part) if part else w).parquet(plain_dir)
-            spark.read.parquet(plain_dir)
 
         n_plain = _jobs_in_group(spark, f"plain_{part}", plain)
         n_stage = _jobs_in_group(
@@ -156,6 +169,10 @@ def test_checkpoint_stage_runs_no_extra_jobs(spark, tmp_path):
         assert n_stage == n_plain, (part, n_stage, n_plain)
         m = runner.metrics(f"s_{part}")
         assert sum(p["rows"] for p in m["partitions"]) == 400
+        n_resume = _jobs_in_group(
+            spark, f"resume_{part}",
+            lambda: runner.stage(f"s_{part}", "fp1", not_resumed, partition_col=part))
+        assert n_resume == 0, (part, n_resume)
     inp.unpersist()
 
 

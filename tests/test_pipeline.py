@@ -56,6 +56,11 @@ def test_pipeline_run_resume_and_partial_invalidation(spark, tmp_path):
     assert t3["rollup"] > t1["rollup"]
     assert out3["extracted"] == out1["extracted"]
 
+    # salt changes neither the PIP rows nor the pip stage's fingerprint
+    out4 = mod.run(spark, "synth:20000", root, res=10, salt=2)
+    assert _manifest_times(root)["pip"] == t1["pip"]
+    assert out4["pip_pairs"] == out1["pip_pairs"]
+
 
 def test_spark_submit_py_files(tmp_path):
     """The north rule's packaging path: spark-submit --py-files with the

@@ -34,6 +34,17 @@ def test_pip_join_is_broadcast_equi_join_not_nested_loop(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_pip_join_refines_map_side_after_broadcast_join(spark):
+    """The broadcast PIP join refines candidates in the partition they
+    sit in: above the join there is a MapInArrow and no shuffle, no
+    grouped pandas UDF and no polygon coordinates riding along."""
+    plan = _plan(E.q_pip_join(spark, SF))
+    above = plan.split("BroadcastHashJoin", 1)[0]
+    assert "MapInArrow" in above
+    for node in ("Exchange", "FlatMapGroupsInPandas", "parts"):
+        assert node not in above, node
+
+
 def test_vector_scan_bbox_prune_pushdown(spark, tmp_path):
     """scan_vectors' bbox predicate must reach the parquet scan."""
     from zen3geo_spark.sources.raster import scan_vectors

@@ -85,6 +85,14 @@ def test_pip_salted_equals_unsalted(spark):
         for r in points_in_polygons(pts, polys, res=4, salt_factor=4).collect()
     )
     assert base == salted == salted_all
+    # salting only runs on the shuffle join: the broadcast path ignores it
+    for kw in ({"salt_factor": 8, "hot_cells": hot}, {"salt_factor": 4}):
+        shuffled = sorted(
+            (r["point_id"], r["geom_id"])
+            for r in points_in_polygons(pts, polys, res=4, broadcast_polys=False,
+                                        **kw).collect()
+        )
+        assert shuffled == base, kw
 
 
 def test_pip_shuffle_path_matches_broadcast(spark):
@@ -106,6 +114,21 @@ def test_pip_shuffle_path_matches_broadcast(spark):
     # only that the FORCED polygon-side hint is gone
     shuffled = sorted((r["point_id"], r["geom_id"]) for r in shuffled_df.collect())
     assert base == shuffled
+    # degenerate inputs on both paths: no points at all, and a zero-area
+    # (collinear) polygon whose bbox still yields candidates
+    no_pts = spark.createDataFrame([], "point_id long, lat_us long, lon_us long")
+    line = with_bbox(spark.createDataFrame(
+        [(7, "polygon", [[{"x": float(v), "y": float(v)}
+                          for v in (0, 10_000_000, 20_000_000)]], "OGC:CRS84")],
+        GEOM_SCHEMA)).select(
+        "geom_id", "parts",
+        *(F.col(c).cast("long").alias(f"{c}_us")
+          for c in ("minx", "miny", "maxx", "maxy")))
+    for bc in (True, False):
+        assert points_in_polygons(no_pts, polys, res=4,
+                                  broadcast_polys=bc).collect() == []
+        assert points_in_polygons(pts, line, res=4,
+                                  broadcast_polys=bc).collect() == []
 
 
 def test_pip_probe_gates_on_cell_count(spark):
@@ -165,49 +188,73 @@ def test_cell_encode_parent_consistency(spark):
 
 
 def test_pip_refine_10k_vertex_polygon_bounded():
-    """Perf contract: a 10k-vertex polygon refine over a small point
-    group must be interpreter-bounded by E/e_tile tile passes, not E
-    per-edge passes — and stay exact vs an independent per-edge ray
-    cast."""
+    """Perf contract: the refine kernel on a 10k-vertex polygon over a
+    small point group must be interpreter-bounded by E/e_tile tile
+    passes, not E per-edge passes — and stay exact vs an independent
+    per-edge ray cast."""
     import time
 
     import numpy as np
-    import pandas as pd
 
-    from zen3geo_spark.operators.spatial_join import _pip_refine_group
+    from zen3geo_spark.operators.spatial_join import pip_inside, ring_edges
 
     V = 10_000
     ang = np.linspace(0, 2 * np.pi, V, endpoint=False)
     r = np.where(np.arange(V) % 2 == 0, 10_000_000, 6_000_000)
     xs = (r * np.cos(ang)).astype(np.int64)
     ys = (r * np.sin(ang)).astype(np.int64)
-    ring = [{"x": int(x), "y": int(y)} for x, y in zip(xs, ys)]
     rng = np.random.default_rng(7)
     n = 200
     plon = rng.integers(-12_000_000, 12_000_000, n)
     plat = rng.integers(-12_000_000, 12_000_000, n)
-    pdf = pd.DataFrame({"point_id": np.arange(n), "geom_id": 1,
-                        "lat_us": plat, "lon_us": plon,
-                        "parts": [[ring]] * n})
-    _pip_refine_group(pdf)  # warm allocator/first-touch
+    px = plon.astype(np.float64); py = plat.astype(np.float64)
+    edges = ring_edges(xs.astype(np.float64), ys.astype(np.float64), [V])
+    pip_inside(px, py, edges)  # warm allocator/first-touch
     t0 = time.time()
-    out = _pip_refine_group(pdf)
+    inside = pip_inside(px, py, edges)
     wall = time.time() - t0
     # independent exact reference: per-edge even-odd ray cast
     x1 = xs.astype(np.float64); y1 = ys.astype(np.float64)
     x2 = np.roll(x1, -1); y2 = np.roll(y1, -1)
-    px = plon.astype(np.float64); py = plat.astype(np.float64)
     cr = np.zeros(n, dtype=np.int64)
     with np.errstate(divide="ignore", invalid="ignore"):
         for j in range(V):
             st = (y1[j] > py) != (y2[j] > py)
             xi = (x2[j] - x1[j]) * (py - y1[j]) / (y2[j] - y1[j]) + x1[j]
             cr += st & (px < xi)
-    assert set(out["point_id"].tolist()) == set(
+    assert set(np.nonzero(inside)[0].tolist()) == set(
         np.nonzero(cr % 2 == 1)[0].tolist())
     # generous ceiling (shared host): per-edge interpreted looping costs
     # ~0.1 s+ here; the tiled kernel runs ~2 tile passes in a few ms
     assert wall < 1.0, f"10k-vertex refine took {wall:.2f}s"
+
+
+def test_pip_map_side_refine_rejects_unknown_geom_id():
+    """A candidate whose geom_id has no row in the driver's edge snapshot
+    raises instead of being tested against a neighbouring polygon's edges
+    (between two ids) or running off the end of the index (past the last
+    one)."""
+    import numpy as np
+    import pyarrow as pa
+    import pytest
+
+    from zen3geo_spark.operators.spatial_join import _refine_map_side, ring_edges
+
+    # geom_ids 1 and 3, the same 10x10 square each
+    xs = np.array([0.0, 10.0, 10.0, 0.0] * 2)
+    ys = np.array([0.0, 0.0, 10.0, 10.0] * 2)
+    index = (np.array([1, 3]), np.array([0, 4]), np.array([4, 4]),
+             *ring_edges(xs, ys, [4, 4]))
+    refine = _refine_map_side(index)
+
+    def batch(gid):
+        return pa.RecordBatch.from_pydict(
+            {"point_id": [7], "geom_id": [gid], "lat_us": [5], "lon_us": [5]})
+
+    assert [b.num_rows for b in refine([batch(1), batch(3)])] == [1, 1]
+    for gid in (2, 4):
+        with pytest.raises(ValueError, match=f"geom_id {gid} has no edge row"):
+            list(refine([batch(gid)]))
 
 
 def test_knn_cells_ring_escalation_exactness(spark):

@@ -56,7 +56,7 @@ def main() -> None:
             plan.count("BroadcastHashJoin"),
             plan.count("SortMergeJoin"),
             plan.count("ArrowEvalPython") + plan.count("MapInPandas")
-            + plan.count("FlatMapGroupsInPandas"),
+            + plan.count("MapInArrow") + plan.count("FlatMapGroupsInPandas"),
             "yes" if "PushedFilters: [" in plan and
             "PushedFilters: []" not in plan.split("PushedFilters:", 1)[1][:4] else "-",
             "CLEAN" if ("BroadcastNestedLoopJoin" not in plan

@@ -11,7 +11,8 @@ from the last completed stage, and the whole pipeline ships as
 Stages (each a resumable CheckpointRunner stage):
   1. extract  — pages → (point_id, lat_us, lon_us) via the Arrow UDF path
   2. cells    — cell-encode at --res, partitioned by the res-2 parent
-  3. pip      — salted PIP join vs the fixture polygons
+  3. pip      — PIP join vs the fixture polygons (--salt splits the
+                 cell join that many ways when it shuffles; same rows)
   4. rollup   — per-res-6-cell page counts
 
 Re-running with the same inputs skips completed stages (manifest
@@ -87,8 +88,10 @@ def run(spark, pages_arg: str, out: str, res: int = 12, salt: int = 8) -> dict:
         partition_col="cell2",
     )
 
+    # salting never changes the output rows, and the broadcast join
+    # ignores it, so it stays out of the fingerprint
     pip = runner.stage(
-        "pip", f"{fp_base}|salt={salt}",
+        "pip", fp_base,
         lambda: points_in_polygons(extracted, polys, res=4, salt_factor=salt))
 
     rollup = runner.stage(

@@ -10,14 +10,23 @@ the 10^12-row shape needs an equi-join plan:
 1. polygons → covering-cell table (bbox cover at resolution ``res``) via
    ``explode(sequence(...))`` — pure SQL;
 2. points → ``cell_encode(lat, lon, res)`` — pure SQL, integer math;
-3. equi-join on ``cell`` (hash shuffle, never a nested-loop join) +
-   bbox prefilter;
+3. equi-join on ``cell`` (broadcast of the cover when it is small, else a
+   hash shuffle — never a nested-loop join) + bbox prefilter; the cover
+   and the candidates carry ids, cells and coordinates only, never
+   polygon vertices;
 4. exact even-odd ray-cast refine, vectorized numpy over (points × edges)
-   per polygon group — grouped applyInPandas, no per-row Python;
-5. hot-cell salting: cells whose point count exceeds a threshold get a
-   salt ∈ [0,F); the polygon-cell side replicates F ways. Identical output
-   rows, F-way parallelism on the hot key (AQE skew-join helps after the
-   fact; explicit salting keeps the *refine* UDF groups bounded too).
+   per polygon (``pip_inside``) against one edge table built once from
+   ``parts`` (``pip_edges``). After a broadcast join the candidates are
+   refined map-side (``mapInArrow``, no shuffle) against edges collected
+   once on the driver and shipped in the UDF closure; after a shuffle
+   join they are collected per polygon, joined to its edge row and
+   refined with ``mapInArrow``, one row per polygon group;
+5. hot-cell salting, shuffle join only: cells whose point count exceeds a
+   threshold get a salt ∈ [0,F); the polygon-cell side replicates F ways
+   and so do the edge rows of polygons touching a hot cell. Identical
+   output rows, F-way parallelism on the hot key (AQE skew-join helps
+   after the fact; explicit salting keeps the *refine* UDF groups bounded
+   too). The broadcast path has no shuffle key, hence no hot key to split.
 
 Coordinates are micro-degree integers (exactly representable as doubles),
 and the ray-cast formula is shared verbatim with the DuckDB oracle SQL
@@ -29,7 +38,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -61,24 +71,39 @@ def tag_point_cells(points: DataFrame, res: int,
 
 
 PIP_SCHEMA_SUFFIX = "point_id long, geom_id long, lat_us long, lon_us long"
+_PIP_COLS = ["point_id", "geom_id", "lat_us", "lon_us"]
 
 
-def _pip_refine_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized even-odd ray cast: all points of the group vs the group's
-    polygon edges. One group = one (geom_id [, salt]) after the cell join."""
-    first = pdf.iloc[0]
-    edges = []
-    for ring in first["parts"]:
-        xs = np.fromiter((p["x"] for p in ring), dtype=np.float64)
-        ys = np.fromiter((p["y"] for p in ring), dtype=np.float64)
-        x2, y2 = np.roll(xs, -1), np.roll(ys, -1)
-        edges.append((xs, ys, x2, y2))
-    x1 = np.concatenate([e[0] for e in edges])
-    y1 = np.concatenate([e[1] for e in edges])
-    x2 = np.concatenate([e[2] for e in edges])
-    y2 = np.concatenate([e[3] for e in edges])
-    px = pdf["lon_us"].to_numpy(dtype=np.float64)
-    py = pdf["lat_us"].to_numpy(dtype=np.float64)
+def pip_edges(polys: DataFrame) -> DataFrame:
+    """The refine's polygon side, one row per polygon: ``geom_id``, every
+    ring's vertices as flat ``x``/``y`` double arrays (rings concatenated
+    in order) and ``ring_sizes``. Built in SQL from ``parts``; nothing
+    downstream of it reads ``parts``."""
+    flat = F.flatten("parts")
+    return polys.select(
+        "geom_id",
+        F.transform(flat, lambda p: p.x.cast("double")).alias("x"),
+        F.transform(flat, lambda p: p.y.cast("double")).alias("y"),
+        F.transform("parts", F.size).alias("ring_sizes"),
+    )
+
+
+def ring_edges(x: np.ndarray, y: np.ndarray, ring_sizes) -> tuple:
+    """``(x1, y1, x2, y2)`` edge arrays of rings stored flat: each vertex's
+    edge runs to the next vertex of its ring, the ring's last vertex back
+    to its first (``np.roll(ring, -1)`` per ring, without a ring loop)."""
+    sizes = np.asarray(ring_sizes, dtype=np.int64)
+    ends = np.cumsum(sizes)
+    nxt = np.arange(1, len(x) + 1)
+    full = sizes > 0
+    nxt[ends[full] - 1] = (ends - sizes)[full]
+    return x, y, x[nxt], y[nxt]
+
+
+def pip_inside(px: np.ndarray, py: np.ndarray, edges: tuple) -> np.ndarray:
+    """Even-odd ray cast of points (``px`` = lon, ``py`` = lat, float64)
+    against one polygon's ``(x1, y1, x2, y2)`` edges → inside mask."""
+    x1, y1, x2, y2 = edges
     # crossing test over (points × edge-tiles) 2-D blocks — formula
     # mirrored in pip_refine_sql(), element-for-element identical double
     # arithmetic.  Two pathologies bracketed out: (a) a per-edge Python
@@ -115,9 +140,99 @@ def _pip_refine_group(pdf: pd.DataFrame) -> pd.DataFrame:
             np.less(pxc, XI, out=B2)
             np.logical_and(B1, B2, out=B1)
             crossings += B1.sum(axis=1)
-    inside = (crossings % 2) == 1
-    out = pdf.loc[inside, ["point_id", "geom_id", "lat_us", "lon_us"]]
-    return out
+    return (crossings % 2) == 1
+
+
+def _flat_lists(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(values, per-row lengths) of a list column, straight from its Arrow
+    buffers; a null list counts as empty."""
+    arr = col.combine_chunks()
+    lengths = pc.fill_null(pc.list_value_length(arr), 0)
+    return arr.flatten().to_numpy(), lengths.to_numpy()
+
+
+def _table_edges(t: pa.Table) -> tuple[np.ndarray, tuple]:
+    """Vertices per row of an edge table, and every row's edges as flat
+    ``(x1, y1, x2, y2)`` arrays in row order."""
+    x, n_vert = _flat_lists(t.column("x"))
+    y, _ = _flat_lists(t.column("y"))
+    ring_sizes, _ = _flat_lists(t.column("ring_sizes"))
+    return n_vert, ring_edges(x, y, ring_sizes)
+
+
+def _edge_index(edges: DataFrame) -> tuple:
+    """Every polygon's edges collected once on the driver: geom_ids sorted,
+    each one's (start, length) into the flat x1/y1/x2/y2 arrays."""
+    t = edges.toArrow()
+    n_vert, flat = _table_edges(t)
+    gid = t.column("geom_id").to_numpy()
+    order = np.argsort(gid)
+    starts = np.cumsum(n_vert) - n_vert
+    return (gid[order], starts[order], n_vert[order], *flat)
+
+
+def _inside_runs(lon: np.ndarray, lat: np.ndarray, p0: np.ndarray,
+                 p1: np.ndarray, e0: np.ndarray, e1: np.ndarray,
+                 edges: tuple) -> np.ndarray:
+    """Indices of the points inside their run's polygon: run ``i`` is points
+    ``[p0[i], p1[i])`` against edges ``[e0[i], e1[i])``, one kernel call
+    per run."""
+    x1, y1, x2, y2 = edges
+    keep = [p + np.flatnonzero(pip_inside(lon[p:q], lat[p:q],
+                                          (x1[e:f], y1[e:f], x2[e:f], y2[e:f])))
+            for p, q, e, f in zip(p0, p1, e0, e1)]
+    return np.concatenate(keep) if keep else np.zeros(0, dtype=np.int64)
+
+
+def _refine_map_side(index: tuple):
+    """mapInArrow body for the broadcast path: candidates are refined in
+    the partition they sit in, one kernel call per geometry run of each
+    batch sorted by geom_id; edges come from ``index`` in the closure."""
+    gids, starts, lens, *edges = index
+
+    def refine(batches):
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            g = b.column("geom_id").to_numpy()
+            order = np.argsort(g)
+            gs = g[order]
+            r0 = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
+            missing = ~np.isin(gs[r0], gids)
+            if missing.any():
+                raise ValueError(
+                    f"candidate geom_id {gs[r0][missing][0]} has no edge row: the "
+                    "polygon source changed after points_in_polygons() snapshotted it")
+            i = np.searchsorted(gids, gs[r0])
+            lat = b.column("lat_us").to_numpy()[order].astype(np.float64)
+            lon = b.column("lon_us").to_numpy()[order].astype(np.float64)
+            inside = _inside_runs(lon, lat, r0, np.r_[r0[1:], len(gs)],
+                                  starts[i], starts[i] + lens[i], edges)
+            yield b.take(pa.array(order[inside]))
+
+    return refine
+
+
+def _refine_grouped(batches):
+    """mapInArrow body for the shuffle path: each row is one (geom_id[,
+    salt]) group, its candidates collected in ``pts`` next to its
+    polygon's edge arrays; one kernel call per row."""
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        t = pa.Table.from_batches([b])
+        n_vert, edges = _table_edges(t)
+        pts = t.column("pts").combine_chunks()
+        n_pts = pc.list_value_length(pts).to_numpy()
+        flat = pts.flatten()
+        pid, lat, lon = (pc.struct_field(flat, c).to_numpy()
+                         for c in ("point_id", "lat_us", "lon_us"))
+        p1, e1 = np.cumsum(n_pts), np.cumsum(n_vert)
+        k = _inside_runs(lon.astype(np.float64), lat.astype(np.float64),
+                         p1 - n_pts, p1, e1 - n_vert, e1, edges)
+        gid = np.repeat(t.column("geom_id").to_numpy(), n_pts)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c[k]) for c in (pid, gid, lat, lon)], names=_PIP_COLS)
 
 
 def pip_refine_sql(points_rel: str, edges_rel: str, engine: str = "duckdb") -> str:
@@ -136,7 +251,7 @@ def pip_refine_sql(points_rel: str, edges_rel: str, engine: str = "duckdb") -> s
     """
 
 
-BROADCAST_CELL_ROWS = 500_000  # polygon-cell rows (pre-salt) safe to broadcast
+BROADCAST_CELL_ROWS = 500_000  # polygon-cell rows safe to broadcast
 
 
 def points_in_polygons(points: DataFrame, polys: DataFrame, res: int = 7,
@@ -146,72 +261,80 @@ def points_in_polygons(points: DataFrame, polys: DataFrame, res: int = 7,
 
     points: (point_id, lat_us, lon_us); polys: (geom_id, parts,
     minx_us..maxy_us) where parts coords are micro-degrees (x=lon, y=lat).
-    salt_factor > 0 splits hot cells F ways (hot_cells: df with `cell`;
-    default = every cell, which is correct and just adds F-way fanout on
-    the small side).
 
     broadcast_polys: None (default) probes the polygon-cell side with a
     LIMIT-bounded count and broadcasts only when it holds fewer than
-    BROADCAST_CELL_ROWS rows — millions of polygons × covering cells ×
-    salt would OOM the driver under an unconditional hint, so the big
-    case falls back to the shuffle equi-join on the same (cell[, salt])
-    key. Pass True/False to skip the probe when the size is known.
+    BROADCAST_CELL_ROWS rows — millions of polygons × covering cells would
+    OOM the driver under an unconditional hint, so the big case falls
+    back to the shuffle equi-join. Pass True/False to skip the probe when
+    the size is known.
+
+    Broadcast path: the (cell, geom_id, bbox) cover is broadcast, and the
+    candidates are refined map-side with ``mapInArrow`` in the partition
+    they already sit in, against edges collected once on the driver and
+    shipped in the UDF closure. The edges are a snapshot taken when
+    ``points_in_polygons`` is called; a candidate whose polygon is missing
+    from it (the source changed before the frame ran) raises. There is no
+    shuffle, so no hot key: ``salt_factor`` and ``hot_cells`` are ignored.
+
+    Shuffle path: equi-join on (cell[, salt]). salt_factor > 1 splits hot
+    cells F ways (hot_cells: df with `cell`; default = every cell, which
+    is correct and just adds F-way fanout on the small side). Candidates
+    are collected per (geom_id[, salt]) and joined to their polygon's edge
+    row, then refined with ``mapInArrow``, one kernel call per group; a
+    polygon's edge row replicates per salt only when it touches a hot
+    cell.
     """
     pts = tag_point_cells(points, res)
     pcs = polygon_cover_cells(
-        polys.select("geom_id", "parts", "minx_us", "miny_us", "maxx_us", "maxy_us"),
-        res,
-    )
+        polys.select("geom_id", "minx_us", "miny_us", "maxx_us", "maxy_us"), res)
+    edges = pip_edges(polys)
     if broadcast_polys is None:
-        # LIMIT-bounded planning probe: costs at most `cap` exploded rows,
-        # never a full count of a huge polygon table
-        cap = BROADCAST_CELL_ROWS // max(salt_factor, 1)
-        broadcast_polys = pcs.limit(cap + 1).count() <= cap
+        # LIMIT-bounded planning probe: costs at most BROADCAST_CELL_ROWS exploded
+        # rows, never a full count of a huge polygon table
+        broadcast_polys = (pcs.limit(BROADCAST_CELL_ROWS + 1).count()
+                           <= BROADCAST_CELL_ROWS)
+    in_bbox = ((F.col("lat_us") >= F.col("miny_us")) & (F.col("lat_us") <= F.col("maxy_us"))
+               & (F.col("lon_us") >= F.col("minx_us")) & (F.col("lon_us") <= F.col("maxx_us")))
+    cand_cols = [F.col(c).cast("long").alias(c) for c in _PIP_COLS]
+    if broadcast_polys:
+        # explicit hint: without it AQE first materializes the cover
+        # through a shuffle to learn its size — two extra serial stages
+        cand = pts.join(F.broadcast(pcs), "cell").filter(in_bbox).select(cand_cols)
+        return cand.mapInArrow(_refine_map_side(_edge_index(edges)),
+                               schema=PIP_SCHEMA_SUFFIX)
+
+    keys = ["geom_id"]
     if salt_factor > 1:
         if hot_cells is not None:
             hot = F.broadcast(hot_cells.select("cell").withColumn("_hot", F.lit(True)))
             pts = pts.join(hot, "cell", "left")
-            pts = pts.withColumn(
-                "salt",
-                F.when(F.col("_hot").isNotNull(),
-                       F.pmod(F.xxhash64("point_id"), F.lit(salt_factor)))
-                .otherwise(F.lit(0)).cast("int"),
-            ).drop("_hot")
-            pcs = pcs.join(hot, "cell", "left").select(
-                "*",
-                F.explode(
-                    F.when(F.col("_hot").isNotNull(),
-                           F.sequence(F.lit(0), F.lit(salt_factor - 1)))
-                    .otherwise(F.array(F.lit(0)))
-                ).alias("salt"),
-            ).drop("_hot")
+            pcs = pcs.join(hot, "cell", "left")
+            # a polygon's edge row needs every salt only if it touches a hot cell
+            edges = edges.join(pcs.filter(F.col("_hot").isNotNull())
+                               .select("geom_id", "_hot").distinct(), "geom_id", "left")
+            is_hot = F.col("_hot").isNotNull()
         else:
-            pts = pts.withColumn(
-                "salt", F.pmod(F.xxhash64("point_id"), F.lit(salt_factor)).cast("int")
-            )
-            pcs = pcs.select(
-                "*", F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1))).alias("salt")
-            )
-        join_keys = ["cell", "salt"]
-    else:
-        join_keys = ["cell"]
-    # explicit broadcast when the probe says the polygon-cell side is
-    # small (without the hint AQE first materializes it through a shuffle
-    # to learn its size — two extra serial stages); big polygon tables
-    # take the shuffle equi-join on the same key instead of OOMing the
-    # driver with a forced broadcast
-    pcs_side = F.broadcast(pcs) if broadcast_polys else pcs
-    cand = pts.join(pcs_side, join_keys).filter(
-        (F.col("lat_us") >= F.col("miny_us")) & (F.col("lat_us") <= F.col("maxy_us"))
-        & (F.col("lon_us") >= F.col("minx_us")) & (F.col("lon_us") <= F.col("maxx_us"))
-    )
-    # group on (geom_id, salt) when salted so a hot polygon's refine work
-    # stays split across salt_factor tasks (the whole point of the salt)
-    group_keys = ["geom_id", "salt"] if salt_factor > 1 else ["geom_id"]
-    refined = cand.groupBy(*group_keys).applyInPandas(
-        _pip_refine_group, schema=PIP_SCHEMA_SUFFIX
-    )
-    return refined
+            is_hot = F.lit(True)
+        pts = pts.withColumn(
+            "salt", F.when(is_hot, F.pmod(F.xxhash64("point_id"), F.lit(salt_factor)))
+            .otherwise(F.lit(0)).cast("int")).drop("_hot")
+        salts = F.explode(F.when(is_hot, F.sequence(F.lit(0), F.lit(salt_factor - 1)))
+                          .otherwise(F.array(F.lit(0)))).alias("salt")
+        pcs = pcs.select("*", salts).drop("_hot")
+        edges = edges.select("*", salts).drop("_hot")
+        keys.append("salt")
+    cand = pts.join(pcs, ["cell", *keys[1:]]).filter(in_bbox).select(
+        *cand_cols, *keys[1:])
+    # one row per (geom_id[, salt]) group, its candidates collected next
+    # to its polygon's edge arrays: an inner join, so a polygon without
+    # candidates never reaches Python. Grouping on salt keeps a hot
+    # polygon's refine work split across salt_factor tasks (the whole
+    # point of the salt)
+    groups = cand.groupBy(*keys).agg(
+        F.collect_list(F.struct("point_id", "lat_us", "lon_us")).alias("pts"))
+    return groups.join(edges, keys).mapInArrow(_refine_grouped,
+                                               schema=PIP_SCHEMA_SUFFIX)
 
 
 def find_hot_cells(points: DataFrame, res: int, threshold: int) -> DataFrame:

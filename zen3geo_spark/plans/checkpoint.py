@@ -16,9 +16,12 @@ deleted first, then the whole data dir is overwritten (``partitionBy``
 when a partition column is given), so a failed or changed rerun can never
 resume stale data. There is no partition-level resume: a stage is either
 complete or rebuilt. The manifest's per-partition row counts come from
-the written files' Parquet footers, read on the driver, so a stage costs
-its write job plus the schema read of the returned frame — no read-back
-count jobs.
+the written files' Parquet footers, read on the driver, and the built
+frame's schema is kept in the manifest and handed to the reader, so a
+fresh stage costs exactly its write job and a resumed stage no job at all
+(no read-back counts, no schema inference). A partition column therefore
+keeps the build's type instead of the one inferred from directory names.
+A manifest without a schema counts as incomplete.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CheckpointRunner:
@@ -100,15 +104,17 @@ class CheckpointRunner:
         """
         dpath, mpath = self._paths(name)
         m = self._read_manifest(name)
-        if m.get("fingerprint") == fingerprint and m.get("complete"):
-            return self.spark.read.parquet(dpath)
+        if m.get("fingerprint") == fingerprint and m.get("complete") and "schema" in m:
+            return self.spark.read.schema(StructType.fromJson(m["schema"])).parquet(dpath)
 
         # the data dir is about to be replaced: a rewrite that fails must
         # not leave behind a manifest vouching for it
         with suppress(FileNotFoundError):
             os.remove(mpath)
         before_ids = self._persistent_rdd_ids()
-        writer = build().write.mode("overwrite")
+        built = build()
+        schema = built.schema
+        writer = built.write.mode("overwrite")
         if partition_col is not None:
             writer = writer.partitionBy(partition_col)
         t0 = time.time()
@@ -125,8 +131,9 @@ class CheckpointRunner:
             "partitions": [{"partition": p, "rows": n, "wall_ms": wall_ms}
                            for p, n in sorted(rows.items())],
             "written_at_unix_ms": int(time.time() * 1000),
+            "schema": schema.jsonValue(),
         })
-        return self.spark.read.parquet(dpath)
+        return self.spark.read.schema(schema).parquet(dpath)
 
     def metrics(self, stage: str) -> dict:
         return self._read_manifest(stage)
