@@ -53,8 +53,7 @@ from zen3geo_spark.operators.multimodal import (
 )
 from zen3geo_spark.operators.rasterize import rasterize
 from zen3geo_spark.operators.similarity import (
-    cosine_near_dup_pairs_blocked, cosine_topk_bruteforce, cosine_topk_ivf,
-    cosine_topk_lsh,
+    cosine_near_dup_pairs_blocked, cosine_topk_ivf, cosine_topk_lsh,
 )
 from zen3geo_spark.operators.stacker import build_overviews, stack
 from zen3geo_spark.operators.spatial_join import (
@@ -63,8 +62,8 @@ from zen3geo_spark.operators.spatial_join import (
 )
 from zen3geo_spark.operators.stac import search
 from zen3geo_spark.sources.fixtures import (
-    GEOM_SCHEMA, canvas_rasterize, datacube_for_mosaic, geometries_datashader,
-    raster_grid, scenes_meta, stac_items, with_bbox,
+    canvas_rasterize, datacube_for_mosaic, geometries_datashader, raster_grid,
+    scenes_meta, stac_items,
 )
 from zen3geo_spark.functions.web import (
     canonical_url, canonical_url_sql, html_to_text, html_to_text_sql,
@@ -73,7 +72,7 @@ from zen3geo_spark.functions.web import (
 from zen3geo_spark.sources.pages import (
     URL_HOST_SQL, URL_PID_SQL, pages_cte_sql, synth_pages,
 )
-from zen3geo_spark.streaming.windows import session_stats, tumbling_event_stats
+from zen3geo_spark.streaming.windows import session_stats
 
 N_PAGES = 5000  # fixed-size synthetic pages table for geo queries
 
@@ -195,44 +194,9 @@ def _multi_polys_df(spark: SparkSession) -> DataFrame:
         "minx_us, miny_us, maxx_us, maxy_us)")
 
 
-def _multi_edges_values() -> str:
-    rows = []
-    for gid, rings in MULTI_POLYS:
-        for ring in rings:
-            for i in range(len(ring)):
-                x1, y1 = ring[i]
-                x2, y2 = ring[(i + 1) % len(ring)]
-                rows.append(f"({gid}, {x1}, {y1}, {x2}, {y2})")
-    return "(values " + ", ".join(rows) + ") e(geom_id, x1, y1, x2, y2)"
-
-
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
-
-def q_pages_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    return pages.select(
-        "url", lat_s.alias("lat_str"), lon_s.alias("lon_str"), "lang"
-    ).filter(F.col("lat_str") != "")
-
-
-def q_url_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization + host-level rollup over the pages table —
-    the per-domain aggregation every crawl pipeline runs (robots/quotas/
-    spam scoring). Host parsed with the same regex both engines; one
-    map-side-combinable aggregate keyed by host (1000 hosts at any
-    corpus scale — no skew, the heavy key is the GROUP key itself)."""
-    pages = synth_pages(spark, N_PAGES)
-    host = F.regexp_extract(F.col("url"), r"^https?://([^/]+)/", 1)
-    return (pages
-            .select(host.alias("host"), "lang", "warc_ts")
-            .groupBy("host")
-            .agg(F.count("*").alias("n_pages"),
-                 F.countDistinct("lang").alias("n_langs"),
-                 F.min("warc_ts").alias("first_ts"),
-                 F.max("warc_ts").alias("last_ts")))
 
 
 def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,13 +360,6 @@ def q_bloom_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum((ts & ~bp).cast("int")).alias("n_missed_seen")))
 
 
-def q_pages_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _points_df(spark).withColumn(
-        "cell", cell_encode(F.col("lat_us"), F.col("lon_us"), 12)
-    )
-    return pts.groupBy("cell").agg(F.count("*").alias("n_pages"))
-
-
 # res-12 Morton grid + res-6 rollup for the z-order queries; bbox picked to
 # straddle several top-level quadrant boundaries (the hard case for a
 # space-filling-curve cover)
@@ -472,18 +429,6 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pip_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = points_in_polygons(_points_df(spark), _polys_df(spark), res=4,
                              salt_factor=4, broadcast_polys=False)
-    return out.select("point_id", "geom_id")
-
-
-def q_pip_multi_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Even-odd multi-ring PIP: geometry 0 is a donut (points inside the
-    inner ring are OUTSIDE the geometry), geometry 1 a two-part
-    multipolygon — the OGC interior test the refine kernel implements
-    for arbitrary ring sets (ray-cast crossing parity over the union of
-    ring edges). Exercises the multi-ring path of ring_edges/pip_inside
-    that the single-ring fixtures never touch."""
-    out = points_in_polygons(_points_df(spark), _multi_polys_df(spark),
-                             res=4, broadcast_polys=True)
     return out.select("point_id", "geom_id")
 
 
@@ -787,14 +732,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_dups(docs, max_hamming=8, shingle_n=2)
 
 
-def q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return cosine_topk_bruteforce(q, emb, k=3).select("query_id", "target_id", "rk")
-
-
 def q_ann_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """int8-quantized coarse ANN pass: scalar-quantize (floor(v·2^8),
     clamped) then rank by exact integer dot product — 4× less scan/
@@ -816,41 +753,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return cosine_topk_lsh(q, emb, k=3, dim=64, n_tables=6).select(
         "query_id", "target_id", "rk"
-    )
-
-
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour"),
-        F.col("event_type"),
-    ).agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    )
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_segment_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_orders"),
-             F.round(F.sum("o_totalprice"), 2).alias("revenue"))
     )
 
 
@@ -1140,31 +1042,6 @@ def q_overviews(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level", "band", "y_idx", "x_idx", "value")
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN (inverted lists by nearest centroid, n_probe
-    probes); hash-checked against a full SQL twin (deterministic seed
-    centroids + cosine-argmax assignment + probe ranking)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    return cosine_topk_ivf(q, emb, k=3, n_lists=16, n_probe=6).select(
-        "query_id", "target_id", "rk")
-
-
-def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end training-data cleaning shape: exact-dup keep-list ∘
-    language filter ∘ quality threshold → surviving docs."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    keep = dedup_exact(docs).select("keep_id", "n_dups")
-    return (
-        docs.join(keep, docs["doc_id"] == keep["keep_id"])
-        .filter(lang_id(F.col("text")) == "en")
-        .filter(quality_score(F.col("text")) >= 0.5)
-        .select("doc_id", F.round(quality_score(F.col("text")), 6).alias("quality"),
-                "n_dups")
-    )
-
-
 def q_raster_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Mapper per-pixel transforms from the reference's documented
     pipelines: linear→decibel with zero masking and longitude shift."""
@@ -1177,20 +1054,6 @@ def q_raster_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(linear_to_decibel(F.col("value")), 6).alias("db"),
         F.round(shift_longitude(F.col("value") * 3.7), 6).alias("lon_shifted"),
     )
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERING: simhash pairs → connected components →
-    (doc, component) with component = min doc id in the group (the keep
-    list for group-level dedup). Iterative min-label propagation with
-    pointer jumping; oracle is the recursive-CTE reachability closure."""
-    from zen3geo_spark.operators.dedup import connected_components
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = simhash_near_dups(docs, max_hamming=8, shingle_n=2).select("a_id", "b_id")
-    comp = connected_components(
-        pairs, nodes=docs.select(F.col("doc_id").alias("node")))
-    return comp.select("node", "component")
 
 
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,133 +1076,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = cluster_keep_best(comp.select("node", "component"), scores)
     return out.select("component", F.col("node").alias("doc_id"),
                       F.round("score", 6).alias("score"))
-
-
-def q_adaptive_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language adaptive quality filter: each language's own p25
-    quality score becomes its cut (CCNet-style per-bucket thresholds —
-    a single global cut over- or under-prunes low-resource languages).
-    The threshold is a POSITIONAL pick (the value at floor((n-1)/4) in
-    (score, doc_id) order), so both engines choose an existing score —
-    deterministic, no interpolation. Rollup output: per language the
-    corpus count, kept count and the threshold.
-
-    Scale shape: two window passes over the same (lang) partitioning —
-    one shuffle, reused — then a map-side-combinable rollup; language
-    cardinality is tiny so the thresholds could equally broadcast."""
-    from zen3geo_spark.functions.text import quality_score
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    scored = docs.select("doc_id", "lang",
-                         quality_score(F.col("text")).alias("score"))
-    w = Window.partitionBy("lang").orderBy(
-        F.col("score").asc(), F.col("doc_id").asc())
-    wn = Window.partitionBy("lang")
-    ranked = scored.select(
-        "lang", "score",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wn).alias("n"))
-    thr = (ranked
-           .filter(F.expr("rn = ((n - 1) div 4) + 1"))
-           .select("lang", F.col("score").alias("thr")))
-    return (scored.join(thr, "lang")
-            .groupBy("lang")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum((F.col("score") >= F.col("thr")).cast("int"))
-                 .alias("n_kept"),
-                 F.round(F.min("thr"), 6).alias("p25_thr")))
-
-
-def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe train/val split: the split key is the CONTENT
-    fingerprint (md5 of normalized text), not the doc id, so exact
-    duplicates can never straddle the held-out boundary — the
-    decontamination-aware split discipline. Bucket = shared 40-bit
-    polynomial hash of the fingerprint mod 100; < 90 → train. Rollup:
-    per (source, split) doc and distinct-content counts."""
-    from zen3geo_spark.operators.dedup import gram_hash40
-    from zen3geo_spark.functions.text import fingerprint
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fp = docs.select("doc_id", "source",
-                     fingerprint(F.col("text")).alias("fp"))
-    split = fp.withColumn(
-        "split",
-        F.when(F.pmod(gram_hash40(F.col("fp")), F.lit(100)) < 90,
-               F.lit("train")).otherwise(F.lit("val")))
-    return split.groupBy("source", "split").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("fp").alias("n_contents"))
-
-
-def q_geo_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-based geolocation backfill: pages WITHOUT a well-formed
-    geotag inherit their host's modal res-4 cell, learned from the
-    host's tagged pages (tie-break: count desc, cell asc) — the
-    coverage-raising enrichment every geo pipeline runs over web text.
-    The host→modal-cell map is host-cardinality and broadcast; the
-    untagged corpus joins it without shuffling. Output: backfilled
-    pages per inherited cell."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    base = pages.select(
-        F.expr(URL_HOST_SQL).alias("host"),
-        lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-    tagged = (base.filter(F.col("lat_str") != "")
-              .select("host",
-                      cell_encode(micro_from_str(F.col("lat_str")),
-                                  micro_from_str(F.col("lon_str")), 4)
-                      .alias("cell")))
-    per = tagged.groupBy("host", "cell").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("host").orderBy(
-        F.col("n").desc(), F.col("cell").asc())
-    modal = (per.withColumn("rk", F.row_number().over(w))
-             .filter(F.col("rk") == 1).select("host", "cell"))
-    untagged = base.filter(F.col("lat_str") == "").select("host")
-    return (untagged.join(F.broadcast(modal), "host")
-            .groupBy("cell").agg(F.count("*").alias("n_backfilled")))
-
-
-def q_recrawl_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host recrawl cadence: the gap (seconds) between consecutive
-    geotagged snapshots of each host — min/max/lower-median per host,
-    all integer so the cross-engine compare is exact (lower median =
-    the (n+1) div 2-th ordered gap, ties broken by snapshot id; no FP
-    percentile interpolation). The crawl-scheduling input: hosts whose
-    cadence stretched are due for refetch. Windows are per-host
-    (bounded by a host's snapshot count), the per-host stats table is
-    host-cardinality and broadcasts."""
-    pts = _points_df(spark).select(
-        F.pmod(F.col("point_id"), F.lit(1000)).alias("host_id"),
-        F.col("point_id").alias("pid"))
-    w = Window.partitionBy("host_id").orderBy("pid")
-    gaps = (pts.withColumn("gap", F.col("pid") - F.lag("pid").over(w))
-            .filter(F.col("gap").isNotNull()))
-    stats = gaps.groupBy("host_id").agg(
-        F.count("*").alias("n_gaps"),
-        F.min("gap").alias("min_gap"),
-        F.max("gap").alias("max_gap"))
-    wg = Window.partitionBy("host_id").orderBy("gap", "pid")
-    med = (gaps.withColumn("rn", F.row_number().over(wg))
-           .join(F.broadcast(stats.select("host_id", "n_gaps")), "host_id")
-           .filter(F.col("rn") == F.expr("(n_gaps + 1) div 2"))
-           .select("host_id", F.col("gap").alias("med_gap")))
-    return stats.join(med, "host_id").select(
-        "host_id", "n_gaps", "min_gap", "max_gap", "med_gap")
-
-
-def q_compact_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H3-style ``compact_cells`` over the crawl's res-5 coverage mask:
-    complete sibling quads promote to their parent recursively (the
-    cell-SET maintenance that keeps 10^12-row coverage masks storable).
-    Closed-form plan — one bounded level explode + one (level,
-    ancestor) count + a min-level pick — no bottom-up iteration; the
-    completeness-monotonicity argument is in operators/cells.py."""
-    from zen3geo_spark.operators.cells import compact_cells
-
-    cells = _points_df(spark).select(
-        cell_encode(F.col("lat_us"), F.col("lon_us"), 5).alias("cell"))
-    return compact_cells(cells, res=5, min_res=2)
 
 
 def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1381,31 +1117,6 @@ def q_polygon_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cover_polygon_cells(_polys_df(spark), edges, res=8, min_res=3)
 
 
-def q_crawl_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host geo mobility matrix: consecutive geotagged snapshots of
-    a host ordered by crawl time → (from_cell, to_cell) transition
-    counts at res 4 (+ distinct hosts per transition) — the Markov
-    transition rollup impossible-travel and recrawl planners consume.
-    The lag window is per-host (bounded by a host's snapshot count);
-    the output is cell-pair-cardinality."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    base = (pages.select(F.expr(URL_HOST_SQL).alias("host"),
-                         F.expr(URL_PID_SQL).alias("pid"),
-                         lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-            .filter(F.col("lat_str") != ""))
-    pts = base.select(
-        "host", "pid",
-        cell_encode(micro_from_str(F.col("lat_str")),
-                    micro_from_str(F.col("lon_str")), 4).alias("cell"))
-    w = Window.partitionBy("host").orderBy("pid")
-    tr = pts.withColumn("from_cell", F.lag("cell").over(w)).filter(
-        F.col("from_cell").isNotNull())
-    return (tr.groupBy("from_cell", F.col("cell").alias("to_cell"))
-            .agg(F.count("*").alias("n_hops"),
-                 F.countDistinct("host").alias("n_hosts")))
-
-
 def q_trajectory_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trajectory supercover: per-host consecutive-snapshot segments →
     every res-5 cell each segment touches (closed-form integer
@@ -1444,56 +1155,6 @@ def q_disk_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = _points_df(spark).filter(F.col("point_id") < 30)
     return cover_disk_cells(pts, radius_us=5_000_000, res=6)
-
-
-def q_coverage_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coverage set-algebra between crawl epochs: res-5 cells reached
-    by the ODD-id half of the crawl but not the EVEN half (left
-    anti-join of the raw cell sets), COMPACTED — the added-coverage
-    report a recrawl planner reads. Mixed-res output keeps the report
-    polylog-sized however large the grid."""
-    from zen3geo_spark.operators.cells import compact_cells
-
-    # one extraction pass feeds both epoch branches (the regexp parse
-    # dominates; without the plan cut each branch re-runs it)
-    cells = (_points_df(spark)
-             .select((F.col("point_id") % 2).alias("epoch"),
-                     cell_encode(F.col("lat_us"), F.col("lon_us"), 5)
-                     .alias("cell"))
-             .localCheckpoint(eager=False))
-    even = cells.filter(F.col("epoch") == 0).select("cell").distinct()
-    odd = cells.filter(F.col("epoch") == 1).select("cell").distinct()
-    added = odd.join(even, "cell", "left_anti")
-    return compact_cells(added, res=5, min_res=2)
-
-
-def q_cover_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-resolution rollup onto a compacted cover: page counts per
-    MEMBER of the even-epoch compacted cover (members are an antichain,
-    so each page matches at most one member via its bounded ancestor
-    chain — an equi-join on (level, ancestor), never a range probe).
-    The hypertable-rollup shape: aggregate onto a mixed-res index."""
-    from zen3geo_spark.operators.cells import compact_cells
-
-    res, min_res = 5, 2
-    pts = (_points_df(spark)
-           .withColumn("cell",
-                       cell_encode(F.col("lat_us"), F.col("lon_us"), res))
-           .localCheckpoint(eager=False))  # extract once, feed both uses
-    cover = compact_cells(
-        pts.filter(F.col("point_id") % 2 == 0).select("cell"),
-        res=res, min_res=min_res)
-    anc = [F.struct(F.lit(lvl).alias("cell_res"),
-                    cell_parent(F.col("cell"), res, lvl).alias("member"))
-           for lvl in range(min_res, res + 1)]
-    chain = pts.select(
-        "point_id", F.explode(F.array(*anc)).alias("a")).select(
-        "point_id", F.col("a.cell_res").alias("cell_res"),
-        F.col("a.member").alias("member"))
-    j = chain.join(cover.withColumnRenamed("cell", "member"),
-                   ["member", "cell_res"])
-    return (j.groupBy(F.col("member").alias("cell"), "cell_res")
-            .agg(F.count("*").alias("n_pages")))
 
 
 def q_str_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1541,20 +1202,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.round(F.sum("value"), 4).alias("sum_value")))
 
 
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer TRAINING (Sennrich/Gage), distributed: one
-    corpus-sized word-count aggregate, then every merge round runs on
-    the Heaps-bounded VOCABULARY table — pair counts weighted by word
-    frequency, 1-row argmax collect, literal double-delimiter replace
-    (greedy non-overlapping merge, exact reference semantics). Output =
-    the 12-merge list a tokenizer ships; oracle = the same recurrence
-    unrolled as chained DuckDB CTEs."""
-    from zen3geo_spark.functions.bpe import bpe_train, word_counts
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bpe_train(word_counts(docs), n_merges=12)
-
-
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE: learn the 12-merge list, apply it in rank order to
     the vocabulary (the tokenize step), emit corpus token frequencies.
@@ -1588,103 +1235,6 @@ def q_local_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zen3geo_spark.operators.cells import local_moran
 
     return local_moran(_points_df(spark), res=4)
-
-
-def q_snapshot_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hive-style PARTITION PRUNING on a stored table: pages written
-    once partitioned by snapshot stripe (pid % 10 — the crawl-epoch
-    layout a 10^12-row table ships with), then a two-stripe read whose
-    filter prunes 8/10 partition directories at PLANNING time
-    (PartitionFilters in the scan, plan-gated in test_plans) — the
-    directory-level sibling of zorder_range_scan's row-group pruning.
-    Output: per-cell counts inside the two snapshots."""
-    import pathlib
-
-    d = pathlib.Path(__file__).resolve().parent / ".gen_assets" / \
-        f"pages_by_snap_{N_PAGES}"
-    if not (d / "_SUCCESS").exists():
-        pages = synth_pages(spark, N_PAGES)
-        lat_s, lon_s = extract_first_geotag(F.col("text"))
-        (pages.select(F.expr(URL_PID_SQL).alias("pid"),
-                      lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-         .withColumn("snap", F.col("pid") % 10)
-         .write.mode("overwrite").partitionBy("snap").parquet(str(d)))
-    pts = (spark.read.parquet(str(d))
-           .filter(F.col("snap").isin(3, 7))
-           .filter(F.col("lat_str") != "")
-           .select(F.col("snap").cast("long").alias("snap"),
-                   cell_encode(micro_from_str(F.col("lat_str")),
-                               micro_from_str(F.col("lon_str")), 4)
-                   .alias("cell")))
-    return (pts.groupBy("snap", "cell")
-            .agg(F.count("*").alias("n_pages")))
-
-
-def q_cell_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell language diversity: Simpson index (1 − Σp_i²) as the
-    exact integer ``(n² − Σn_i²)·10⁴ div n²`` — no logs, no FP — plus
-    the dominant language (count desc, lang asc). The geo×text mix
-    audit a multilingual corpus builder reads per region."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select("lang", lat_s.alias("lat_str"),
-                        lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select("lang",
-                   cell_encode(micro_from_str(F.col("lat_str")),
-                               micro_from_str(F.col("lon_str")), 4)
-                   .alias("cell")))
-    per = pts.groupBy("cell", "lang").agg(F.count("*").alias("ni"))
-    w = Window.partitionBy("cell").orderBy(F.col("ni").desc(),
-                                           F.col("lang").asc())
-    agg = (per.withColumn("rk", F.row_number().over(w))
-           .groupBy("cell")
-           .agg(F.sum("ni").alias("n"),
-                F.sum(F.col("ni") * F.col("ni")).alias("sq"),
-                F.max(F.when(F.col("rk") == 1, F.col("lang")))
-                .alias("top_lang")))
-    return agg.select(
-        "cell", "n", "top_lang",
-        F.expr("(n * n - sq) * 10000 div (n * n)").alias("simpson_x1e4"))
-
-
-def q_cell_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatiotemporal volume anomaly: per (res-2 cell, 10-minute crawl
-    epoch) page counts scored against the cell's own history by
-    INTEGER lower-median and MAD (no FP percentile interpolation — the
-    same exact-median discipline as recrawl_cadence), flagging epochs
-    with |n − med| > max(3·MAD, 2). The per-region crawl-surge /
-    outage screen; windows are per-cell (epoch-count bounded)."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select(F.col("warc_ts"),
-                        lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select(F.expr("unix_timestamp(warc_ts) div 600").alias("ep"),
-                   cell_encode(micro_from_str(F.col("lat_str")),
-                               micro_from_str(F.col("lon_str")), 2)
-                   .alias("cell")))
-    cnts = pts.groupBy("cell", "ep").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("cell").orderBy(F.col("n").asc(),
-                                           F.col("ep").asc())
-    tot = Window.partitionBy("cell")
-    med = (cnts.withColumn("rk", F.row_number().over(w))
-           .withColumn("med", F.max(F.when(
-               F.col("rk") == F.expr(
-                   "(count(*) over (partition by cell) + 1) div 2"),
-               F.col("n"))).over(tot)))
-    wd = Window.partitionBy("cell").orderBy(
-        F.abs(F.col("n") - F.col("med")).asc(), F.col("ep").asc())
-    mad = (med.withColumn("rk2", F.row_number().over(wd))
-           .withColumn("mad", F.max(F.when(
-               F.col("rk2") == F.expr(
-                   "(count(*) over (partition by cell) + 1) div 2"),
-               F.abs(F.col("n") - F.col("med")))).over(tot)))
-    return mad.select(
-        "cell", "ep", "n", "med", "mad",
-        (F.abs(F.col("n") - F.col("med"))
-         > F.greatest(F.lit(3) * F.col("mad"), F.lit(2)))
-        .alias("is_anomaly"))
 
 
 def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1724,85 +1274,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_dedup_to_memory(spark, str(d))
 
 
-def q_quadkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bing-maps-style quadkey tile addressing: per-zoom-6 tile, the
-    base-4 string key whose digit at level z is (2*bit_y + bit_x) of the
-    tile coords' z-th bit — the string form real tile servers key caches
-    and CDN paths by. Pure compile-time concat of 6 digit expressions
-    (all codegen, no UDF); rollup: pages per quadkey. The quadkey's
-    prefix property (parent = prefix) is what makes it the string twin
-    of the integer cell hierarchy."""
-    res = 6
-    pts = _points_df(spark)
-    iy = F.expr(
-        "((lat_us + 90000000) * 64) div 180000001").cast("long")
-    ix = F.expr(
-        "((lon_us + 180000000) * 64) div 360000001").cast("long")
-    digits = []
-    for z in range(res - 1, -1, -1):
-        bit_y = F.shiftright(iy, z).bitwiseAND(F.lit(1))
-        bit_x = F.shiftright(ix, z).bitwiseAND(F.lit(1))
-        digits.append((bit_y * 2 + bit_x).cast("string"))
-    qk = F.concat(*digits)
-    return (pts.select(qk.alias("quadkey"))
-            .groupBy("quadkey").agg(F.count("*").alias("n_pages")))
-
-
-def q_geo_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-resolution skew profile of the point distribution: for each
-    cell resolution 2/4/6, the occupied-cell count, max and total
-    occupancy, and the integer skew ratio (max * n_cells / total, 100×
-    fixed-point) — the planning diagnostic that decides WHERE salting
-    and adaptive subdivision are worth it (find_hot_cells' input, as a
-    first-class audit). One corpus scan per res, each a map-side-
-    combinable aggregate; the profile rows are resolution-cardinality."""
-    parts = []
-    for res in (2, 4, 6):
-        per = (_points_df(spark)
-               .groupBy(cell_encode(F.col("lat_us"), F.col("lon_us"), res)
-                        .alias("cell"))
-               .agg(F.count("*").alias("n")))
-        parts.append(per.agg(
-            F.lit(res).alias("res"),
-            F.count("*").alias("n_cells"),
-            F.max("n").alias("max_cell"),
-            F.sum("n").alias("n_points")).select(
-            "res", "n_cells", "max_cell", "n_points",
-            F.expr("(max_cell * n_cells * 100) div n_points")
-            .alias("skew_x100")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN label transfer: classify each query page's region language
-    by majority vote of its k=5 nearest geotagged neighbors
-    (deterministic tie-breaks throughout: neighbor rank by (dist2,
-    target_id), vote by (count desc, lang asc)) — the label-propagation
-    pattern for enriching unlabeled pages from labeled neighbors.
-    Exactness rides knn_join_cells' ring escalation; the vote windows
-    run over k-sized groups, never the corpus."""
-    pages = synth_pages(spark, N_PAGES).select(
-        F.regexp_extract("url", r"/page/(\d+)", 1).cast("long")
-        .alias("target_id"),
-        "lang")
-    pts = _points_df(spark)
-    queries_df = pts.filter(F.col("point_id") < 30).select(
-        F.col("point_id").alias("query_id"), "lat_us", "lon_us")
-    targets = pts.filter(F.col("point_id") >= 30).select(
-        F.col("point_id").alias("target_id"), "lat_us", "lon_us")
-    knn = knn_join_cells(queries_df, targets, k=5, res=2)
-    votes = (knn.join(pages, "target_id")
-             .groupBy("query_id", "lang").agg(F.count("*").alias("n")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("n").desc(), F.col("lang").asc())
-    return (votes.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("query_id", F.col("lang").alias("pred_lang"), "n"))
-
-
 def q_stream_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The spatial kernel through the REAL streaming engine: readStream
     over a bounded on-disk pages table → geotag extract → cell encode →
@@ -1819,32 +1290,6 @@ def q_stream_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not (d / "_SUCCESS").exists():
         synth_pages(spark, N_PAGES).write.mode("overwrite").parquet(str(d))
     return stream_cell_counts_to_memory(spark, str(d), res=6)
-
-
-def q_chip_label_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's vector-segmentation-masks walkthrough composed
-    end-to-end (docs/vector-segmentation-masks.md: rasterized masks +
-    xbatcher chips feeding the DataLoader): burn the fixture polygon
-    onto the 14x10 canvas (winding-number fill — the Polygon=15
-    golden), slice the canvas into 5x7 chips, and count label pixels
-    per chip — the chip/label pair generation step of a segmentation
-    training pipeline. Chip assignment is pure floor division on the
-    burned pixels (no join, no shuffle beyond the final tiny agg)."""
-    canvas = canvas_rasterize(spark, n=1)
-    geoms = geometries_datashader(spark).filter(
-        F.col("geom_type") == "polygon")
-    burned = rasterize(canvas, geoms)
-    # non-foldable zero: a literal scene_id would constant-propagate
-    # into the broadcast meta join and fold it to a cross join
-    px = burned.select(
-        F.pmod(F.xxhash64("row"), F.lit(1)).cast("long").alias("scene_id"),
-        F.col("col").cast("int").alias("x_idx"),
-        F.col("row").cast("int").alias("y_idx"),
-        "value")
-    meta = scenes_meta(spark, [(0, 1, 10, 14)])
-    chipped = assign_chips(px, meta, 5, 7)
-    return chip_stats(chipped).select(
-        "scene_id", "chip_id", F.col("n_px").alias("n_label_px"))
 
 
 def q_wrap_bbox_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1867,95 +1312,6 @@ def q_wrap_bbox_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (pts.groupBy(
         cell_encode(F.col("lat_us"), F.col("lon_us"), 4).alias("cell"))
         .agg(F.count("*").alias("n_pages")))
-
-
-def q_cell_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geo-diversity retention: keep at most K=3 pages per res-4 cell,
-    preferring the longest text with point_id as the total-order
-    tie-break — the spatial counterpart of the per-source cap (one
-    mega-city must not dominate the corpus the way one mega-host must
-    not). Exact salted two-phase top-k: no single hot cell ever becomes
-    one window partition's sort."""
-    from zen3geo_spark.operators.curation import source_cap
-
-    pages = synth_pages(spark, N_PAGES).select(
-        F.regexp_extract("url", r"/page/(\d+)", 1).cast("long")
-        .alias("point_id"),
-        F.length("text").alias("score"))
-    pts = _points_df(spark).withColumn(
-        "cell", cell_encode(F.col("lat_us"), F.col("lon_us"), 4))
-    scored = pts.join(pages, "point_id").select("point_id", "cell", "score")
-    return source_cap(scored, k=3, n_salts=4, id_col="point_id",
-                      source_col="cell", order_col="score")
-
-
-def q_spatial_block_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatially-blocked train/val split: the split unit is the res-6
-    CELL, not the page — all pages of a cell land in the same split, so
-    spatial autocorrelation cannot leak across the held-out boundary
-    (the geographic counterpart of `leakage_safe_split`'s content
-    blocking). Bucket = shared 40-bit polynomial hash of the decimal
-    cell id, mod 100; < 80 → train. Map-side-combinable rollup."""
-    from zen3geo_spark.operators.dedup import gram_hash40
-
-    pts = _points_df(spark).withColumn(
-        "cell", cell_encode(F.col("lat_us"), F.col("lon_us"), 6))
-    split = pts.withColumn(
-        "split",
-        F.when(F.pmod(gram_hash40(F.col("cell").cast("string")),
-                      F.lit(100)) < 80,
-               F.lit("train")).otherwise(F.lit("val")))
-    return split.groupBy("split").agg(
-        F.count("*").alias("n_pages"),
-        F.countDistinct("cell").alias("n_cells"))
-
-
-def q_geo_lang_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geo×language mix: PIP-join extracted page points into polygons,
-    then the per-polygon language distribution with within-polygon share
-    — the "what languages does this region's crawl speak" rollup that
-    drives per-region sampling weights in a multilingual pipeline.
-    Composition: broadcast cell-keyed PIP join (bounded refine groups) →
-    join back to the page dim on point_id → tiny (polygon×lang) aggregate;
-    the share window runs on the aggregated table, never on the corpus."""
-    pages = synth_pages(spark, N_PAGES).select(
-        F.regexp_extract("url", r"/page/(\d+)", 1).cast("long")
-        .alias("point_id"),
-        "lang")
-    hits = points_in_polygons(_points_df(spark), _polys_df(spark), res=4,
-                              broadcast_polys=True).select(
-        "point_id", "geom_id")
-    per = (hits.join(pages, "point_id")
-           .groupBy("geom_id", "lang").agg(F.count("*").alias("n_pages")))
-    w = Window.partitionBy("geom_id")
-    return per.select(
-        "geom_id", "lang", "n_pages",
-        F.round(F.col("n_pages") / F.sum("n_pages").over(w), 6)
-        .alias("share"))
-
-
-def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-zoom tile pyramid: extracted page points binned once at the
-    base zoom (one full-corpus map-side-combinable aggregate), then every
-    coarser zoom rolled up FROM THE BASE AGGREGATE — the tile-serving
-    pyramid build. At 100 TB the corpus is touched exactly once; the six
-    parent rollups run over <= 4^base_zoom rows. The base aggregate is
-    localCheckpoint-ed so the seven union branches share one scan."""
-    base_z = 6
-    pts = _points_df(spark).withColumn(
-        "cell", cell_encode(F.col("lat_us"), F.col("lon_us"), base_z))
-    base = (pts.groupBy("cell").agg(F.count("*").alias("n_pages"))
-            .localCheckpoint(eager=False))
-    levels = [base.select(F.lit(base_z).alias("zoom"), "cell", "n_pages")]
-    for z in range(base_z):
-        levels.append(
-            base.groupBy(cell_parent(F.col("cell"), base_z, z).alias("cell"))
-            .agg(F.sum("n_pages").alias("n_pages"))
-            .select(F.lit(z).alias("zoom"), "cell", "n_pages"))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
 
 
 def q_tile_pyramid_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1999,33 +1355,6 @@ def q_tile_pyramid_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def q_adaptive_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Density-adaptive spatial index: coarse res-4 cells whose page
-    count exceeds the occupied-cell average are subdivided to res-8 —
-    the quadtree discipline that balances partition sizes under
-    web-crawl point skew. The hot-cell set is an aggregate-sized
-    broadcast (never a corpus shuffle); the threshold is integer-exact
-    (n4 * n_occupied > total) so both engines pick identical cells."""
-    pts = _points_df(spark).withColumn(
-        "c8", cell_encode(F.col("lat_us"), F.col("lon_us"), 8)).withColumn(
-        "c4", cell_encode(F.col("lat_us"), F.col("lon_us"), 4))
-    from zen3geo_spark.operators._util import pair_all
-
-    coarse = pts.groupBy("c4").agg(F.count("*").alias("n4"))
-    stats = coarse.agg(F.sum("n4").alias("tot"),
-                       F.count("*").alias("nocc"))
-    hot = (pair_all(coarse, stats)
-           .filter(F.col("n4") * F.col("nocc") > F.col("tot"))
-           .select("c4", F.lit(True).alias("is_hot")))
-    assigned = pts.join(F.broadcast(hot), "c4", "left")
-    return (assigned.select(
-        F.when(F.col("is_hot"), F.col("c8")).otherwise(F.col("c4"))
-        .alias("cell"),
-        F.when(F.col("is_hot"), F.lit(8)).otherwise(F.lit(4))
-        .alias("res"))
-        .groupBy("cell", "res").agg(F.count("*").alias("n_pages")))
-
-
 def q_near_dup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production dedup shape: MinHash-LSH candidate pairs → exact
     n-gram Jaccard verification (candidates only, never all-pairs)."""
@@ -2062,30 +1391,12 @@ def q_mercator_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("n"))
 
 
-def q_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical rollup: res-12 cells aggregated to their res-6 parents
-    (oracle encodes res 6 directly — equal by the floor-nesting identity
-    floor(floor(x/m)/n) == floor(x/(m*n)))."""
-    pts = _points_df(spark).withColumn(
-        "cell12", cell_encode(F.col("lat_us"), F.col("lon_us"), 12))
-    return pts.groupBy(
-        cell_parent(F.col("cell12"), 12, 6).alias("cell6")
-    ).agg(F.count("*").alias("n_pages"))
-
-
 def q_extract_all_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-geotag extraction: every well-formed tag per page (pages
     embed 0-3 plus malformed ones the extractor must skip)."""
     pages = synth_pages(spark, N_PAGES)
     return pages.select(
         "url", F.size(extract_all_geotags(F.col("text"))).alias("n_tags"))
-
-
-def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling windows (the streaming transform run as batch;
-    epoch-aligned F.window semantics, UTC session)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return tumbling_event_stats(ev, window="6 hours")
 
 
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2340,31 +1651,6 @@ def q_geohash_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_host_geo_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host geographic footprint: how many distinct res-6 cells each
-    crawl host's pages geotag into, plus the integer bbox — the
-    webtext×geo rollup a 100 TB crawl curation pass runs per domain
-    (host-level geo diversity signal). Exact ints throughout."""
-    pages = synth_pages(spark, N_PAGES).select(
-        F.expr(URL_HOST_SQL).alias("host"), "text")
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = pages.select("host", lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-    pts = pts.filter(F.col("lat_str") != "").select(
-        "host",
-        micro_from_str(F.col("lat_str")).alias("lat_us"),
-        micro_from_str(F.col("lon_str")).alias("lon_us"))
-    pts = pts.withColumn("cell6", cell_encode(F.col("lat_us"),
-                                              F.col("lon_us"), 6))
-    return pts.groupBy("host").agg(
-        F.count("*").alias("n_points"),
-        F.countDistinct("cell6").alias("n_cells6"),
-        F.min("lat_us").alias("min_lat_us"),
-        F.max("lat_us").alias("max_lat_us"),
-        F.min("lon_us").alias("min_lon_us"),
-        F.max("lon_us").alias("max_lon_us"),
-    )
-
-
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style cluster-then-prune embedding dedup: nearest of 16
     deterministic centroids, drop any vector with a lower-id neighbor in
@@ -2375,48 +1661,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return semantic_dedup(emb, n_lists=16, threshold=0.43)
-
-
-def q_geo_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Impossible-travel screen: per crawl host, order its geotagged
-    pages by crawl time (page id ≙ warc_ts seconds) and measure the
-    great-circle hop between consecutive geotags; roll up hop count,
-    max implied speed (km/h, floored to bigint — coarse bucket keeps
-    the hash immune to libm ulps) and the count of hops over
-    1000 km/h. The geo-consistency signal a crawl curation pass uses
-    to flag location-spoofing/aggregator hosts.
-
-    Scale shape: one window over (host, pid) — the same shuffle the
-    host rollups already pay — then a map-side-combinable aggregate;
-    1000 hosts ⇒ no skew (a hot host would ride the same salting the
-    PIP join uses)."""
-    from zen3geo_spark.operators.spatial_join import haversine_m_sql
-
-    pages = synth_pages(spark, N_PAGES).select(
-        F.expr(URL_HOST_SQL).alias("host"),
-        F.expr(URL_PID_SQL).alias("pid"), "text")
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = pages.select("host", "pid", lat_s.alias("lat_str"),
-                       lon_s.alias("lon_str"))
-    pts = pts.filter(F.col("lat_str") != "").select(
-        "host", "pid",
-        micro_from_str(F.col("lat_str")).alias("lat_us"),
-        micro_from_str(F.col("lon_str")).alias("lon_us"))
-    w = Window.partitionBy("host").orderBy("pid")
-    hop = pts.select(
-        "host", "pid", "lat_us", "lon_us",
-        F.lag("lat_us").over(w).alias("p_lat"),
-        F.lag("lon_us").over(w).alias("p_lon"),
-        F.lag("pid").over(w).alias("p_pid"),
-    ).filter(F.col("p_pid").isNotNull())
-    hav = haversine_m_sql("p_lat", "p_lon", "lat_us", "lon_us", "spark")
-    speed = f"((({hav}) / 1000.0) / (cast(pid - p_pid as double) / 3600.0))"
-    hops = hop.selectExpr("host", f"cast(floor({speed}) as bigint) as kmh")
-    return hops.groupBy("host").agg(
-        F.count("*").alias("n_hops"),
-        F.max("kmh").alias("max_kmh"),
-        F.sum((F.col("kmh") >= F.lit(1000)).cast("int")).alias("n_impossible"),
-    )
 
 
 def q_spread_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2624,56 +1868,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_fixed_point(edges, n_nodes=1000, iters=5)
 
 
-def q_lang_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-operator composition: fixed-point PageRank over the host
-    graph joined back onto the pages corpus — per language, page count
-    and total host-authority mass. The "how authoritative is our
-    German crawl" rollup; shows the graph operators compose with the
-    corpus scan. The 1000-row rank table broadcasts; the corpus never
-    shuffles for the join. Integer fixed-point => bit-exact."""
-    from zen3geo_spark.operators.linkgraph import (
-        pagerank_fixed_point, synth_host_edges,
-    )
-
-    ranks = pagerank_fixed_point(
-        synth_host_edges(spark, n_hosts=1000), n_nodes=1000, iters=5)
-    pages = synth_pages(spark, N_PAGES).selectExpr(
-        "lang", f"({URL_PID_SQL}) % 1000 as host_num")
-    return (pages.join(F.broadcast(
-                ranks.withColumnRenamed("node", "host_num")), "host_num")
-            .groupBy("lang")
-            .agg(F.count("*").alias("n_pages"),
-                 F.sum("rank_fp").alias("authority_mass")))
-
-
-def q_degree_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Joint degree distribution (degree-mixing matrix) of the host
-    graph: for every undirected edge, the (deg_lo, deg_hi) endpoint
-    pair, counted — the assortativity profile that separates
-    hub-to-leaf link-farm topologies from organic hub-to-hub webs,
-    computed without any FP correlation coefficient (the integer JDD
-    IS the sufficient statistic). One degree aggregate + two joins +
-    one group-by; all integer => bit-exact."""
-    from zen3geo_spark.operators.linkgraph import synth_host_edges_dense
-
-    edges = synth_host_edges_dense(spark, n_hosts=1000)
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    deg = (und.select(F.col("a").alias("node"))
-           .unionAll(und.select(F.col("b").alias("node")))
-           .groupBy("node").agg(F.count("*").alias("deg")))
-    j = (und.join(deg.select(F.col("node").alias("a"),
-                             F.col("deg").alias("da")), on="a")
-         .join(deg.select(F.col("node").alias("b"),
-                          F.col("deg").alias("db")), on="b"))
-    return (j.select(F.least("da", "db").alias("deg_lo"),
-                     F.greatest("da", "db").alias("deg_hi"))
-            .groupBy("deg_lo", "deg_hi")
-            .agg(F.count("*").alias("n_edges")))
-
-
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded k-core peeling of the dense host graph (3 rounds of
     "drop degree<8 nodes", cascading): dense-core vs spam-tendril separation.
@@ -2798,30 +1992,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inverted_index(docs, min_df=2, max_df=1_000_000)
 
 
-def q_embed_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup CLUSTERING end-to-end: exact block-matmul
-    cosine pairs (>= 0.4) → connected components → (vec, component) keep
-    groups — the semantic-dedup shape (cluster, keep min id per group)."""
-    from zen3geo_spark.operators.dedup import connected_components
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = cosine_near_dup_pairs_blocked(emb, threshold=0.4).select("a_id", "b_id")
-    comp = connected_components(
-        pairs, nodes=emb.select(F.col("vec_id").alias("node")))
-    return comp.select("node", "component")
-
-
-def q_word_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT word-Jaccard baseline on a bounded slice (doc_id < 200), no
-    document-frequency blocking — the recall yardstick for word_jaccard's
-    df-prefiltered path (which can miss pairs whose shared tokens are all
-    high-df; see the df-blocking recall note in ngram_jaccard)."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .filter(F.col("doc_id") < 200))
-    out = ngram_jaccard(docs, shingle_n=1, threshold=0.5)
-    return out.select("a_id", "b_id", F.round("jaccard", 6).alias("jaccard"))
-
-
 def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster map algebra: 3x3 focal sum/max over the world-points count
     raster (the smoothing/hot-spot-dilation pass GDAL focal stats and
@@ -2874,33 +2044,6 @@ def q_geocode_gazetteer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         "host", "n_pages", "n_candidates", "lat_us", "lon_us",
         cell_encode(F.col("lat_us"), F.col("lon_us"), 4).alias("cell"))
-
-
-def q_cell_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell crawl-volume TREND: OLS slope of 5-minute-epoch page
-    counts per res-2 cell, kept as the exact bigint (numerator,
-    denominator) pair (n*Sxy - Sx*Sy, n*Sxx - Sx*Sx) — the
-    growing/shrinking-coverage screen that complements cell_anomaly's
-    point outliers. Epochs are rebased to the crawl start so the
-    moment sums stay far from bigint range at any corpus size."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select("warc_ts", lat_s.alias("lat_str"),
-                        lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select(F.expr("unix_timestamp(warc_ts) div 300 - 5680224")
-                   .alias("t"),
-                   cell_encode(micro_from_str(F.col("lat_str")),
-                               micro_from_str(F.col("lon_str")), 2)
-                   .alias("cell")))
-    cnts = pts.groupBy("cell", "t").agg(F.count("*").alias("y"))
-    n, st, sy = F.count("*"), F.sum("t"), F.sum("y")
-    sxy = F.sum(F.col("t") * F.col("y"))
-    sxx = F.sum(F.col("t") * F.col("t"))
-    return cnts.groupBy("cell").agg(
-        n.alias("n_epochs"), sy.alias("sum_y"),
-        (n * sxy - st * sy).alias("slope_num"),
-        (n * sxx - st * st).alias("slope_den"))
 
 
 def q_simplify_track(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2978,19 +2121,6 @@ def q_flow_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
     img = q_rasterize_world_points(spark, sf_dir).select(
         "row", "col", F.col("value").cast("long").alias("value"))
     return flow_accumulate(img, width=360, height=180, rounds=3)
-
-
-def q_flow_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D8 steepest-descent flow direction over the world-points count
-    raster (hydrology routing on the DEM analogue): bounded fan-out 8 +
-    one left join back onto the pixel table + integer-encoded argmax —
-    tie-break toward the lowest direction index is inside the encoding,
-    so the map is hash-exact."""
-    from zen3geo_spark.operators.raster_algebra import flow_dir_d8
-
-    img = q_rasterize_world_points(spark, sf_dir).select(
-        "row", "col", F.col("value").cast("long").alias("value"))
-    return flow_dir_d8(img, width=360, height=180)
 
 
 _IOU_GT_SQL = """
@@ -3085,123 +2215,6 @@ def q_layout_rle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                         " as collapse_milli"))
 
 
-def q_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Late-data profile that justifies a watermark choice: replay the
-    stream in arrival order (event_id), track the running max event
-    time per type, and count rows arriving more than 2 h behind it +
-    the worst lateness — one ordered frame over the per-type stream,
-    integer epoch seconds ⇒ hash-exact."""
-    from pyspark.sql.window import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
-        "event_type", "event_id",
-        # lateness uses DIFFERENCES only, so the session-tz offset of
-        # the NTZ→LTZ cast cancels against the DuckDB epoch() twin
-        "unix_timestamp(cast(ts as timestamp)) as es")
-    w = (Window.partitionBy("event_type").orderBy("event_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    run = ev.withColumn("_hwm", F.max("es").over(w))
-    return (run.groupBy("event_type")
-            .agg(F.count("*").alias("n_events"),
-                 F.sum(F.when(F.col("es") < F.col("_hwm") - 7200, 1)
-                       .otherwise(0)).alias("n_late_2h"),
-                 F.max(F.when(F.col("_hwm") > F.col("es"),
-                              F.col("_hwm") - F.col("es"))
-                       .otherwise(0)).alias("max_lateness_s")))
-
-
-def q_equi_depth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANALYZE-style equi-depth histogram (32 buckets) over lineitem
-    prices in exact integer cents — the CBO statistics collector:
-    bucket = (global rank − 1) div ceil(n/32) with the scale-safe
-    numbering, per-bucket min/max/rows/ndv. Exact rank boundaries, not
-    a sample."""
-    from zen3geo_spark.operators.combinators import with_global_pos
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").selectExpr(
-        "cast(round(l_extendedprice * 100) as bigint) as cents",
-        "l_orderkey * 10 + l_linenumber as rid")
-    n = li.count()
-    w = -(-n // 32)
-    ranked = with_global_pos(li, ["cents", "rid"], "pos")
-    return (ranked.selectExpr(f"(pos - 1) div {w} as bucket", "cents")
-            .groupBy("bucket")
-            .agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"),
-                 F.count("*").alias("n_rows"),
-                 F.countDistinct("cents").alias("ndv")))
-
-
-def q_join_card_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Histogram-based join-cardinality estimation audited against the
-    true join size — the CBO selectivity model as a query: bucket both
-    sides' key distributions (equi-width, key div 8), estimate
-    |A⋈B| per bucket as na·nb div ndv_max (uniform-within-bucket,
-    container-ndv denominator), and report estimate vs actual."""
-    from zen3geo_spark.operators._util import pair_all
-    from zen3geo_spark.operators.linkgraph import synth_host_edges
-
-    a = (synth_pages(spark, N_PAGES)
-         .selectExpr(f"({URL_PID_SQL}) % 1000 as k"))
-    b = synth_host_edges(spark, 1000).selectExpr("dst as k")
-    ha = a.selectExpr("k div 8 as b8", "k").groupBy("b8").agg(
-        F.count("*").alias("na"), F.countDistinct("k").alias("nda"))
-    hb = b.selectExpr("k div 8 as b8", "k").groupBy("b8").agg(
-        F.count("*").alias("nb"), F.countDistinct("k").alias("ndb"))
-    est = (ha.join(hb, "b8")
-           .selectExpr("na * nb div greatest(nda, ndb) as e")
-           .agg(F.sum("e").alias("est_rows")))
-    actual = (a.groupBy("k").agg(F.count("*").alias("ca"))
-              .join(b.groupBy("k").agg(F.count("*").alias("cb")), "k")
-              .agg(F.sum(F.col("ca") * F.col("cb")).alias("true_rows")))
-    return pair_all(est, actual).selectExpr(
-        "est_rows", "true_rows",
-        "1000 * est_rows div true_rows as ratio_milli")
-
-
-_STR_QBOX_SQL = """
-    select i.i as q_id,
-           (i.i * 48271 + 7) % 2147483647 % 300000001 - 150000000 as x1,
-           ((i.i * 48271 + 7) * 48271 + 11) % 2147483647 % 140000001
-             - 80000000 as y1,
-           (i.i * 48271 + 7) % 2147483647 % 300000001 - 150000000
-             + 30000000 as x2,
-           ((i.i * 48271 + 7) * 48271 + 11) % 2147483647 % 140000001
-             - 80000000 + 20000000 as y2
-    from range(20) as i(i)
-"""
-
-
-def q_str_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R-tree QUERY against the STR-packed leaf directory: per query
-    bbox, candidate leaves touched (MBR overlap) + candidate point
-    budget vs the exact in-box count — the index-selectivity audit
-    that justifies the bulk load. The leaf directory is index-sized ⇒
-    constant-key broadcast; the exact side here scans (the audit);
-    production uses the cell-blocked path for the answer itself."""
-    from zen3geo_spark.operators._util import pair_all
-    from zen3geo_spark.operators.spatial_join import str_pack_points
-
-    qb = spark.sql(_STR_QBOX_SQL)
-    pts = _points_df(spark)
-    leaves = str_pack_points(pts, leaf_cap=64)
-    cand = (pair_all(qb, leaves)
-            .filter("minx_us <= x2 and maxx_us >= x1 and "
-                    "miny_us <= y2 and maxy_us >= y1")
-            .groupBy("q_id")
-            .agg(F.count("*").alias("n_cand_leaves"),
-                 F.sum("n_pts").alias("n_cand_points")))
-    exact = (pair_all(pts, qb)
-             .filter("lon_us between x1 and x2 and "
-                     "lat_us between y1 and y2")
-             .groupBy("q_id").agg(F.count("*").alias("n_exact")))
-    return (qb.select("q_id")
-            .join(cand, "q_id", "left").join(exact, "q_id", "left")
-            .selectExpr("q_id",
-                        "coalesce(n_cand_leaves, 0) as n_cand_leaves",
-                        "coalesce(n_cand_points, 0) as n_cand_points",
-                        "coalesce(n_exact, 0) as n_exact"))
-
-
 def q_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE-sketch demonstration: distinct active users per 6 h
     window estimated by HyperLogLog register merge (max per register —
@@ -3225,187 +2238,6 @@ def q_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "true_distinct", "registers_hit"))
 
 
-def q_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg-style expire-snapshots PLANNING: over a 120-snapshot
-    metadata list, keep the most recent 7 plus the first snapshot of
-    every 7-day bucket; everything else is marked expire. Pure window
-    arithmetic over a metadata-sized table (snapshot lists are tiny by
-    construction — the data files are never touched)."""
-    from pyspark.sql.window import Window
-
-    snaps = spark.range(120).selectExpr(
-        "id as snap_id",
-        "cast(19723 + id * 2 + id % 3 as long) as day_no")
-    wr = Window.orderBy(F.col("day_no").desc(), F.col("snap_id").desc())
-    ww = Window.partitionBy(F.expr("day_no div 7")).orderBy(
-        "day_no", "snap_id")
-    return (snaps
-            .withColumn("_recent", F.row_number().over(wr))
-            .withColumn("_wk_first", F.row_number().over(ww))
-            .selectExpr(
-                "snap_id", "day_no",
-                "case when _recent <= 7 then 'recent' "
-                "when _wk_first = 1 then 'weekly' "
-                "else 'expire' end as action"))
-
-
-def q_embed_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension embedding distribution audit — the quantization
-    calibration pass that picks int8 scales: posexplode → per-dim
-    min/max and micro-scaled mean (floor(1e6·Σv) div n keeps the mean
-    integer-exact; Σ of float32-exact doubles is order-stable after the
-    1e-6 round both engines apply identically via the integer floor of
-    the rounded sum)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    d = (emb.select(F.posexplode("embedding").alias("dim", "v"))
-         .groupBy("dim")
-         .agg(F.count("*").alias("n"),
-              F.round(F.min("v"), 6).alias("min_v"),
-              F.round(F.max("v"), 6).alias("max_v"),
-              F.round(F.avg(F.col("v").cast("double")), 6)
-              .alias("mean_v")))
-    return d.select("dim", "n", "min_v", "max_v", "mean_v")
-
-
-PROFILE_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
-
-
-def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generic data-quality profile (dbt-style): per column — null
-    count, empty-string count, distinct count — via one stacked
-    unpivot; the schema-drift / ingestion-health audit every pipeline
-    fronts its tables with."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    stacked = docs.selectExpr(
-        "stack({}, {}) as (col, val)".format(
-            len(PROFILE_COLS),
-            ", ".join(f"'{c}', cast({c} as string)"
-                      for c in PROFILE_COLS)))
-    return (stacked.groupBy("col")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(F.when(F.col("val").isNull(), 1).otherwise(0))
-                 .alias("n_null"),
-                 F.sum(F.when(F.col("val") == "", 1).otherwise(0))
-                 .alias("n_empty"),
-                 F.countDistinct("val").alias("n_distinct")))
-
-
-def q_rollup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP aggregation (the OLAP subtotal surface): doc counts and
-    byte totals by (lang, source) with per-lang subtotals and a grand
-    total — grouping levels tagged via grouping_id, NULL dimensions
-    coalesced to 'ALL' so the row set is hash-stable."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (docs.rollup("lang", "source")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.length("text")).alias("n_bytes"),
-                 F.grouping_id().alias("gid"))
-            .selectExpr("coalesce(lang, 'ALL') as lang",
-                        "coalesce(source, 'ALL') as source",
-                        "gid", "n_docs", "n_bytes"))
-
-
-PIVOT_SOURCES = ["src0", "src1", "src2", "src3", "src4"]
-
-
-def q_pivot_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT (wide reshaping): doc counts per lang × source as one row
-    per lang with a column per source — explicit pivot value list so
-    the schema is deterministic; the twin is the equivalent
-    conditional aggregation."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = (docs.groupBy("lang").pivot("source", PIVOT_SOURCES).count())
-    return out.select("lang", *[F.coalesce(F.col(s), F.lit(0))
-                                .alias(s) for s in PIVOT_SOURCES])
-
-
-def q_host_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer percent-rank of hosts by total bytes (percent_rank /
-    cume_dist surface without FP): pr_milli = 1000·(rank−1) div (n−1),
-    cume_milli = 1000·rank_max div n — exact rational arithmetic over
-    one host-keyed aggregate; the global rank uses the scale-safe
-    two-phase numbering (with_global_pos), never a single-partition
-    Window, so the plan survives 10^8 hosts."""
-    from zen3geo_spark.operators._util import pair_all
-    from zen3geo_spark.operators.combinators import with_global_pos
-
-    hosts = (synth_pages(spark, N_PAGES)
-             .selectExpr(f"{URL_HOST_SQL} as host",
-                         "length(text) as tl")
-             .groupBy("host").agg(F.sum("tl").alias("bytes")))
-    n = hosts.agg(F.count("*").alias("n"))
-    ranked = pair_all(with_global_pos(hosts, ["bytes", "host"], "rk"), n)
-    return ranked.selectExpr(
-        "host", "bytes",
-        "1000 * (rk - 1) div (n - 1) as pr_milli",
-        "1000 * rk div n as cume_milli")
-
-
-# engine-neutral TPC-H Q3/Q5 shapes in integer cents·percent units
-# (price·100 and discount·100 are exact integers, so revenue is bigint
-# and the top-k cutoff is deterministic — no FP sum-order dependence)
-_REV_C = ("cast(round(l_extendedprice * 100) as bigint) * "
-          "(100 - cast(round(l_discount * 100) as bigint))")
-
-_Q3_SQL = f"""
-    select l_orderkey,
-           sum({_REV_C}) as revenue_c,
-           o_orderdate, o_orderpriority
-    from customer
-    join orders on c_custkey = o_custkey
-    join lineitem on l_orderkey = o_orderkey
-    where c_mktsegment = 'BUILDING'
-      and o_orderdate < timestamp '1997-03-15 00:00:00'
-      and l_shipdate > timestamp '1997-03-15 00:00:00'
-    group by l_orderkey, o_orderdate, o_orderpriority
-    order by revenue_c desc, l_orderkey
-    limit 10
-"""
-
-_Q5_SQL = f"""
-    select n_name, sum({_REV_C}) as revenue_c,
-           count(*) as n_items
-    from customer
-    join orders on c_custkey = o_custkey
-    join lineitem on l_orderkey = o_orderkey
-    join supplier on l_suppkey = s_suppkey
-                 and s_nationkey = c_nationkey
-    join nation on c_nationkey = n_nationkey
-    join region on n_regionkey = r_regionkey
-    where r_name = 'ASIA'
-      and o_orderdate >= timestamp '1996-01-01 00:00:00'
-      and o_orderdate < timestamp '1998-01-01 00:00:00'
-    group by n_name
-"""
-
-
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape (shipping priority): customer⋈orders⋈lineitem
-    with selective predicates on both fact sides, top-10 orders by
-    exact integer revenue — the classic join-ordering/broadcast
-    benchmark over the driver's relational tables; Catalyst picks
-    broadcast for the filtered customer side."""
-    _register_tpch(spark, sf_dir, ["customer", "orders", "lineitem"])
-    return spark.sql(_Q3_SQL)
-
-
-def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape (local supplier volume): the 6-table snowflake
-    join with the co-nationality constraint — region/nation dims
-    broadcast, customer⋈orders⋈lineitem⋈supplier shuffle on keys;
-    integer-cents revenue ⇒ hash-exact."""
-    _register_tpch(spark, sf_dir,
-                   ["customer", "orders", "lineitem", "supplier",
-                    "nation", "region"])
-    return spark.sql(_Q5_SQL)
-
-
-def _register_tpch(spark: SparkSession, sf_dir: str,
-                   tables: list[str]) -> None:
-    for t in tables:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-
-
 HEX_A, HEX_B = 5_000_000, 8_660_254  # ~near-regular 20°-wide hexes
 
 
@@ -3424,45 +2256,6 @@ def q_hex_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             .selectExpr("q", "r", "n_points",
                         f"3 * {HEX_A} * q as cx",
                         f"{HEX_B} * q + 2 * {HEX_B} * r as cy"))
-
-
-def q_cell_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell distinctive vocabulary — the geospatial × webtext
-    product query ('what does this region talk about'): token lift =
-    1000·n_ct·T div (n_c·n_t) against the corpus unigram distribution,
-    top-3 tokens per res-3 cell by (lift desc, token). One token
-    explode feeds both the per-cell and corpus aggregates; everything
-    integer ⇒ hash-exact."""
-    from pyspark.sql.window import Window
-
-    from zen3geo_spark.functions.geo import cell_encode
-    from zen3geo_spark.operators._util import pair_all
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    placed = docs.selectExpr(
-        "doc_id", "text",
-        "(doc_id * 48271 + 11) % 2147483647 % 180000001 - 90000000"
-        " as lat_us",
-        "((doc_id * 48271 + 11) % 2147483647 * 48271 + 7) % 2147483647"
-        " % 360000001 - 180000000 as lon_us").withColumn(
-        "cell", cell_encode(F.col("lat_us"), F.col("lon_us"), 3))
-    toks = placed.select(
-        "cell", F.explode(F.split(F.lower(F.col("text")), " "))
-        .alias("tok")).filter("tok != ''")
-    ct = toks.groupBy("cell", "tok").agg(F.count("*").alias("n_ct"))
-    c = toks.groupBy("cell").agg(F.count("*").alias("n_c"))
-    t = toks.groupBy("tok").agg(F.count("*").alias("n_t"))
-    tot = toks.agg(F.count("*").alias("tt"))
-    j = (pair_all(ct.join(c, "cell").join(t.filter("n_t >= 5"), "tok"),
-                  tot)
-         .selectExpr("cell", "tok",
-                     "1000 * n_ct * tt div (n_c * n_t) as lift_milli"))
-    w = Window.partitionBy("cell").orderBy(
-        F.col("lift_milli").desc(), F.col("tok"))
-    return (j.withColumn("_rk", F.row_number().over(w))
-            .filter("_rk <= 3")
-            .select("cell", F.col("_rk").alias("rk"), "tok",
-                    "lift_milli"))
 
 
 def q_skyline_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3492,23 +2285,6 @@ def q_skyline_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("host", "x", "y"))
 
 
-def q_url_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy URL near-dup pairs inside each host: Levenshtein distance
-    ≤ 2 over host-blocked candidate pairs (the typo/variant URL
-    collapse) — both engines ship the classic unit-cost DP, so the
-    distance is cross-engine exact; blocking keeps the pair space
-    per-host quadratic, never corpus-quadratic."""
-    pages = synth_pages(spark, N_PAGES).selectExpr(
-        f"{URL_HOST_SQL} as host", "url", f"{URL_PID_SQL} as pid")
-    a = pages.selectExpr("host", "url as a_url", "pid as a_pid")
-    b = pages.selectExpr("host", "url as b_url", "pid as b_pid")
-    return (a.join(b, "host")
-            .filter("a_pid < b_pid")
-            .withColumn("dist", F.levenshtein("a_url", "b_url"))
-            .filter("dist <= 2")
-            .select("host", "a_pid", "b_pid", "dist"))
-
-
 _UNION_RECTS_SQL = """
     select i.i as rect_id,
            (i.i * 7919123) % 280000000 - 140000000 as x1,
@@ -3529,33 +2305,6 @@ def q_rect_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zen3geo_spark.operators.overlay import rect_union_area
 
     return rect_union_area(spark.sql(_UNION_RECTS_SQL))
-
-
-def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OHLC downsampling bars per (6 h window, event_type) — the TSDB
-    rollup: open/close via deterministic first/last picks
-    ((ts, event_id) total order), high/low plain min/max. Two windows
-    over one window-keyed shuffle."""
-    from pyspark.sql.window import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
-        "event_id", "ts", "event_type", "value",
-        "date_trunc('hour', ts) as _h").selectExpr(
-        "event_id", "ts", "event_type", "value",
-        "timestampadd(HOUR, -(hour(_h) % 6), _h) as wstart")
-    w = Window.partitionBy("wstart", "event_type")
-    asc = w.orderBy("ts", "event_id")
-    desc = w.orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (ev.withColumn("_ra", F.row_number().over(asc))
-            .withColumn("_rd", F.row_number().over(desc))
-            .groupBy("wstart", "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.round(F.max(F.when(F.col("_ra") == 1,
-                                      F.col("value"))), 4).alias("open"),
-                 F.round(F.max("value"), 4).alias("high"),
-                 F.round(F.min("value"), 4).alias("low"),
-                 F.round(F.max(F.when(F.col("_rd") == 1,
-                                      F.col("value"))), 4).alias("close")))
 
 
 def q_ip_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3739,27 +2488,6 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdx_index(synth_pages(spark, N_PAGES), records_per_file=200)
 
 
-def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host politeness scheduling of the crawl frontier: queue rank
-    per host (window row_number) × host crawl-delay → deterministic
-    fetch slots and worker assignment — the frontier→fetcher planning
-    pass of a distributed crawler, all window/arithmetic codegen."""
-    from pyspark.sql.window import Window
-
-    from zen3geo_spark.operators.dedup import gram_hash40
-
-    pages = synth_pages(spark, N_PAGES).selectExpr(
-        "url", f"{URL_HOST_SQL} as host", f"{URL_PID_SQL} as pid")
-    w = Window.partitionBy("host").orderBy("pid")
-    return (pages
-            .withColumn("slot", F.row_number().over(w) - 1)
-            .withColumn("_h", gram_hash40(F.col("host"), 1))
-            .selectExpr(
-                "url", "host", "slot",
-                "slot * (1 + _h % 5) as sched_s",
-                "_h % 32 as worker"))
-
-
 def q_image_chips(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xbatcher chipping over REAL decoded netpbm rasters (floor
     semantics, trailing partials dropped) with per-chip stats — decode
@@ -3773,18 +2501,6 @@ def q_image_chips(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("media_id", "chip_row", "chip_col",
                       F.round("mean_px", 6).alias("mean_px"),
                       "min_px", "max_px")
-
-
-def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SLIDING event-time windows (6 h length, 2 h slide — the overlap
-    variant tumbling_window doesn't cover): per (window, event_type)
-    counts via F.window's multi-assignment."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (ev.groupBy(F.window("ts", "6 hours", "2 hours").alias("w"),
-                       "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"),
-                    "event_type", "n"))
 
 
 def q_geo_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3807,20 +2523,6 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return funnel_counts(ev, ["signup", "view", "click", "purchase"])
-
-
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix over crawl epochs: cohort = a host's
-    first-seen epoch; cell (cohort, epoch) = hosts of that cohort still
-    crawled in that epoch. Two host-keyed aggregates + one join — the
-    classic product-analytics rollup re-expressed on crawl activity."""
-    pages = synth_pages(spark, N_PAGES).selectExpr(
-        f"{URL_HOST_SQL} as host", f"({URL_PID_SQL}) div 500 as epoch")
-    act = pages.groupBy("host", "epoch").agg(F.count("*").alias("n"))
-    first = act.groupBy("host").agg(F.min("epoch").alias("cohort"))
-    return (act.join(first, "host")
-            .groupBy("cohort", "epoch")
-            .agg(F.countDistinct("host").alias("n_hosts")))
 
 
 def q_suffix_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3979,17 +2681,6 @@ def q_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return c4_segment_clean(synth_pages(spark, N_PAGES), "url", "text",
                             min_tokens=3)
-
-
-def q_lang_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declared-vs-detected language confusion matrix over documents —
-    the metadata-trust audit (CLD-mismatch filter shape): one scan +
-    one small groupBy on the (declared, detected) pair."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (docs.select(F.col("lang").alias("declared"),
-                        lang_id(F.col("text")).alias("detected"))
-            .groupBy("declared", "detected")
-            .agg(F.count("*").alias("n_docs")))
 
 
 def q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4229,34 +2920,6 @@ def q_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return map_match(pts, segs, res=6)
 
 
-def q_link_geo_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geotag label propagation over the link graph: coordinate-less
-    pages (the ~1/7 the extractor cannot locate) inherit the MAJORITY
-    res-3 cell of the tagged pages that link to them (one hop; count
-    desc, cell asc tie-break). Join shapes: links equi-join tagged
-    sources on page id, one (dst, cell) count, one bounded argmax
-    window — the web-graph sibling of geo_backfill's host-modal rule
-    and knn_classify's spatial vote."""
-    links = spark.range(N_PAGES).select(
-        F.col("id").alias("src"),
-        ((F.col("id") * 2654435761) % N_PAGES).alias("dst"))
-    tagged = _points_df(spark).select(
-        F.col("point_id").alias("src"),
-        cell_encode(F.col("lat_us"), F.col("lon_us"), 3).alias("cell"))
-    votes = (links.join(tagged, "src")
-             .filter(F.col("dst") % 7 == 3)
-             .groupBy("dst", "cell").agg(F.count("*").alias("n_votes")))
-    w = Window.partitionBy("dst").orderBy(
-        F.col("n_votes").desc(), F.col("cell").asc())
-    tot = Window.partitionBy("dst")
-    return (votes
-            .withColumn("n_tagged_in", F.sum("n_votes").over(tot))
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select(F.col("dst").alias("page_id"), "cell",
-                    "n_votes", "n_tagged_in"))
-
-
 def q_contour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isoline extraction over the world-points count raster: every
     4-adjacent pixel-pair crossing of the count threshold (marching-
@@ -4268,50 +2931,6 @@ def q_contour(spark: SparkSession, sf_dir: str) -> DataFrame:
     img = q_rasterize_world_points(spark, sf_dir).select(
         "row", "col", F.col("value").cast("long").alias("value"))
     return contour_crossings(img, width=360, height=180, threshold=2)
-
-
-STAY_R2 = 10 ** 16  # squared planar run-continuity radius (~1e8 udeg)
-
-
-def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stay-point / local-burst detection per crawl host: maximal runs
-    of consecutive geotagged pages whose hop distance stays within the
-    run radius (gaps-and-islands: break flag -> running-sum group id),
-    keeping runs of >= 3 pages with their exact integer centroid
-    (shift-before-divide keeps the floor division non-negative, so
-    Spark ``div`` and DuckDB ``//`` agree). The mobility-mining
-    primitive (stay points) applied to host geo-consistency runs."""
-    pages = synth_pages(spark, N_PAGES).select(
-        F.expr(URL_HOST_SQL).alias("host"),
-        F.expr(URL_PID_SQL).alias("pid"), "text")
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select("host", "pid", lat_s.alias("lat_str"),
-                        lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select("host", "pid",
-                   micro_from_str(F.col("lat_str")).alias("lat_us"),
-                   micro_from_str(F.col("lon_str")).alias("lon_us")))
-    w = Window.partitionBy("host").orderBy("pid")
-    dlat = F.col("lat_us") - F.lag("lat_us").over(w)
-    dlon = F.col("lon_us") - F.lag("lon_us").over(w)
-    brk = F.when(F.lag("lat_us").over(w).isNull()
-                 | (dlat * dlat + dlon * dlon > STAY_R2), 1).otherwise(0)
-    grp = F.sum(brk).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    runs = (pts.withColumn("grp", grp)
-            .groupBy("host", "grp")
-            .agg(F.count("*").alias("n_pages"),
-                 F.min("pid").alias("first_pid"),
-                 F.max("pid").alias("last_pid"),
-                 F.sum("lat_us").alias("_slat"),
-                 F.sum("lon_us").alias("_slon")))
-    n = F.col("n_pages")
-    return (runs.filter(n >= 3)
-            .select("host", "first_pid", "last_pid", "n_pages",
-                    F.expr("(_slat + n_pages * 90000000) div n_pages"
-                           " - 90000000").alias("ctr_lat_us"),
-                    F.expr("(_slon + n_pages * 180000000) div n_pages"
-                           " - 180000000").alias("ctr_lon_us")))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -4338,30 +2957,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     entries (positional), so new-this-round and recently-changed queries
     lead, and the longest-stable trivial scans/aggregates trail — only
     queries that have hash-matched in every prior round may fall outside
-    the window."""
+    the window.
+
+    A query is here only if it runs engine lines no other query runs, or
+    is protected (named by a test, a SURVEY §2.1/§2.2 reference operator,
+    or listed in ``tools/query_coverage.py``); that tool measures it."""
     return {
         # --- newest: time travel, stream-stream join, crossings ---
         "dedup_pr_audit": q_dedup_pr_audit,
         "layout_rle_audit": q_layout_rle_audit,
-        "late_data_audit": q_late_data_audit,
-        "equi_depth_hist": q_equi_depth_hist,
-        "join_card_est": q_join_card_est,
-        "str_query": q_str_query,
         "windowed_hll": q_windowed_hll,
-        "snapshot_expiry": q_snapshot_expiry,
-        "embed_calibration": q_embed_calibration,
-        "table_profile": q_table_profile,
-        "rollup_report": q_rollup_report,
-        "pivot_langs": q_pivot_langs,
-        "host_percentiles": q_host_percentiles,
-        "shipping_priority": q_shipping_priority,
-        "local_supplier_volume": q_local_supplier_volume,
         "hex_bins": q_hex_bins,
-        "cell_topics": q_cell_topics,
         "skyline_hosts": q_skyline_hosts,
-        "url_editdist": q_url_editdist,
         "rect_union_area": q_rect_union_area,
-        "ohlc_bars": q_ohlc_bars,
         "ip_geo": q_ip_geo,
         "table_checksum": q_table_checksum,
         "dom_stats": q_dom_stats,
@@ -4373,12 +2981,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "iou_match": q_iou_match,
         "graph_walks": q_graph_walks,
         "cdx_index": q_cdx_index,
-        "fetch_schedule": q_fetch_schedule,
         "image_chips": q_image_chips,
-        "sliding_window": q_sliding_window,
         "geo_kmeans": q_geo_kmeans,
         "funnel": q_funnel,
-        "retention_cohorts": q_retention_cohorts,
         "suffix_ranks": q_suffix_ranks,
         "poly_intersect": q_poly_intersect,
         "bigram_logppl": q_bigram_logppl,
@@ -4389,7 +2994,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "seg_crossings": q_seg_crossings,
         "readability": q_readability,
         "c4_clean": q_c4_clean,
-        "lang_mismatch": q_lang_mismatch,
         # --- link-graph traversal + raster map algebra ---
         "equalize": q_equalize,
         "compaction_plan": q_compaction_plan,
@@ -4405,9 +3009,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "link_jaccard": q_link_jaccard,
         "flow_basin": q_flow_basin,
         "flow_accum": q_flow_accum,
-        "flow_dir": q_flow_dir,
-        "lang_authority": q_lang_authority,
-        "degree_mixing": q_degree_mixing,
         "kcore": q_kcore,
         "cheapest_paths": q_cheapest_paths,
         "scd2_history": q_scd2_history,
@@ -4415,37 +3016,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bfs_hops": q_bfs_hops,
         "cocitation": q_cocitation,
         "contour": q_contour,
-        "stay_points": q_stay_points,
         "map_match": q_map_match,
         "slope_aspect": q_slope_aspect,
-        "link_geo_propagate": q_link_geo_propagate,
         "simplify_track": q_simplify_track,
         "rect_overlay": q_rect_overlay,
         "focal_stats": q_focal_stats,
         "idw_grid": q_idw_grid,
         "geocode_gazetteer": q_geocode_gazetteer,
-        "cell_trend": q_cell_trend,
         # --- new this session: cell-set algebra + grid clustering ---
-        "compact_cells": q_compact_cells,
         "compact_roundtrip": q_compact_roundtrip,
         "grid_dbscan": q_grid_dbscan,
         "warc_roundtrip": q_warc_roundtrip,
         "stream_dedup": q_stream_dedup,
         "polygon_cover": q_polygon_cover,
-        "crawl_transitions": q_crawl_transitions,
         "trajectory_cover": q_trajectory_cover,
         "disk_cover": q_disk_cover,
-        "coverage_delta": q_coverage_delta,
-        "cover_rollup": q_cover_rollup,
         "str_pack": q_str_pack,
         "interval_join": q_interval_join,
-        "bpe_train": q_bpe_train,
         "bpe_encode": q_bpe_encode,
         "moran_i": q_moran_i,
         "local_moran": q_local_moran,
-        "snapshot_prune": q_snapshot_prune,
-        "cell_diversity": q_cell_diversity,
-        "cell_anomaly": q_cell_anomaly,
         # --- new this round (r5) ---
         "zarr_like_scan": q_zarr_like_scan,
         "stack_cast_fill": q_stack_cast_fill,
@@ -4466,20 +3056,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "html_extract": q_html_extract,
         "url_canonical": q_url_canonical,
         "crawl_delta": q_crawl_delta,
-        # --- positions 50+: the 22 r3-window rotation queries (the r4
-        # --- verdict's task 8). This round added 91 never-driver-checked
-        # --- queries against a 50-slot window, so re-checks of queries
-        # --- that are already hash-green in CORRECTNESS_r03 yield to
-        # --- FIRST checks of new queries — every window slot goes to a
-        # --- query with no driver record at all. The 22 below (and all
-        # --- out-of-window queries) are re-verified locally this round:
-        # --- full 169-query hash sweep, log at
-        # --- BENCH/sweep_r5_final_169.log (tools/check_oracle.py, same
-        # --- compare as the driver).
+        # --- r3-window rotation queries ---
         "overviews": q_overviews,
         "unigram_logppl": q_unigram_logppl,
         "session_window": q_session_window,
-        "tumbling_window": q_tumbling_window,
         "rasterize_mean": q_rasterize_mean,
         "rasterize_polygon": q_rasterize_polygon,
         "rasterize_line": q_rasterize_line,
@@ -4509,55 +3089,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_tumbling": q_stream_tumbling,
         "robots_filter": q_robots_filter,
         "incremental_neardup": q_incremental_neardup,
-        # positions 72+ — past the driver's 50-query window (all 50
-        # slots hold never-driver-checked r5 queries; the 22 rotation
-        # queries above keep their r3 hash-green records). These stay
-        # locally oracle-checked (tools/check_oracle.py, full-sweep log
-        # committed) with pytest goldens; least-novel first
+        # --- least-novel first ---
         "epoch_mix": q_epoch_mix,
         "bitext_mine": q_bitext_mine,
         "event_anomaly": q_event_anomaly,
         "geom_measures": q_geom_measures,
         "radius_join": q_radius_join,
         "geohash_rollup": q_geohash_rollup,
-        "host_geo_spread": q_host_geo_spread,
         "semdedup": q_semdedup,
-        "geo_velocity": q_geo_velocity,
         "tf_cosine": q_tf_cosine,
         "spread_points": q_spread_points,
         "dedup_keep_best": q_dedup_keep_best,
-        "adaptive_quality": q_adaptive_quality,
-        "leakage_safe_split": q_leakage_safe_split,
-        "geo_lang_mix": q_geo_lang_mix,
-        "tile_pyramid": q_tile_pyramid,
-        "adaptive_cells": q_adaptive_cells,
-        "pip_multi_ring": q_pip_multi_ring,
         "tile_pyramid_delta": q_tile_pyramid_delta,
-        "spatial_block_split": q_spatial_block_split,
-        "cell_top_docs": q_cell_top_docs,
         "wrap_bbox_scan": q_wrap_bbox_scan,
-        "chip_label_pairs": q_chip_label_pairs,
         "stream_cell_counts": q_stream_cell_counts,
-        "knn_classify": q_knn_classify,
-        "geo_skew_profile": q_geo_skew_profile,
         "mosaic_incremental": q_mosaic_incremental,
-        "quadkeys": q_quadkeys,
-        "recrawl_cadence": q_recrawl_cadence,
-        "geo_backfill": q_geo_backfill,
         # --- code paths changed this round (r5 fixes touch these) ---
         "knn_cells": q_knn_cells,          # ring escalation
         "knn_brute": q_knn_brute,
         "ann_ivf_trained": q_ann_ivf_trained,  # stable probe tie-break
-        "ann_ivf": q_ann_ivf,
         "ann_lsh": q_ann_lsh,
-        "dedup_clusters": q_dedup_clusters,        # CC eager unpersist
-        "embed_dedup_clusters": q_embed_dedup_clusters,
         "zorder_range_scan": q_zorder_range_scan,  # post-split clamp
         "zorder_cells": q_zorder_cells,
         "hilbert_cells": q_hilbert_cells,
-        "pages_extract": q_pages_extract,          # geo.py regex guard
         "extract_all_tags": q_extract_all_tags,
-        "pages_cell_counts": q_pages_cell_counts,
         "pip_join": q_pip_join,                    # spatial_join.py edits
         "pip_join_salted": q_pip_join_salted,
         "zonal_stats": q_zonal_stats,
@@ -4565,34 +3120,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_lsh": q_minhash_lsh,
         "near_dup_verified": q_near_dup_verified,
         "word_jaccard": q_word_jaccard,
-        "word_jaccard_exact": q_word_jaccard_exact,
-        "corpus_clean": q_corpus_clean,
         "embed_neardup": q_embed_neardup,
-        # --- past the 50-cap this round: hash-green in the r4 window AND
-        # --- behaviorally untouched by r5 changes (simhash/winnow/
-        # --- kmv_distinct demoted to make room for the three new
-        # --- curation queries; their dedup.py edits this round were
-        # --- docstring-only) ---
-        "ann_cosine": q_ann_cosine,
+        # --- hash-green in every round ---
         "simhash": q_simhash,
         "winnow": q_winnow,
         "kmv_distinct": q_kmv_distinct,
         "gopher_repetition": q_gopher_repetition,
         "bm25_scores": q_bm25_scores,
         "hashed_tfidf": q_hashed_tfidf,
-        "url_host_stats": q_url_host_stats,
         "stac_asset_engines": q_stac_asset_engines,
         "dedup_exact": q_dedup_exact,
         "token_quality": q_token_quality,
         "lang_id": q_lang_id,
         "mercator_bins": q_mercator_bins,
-        "cell_rollup": q_cell_rollup,
         "canvas": q_canvas,
         "stac_search": q_stac_search,
         "frame_sample": q_frame_sample,
-        "events_hourly": q_events_hourly,
-        "pricing_summary": q_pricing_summary,
-        "segment_orders": q_segment_orders,
         "tile_scan": q_tile_scan,
         "vector_scan": q_vector_scan,
         "zipper": q_zipper,
@@ -4611,7 +3154,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     pts_cte = _points_cte()
     edges = _edges_values()
-    cell12 = cell_id_sql("lat_us", "lon_us", 12, "duckdb")
 
     z12 = zorder_sql("lat_us", "lon_us", ZRES, "duckdb")
     zorder_cells_sql_q = f"""
@@ -5093,57 +3635,6 @@ def oracle_sql() -> dict[str, str]:
 
     ann_ivf_trained_sql = _ivf_trained_sql()
 
-    # ann_ivf oracle: untrained centroids are deterministic (first 16
-    # target vectors); assignment = cosine-argmax over centroids, probes =
-    # top-6 lists, exact cosine rerank — all expressible in SQL
-    ann_ivf_sql = """
-    with cents as (select vec_id as cid, embedding::DOUBLE[] as cv
-                   from embeddings where vec_id < 16),
-    t as (select vec_id as target_id, embedding::DOUBLE[] as tv from embeddings),
-    q as (select vec_id as query_id, embedding::DOUBLE[] as qv
-          from embeddings where vec_id < 5),
-    tassign as (
-      select target_id, tv, cid,
-             row_number() over (partition by target_id
-                                order by list_cosine_similarity(tv, cv) desc, cid asc) as rk
-      from t, cents
-    ),
-    tl as (select target_id, tv, cid as list_id from tassign where rk = 1),
-    qprobe as (
-      select query_id, qv, cid as list_id from (
-        select query_id, qv, cid,
-               row_number() over (partition by query_id
-                                  order by list_cosine_similarity(qv, cv) desc, cid asc) as rk
-        from q, cents
-      ) where rk <= 6
-    ),
-    pairs as (
-      select p.query_id, l.target_id, list_cosine_similarity(p.qv, l.tv) as cos
-      from qprobe p join tl l using (list_id)
-    ),
-    ranked as (
-      select query_id, target_id,
-             row_number() over (partition by query_id order by cos desc, target_id asc) as rk
-      from pairs
-    )
-    select query_id, target_id, rk from ranked where rk <= 3
-    """
-
-    ann_cosine_sql = """
-    with q as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 5),
-    pairs as (
-      select q.query_id, t.vec_id as target_id,
-             list_cosine_similarity(q.qv, t.embedding) as cos
-      from q, embeddings t
-    ),
-    ranked as (
-      select query_id, target_id,
-             row_number() over (partition by query_id order by cos desc, target_id asc) as rk
-      from pairs
-    )
-    select query_id, target_id, rk from ranked where rk <= 3
-    """
-
     # int8 quantization twin: q_i = clamp(floor(double(v_i)·256),−128,127);
     # ×2^8 is FP-exact and floor is deterministic, so the integer dots
     # match Spark bit-for-bit (similarity.py quantize_int8/int8_dot)
@@ -5567,13 +4058,6 @@ def oracle_sql() -> dict[str, str]:
 
     hashed_tfidf_sql = hashed_tfidf_sql_duckdb("documents", dim=64)
 
-    url_host_stats_sql = f"""
-    with pages as ({pages_cte_sql(N_PAGES)})
-    select regexp_extract(url, '^https?://([^/]+)/', 1) as host,
-           count(*) as n_pages, count(distinct lang) as n_langs,
-           min(warc_ts) as first_ts, max(warc_ts) as last_ts
-    from pages group by host
-    """
     _extract = html_to_text_sql("html", "duckdb")
     html_extract_sql = f"""
     with pages as ({pages_cte_sql(N_PAGES)})
@@ -5717,30 +4201,6 @@ select gh2, count(*) as n_points, sum(lat_us) as sum_lat_us,
        sum(lon_us) as sum_lon_us, min(gh5) as min_gh5
 from g5 group by 1
 """
-    _hg_lat = micro_from_str_sql("lat_str", "duckdb")
-    _hg_lon = micro_from_str_sql("lon_str", "duckdb")
-    host_geo_spread_sql = f"""
-    with pages as ({pages_cte_sql(N_PAGES)}),
-    tagged as (
-      select {URL_HOST_SQL} as host,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 1) as lat_str,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 2) as lon_str
-      from pages
-    ),
-    hp as (
-      select host, {_hg_lat} as lat_us, {_hg_lon} as lon_us
-      from tagged where lat_str <> ''
-    ),
-    hc as (
-      select host, lat_us, lon_us,
-             {cell_id_sql('lat_us', 'lon_us', 6, 'duckdb')} as cell6
-      from hp
-    )
-    select host, count(*) as n_points, count(distinct cell6) as n_cells6,
-           min(lat_us) as min_lat_us, max(lat_us) as max_lat_us,
-           min(lon_us) as min_lon_us, max(lon_us) as max_lon_us
-    from hc group by 1
-    """
 
     from zen3geo_spark.operators.similarity import semantic_dedup_sql_duckdb
     semdedup_sql = semantic_dedup_sql_duckdb("embeddings", 16, 0.43)
@@ -5764,39 +4224,6 @@ from g5 group by 1
       from binned group by yi, col0
     )
     {spread_sql_duckdb('img', 360, 180, 1, 'add')}
-    """
-
-    # geo-velocity twin: same window, same haversine text, same km/h floor
-    from zen3geo_spark.operators.spatial_join import haversine_m_sql
-    _gv_hav = haversine_m_sql("p_lat", "p_lon", "lat_us", "lon_us", "duckdb")
-    _gv_speed = f"((({_gv_hav}) / 1000.0) / (cast(pid - p_pid as double) / 3600.0))"
-    geo_velocity_sql = f"""
-    with pages as ({pages_cte_sql(N_PAGES)}),
-    tagged as (
-      select {URL_HOST_SQL} as host, {URL_PID_SQL} as pid,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 1) as lat_str,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 2) as lon_str
-      from pages
-    ),
-    pts as (
-      select host, pid, {micro_from_str_sql('lat_str', 'duckdb')} as lat_us,
-             {micro_from_str_sql('lon_str', 'duckdb')} as lon_us
-      from tagged where lat_str <> ''
-    ),
-    hop as (
-      select host, pid, lat_us, lon_us,
-             lag(lat_us) over (partition by host order by pid) as p_lat,
-             lag(lon_us) over (partition by host order by pid) as p_lon,
-             lag(pid) over (partition by host order by pid) as p_pid
-      from pts
-    ),
-    k as (
-      select host, cast(floor({_gv_speed}) as bigint) as kmh
-      from hop where p_pid is not null
-    )
-    select host, count(*) as n_hops, max(kmh) as max_kmh,
-           sum(case when kmh >= 1000 then 1 else 0 end) as n_impossible
-    from k group by host
     """
 
     from zen3geo_spark.operators.curation import (
@@ -5942,128 +4369,6 @@ from g5 group by 1
         "select doc_id as node from documents",
         prelude_ctes=simhash_ctes_flat)
 
-    # leakage-safe split twin: same content fingerprint, same 40-bit
-    # polynomial bucket, same 90/10 cut
-    from zen3geo_spark.operators.dedup import hash40_sql_duckdb
-    _ls_fp = fingerprint_sql("text", "duckdb")
-    _ls_bucket = hash40_sql_duckdb("fp")
-    leakage_safe_split_sql = f"""
-    with fps as (select doc_id, source, {_ls_fp} as fp from documents),
-    s as (select source,
-                 case when ({_ls_bucket}) % 100 < 90 then 'train'
-                      else 'val' end as split,
-                 fp
-          from fps)
-    select source, split, count(*) as n_docs,
-           count(distinct fp) as n_contents
-    from s group by source, split
-    """
-
-    # geo×lang mix twin: the PIP core as a derived table joined back to
-    # the page dim, share = n / per-polygon sum (bigint→double division,
-    # identical IEEE result both engines)
-    geo_lang_mix_sql = f"""
-    with pages as ({pages_cte_sql(N_PAGES, with_id=True)}),
-    hits as ({pip_core}),
-    per as (
-      select h.geom_id, p.lang, count(*) as n_pages
-      from hits h join pages p on p.id = h.point_id
-      group by h.geom_id, p.lang
-    )
-    select geom_id, lang, n_pages,
-           round(n_pages / sum(n_pages) over (partition by geom_id), 6)
-             as share
-    from per
-    """
-
-    # multi-ring PIP twin: identical even-odd parity over the union of
-    # ring edges (donut hole + two-part multipolygon)
-    _me = _multi_edges_values()
-    pip_multi_ring_sql = f"""
-    {pts_cte}
-    select p.point_id, e.geom_id
-    from pts p join {_me}
-      on ((e.y1 > p.lat_us) != (e.y2 > p.lat_us))
-    group by p.point_id, e.geom_id, p.lat_us, p.lon_us
-    having sum(case when p.lon_us < cast(e.x2 - e.x1 as double) * cast(p.lat_us - e.y1 as double)
-                                     / cast(e.y2 - e.y1 as double) + e.x1
-                    then 1 else 0 end) % 2 = 1
-    """
-
-    # geo-backfill twin: same tagged-page modal cell per host, same
-    # inherit join for untagged pages
-    _gb_cell = cell_id_sql("lat_us", "lon_us", 4, "duckdb")
-    _gb_lat = micro_from_str_sql("lat_str", "duckdb")
-    _gb_lon = micro_from_str_sql("lon_str", "duckdb")
-    geo_backfill_sql = f"""
-    with pages as ({pages_cte_sql(N_PAGES)}),
-    base as (
-      select regexp_extract(url, '^https?://([^/]+)/', 1) as host,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 1) as lat_str,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 2) as lon_str
-      from pages
-    ),
-    tagged as (
-      select host, {_gb_cell} as cell from (
-        select host, {_gb_lat} as lat_us, {_gb_lon} as lon_us
-        from base where lat_str <> ''
-      )
-    ),
-    modal as (
-      select host, cell from (
-        select host, cell,
-               row_number() over (partition by host
-                                  order by count(*) desc, cell asc) as rk
-        from tagged group by host, cell
-      ) where rk = 1
-    )
-    select m.cell, count(*) as n_backfilled
-    from base b join modal m on b.host = m.host
-    where b.lat_str = ''
-    group by m.cell
-    """
-
-    # recrawl-cadence twin: same lag gaps, same integer lower median
-    recrawl_cadence_sql = f"""
-    {pts_cte}
-    , g as (
-      select point_id % 1000 as host_id, point_id as pid,
-             point_id - lag(point_id) over (partition by point_id % 1000
-                                            order by point_id) as gap
-      from pts
-    ),
-    gaps as (select host_id, pid, gap from g where gap is not null),
-    stats as (
-      select host_id, count(*) as n_gaps, min(gap) as min_gap,
-             max(gap) as max_gap
-      from gaps group by host_id
-    ),
-    med as (
-      select host_id, gap as med_gap from (
-        select host_id, gap,
-               row_number() over (partition by host_id
-                                  order by gap, pid) as rn
-        from gaps
-      ) r join stats using (host_id)
-      where r.rn = (stats.n_gaps + 1) // 2
-    )
-    select host_id, n_gaps, min_gap, max_gap, med_gap
-    from stats join med using (host_id)
-    """
-
-    # quadkey twin: same iy/ix integer grid, same base-4 digit extract
-    _qk_digits = ", ".join(
-        f"cast((((iy >> {z}) & 1) * 2 + ((ix >> {z}) & 1)) as varchar)"
-        for z in range(5, -1, -1))
-    quadkeys_sql = f"""
-    {pts_cte}
-    , t as (select ((lat_us + 90000000) * 64) // 180000001 as iy,
-                   ((lon_us + 180000000) * 64) // 360000001 as ix
-            from pts)
-    select concat({_qk_digits}) as quadkey, count(*) as n_pages
-    from t group by 1
-    """
-
     # compact-cells twin: same closed-form coarsest-complete-ancestor
     # plan (operators/cells.py), UNION-ALL-unrolled level range
     from zen3geo_spark.operators.cells import (
@@ -6074,10 +4379,6 @@ from g5 group by 1
     _cc_body = compact_cells_sql(
         f"select {_cc_cells} as cell from pts", 5, 2).strip()
     assert _cc_body.startswith("with ")
-    compact_cells_sql_q = f"""
-    {pts_cte}
-    , {_cc_body[5:]}
-    """
     # round-trip twin: the ORIGINAL distinct res-5 cell set — a hash
     # match proves uncompact(compact(S)) is the identity
     compact_roundtrip_sql_q = f"""
@@ -6119,32 +4420,8 @@ from g5 group by 1
     from zen3geo_spark.operators.cells import cover_polygon_cells_sql
     polygon_cover_sql_q = cover_polygon_cells_sql(edges, res=8, min_res=3)
 
-    _ct_cell4 = cell_id_sql("lat_us", "lon_us", 4, "duckdb")
     _ct_lat = micro_from_str_sql("lat_str", "duckdb")
     _ct_lon = micro_from_str_sql("lon_str", "duckdb")
-    crawl_transitions_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES, with_id=True)}),
-    tagged as (
-      select id, {URL_HOST_SQL} as host,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 1) as lat_str,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 2) as lon_str
-      from pages
-    ),
-    pts as (
-      select id, host, {_ct_lat} as lat_us, {_ct_lon} as lon_us
-      from tagged where lat_str <> ''
-    ),
-    cl as (select id, host, {_ct_cell4} as cell from pts),
-    tr as (
-      select host, cell as to_cell,
-             lag(cell) over (partition by host order by id) as from_cell
-      from cl
-    )
-    select from_cell, to_cell, count(*) as n_hops,
-           count(distinct host) as n_hosts
-    from tr where from_cell is not null
-    group by from_cell, to_cell
-    """
 
     from zen3geo_spark.operators.cells import cover_segment_cells_sql
     _tc_segs = f"""
@@ -6193,10 +4470,6 @@ from g5 group by 1
     """
     _cv_body = compact_cells_sql(_cv_added, 5, 2).strip()
     assert _cv_body.startswith("with ")
-    coverage_delta_sql_q = f"""
-    {_points_cte()}
-    , {_cv_body[5:]}
-    """
 
     from zen3geo_spark.operators.spatial_join import str_pack_sql_duckdb
     # planning-time N: pages with >= 1 well-formed geotag (id % 7 != 3),
@@ -6227,100 +4500,9 @@ from g5 group by 1
     from u, z
     """
 
-    late_data_audit_sql_q = """
-    with ev as (
-      select event_type, event_id,
-             cast(floor(epoch(ts)) as bigint) as es
-      from events
-    ),
-    run as (
-      select event_type, es,
-             max(es) over (partition by event_type order by event_id
-                           rows between unbounded preceding
-                           and 1 preceding) as hwm
-      from ev
-    )
-    select event_type, count(*) as n_events,
-           sum(case when es < hwm - 7200 then 1 else 0 end) as n_late_2h,
-           max(case when hwm > es then hwm - es else 0 end)
-             as max_lateness_s
-    from run group by event_type
-    """
-
-    equi_depth_hist_sql_q = """
-    with li as (
-      select cast(round(l_extendedprice * 100) as bigint) as cents,
-             l_orderkey * 10 + l_linenumber as rid
-      from lineitem
-    ),
-    nw as (select (count(*) + 31) // 32 as w from li),
-    r as (
-      select cents, row_number() over (order by cents, rid) as pos
-      from li
-    )
-    select (pos - 1) // w as bucket,
-           min(cents) as lo, max(cents) as hi,
-           count(*) as n_rows, count(distinct cents) as ndv
-    from r, nw group by 1
-    """
-
-    from zen3geo_spark.operators.linkgraph import (
-        synth_host_edges_sql_duckdb as _she_sql,
-    )
-    join_card_est_sql_q = f"""
-    with a as (
-      select ({URL_PID_SQL}) % 1000 as k
-      from ({pages_cte_sql(N_PAGES)})
-    ),
-    b as (select dst as k from ({_she_sql(1000)})),
-    ha as (select k // 8 as b8, count(*) as na,
-                  count(distinct k) as nda from a group by 1),
-    hb as (select k // 8 as b8, count(*) as nb,
-                  count(distinct k) as ndb from b group by 1),
-    est as (
-      select sum(na * nb // greatest(nda, ndb)) as est_rows
-      from ha join hb using (b8)
-    ),
-    act as (
-      select sum(ca * cb) as true_rows from
-        (select k, count(*) as ca from a group by k) x
-        join (select k, count(*) as cb from b group by k) y using (k)
-    )
-    select est_rows, true_rows,
-           1000 * est_rows // true_rows as ratio_milli
-    from est, act
-    """
-
-    str_query_sql_q = f"""
-    {_points_cte()},
-    leaves as ({str_pack_sql_duckdb('pts', leaf_cap=64, n=_n_tagged)}),
-    qb as ({_STR_QBOX_SQL}),
-    cand as (
-      select q_id, count(*) as n_cand_leaves, sum(n_pts) as n_cand_points
-      from qb join leaves
-        on minx_us <= x2 and maxx_us >= x1
-       and miny_us <= y2 and maxy_us >= y1
-      group by q_id
-    ),
-    exact as (
-      select q_id, count(*) as n_exact
-      from qb join pts
-        on lon_us between x1 and x2 and lat_us between y1 and y2
-      group by q_id
-    )
-    select q.q_id, coalesce(c.n_cand_leaves, 0) as n_cand_leaves,
-           coalesce(c.n_cand_points, 0) as n_cand_points,
-           coalesce(e.n_exact, 0) as n_exact
-    from qb q left join cand c on q.q_id = c.q_id
-    left join exact e on q.q_id = e.q_id
-    """
-
     from zen3geo_spark.functions.bpe import (
-        bpe_train_sql_duckdb, word_counts_sql_duckdb,
+        bpe_encode_sql_duckdb, word_counts_sql_duckdb,
     )
-    bpe_train_sql_q = bpe_train_sql_duckdb(
-        f"({word_counts_sql_duckdb('documents')})", n_merges=12)
-    from zen3geo_spark.functions.bpe import bpe_encode_sql_duckdb
     bpe_encode_sql_q = bpe_encode_sql_duckdb(
         f"({word_counts_sql_duckdb('documents')})", n_merges=12)
 
@@ -6336,78 +4518,6 @@ from g5 group by 1
     select * from (
       {local_moran_sql_duckdb('select lat_us, lon_us from pts', 4)}
     )
-    """
-
-    _cd_cell4 = cell_id_sql("lat_us", "lon_us", 4, "duckdb")
-    _cd_lat = micro_from_str_sql("lat_str", "duckdb")
-    _cd_lon = micro_from_str_sql("lon_str", "duckdb")
-    cell_diversity_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES)}),
-    tagged as (
-      select lang,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 1) as lat_str,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 2) as lon_str
-      from pages
-    ),
-    pt as (
-      select lang, {_cd_cell4.replace('lat_us', _cd_lat).replace('lon_us', _cd_lon)} as cell
-      from tagged where lat_str <> ''
-    ),
-    per as (select cell, lang, count(*) as ni from pt group by 1, 2),
-    rk as (
-      select cell, lang, ni,
-             row_number() over (partition by cell
-                                order by ni desc, lang asc) as rk
-      from per
-    )
-    select cell, sum(ni) as n,
-           max(case when rk = 1 then lang end) as top_lang,
-           (sum(ni) * sum(ni) - sum(ni * ni)) * 10000
-             // (sum(ni) * sum(ni)) as simpson_x1e4
-    from rk group by cell
-    """
-
-    _ca_cell2 = cell_id_sql("lat_us", "lon_us", 2, "duckdb")
-    _ca_lat = micro_from_str_sql("lat_str", "duckdb")
-    _ca_lon = micro_from_str_sql("lon_str", "duckdb")
-    cell_anomaly_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES)}),
-    tagged as (
-      select warc_ts,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 1) as lat_str,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 2) as lon_str
-      from pages
-    ),
-    pt as (
-      select epoch(warc_ts)::bigint // 600 as ep,
-             {_ca_cell2.replace('lat_us', _ca_lat).replace('lon_us', _ca_lon)} as cell
-      from tagged where lat_str <> ''
-    ),
-    cnts as (select cell, ep, count(*) as n from pt group by 1, 2),
-    med as (
-      select cell, ep, n,
-             max(case when rk = (tot + 1) // 2 then n end)
-               over (partition by cell) as med
-      from (select cell, ep, n,
-                   row_number() over (partition by cell
-                                      order by n asc, ep asc) as rk,
-                   count(*) over (partition by cell) as tot
-            from cnts)
-    ),
-    mad as (
-      select cell, ep, n, med,
-             max(case when rk2 = (tot + 1) // 2 then abs(n - med) end)
-               over (partition by cell) as mad
-      from (select cell, ep, n, med,
-                   row_number() over (partition by cell
-                                      order by abs(n - med) asc, ep asc)
-                     as rk2,
-                   count(*) over (partition by cell) as tot
-            from med)
-    )
-    select cell, ep, n, med, mad,
-           abs(n - med) > greatest(3 * mad, 2) as is_anomaly
-    from mad
     """
 
     # focal map algebra: the world-points raster as INTEGER pixels, then
@@ -6430,11 +4540,10 @@ from g5 group by 1
     focal_stats_sql_q = focal_stats_sql(
         _world_px_int, width=360, height=180, radius=1)
     from zen3geo_spark.operators.raster_algebra import (
-        flow_accumulate_sql, flow_basin_sql, flow_dir_d8_sql,
+        flow_accumulate_sql, flow_basin_sql,
     )
     flow_basin_sql_q = flow_basin_sql(
         _world_px_int, width=360, height=180, jumps=2)
-    flow_dir_sql_q = flow_dir_d8_sql(_world_px_int, width=360, height=180)
     flow_accum_sql_q = flow_accumulate_sql(
         _world_px_int, width=360, height=180, rounds=3)
 
@@ -6462,26 +4571,6 @@ from g5 group by 1
     select h.host, h.n_pages, b.n_candidates, b.lat_us, b.lon_us,
            {_gz_cell4} as cell
     from hosts h join best b on h.host = b.name and b.rk = 1
-    """
-
-    cell_trend_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES)}),
-    tagged as (
-      select warc_ts,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 1) as lat_str,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 2) as lon_str
-      from pages
-    ),
-    pt as (
-      select epoch(warc_ts)::bigint // 300 - 5680224 as t,
-             {_ca_cell2.replace('lat_us', _ca_lat).replace('lon_us', _ca_lon)} as cell
-      from tagged where lat_str <> ''
-    ),
-    cnts as (select cell, t, count(*) as y from pt group by 1, 2)
-    select cell, count(*) as n_epochs, cast(sum(y) as bigint) as sum_y,
-           cast(count(*) * sum(t * y) - sum(t) * sum(y) as bigint) as slope_num,
-           cast(count(*) * sum(t * t) - sum(t) * sum(t) as bigint) as slope_den
-    from cnts group by cell
     """
 
     from zen3geo_spark.operators.simplify import simplify_sweep_sql
@@ -6528,30 +4617,6 @@ from g5 group by 1
         f"{_points_cte()} select point_id, lat_us, lon_us from pts",
         _seg_body, res=6)
 
-    _lp_cell3 = cell_id_sql("lat_us", "lon_us", 3, "duckdb")
-    link_geo_propagate_sql_q = f"""
-    {_points_cte()}
-    , links as (
-      select g.range as src, (g.range * 2654435761) % {N_PAGES} as dst
-      from range({N_PAGES}) g
-    ),
-    tsrc as (select point_id as src, {_lp_cell3} as cell from pts),
-    votes as (
-      select l.dst, t.cell, count(*) as n_votes
-      from links l join tsrc t on l.src = t.src
-      where l.dst % 7 = 3
-      group by 1, 2
-    )
-    select dst as page_id, cell, n_votes, n_tagged_in
-    from (select dst, cell, n_votes,
-                 cast(sum(n_votes) over (partition by dst) as bigint)
-                   as n_tagged_in,
-                 row_number() over (partition by dst
-                                    order by n_votes desc, cell asc) as rk
-          from votes)
-    where rk = 1
-    """
-
     from zen3geo_spark.operators.raster_algebra import contour_crossings_sql
     contour_sql_q = contour_crossings_sql(
         _world_px_int, width=360, height=180, threshold=2)
@@ -6565,9 +4630,6 @@ from g5 group by 1
     from zen3geo_spark.operators.curation import c4_segment_clean_sql_duckdb
     c4_clean_sql_q = c4_segment_clean_sql_duckdb(
         pages_cte_sql(N_PAGES), "url", "text", min_tokens=3)
-    lang_mismatch_sql_q = (
-        f"select lang as declared, {lang_id_sql('text', 'duckdb')} as "
-        "detected, count(*) as n_docs from documents group by 1, 2")
 
     from zen3geo_spark.operators.raster_algebra import (
         equalize_histogram_sql,
@@ -6655,82 +4717,6 @@ from g5 group by 1
     from est e join exact x on e.wstart = x.wstart
     """
 
-    snapshot_expiry_sql_q = """
-    with snaps as (
-      select id as snap_id, cast(19723 + id * 2 + id % 3 as bigint)
-               as day_no
-      from range(120) t(id)
-    ),
-    rk as (
-      select snap_id, day_no,
-             row_number() over (order by day_no desc, snap_id desc)
-               as recent,
-             row_number() over (partition by day_no // 7
-                                order by day_no, snap_id) as wk_first
-      from snaps
-    )
-    select snap_id, day_no,
-           case when recent <= 7 then 'recent'
-                when wk_first = 1 then 'weekly'
-                else 'expire' end as action
-    from rk
-    """
-
-    embed_calibration_sql_q = """
-    with d as (
-      select generate_subscripts(embedding, 1) - 1 as dim,
-             unnest(embedding) as v
-      from embeddings
-    )
-    select dim, count(*) as n,
-           round(min(v), 6) as min_v, round(max(v), 6) as max_v,
-           round(avg(cast(v as double)), 6) as mean_v
-    from d group by dim
-    """
-
-    _prof = " union all ".join(
-        f"""select '{c}' as col, count(*) as n_rows,
-               sum(case when {c} is null then 1 else 0 end) as n_null,
-               sum(case when cast({c} as varchar) = '' then 1 else 0 end)
-                 as n_empty,
-               count(distinct cast({c} as varchar)) as n_distinct
-            from documents"""
-        for c in PROFILE_COLS)
-    table_profile_sql_q = _prof
-
-    # Spark grouping_id over (lang, source): bit per dim, detail=0,
-    # lang-subtotal=1 (source grouped), grand=3 — DuckDB GROUPING agrees
-    rollup_report_sql_q = """
-    select coalesce(lang, 'ALL') as lang,
-           coalesce(source, 'ALL') as source,
-           grouping(lang) * 2 + grouping(source) as gid,
-           count(*) as n_docs, sum(length(text)) as n_bytes
-    from documents group by rollup(lang, source)
-    """
-
-    _pvt = ", ".join(
-        f"sum(case when source = '{s}' then 1 else 0 end) as {s}"
-        for s in PIVOT_SOURCES)
-    pivot_langs_sql_q = f"select lang, {_pvt} from documents group by lang"
-
-    host_percentiles_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES)}),
-    hosts as (
-      select {URL_HOST_SQL} as host, sum(length(text)) as bytes
-      from pages group by 1
-    ),
-    n as (select count(*) as n from hosts),
-    rk as (
-      select host, bytes,
-             row_number() over (order by bytes, host) as rk
-      from hosts
-    )
-    select host, bytes,
-           1000 * (rk - 1) // (n - 1) as pr_milli,
-           1000 * rk // n as cume_milli
-    from rk, n
-    """
-
     from zen3geo_spark.functions.geo import hex_bin_sql
     _hexd = hex_bin_sql("lon_us", "lat_us", HEX_A, HEX_B, "duckdb")
     hex_bins_sql_q = f"""{_points_cte()},
@@ -6741,37 +4727,6 @@ from g5 group by 1
            3 * {HEX_A} * q as cx,
            {HEX_B} * q + 2 * {HEX_B} * r as cy
     from hx group by q, r
-    """
-
-    _doc_cell = cell_id_sql(
-        "(doc_id * 48271 + 11) % 2147483647 % 180000001 - 90000000",
-        "((doc_id * 48271 + 11) % 2147483647 * 48271 + 7) % 2147483647"
-        " % 360000001 - 180000000", 3, "duckdb")
-    cell_topics_sql_q = f"""
-    with placed as (
-      select doc_id, text, {_doc_cell} as cell from documents
-    ),
-    toks as (
-      select cell, unnest(string_split(lower(text), ' ')) as tok
-      from placed
-    ),
-    toks_nz as (select * from toks where tok <> ''),
-    ct as (select cell, tok, count(*) as n_ct from toks_nz group by 1, 2),
-    c as (select cell, count(*) as n_c from toks_nz group by 1),
-    t as (select tok, count(*) as n_t from toks_nz group by 1
-          having count(*) >= 5),
-    tot as (select count(*) as tt from toks_nz),
-    j as (
-      select ct.cell, ct.tok,
-             1000 * ct.n_ct * tt // (c.n_c * t.n_t) as lift_milli
-      from ct join c using (cell) join t using (tok), tot
-    )
-    select cell, rk, tok, lift_milli from (
-      select cell, tok, lift_milli,
-             row_number() over (partition by cell
-                                order by lift_milli desc, tok) as rk
-      from j
-    ) where rk <= 3
     """
 
     skyline_hosts_sql_q = f"""
@@ -6791,39 +4746,6 @@ from g5 group by 1
     )
     select host, x, y from m
     where (m1 is null or m1 < y) and m2 <= y
-    """
-
-    url_editdist_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES, with_id=True)}),
-    p as (select {URL_HOST_SQL} as host, url, id as pid from pages)
-    select a.host, a.pid as a_pid, b.pid as b_pid,
-           levenshtein(a.url, b.url) as dist
-    from p a join p b on a.host = b.host and a.pid < b.pid
-    where levenshtein(a.url, b.url) <= 2
-    """
-
-    ohlc_bars_sql_q = """
-    with ev as (
-      select event_id, ts, event_type, value,
-             date_trunc('hour', ts)
-               - to_hours(cast(hour(date_trunc('hour', ts)) % 6 as bigint))
-               as wstart
-      from events
-    ),
-    rk as (
-      select *,
-             row_number() over (partition by wstart, event_type
-                                order by ts, event_id) as ra,
-             row_number() over (partition by wstart, event_type
-                                order by ts desc, event_id desc) as rd
-      from ev
-    )
-    select wstart, event_type, count(*) as n,
-           round(max(case when ra = 1 then value end), 4) as open,
-           round(max(value), 4) as high,
-           round(min(value), 4) as low,
-           round(max(case when rd = 1 then value end), 4) as close
-    from rk group by wstart, event_type
     """
 
     from zen3geo_spark.functions.web import (
@@ -6930,22 +4852,6 @@ from g5 group by 1
     cdx_index_sql_q = cdx_index_sql_duckdb(
         pages_cte_sql(N_PAGES, with_id=True), records_per_file=200)
 
-    from zen3geo_spark.operators.dedup import hash40_sql_duckdb as _h40
-    fetch_schedule_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES, with_id=True)}),
-    q as (
-      select url, {URL_HOST_SQL} as host, id as pid from pages
-    ),
-    r as (
-      select url, host,
-             row_number() over (partition by host order by pid) - 1 as slot,
-             {_h40("host", 1)} as h
-      from q
-    )
-    select url, host, slot, slot * (1 + h % 5) as sched_s, h % 32 as worker
-    from r
-    """
-
     # image-chip oracle: synth_media P6 pixel i = (media_id·7 + i·13)
     # mod 256 at flat index ((y·w + x)·3 + c); chips = floor grid of
     # 8x8 windows, trailing partials dropped (xbatcher semantics)
@@ -6977,15 +4883,6 @@ from g5 group by 1
     from px group by 1, 2, 3
     """
 
-    # sliding windows: every event lands in length/slide = 3 windows
-    sliding_window_sql_q = """
-    select make_timestamp(((cast(floor(epoch(ts)) as bigint) // 7200) - k.k) * 7200 * 1000000)
-             as window_start,
-           event_type, count(*) as n
-    from events, (select unnest(generate_series(0, 2)) as k) k
-    group by 1, 2
-    """
-
     from zen3geo_spark.operators.geo_cluster import geo_kmeans_sql_duckdb
     geo_kmeans_sql_q = geo_kmeans_sql_duckdb(
         f"{_points_cte()} select lon_us, lat_us from pts",
@@ -6994,17 +4891,6 @@ from g5 group by 1
     from zen3geo_spark.operators.temporal import funnel_counts_sql
     funnel_sql_q = funnel_counts_sql(
         "events", ["signup", "view", "click", "purchase"])
-    retention_cohorts_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES, with_id=True)}),
-    act as (
-      select {URL_HOST_SQL} as host, id // 500 as epoch, count(*) as n
-      from pages group by 1, 2
-    ),
-    first as (select host, min(epoch) as cohort from act group by host)
-    select cohort, epoch, count(distinct a.host) as n_hosts
-    from act a join first f on a.host = f.host
-    group by 1, 2
-    """
 
     from zen3geo_spark.operators.overlay import (
         polygon_intersect_sql, synth_poly_edges_sql,
@@ -7080,34 +4966,6 @@ where u.url is null or u.op <> 'D'
     hits_sql_q = hits_sql_duckdb(n_hosts=1000, iters=2)
     link_jaccard_sql_q = neighbor_jaccard_sql_duckdb(
         n_hosts=1000, max_deg=64, min_common=2)
-    from zen3geo_spark.operators.linkgraph import (
-        synth_host_edges_dense_sql_duckdb,
-    )
-    from zen3geo_spark.operators.linkgraph import pagerank_sql_duckdb
-    lang_authority_sql_q = f"""
-with pages as ({pages_cte_sql(N_PAGES)}),
-pr as ({pagerank_sql_duckdb(n_hosts=1000, iters=5)}),
-p as (select lang,
-             cast(regexp_extract(url, '/page/([0-9]+)$', 1) as bigint)
-               % 1000 as host_num
-      from pages)
-select lang, count(*) as n_pages, sum(pr.rank_fp) as authority_mass
-from p join pr on p.host_num = pr.node
-group by lang
-"""
-    degree_mixing_sql_q = f"""
-with edges as ({synth_host_edges_dense_sql_duckdb(1000)}),
-und as (select distinct least(src, dst) as a, greatest(src, dst) as b
-        from edges where src <> dst),
-deg as (select node, count(*) as deg from (
-          select a as node from und union all select b from und)
-        group by node),
-j as (select d1.deg as da, d2.deg as db from und
-      join deg d1 on d1.node = und.a join deg d2 on d2.node = und.b)
-select least(da, db) as deg_lo, greatest(da, db) as deg_hi,
-       count(*) as n_edges
-from j group by 1, 2
-"""
     cheapest_paths_sql_q = cheapest_paths_sql_duckdb(
         n_hosts=1000, seed_mod=100, max_hops=4)
     triangles_sql_q = triangle_counts_sql_duckdb(n_hosts=1000)
@@ -7138,66 +4996,6 @@ from f
     cocitation_sql_q = cocitation_sql_duckdb(
         n_hosts=1000, max_out_deg=64, min_cocite=2)
 
-    stay_points_sql_q = f"""
-    with pages as ({pages_cte_sql(N_PAGES)}),
-    tagged as (
-      select regexp_extract(url, '^https?://([^/]+)/', 1) as host,
-             cast(regexp_extract(url, '/page/([0-9]+)$', 1) as bigint) as pid,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 1) as lat_str,
-             regexp_extract(text, 'lat=(-?\\d+\\.\\d{{6}}) lon=(-?\\d+\\.\\d{{6}})', 2) as lon_str
-      from pages
-    ),
-    pt as (
-      select host, pid,
-             {micro_from_str_sql('lat_str', 'duckdb')} as lat_us,
-             {micro_from_str_sql('lon_str', 'duckdb')} as lon_us
-      from tagged where lat_str <> ''
-    ),
-    flagged as (
-      select host, pid, lat_us, lon_us,
-             case when lag(lat_us) over (partition by host order by pid)
-                    is null
-                  or (lat_us - lag(lat_us) over (partition by host
-                                                 order by pid))
-                     * (lat_us - lag(lat_us) over (partition by host
-                                                   order by pid))
-                   + (lon_us - lag(lon_us) over (partition by host
-                                                 order by pid))
-                     * (lon_us - lag(lon_us) over (partition by host
-                                                   order by pid))
-                     > {STAY_R2}
-                  then 1 else 0 end as brk
-      from pt
-    ),
-    grouped as (
-      select host, pid, lat_us, lon_us,
-             sum(brk) over (partition by host order by pid
-                            rows between unbounded preceding
-                            and current row) as grp
-      from flagged
-    ),
-    runs as (
-      select host, grp, count(*) as n_pages,
-             min(pid) as first_pid, max(pid) as last_pid,
-             cast(sum(lat_us) as bigint) as slat,
-             cast(sum(lon_us) as bigint) as slon
-      from grouped group by 1, 2
-    )
-    select host, first_pid, last_pid, n_pages,
-           (slat + n_pages * 90000000) // n_pages - 90000000 as ctr_lat_us,
-           (slon + n_pages * 180000000) // n_pages - 180000000 as ctr_lon_us
-    from runs where n_pages >= 3
-    """
-
-    _sp_cell4 = cell_id_sql("lat_us", "lon_us", 4, "duckdb")
-    snapshot_prune_sql_q = f"""
-    {_points_cte()}
-    select point_id % 10 as snap, {_sp_cell4} as cell,
-           count(*) as n_pages
-    from pts where point_id % 10 in (3, 7)
-    group by 1, 2
-    """
-
     # interval-join twin: the DIRECT theta join (exact containment) —
     # a hash match proves the bucketized equi-join decomposition exact
     interval_join_sql_q = f"""
@@ -7215,92 +5013,12 @@ from f
     group by iv.interval_id
     """
 
-    _cr_even = (f"select distinct {_cv_cell5} as cell from pts "
-                "where point_id % 2 = 0")
-    _cr_chain_arms = " union all ".join(
-        f"select point_id, {lvl} as cell_res, "
-        f"{cell_parent_sql(_cv_cell5, 5, lvl, 'duckdb')} as member from pts"
-        for lvl in range(2, 6))
-    # the compact helper's own WITH nests inside the _cover CTE
-    # (non-recursive nested WITH referencing the outer pts — standard)
-    cover_rollup_sql_q = f"""
-    {_points_cte()}
-    , _cover as ({compact_cells_sql(_cr_even, 5, 2)}),
-    _chain as ({_cr_chain_arms})
-    select c.member as cell, c.cell_res, count(*) as n_pages
-    from _chain c join _cover v
-      on c.member = v.cell and c.cell_res = v.cell_res
-    group by c.member, c.cell_res
-    """
-
-    # skew-profile twin: identical per-res aggregates + integer ratio
-    _gsp_levels = []
-    for _res in (2, 4, 6):
-        _gsp_cell = cell_id_sql("lat_us", "lon_us", _res, "duckdb")
-        _gsp_levels.append(f"""
-        select {_res} as res, count(*) as n_cells, max(n) as max_cell,
-               sum(n) as n_points,
-               (max(n) * count(*) * 100) // sum(n) as skew_x100
-        from (select {_gsp_cell} as cell, count(*) as n
-              from pts group by 1)
-        """)
-    geo_skew_profile_sql = f"""
-    {pts_cte}
-    {' union all '.join(_gsp_levels)}
-    """
-
-    # knn-classify twin: brute-force kNN over the >=30 target set, same
-    # (dist2, tid) neighbor rank and (count desc, lang asc) vote
-    knn_classify_sql = f"""
-    {pts_cte}
-    , pages_l as (
-      select id as target_id, lang
-      from (select id, lang from pages) t
-    ),
-    pairs as (
-      select q.point_id as query_id, t.point_id as target_id,
-             (q.lat_us - t.lat_us) * (q.lat_us - t.lat_us)
-             + (q.lon_us - t.lon_us) * (q.lon_us - t.lon_us) as dist2
-      from pts q join pts t on t.point_id >= 30
-      where q.point_id < 30
-    ),
-    ranked as (
-      select query_id, target_id,
-             row_number() over (partition by query_id
-                                order by dist2 asc, target_id asc) as rk
-      from pairs
-    ),
-    votes as (
-      select r.query_id, p.lang, count(*) as n
-      from ranked r join pages_l p using (target_id)
-      where r.rk <= 5
-      group by r.query_id, p.lang
-    )
-    select query_id, lang as pred_lang, n from (
-      select query_id, lang, n,
-             row_number() over (partition by query_id
-                                order by n desc, lang asc) as vrk
-      from votes
-    ) where vrk = 1
-    """
-
     # streaming-cell-counts twin: the plain batch cell rollup — complete
     # mode on a bounded input must equal it exactly
     _scc_cell = cell_id_sql("lat_us", "lon_us", 6, "duckdb")
     stream_cell_counts_sql = f"""
     {pts_cte}
     select {_scc_cell} as cell, count(*) as n_pages from pts group by 1
-    """
-
-    # chip/label-pairs twin: the polygon burn as a derived table, then
-    # the same floor-division chip rollup (chips_x = 14 // 7 = 2)
-    chip_label_pairs_sql = f"""
-    with burned as ({rasterize_polygon_sql})
-    select cast(0 as bigint) as scene_id,
-           cast((row // 5) * 2 + (col // 7) as bigint) as chip_id,
-           count(*) as n_label_px
-    from burned
-    group by 1, 2
     """
 
     # wrapped-bbox twin: the SAME two split intervals, plain ORed ranges
@@ -7318,32 +5036,6 @@ from f
     # cell-top-docs twin: plain one-window top-k (the salted two-phase
     # form is exactly equal), same res-4 cell + length order
     from zen3geo_spark.operators.curation import source_cap_sql_duckdb
-    _ctd_cell = cell_id_sql("lat_us", "lon_us", 4, "duckdb")
-    _ctd_topk = source_cap_sql_duckdb(
-        "scored", k=3, id_col="point_id", source_col="cell",
-        order_col="score")
-    cell_top_docs_sql = f"""
-    {pts_cte}
-    , scored as (
-      select p.point_id, {_ctd_cell} as cell, length(pg.text) as score
-      from pts p join pages pg on pg.id = p.point_id
-    )
-    {_ctd_topk}
-    """
-
-    # spatial-block-split twin: same cell id, same decimal-string hash
-    _sbs_cell = cell_id_sql("lat_us", "lon_us", 6, "duckdb")
-    _sbs_bucket = hash40_sql_duckdb("cast(cell as varchar)")
-    spatial_block_split_sql = f"""
-    {pts_cte}
-    , cells as (select {_sbs_cell} as cell from pts),
-    s as (select cell,
-                 case when ({_sbs_bucket}) % 100 < 80 then 'train'
-                      else 'val' end as split
-          from cells)
-    select split, count(*) as n_pages, count(distinct cell) as n_cells
-    from s group by split
-    """
 
     # pyramid-delta twin: same fringe-only signed aggregation
     _tpd_n2 = N_PAGES * 6 // 5
@@ -7377,66 +5069,6 @@ from f
     {' union all '.join(_tpd_levels)}
     """
 
-    # tile-pyramid twin: base bin at zoom 6, six parent rollups FROM the
-    # base aggregate (union-all of per-zoom selects, all bigint math)
-    _tp_cell6 = cell_id_sql("lat_us", "lon_us", 6, "duckdb")
-    _tp_levels = [
-        "select 6 as zoom, cell, n_pages from base"
-    ] + [
-        f"select {z} as zoom, "
-        f"{cell_parent_sql('cell', 6, z, 'duckdb')} as cell, "
-        f"sum(n_pages) as n_pages from base group by 1, 2"
-        for z in range(6)
-    ]
-    tile_pyramid_sql = f"""
-    {pts_cte}
-    , base as (
-      select {_tp_cell6} as cell, count(*) as n_pages from pts group by 1
-    )
-    {' union all '.join(_tp_levels)}
-    """
-
-    # adaptive-cells twin: identical integer hot test
-    # (n4 * n_occupied > total), identical res-8 subdivision
-    _ac_c8 = cell_id_sql("lat_us", "lon_us", 8, "duckdb")
-    _ac_c4 = cell_id_sql("lat_us", "lon_us", 4, "duckdb")
-    adaptive_cells_sql = f"""
-    {pts_cte}
-    , pc as (select {_ac_c8} as c8, {_ac_c4} as c4 from pts),
-    coarse as (select c4, count(*) as n4 from pc group by 1),
-    stats as (select sum(n4) as tot, count(*) as nocc from coarse),
-    hot as (select c4 from coarse, stats where n4 * nocc > tot)
-    select case when h.c4 is not null then p.c8 else p.c4 end as cell,
-           case when h.c4 is not null then 8 else 4 end as res,
-           count(*) as n_pages
-    from pc p left join hot h on p.c4 = h.c4
-    group by 1, 2
-    """
-
-    # adaptive-quality twin: same positional p25 pick, same rollup
-    _aq_score = quality_score_sql("text", "duckdb")
-    adaptive_quality_sql = f"""
-    with scored as (
-      select doc_id, lang, {_aq_score} as score from documents
-    ),
-    ranked as (
-      select lang, score,
-             row_number() over (partition by lang
-                 order by score asc, doc_id asc) as rn,
-             count(*) over (partition by lang) as n
-      from scored
-    ),
-    thr as (
-      select lang, score as thr from ranked
-      where rn = ((n - 1) // 4) + 1
-    )
-    select s.lang, count(*) as n_docs,
-           sum(case when s.score >= t.thr then 1 else 0 end) as n_kept,
-           round(min(t.thr), 6) as p25_thr
-    from scored s join thr t on s.lang = t.lang
-    group by s.lang
-    """
-
     # keep-best twin: the clusters statement as a derived table + the
     # shared quality formula + the same (score DESC, node ASC) window
     dedup_keep_best_sql = f"""
@@ -7449,19 +5081,6 @@ from f
             from documents) q on q.doc_id = c.node
     ) where rk = 1
     """
-
-    embed_clusters_prelude = """
-    _d as (select vec_id, embedding::DOUBLE[] as v from embeddings),
-    _eprs as (
-      select a.vec_id as a_id, b.vec_id as b_id
-      from _d a join _d b on a.vec_id < b.vec_id
-      where list_cosine_similarity(a.v, b.v) >= 0.4
-    )"""
-    embed_dedup_clusters_sql = components_sql_duckdb(
-        "select a_id as u, b_id as v from _eprs "
-        "union all select b_id as u, a_id as v from _eprs",
-        "select vec_id as node from embeddings",
-        prelude_ctes=embed_clusters_prelude)
 
     # unigram-simhash variant of the simhash oracle (same CTE template,
     # grams swapped 2→1) — the audit compares unigram signals
@@ -7489,18 +5108,6 @@ from f
     """
 
     return {
-        "pages_extract": (
-            f"with pages as ({pages_cte_sql(N_PAGES)}) "
-            "select url, "
-            "regexp_extract(text, 'lat=(-?\\d+\\.\\d{6}) lon=(-?\\d+\\.\\d{6})', 1) as lat_str, "
-            "regexp_extract(text, 'lat=(-?\\d+\\.\\d{6}) lon=(-?\\d+\\.\\d{6})', 2) as lon_str, "
-            "lang from pages "
-            "where regexp_extract(text, 'lat=(-?\\d+\\.\\d{6}) lon=(-?\\d+\\.\\d{6})', 1) <> ''"
-        ),
-        "pages_cell_counts": (
-            f"{_points_cte()} select {cell12} as cell, count(*) as n_pages "
-            "from pts group by 1"
-        ),
         "pip_join": pip_core,
         "pip_join_salted": pip_core,
         "zonal_stats": zonal_stats_sql,
@@ -7534,72 +5141,35 @@ from f
         "geom_measures": geom_measures_sql,
         "radius_join": radius_join_sql,
         "geohash_rollup": geohash_rollup_sql,
-        "host_geo_spread": host_geo_spread_sql,
         "semdedup": semdedup_sql,
-        "geo_velocity": geo_velocity_sql,
         "tf_cosine": tf_cosine_sql,
         "spread_points": spread_points_sql,
         "dedup_keep_best": dedup_keep_best_sql,
-        "adaptive_quality": adaptive_quality_sql,
-        "leakage_safe_split": leakage_safe_split_sql,
-        "geo_lang_mix": geo_lang_mix_sql,
-        "tile_pyramid": tile_pyramid_sql,
-        "adaptive_cells": adaptive_cells_sql,
-        "pip_multi_ring": pip_multi_ring_sql,
         "tile_pyramid_delta": tile_pyramid_delta_sql,
-        "spatial_block_split": spatial_block_split_sql,
-        "cell_top_docs": cell_top_docs_sql,
         "wrap_bbox_scan": wrap_bbox_scan_sql,
-        "chip_label_pairs": chip_label_pairs_sql,
         "stream_cell_counts": stream_cell_counts_sql,
-        "knn_classify": knn_classify_sql,
-        "geo_skew_profile": geo_skew_profile_sql,
         "mosaic_incremental": mosaic_sql,
-        "quadkeys": quadkeys_sql,
-        "compact_cells": compact_cells_sql_q,
         "compact_roundtrip": compact_roundtrip_sql_q,
         "grid_dbscan": grid_dbscan_sql_q,
         "warc_roundtrip": warc_roundtrip_sql_q,
         "stream_dedup": stream_dedup_sql_q,
         "polygon_cover": polygon_cover_sql_q,
-        "crawl_transitions": crawl_transitions_sql_q,
         "trajectory_cover": trajectory_cover_sql_q,
         "disk_cover": disk_cover_sql_q,
-        "coverage_delta": coverage_delta_sql_q,
-        "cover_rollup": cover_rollup_sql_q,
         "str_pack": str_pack_sql_q,
         "interval_join": interval_join_sql_q,
-        "bpe_train": bpe_train_sql_q,
         "bpe_encode": bpe_encode_sql_q,
         "moran_i": moran_i_sql_q,
         "local_moran": local_moran_sql_q,
-        "snapshot_prune": snapshot_prune_sql_q,
-        "cell_diversity": cell_diversity_sql_q,
-        "cell_anomaly": cell_anomaly_sql_q,
         "flow_basin": flow_basin_sql_q,
         "hits": hits_sql_q,
         "link_jaccard": link_jaccard_sql_q,
         "dedup_pr_audit": dedup_pr_audit_sql_q,
         "layout_rle_audit": layout_rle_audit_sql_q,
-        "late_data_audit": late_data_audit_sql_q,
-        "equi_depth_hist": equi_depth_hist_sql_q,
-        "join_card_est": join_card_est_sql_q,
-        "str_query": str_query_sql_q,
         "windowed_hll": windowed_hll_sql_q,
-        "snapshot_expiry": snapshot_expiry_sql_q,
-        "embed_calibration": embed_calibration_sql_q,
-        "table_profile": table_profile_sql_q,
-        "rollup_report": rollup_report_sql_q,
-        "pivot_langs": pivot_langs_sql_q,
-        "host_percentiles": host_percentiles_sql_q,
-        "shipping_priority": _Q3_SQL,
-        "local_supplier_volume": _Q5_SQL,
         "hex_bins": hex_bins_sql_q,
-        "cell_topics": cell_topics_sql_q,
         "skyline_hosts": skyline_hosts_sql_q,
-        "url_editdist": url_editdist_sql_q,
         "rect_union_area": rect_union_area_sql_q,
-        "ohlc_bars": ohlc_bars_sql_q,
         "ip_geo": ip_geo_sql_q,
         "table_checksum": table_checksum_sql_q,
         "dom_stats": dom_stats_sql_q,
@@ -7611,12 +5181,9 @@ from f
         "iou_match": iou_match_sql_q,
         "graph_walks": graph_walks_sql_q,
         "cdx_index": cdx_index_sql_q,
-        "fetch_schedule": fetch_schedule_sql_q,
         "image_chips": image_chips_sql_q,
-        "sliding_window": sliding_window_sql_q,
         "geo_kmeans": geo_kmeans_sql_q,
         "funnel": funnel_sql_q,
-        "retention_cohorts": retention_cohorts_sql_q,
         "suffix_ranks": suffix_ranks_sql_q,
         "poly_intersect": poly_intersect_sql_q,
         "bigram_logppl": bigram_logppl_sql_q,
@@ -7627,7 +5194,6 @@ from f
         "seg_crossings": seg_crossings_sql_q,
         "readability": readability_sql_q,
         "c4_clean": c4_clean_sql_q,
-        "lang_mismatch": lang_mismatch_sql_q,
         "equalize": equalize_sql_q,
         "compaction_plan": compaction_plan_sql_q,
         "track_resample": track_resample_sql_q,
@@ -7639,9 +5205,6 @@ from f
         "distance_transform": distance_transform_sql_q,
         "polygonize": polygonize_sql_q,
         "flow_accum": flow_accum_sql_q,
-        "flow_dir": flow_dir_sql_q,
-        "lang_authority": lang_authority_sql_q,
-        "degree_mixing": degree_mixing_sql_q,
         "kcore": kcore_sql_q,
         "cheapest_paths": cheapest_paths_sql_q,
         "scd2_history": scd2_history_sql_q,
@@ -7649,18 +5212,13 @@ from f
         "bfs_hops": bfs_hops_sql_q,
         "cocitation": cocitation_sql_q,
         "contour": contour_sql_q,
-        "stay_points": stay_points_sql_q,
         "map_match": map_match_sql_q,
         "slope_aspect": slope_aspect_sql_q,
-        "link_geo_propagate": link_geo_propagate_sql_q,
         "simplify_track": simplify_track_sql_q,
         "rect_overlay": rect_overlay_sql_q,
         "focal_stats": focal_stats_sql_q,
         "idw_grid": idw_grid_sql_q,
         "geocode_gazetteer": geocode_gazetteer_sql_q,
-        "cell_trend": cell_trend_sql_q,
-        "recrawl_cadence": recrawl_cadence_sql,
-        "geo_backfill": geo_backfill_sql,
         "pii_redact": pii_redact_sql,
         "url_blocklist": url_blocklist_sql,
         "count_min": count_min_sql,
@@ -7670,7 +5228,6 @@ from f
         "quality_classifier": quality_classifier_sql,
         "ann_int8": ann_int8_sql,
         "hashed_tfidf": hashed_tfidf_sql,
-        "url_host_stats": url_host_stats_sql,
         "html_extract": html_extract_sql,
         "url_canonical": url_canonical_sql,
         "crawl_delta": crawl_delta_sql,
@@ -7683,8 +5240,6 @@ from f
                 "documents",
                 "source in ('src0', 'src1', 'src2', 'src3')") + ") t"
         ),
-        "embed_dedup_clusters": embed_dedup_clusters_sql,
-        "word_jaccard_exact": word_jaccard_exact_sql,
         "chip_grid": chip_grid_sql,
         "chip_grid_nd": chip_grid_nd_sql,
         "chip_assign": chip_assign_sql,
@@ -7733,9 +5288,7 @@ from f
         "minhash_lsh": minhash_sql,
         "incremental_neardup": incremental_neardup_sql,
         "simhash": simhash_sql,
-        "ann_cosine": ann_cosine_sql,
         "ann_lsh": ann_lsh_sql,
-        "ann_ivf": ann_ivf_sql,
         "lang_id": (
             f"select doc_id, {lang_id_sql('text', 'duckdb')} as lang_pred "
             "from documents"
@@ -7777,7 +5330,6 @@ from f
         "batcher": batcher_sql,
         "zipper": zipper_sql,
         "near_dup_verified": near_dup_verified_sql,
-        "dedup_clusters": dedup_clusters_sql,
         "winnow": winnow_fingerprints_sql_duckdb("documents", "doc_id", "text", 8, 4),
         "overviews": """
             with base as (
@@ -7801,19 +5353,6 @@ from f
             union all select cast(1 as int), * from l1
             union all select cast(2 as int), * from l2
         """,
-        "corpus_clean": (
-            "with keep as ("
-            "  select md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) as fp, "
-            "         min(doc_id) as keep_id, count(*) as n_dups "
-            "  from documents group by 1"
-            ") "
-            "select d.doc_id, "
-            f"round({quality_score_sql('d.text', 'duckdb')}, 6) as quality, "
-            "k.n_dups "
-            "from documents d join keep k on d.doc_id = k.keep_id "
-            f"where {lang_id_sql('d.text', 'duckdb')} = 'en' "
-            f"and {quality_score_sql('d.text', 'duckdb')} >= 0.5"
-        ),
         "raster_math": (
             "select event_id, "
             "round(10.0 * log(10, nullif(value, 0.0)), 6) as db, "
@@ -7833,25 +5372,14 @@ from f
             f"cast(floor({mercator_y_sql('(lat_us / 1000000.0)', 'duckdb')} / 100000.0) as bigint) as by, "
             "count(*) as n from pts where abs(lat_us) <= 85051129 group by 1, 2"
         ),
-        "cell_rollup": (
-            f"{pts_cte} select {cell_id_sql('lat_us', 'lon_us', 6, 'duckdb')} as cell6, "
-            "count(*) as n_pages from pts group by 1"
-        ),
         "extract_all_tags": (
             f"with pages as ({pages_cte_sql(N_PAGES)}) "
             "select url, cast(len(regexp_extract_all(text, "
             "'lat=(-?\\d+\\.\\d{6}) lon=(-?\\d+\\.\\d{6})')) as int) as n_tags "
             "from pages"
         ),
-        "tumbling_window": (
-            "select TIMESTAMP '1970-01-01 00:00:00' "
-            "+ to_seconds(cast(floor(epoch(ts) / 21600) * 21600 as bigint)) as window_start, "
-            "event_type, count(*) as n, round(sum(value), 4) as sum_value, "
-            "round(avg(cast(json_extract_string(props, '$.k') as int)), 6) as avg_k "
-            "from events group by 1, 2"
-        ),
-        # the streaming complete-mode run must equal the batch aggregate
-        # on a bounded input — same oracle as tumbling_window
+        # the streaming complete-mode run must equal the batch
+        # tumbling_event_stats aggregate on a bounded input
         "stream_tumbling": (
             "select TIMESTAMP '1970-01-01 00:00:00' "
             "+ to_seconds(cast(floor(epoch(ts) / 21600) * 21600 as bigint)) as window_start, "
@@ -7911,24 +5439,5 @@ from f
                    count(*) as n_events, round(sum(value), 4) as sum_value
             from s group by user_id, sid
         """,
-        "events_hourly": (
-            "select date_trunc('hour', ts) as hour, event_type, "
-            "count(*) as n, round(sum(value), 4) as sum_value "
-            "from events group by 1, 2"
-        ),
-        "pricing_summary": (
-            "select l_returnflag, l_linestatus, "
-            "round(sum(l_quantity), 2) as sum_qty, "
-            "round(sum(l_extendedprice), 2) as sum_base_price, "
-            "count(*) as count_order "
-            "from lineitem where l_shipdate <= TIMESTAMP '1998-09-02' "
-            "group by l_returnflag, l_linestatus"
-        ),
-        "segment_orders": (
-            "select c_mktsegment, count(*) as n_orders, "
-            "round(sum(o_totalprice), 2) as revenue "
-            "from orders join customer on o_custkey = c_custkey "
-            "group by c_mktsegment"
-        ),
         "ann_ivf_trained": ann_ivf_trained_sql,
     }

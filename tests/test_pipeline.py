@@ -99,9 +99,10 @@ def test_spark_submit_py_files(tmp_path):
 
 
 def test_driver_contract_key_alignment():
-    """Every oracle_sql() key must have a queries() entry and vice versa
-    — since r4 every query (including the iterative trained-IVF) carries
-    a value-hash oracle; the rows-only set is empty."""
+    """Every oracle_sql() key must have a queries() entry and vice versa:
+    every query (including the iterative trained-IVF) carries a
+    value-hash oracle, and a query removed from the contract takes its
+    oracle with it."""
     import __spark_entry__ as E
 
     q = set(E.queries())

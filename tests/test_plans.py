@@ -15,14 +15,14 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pricing_summary_pushes_shipdate_filter(spark):
-    plan = _plan(E.q_pricing_summary(spark, SF))
+def test_asof_join_pushes_event_type_filter(spark):
+    plan = _plan(E.q_asof_join(spark, SF))
     assert "PushedFilters: [" in plan
-    assert "l_shipdate" in plan.split("PushedFilters:", 1)[1][:200]
+    assert "event_type" in plan.split("PushedFilters:", 1)[1][:200]
 
 
-def test_segment_orders_broadcasts_customer(spark):
-    plan = _plan(E.q_segment_orders(spark, SF))
+def test_interval_join_broadcasts_intervals(spark):
+    plan = _plan(E.q_interval_join(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 

@@ -142,9 +142,9 @@ def test_hash_kernel_parity_mixed_case(spark):
     normalization lives in all three paths)."""
     from zen3geo_spark.operators.dedup import (
         gram_hash60_sql_duckdb, gram_hashes40_sql_duckdb,
-        minhash_signature, minhash_signature_pd, minhash_signature_sql_duckdb,
+        minhash_signature, minhash_signature_sql_duckdb, minhash_table_pd,
         shingles_sql_duckdb, simhash64, simhash64_agg, simhash64_sql_duckdb,
-        simhash_pd,
+        simhash_table_pd,
     )
 
     rows = [(0, "The Quick BROWN Fox jumps"), (1, "héllo WÖRLD ünïcode text"),
@@ -153,8 +153,8 @@ def test_hash_kernel_parity_mixed_case(spark):
 
     sig_col = {r["doc_id"]: list(r["s"]) for r in
                df.select("doc_id", minhash_signature(F.col("text"), 8, 2).alias("s")).collect()}
-    sig_pd = {r["doc_id"]: list(r["s"]) for r in
-              df.select("doc_id", minhash_signature_pd(8, 2)(F.col("text")).alias("s")).collect()}
+    sig_pd = {r["doc"]: list(r["sig"]) for r in
+              minhash_table_pd(df, num_hashes=8, shingle_n=2).collect()}
     assert sig_col == sig_pd
 
     grams = shingles_sql_duckdb("text", 2)
@@ -170,8 +170,8 @@ def test_hash_kernel_parity_mixed_case(spark):
 
     sh_col = {r["doc_id"]: r["s"] for r in
               df.select("doc_id", simhash64(F.col("text"), 2).alias("s")).collect()}
-    sh_pd = {r["doc_id"]: r["s"] for r in
-             df.select("doc_id", simhash_pd(2)(F.col("text")).alias("s")).collect()}
+    sh_pd = {r["doc"]: r["sh"] for r in
+             simhash_table_pd(df, shingle_n=2).collect()}
     sh_agg = {r["doc"]: r["sh"] for r in simhash64_agg(df, shingle_n=2).collect()}
     assert sh_col == sh_pd == sh_agg
     sh_duck = dict(con.sql(

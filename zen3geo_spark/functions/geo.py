@@ -192,7 +192,7 @@ def geotag_extract_pandas(texts):
     return ext
 
 
-def extract_points_arrow(pages, prefilter: bool = True):
+def extract_points_arrow(pages):
     """Arrow-vectorized scan→points: (url, text) → (point_id, lat_us,
     lon_us) via mapInPandas.
 
@@ -201,81 +201,40 @@ def extract_points_arrow(pages, prefilter: bool = True):
     materializes the extracted columns once, so downstream cell-encode /
     bbox / refine references are plain attribute reads.
 
-    ``prefilter=True`` (default, the scale path): the JVM scan projects
-    the candidate geotag SUBSTRING (``regexp_extract`` in whole-stage
-    codegen) and drops tagless rows BEFORE the Arrow hop, so Python
-    receives ~30 bytes per surviving row instead of the full page text —
-    classic projection/selection pushdown applied to a UDF boundary
-    (measured 2.4x end-to-end on 1.6M pages; output byte-identical, the
-    extracted tag text per url is unchanged and the semantic parse —
-    group split + exact fixed-point conversion — stays in the vectorized
-    Arrow kernel). ``prefilter=False`` ships raw (url, text) and runs
-    the whole extraction in pandas — same rows, kept as the
-    parity/fallback kernel for sources whose tag grammar the JVM regexp
-    can't express. No shuffle in either path.
+    The JVM scan projects the candidate geotag SUBSTRING
+    (``regexp_extract`` in whole-stage codegen) and drops tagless rows
+    BEFORE the Arrow hop, so Python receives ~30 bytes per surviving row
+    instead of the full page text — classic projection/selection pushdown
+    applied to a UDF boundary (measured 2.4x end-to-end on 1.6M pages).
+    The semantic parse — group split + exact fixed-point conversion —
+    stays in the vectorized Arrow kernel. No shuffle.
     """
     import re as _re
 
-    import numpy as np
     import pandas as pd
 
     pat = _re.compile(LAT_LON_PATTERN)
+    pre = pages.select(
+        F.regexp_extract("url", URL_ID_PATTERN, 1).try_cast("long")
+        .alias("point_id"),
+        F.regexp_extract("text", LAT_LON_PATTERN, 0).alias("tag"),
+    ).filter((F.col("tag") != "") & F.col("point_id").isNotNull())
 
-    if prefilter:
-        pre = pages.select(
-            F.regexp_extract("url", URL_ID_PATTERN, 1).try_cast("long")
-            .alias("point_id"),
-            F.regexp_extract("text", LAT_LON_PATTERN, 0).alias("tag"),
-        ).filter((F.col("tag") != "") & F.col("point_id").isNotNull())
-
-        def run_tag(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ext = pdf["tag"].str.extract(pat, expand=True)
-                yield pd.DataFrame({
-                    "point_id": pdf["point_id"].to_numpy(),
-                    "lat_us": (pd.to_numeric(ext[0]) * 1e6).round()
-                    .astype("int64"),
-                    "lon_us": (pd.to_numeric(ext[1]) * 1e6).round()
-                    .astype("int64"),
-                })
-
-        return pre.mapInPandas(
-            run_tag, schema="point_id long, lat_us long, lon_us long")
-
-    idpat = _re.compile(URL_ID_PATTERN)
-
-    def run(batches):
+    def run_tag(batches):
         for pdf in batches:
-            ext = pdf["text"].str.extract(pat, expand=True)
-            ok = ext[0].notna()
-            if not ok.any():
+            if len(pdf) == 0:
                 continue
-            ids = pdf.loc[ok, "url"].str.extract(idpat, expand=True)[0]
-            # a row can carry a geotag in text but an id-less url: drop it
-            # (NaN .astype('int64') would crash the executor)
-            id_ok = ids.notna()
-            if not id_ok.all():
-                ok = ok & id_ok.reindex(ok.index, fill_value=False)
-                ids = ids[id_ok]
-            ids = ids.astype("int64")
-
-            def micro(series: pd.Series) -> np.ndarray:
-                # exact for the grammar's -?\d+\.\d{6} strings in ±180:
-                # double parse error ≤ ulp(180) ≈ 3e-14, ×1e6 → ≤ 3e-8,
-                # far below the 0.5 rounding margin (and ~2x faster than
-                # a second regex pass over the batch)
-                return (pd.to_numeric(series) * 1e6).round().astype("int64")
-
+            ext = pdf["tag"].str.extract(pat, expand=True)
             yield pd.DataFrame({
-                "point_id": ids.to_numpy(),
-                "lat_us": micro(ext.loc[ok, 0]),
-                "lon_us": micro(ext.loc[ok, 1]),
+                "point_id": pdf["point_id"].to_numpy(),
+                "lat_us": (pd.to_numeric(ext[0]) * 1e6).round()
+                .astype("int64"),
+                "lon_us": (pd.to_numeric(ext[1]) * 1e6).round()
+                .astype("int64"),
             })
 
-    return pages.select("url", "text").mapInPandas(
-        run, schema="point_id long, lat_us long, lon_us long")
+    return pre.mapInPandas(
+        run_tag, schema="point_id long, lat_us long, lon_us long")
 
 
 def micro_from_str(s: Column) -> Column:

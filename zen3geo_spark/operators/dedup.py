@@ -280,7 +280,7 @@ def gram_hash60(s: Column) -> Column:
 def minhash_signature(text: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
     """Array of ``num_hashes`` minhash values: min over shingles of the
     j-th affine permutation (a_j·h + b_j mod 2^61-1) of the 40-bit gram
-    hash. Value-identical to ``minhash_signature_pd`` (parity-tested)."""
+    hash. Value-identical to ``minhash_table_pd`` (parity-tested)."""
     sh = shingles(text, shingle_n)
     hs = F.transform(sh, lambda g: gram_hash40(g))
     a, b = _perm_params(num_hashes)
@@ -291,26 +291,6 @@ def minhash_signature(text: Column, num_hashes: int = 16, shingle_n: int = 3) ->
 
     sigs = [F.array_min(F.transform(hs, permute(j))) for j in range(num_hashes)]
     return F.array(*sigs)
-
-
-def minhash_signature_pd(num_hashes: int, shingle_n: int):
-    """Arrow-vectorized minhash: one fused NumPy pass per Arrow batch —
-    distinct grams hashed once (shingle vocabularies repeat heavily), all
-    permutations as one (k × n_grams) matrix op, per-doc minima via
-    ``minimum.reduceat``. No per-shingle Python loop. Value-identical to
-    the ``minhash_signature`` Column twin and the DuckDB oracle."""
-    a, b = _perm_params(num_hashes)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig(texts: pd.Series) -> pd.Series:
-        if len(texts) == 0:
-            return pd.Series([], dtype="object")
-        uniq, idx, starts = _batch_grams(texts, shingle_n)
-        h = _poly_hash_batch(uniq, _POWS1_NP)[idx]          # (n_all,)
-        mins = _permute_min(h, starts, a, b)                 # (k, n_docs)
-        return pd.Series([r.tolist() for r in mins.T])
-
-    return sig
 
 
 def _permute_min(h: np.ndarray, starts: np.ndarray,
@@ -335,7 +315,9 @@ def minhash_table_pd(docs: DataFrame, text_col: str = "text",
     CollapseProject into every downstream band expression (measured 4-8
     ArrowEvalPython nodes per LSH plan = 4-8 full kernel evaluations);
     MapInPandas is a physical node, so the kernel runs exactly once per
-    join side. Same math as ``minhash_signature_pd``."""
+    join side. One fused NumPy pass per Arrow batch: distinct grams hashed
+    once, per-doc minima via ``minimum.reduceat``. Value-identical to the
+    ``minhash_signature`` Column twin and the DuckDB oracle (parity-tested)."""
     a, b = _perm_params(num_hashes)
 
     def run(batches):
@@ -357,7 +339,9 @@ def minhash_table_pd(docs: DataFrame, text_col: str = "text",
 def simhash_table_pd(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", shingle_n: int = 2) -> DataFrame:
     """(doc, sh) SimHash table via ``mapInPandas`` (single-evaluation
-    barrier — see ``minhash_table_pd``). Same math as ``simhash_pd``."""
+    barrier — see ``minhash_table_pd``). Value-identical to the
+    ``simhash64``/``simhash64_agg`` Column paths and the DuckDB oracle
+    (parity-tested)."""
     def run(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -373,24 +357,6 @@ def simhash_table_pd(docs: DataFrame, text_col: str = "text",
 
     return docs.select(id_col, text_col).mapInPandas(
         run, schema="doc long, sh long")
-
-
-def simhash_pd(shingle_n: int):
-    """Arrow-vectorized twin of ``simhash64``/``simhash64_agg``: 60-bit
-    gram hashes (two 40-bit polynomials) + majority-bit vote, fused over
-    the whole Arrow batch with ``add.reduceat``. Value-identical to the
-    Column paths and the DuckDB oracle."""
-    @F.pandas_udf("long")
-    def sh(texts: pd.Series) -> pd.Series:
-        if len(texts) == 0:
-            return pd.Series([], dtype="int64")
-        uniq, idx, starts = _batch_grams(texts, shingle_n)
-        h1 = _poly_hash_batch(uniq, _POWS1_NP)
-        h2 = _poly_hash_batch(uniq, _POWS2_NP)
-        h = (h1 + (h2 % (1 << 20)) * (1 << 40))[idx]
-        return pd.Series(_simhash_majority(h, starts))
-
-    return sh
 
 
 def _simhash_majority(h: np.ndarray, starts: np.ndarray) -> np.ndarray:
@@ -982,7 +948,7 @@ def simhash64(text: Column, shingle_n: int = 2) -> Column:
     """60-bit SimHash: bit b of the result is 1 when the majority of
     shingles have bit b set in their 60-bit polynomial gram hash.
 
-    Pure array expressions; no UDF (parity path for ``simhash_pd``).
+    Pure array expressions; no UDF (parity path for ``simhash_table_pd``).
     """
     sh = shingles(text, shingle_n)
     h = F.transform(sh, lambda s: gram_hash60(s))
