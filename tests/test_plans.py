@@ -45,6 +45,19 @@ def test_pip_join_refines_map_side_after_broadcast_join(spark):
         assert node not in above, node
 
 
+def test_rasterize_polygon_burns_map_side(spark):
+    """The polygon burn pairs against a broadcast canvas and runs its kernel
+    map-side: no grouped pandas UDF, and the only non-broadcast shuffle is
+    the pixel aggregate."""
+    plan = _plan(E.q_rasterize_polygon(spark, SF))
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInArrow" in plan
+    shuffles = [ln for ln in plan.splitlines()
+                if "Exchange" in ln and "BroadcastExchange" not in ln]
+    assert len(shuffles) == 1, shuffles
+    assert "hashpartitioning(canvas_id" in shuffles[0]
+
+
 def test_vector_scan_bbox_prune_pushdown(spark, tmp_path):
     """scan_vectors' bbox predicate must reach the parquet scan."""
     from zen3geo_spark.sources.raster import scan_vectors

@@ -1,6 +1,7 @@
 """Rasterizer goldens from the reference's own tests
 (/root/reference/zen3geo/tests/test_datapipes_datashader.py)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,6 +91,126 @@ def test_rasterize_empty_vector(spark):
     geoms = fixtures.geometries_datashader(spark).filter(F.col("geom_id") > 99)
     with pytest.raises(ValueError, match="Cannot infer spatialpandas geometry type"):
         rasterize(canvas, geoms)
+
+
+def test_rasterize_validate_false_pairs_vector_sets(spark):
+    """Two canvases, two vector sets: validate=False pairs each set with its
+    own canvas, exactly as validate=True does, instead of burning every
+    geometry onto every canvas."""
+    canvas = fixtures.canvas_rasterize(spark, n=2)
+    base = fixtures.geometries_datashader(spark)
+    poly = base.filter(F.col("geom_type") == "polygon").withColumn("vset_id", F.lit(0))
+    line = base.filter(F.col("geom_type") == "linestring")
+    # vector set 1 holds the line's vertices as a polygon (a different burn)
+    other = line.withColumn("geom_type", F.lit("polygon")).withColumn("vset_id", F.lit(1))
+    geoms = poly.union(other)
+
+    def burn(validate):
+        return sorted(tuple(r) for r in rasterize(canvas, geoms, validate=validate).collect())
+
+    checked = burn(True)
+    assert {r[0] for r in checked} == {0, 1}
+    assert burn(False) == checked
+
+
+def _brute_force_polygon(width, height, xmin, ymin, xmax, ymax, x, y, ring_sizes):
+    """Winding number of every pixel center in the polygon's bbox against
+    every edge at once, a (rows, cols, edges) test: the reference for the
+    row-scanline kernel, with the same expressions in the same order."""
+    sx = width / (xmax - xmin)
+    sy = height / (ymax - ymin)
+    e0, e1, einc = [], [], []
+    for ring in np.split(np.arange(len(x)), np.cumsum(ring_sizes)[:-1]):
+        xc = (x[ring] - xmin) * sx - 0.5
+        yc = (y[ring] - ymin) * sy - 0.5
+        x0, y0, x1, y1 = xc, yc, np.roll(xc, -1), np.roll(yc, -1)
+        up, dn = y1 > y0, y1 < y0
+        for lo_x, lo_y, hi_x, hi_y, inc in ((x0[up], y0[up], x1[up], y1[up], 1),
+                                            (x1[dn], y1[dn], x0[dn], y0[dn], -1)):
+            e0 += list(zip(lo_x, lo_y))
+            e1 += list(zip(hi_x, hi_y))
+            einc += [inc] * len(lo_x)
+    if not e0:
+        return np.empty((0, 2), dtype=np.int64)
+    e0, e1, einc = np.asarray(e0), np.asarray(e1), np.asarray(einc)
+
+    def snap(v, vmin, vmax, n):
+        return min(int(np.floor((v - vmin) / (vmax - vmin) * n)), n - 1)
+
+    xi = np.arange(max(snap(max(x.min(), xmin), xmin, xmax, width), 0),
+                   min(snap(min(x.max(), xmax), xmin, xmax, width) + 1, width))
+    yi = np.arange(max(snap(max(y.min(), ymin), ymin, ymax, height), 0),
+                   min(snap(min(y.max(), ymax), ymin, ymax, height) + 1, height))
+    if len(xi) == 0 or len(yi) == 0:
+        return np.empty((0, 2), dtype=np.int64)
+    XI, YI = np.meshgrid(xi, yi)
+    y0c, y1c = e0[:, 1][None, None, :], e1[:, 1][None, None, :]
+    x0c, x1c = e0[:, 0][None, None, :], e1[:, 0][None, None, :]
+    Y, X = YI[:, :, None], XI[:, :, None]
+    covers = (y0c < Y) & (Y <= y1c)
+    left = (X > x0c) & (X > x1c)
+    cross = (x1c - x0c) * (Y - y0c) - (y1c - y0c) * (X - x0c)
+    wn = ((covers & (left | (cross < 0))) * einc[None, None, :]).sum(axis=2)
+    ys_in, xs_in = np.nonzero(wn != 0)
+    return np.stack([XI[ys_in, xs_in], YI[ys_in, xs_in]], axis=1)
+
+
+def _random_polygon(rng, canvas):
+    """Seeded multi-ring polygon on or off ``canvas``: star rings with a
+    reversed inner hole, scattered (self-crossing) rings, vertices snapped
+    to a 0.1 or pixel-center lattice, forced horizontal edges."""
+    width, height, xmin, ymin, xmax, ymax = canvas
+    spanx, spany = xmax - xmin, ymax - ymin
+    rings = []
+    for _ in range(rng.integers(1, 4)):  # multipart: independent centers
+        cx = rng.uniform(xmin - 0.3 * spanx, xmax + 0.3 * spanx)
+        cy = rng.uniform(ymin - 0.3 * spany, ymax + 0.3 * spany)
+        k = int(rng.integers(3, 14))
+        if rng.random() < 0.6:
+            ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+            rad = rng.uniform(0.05, 0.4, k)
+            rings.append((cx + rad * spanx * np.cos(ang), cy + rad * spany * np.sin(ang)))
+            if rng.random() < 0.4:  # hole, opposite orientation
+                hole = 0.02 * np.array([spanx, spany])
+                rings.append((cx + hole[0] * np.cos(ang[::-1]),
+                              cy + hole[1] * np.sin(ang[::-1])))
+        else:
+            rings.append((cx + rng.uniform(-0.3, 0.3, k) * spanx,
+                          cy + rng.uniform(-0.3, 0.3, k) * spany))
+    x = np.concatenate([r[0] for r in rings])
+    y = np.concatenate([r[1] for r in rings])
+    u = rng.random()
+    if u < 0.3:
+        x, y = np.round(x * 10) / 10, np.round(y * 10) / 10
+    elif u < 0.5:  # pixel centers: the lattice the hit test runs on
+        px, py = spanx / width, spany / height
+        x = xmin + (np.round((x - xmin) / px - 0.5) + 0.5) * px
+        y = ymin + (np.round((y - ymin) / py - 0.5) + 0.5) * py
+    if rng.random() < 0.3:
+        i = int(rng.integers(0, len(x) - 1))
+        y[i + 1] = y[i]
+    return x, y, np.array([len(r[0]) for r in rings])
+
+
+def test_polygon_scanline_kernel_matches_brute_force():
+    """The row-scanline winding kernel returns exactly the brute-force
+    (rows, cols, edges) pixels, in the same order, on seeded random
+    polygons: holes, multipart, off-canvas parts, lattice-snapped
+    vertices and horizontal edges."""
+    from zen3geo_spark.operators.rasterize import _polygon_kernel
+
+    rng = np.random.default_rng(20261019)
+    canvases = [(14, 10, 1.0, 0.0, 8.0, 5.0), (37, 23, -1.0, -1.0, 13.0, 11.0),
+                (96, 64, 0.0, 0.0, 96.0, 64.0)]
+    burned = 0
+    for i in range(600):
+        canvas = canvases[i % len(canvases)]
+        x, y, sizes = _random_polygon(rng, canvas)
+        want = _brute_force_polygon(*canvas, x, y, sizes)
+        got = _polygon_kernel(*canvas, x, y, sizes)
+        assert got.dtype == want.dtype and np.array_equal(got, want), (i, canvas)
+        burned += len(want) > 0
+    assert 300 < burned < 600  # most polygons burn pixels, some lie off-canvas
 
 
 def test_canvas_from_grid_golden(spark):

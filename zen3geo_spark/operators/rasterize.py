@@ -12,11 +12,19 @@ Point=3 / Line=13 / Polygon=15, tests/test_datapipes_datashader.py:77-104):
   to the last pixel (datashader ``map_onto_pixel``). Pure SQL: stays inside
   whole-stage codegen, shuffles once for the groupBy(pixel) count.
 * lines — integer Bresenham between edge-snapped endpoint pixels
-  (datashader ``draw_segment``), per-canvas grouped applyInPandas.
+  (datashader ``draw_segment``).
 * polygons — winding-number test at the integer pixel lattice in canvas
   coordinates shifted by −0.5 (pixel centers), half-open edge rule
   ``y0c < yi <= y1c``, horizontal edges skipped (datashader
-  ``draw_polygon``), per-canvas grouped applyInPandas.
+  ``draw_polygon``), evaluated one pixel row at a time: each edge crossing
+  a row adds its ±1 from its first hit column on, and a running sum along
+  the row gives the winding number.
+
+Lines and polygons burn map-side: the canvas side (one metadata row per
+canvas) is broadcast, so each (canvas, geometry) pair stays in its
+geometry's partition, and ``mapInArrow`` calls the kernel once per pair on
+vertex arrays read straight from the Arrow list offsets. The only shuffle
+is the pixel aggregate that merges overlapping geometries.
 
 Output is a long-form raster ``(canvas_id, row, col, value)`` where row 0 is
 the NORTH row (equivalent to the reference's final reproject to affine
@@ -27,9 +35,13 @@ them.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from zen3geo_spark.operators._util import pair_all
+from zen3geo_spark.operators.spatial_join import ring_edges
 
 RASTER_SCHEMA = "canvas_id long, row int, col int, value double"
 
@@ -100,13 +112,15 @@ def validate_rasterize_inputs(canvas_df: DataFrame, geoms_df: DataFrame) -> tupl
 
 def _paired(canvas_df: DataFrame, geoms_df: DataFrame, n_vec: int) -> DataFrame:
     """Broadcast-1 (zip_longest fill, datashader.py:188-191) or N:N pairing
-    on vset_id == canvas_id."""
+    on vset_id == canvas_id. The canvas side is broadcast, so the pairs keep
+    the geometry table's partitioning and the burn's parallelism follows
+    the geometries."""
+    geoms = geoms_df.drop("crs")
     if n_vec <= 1:
-        from zen3geo_spark.operators._util import pair_all
-        return pair_all(canvas_df, geoms_df.drop("vset_id", "crs"))
-    return canvas_df.join(
-        F.broadcast(geoms_df.drop("crs")),
-        on=canvas_df["canvas_id"] == geoms_df["vset_id"],
+        return pair_all(geoms.drop("vset_id"), canvas_df)
+    return geoms.join(
+        F.broadcast(canvas_df),
+        on=geoms["vset_id"] == canvas_df["canvas_id"],
     ).drop("vset_id")
 
 
@@ -125,8 +139,15 @@ def rasterize(canvas_df: DataFrame, geoms_df: DataFrame, agg: str | None = None,
     if validate:
         _, n_vec, kind = validate_rasterize_inputs(canvas_df, geoms_df)
     else:
-        n_vec, kind = 1, None
-        kinds = [r[0] for r in geoms_df.select("geom_type").distinct().collect()]
+        # one job: the geometry kinds, and the vector-set count that picks
+        # the pairing rule validate=True uses
+        vset = "vset_id" in geoms_df.columns
+        row = geoms_df.agg(
+            F.collect_set("geom_type").alias("kinds"),
+            *([F.countDistinct("vset_id").alias("nv")] if vset else []),
+        ).collect()[0]
+        n_vec = row["nv"] if vset else 1
+        kinds = row["kinds"]
         kind = ("point" if kinds[0] in _POINT_TYPES else
                 "line" if kinds[0] in _LINE_TYPES else "polygon")
     agg = agg or DEFAULT_AGG.get(kind, "count" if kind == "point" else "any")
@@ -137,14 +158,14 @@ def rasterize(canvas_df: DataFrame, geoms_df: DataFrame, agg: str | None = None,
         raise ValueError(f"line/polygon agg '{agg}' requires value_col "
                          "(a per-geometry scalar)")
     kernel = _line_kernel if kind == "line" else _polygon_kernel
-    # group per (canvas, geometry): a canvas with many geometries burns in
-    # parallel tasks and the pixel-level aggregate below merges them —
-    # identical output to a per-canvas group, one less skew shape (a
-    # single giant geometry would still need a row-block sub-key)
     vcol = value_col if agg in ("sum", "mean", "max", "min") else None
-    burned = pairs.groupBy("canvas_id", "geom_id").applyInPandas(
-        _make_grouped_kernel(kernel, vcol), schema=RASTER_SCHEMA
-    )
+    burned = pairs.select(
+        F.col("canvas_id").cast("long"), F.col("width").cast("int"),
+        F.col("height").cast("int"),
+        *(F.col(c).cast("double") for c in ("xmin", "ymin", "xmax", "ymax")),
+        "parts",
+        *([F.col(vcol).cast("double").alias("_val")] if vcol else []),
+    ).mapInArrow(_burn_batches(kernel, vcol is not None), RASTER_SCHEMA)
     finals = {
         "any": F.lit(1.0),
         "count": F.count("*").cast("double"),
@@ -208,7 +229,7 @@ def _rasterize_points_sql(pairs: DataFrame, agg: str,
 
 
 # ---------------------------------------------------------------------------
-# numpy kernels (vectorized inside grouped applyInPandas)
+# numpy kernels (one call per (canvas, geometry) row inside mapInArrow)
 # ---------------------------------------------------------------------------
 
 def _snap_px(v: np.ndarray, vmin: float, vmax: float, n: int) -> np.ndarray:
@@ -238,109 +259,136 @@ def _bresenham(x0: int, y0: int, x1: int, y1: int) -> np.ndarray:
     return np.stack([xs, ys], axis=1)
 
 
-def _line_kernel(width, height, xmin, ymin, xmax, ymax, parts) -> np.ndarray:
-    """All pixels covered by the polyline parts → (col, yi) array."""
-    out = []
-    for part in parts:
-        xs = np.fromiter((p["x"] for p in part), dtype=np.float64)
-        ys = np.fromiter((p["y"] for p in part), dtype=np.float64)
-        px = _snap_px(xs, xmin, xmax, width)
-        py = _snap_px(ys, ymin, ymax, height)
-        for i in range(len(px) - 1):
-            out.append(_bresenham(px[i], py[i], px[i + 1], py[i + 1]))
+_NO_PIXELS = np.empty((0, 2), dtype=np.int64)
+
+
+def _line_kernel(width, height, xmin, ymin, xmax, ymax, x, y,
+                 ring_sizes) -> np.ndarray:
+    """All pixels covered by the polyline parts (vertices ``x``/``y`` flat,
+    ``ring_sizes`` per part) → (col, yi) array."""
+    px = _snap_px(x, xmin, xmax, width)
+    py = _snap_px(y, ymin, ymax, height)
+    ends = np.cumsum(ring_sizes)
+    out = [_bresenham(px[i], py[i], px[i + 1], py[i + 1])
+           for s, e in zip(ends - ring_sizes, ends) for i in range(s, e - 1)]
     if not out:
-        return np.empty((0, 2), dtype=np.int64)
+        return _NO_PIXELS
     pix = np.concatenate(out)
     keep = (pix[:, 0] >= 0) & (pix[:, 0] < width) & (pix[:, 1] >= 0) & (pix[:, 1] < height)
     return np.unique(pix[keep], axis=0)
 
 
-def _polygon_kernel(width, height, xmin, ymin, xmax, ymax, parts) -> np.ndarray:
+def _polygon_kernel(width, height, xmin, ymin, xmax, ymax, x, y,
+                    ring_sizes) -> np.ndarray:
     """Winding-number fill at the −0.5-shifted integer lattice (pixel
-    centers), vectorized over the polygon's bbox pixels × edges.
-    Verified against the Polygon=15 golden."""
+    centers) → (col, yi) array; rings' vertices ``x``/``y`` flat,
+    ``ring_sizes`` per ring. Verified against the Polygon=15 golden.
+
+    Pixel (X, Y) gets edge e's ±1 when e covers row Y (``y0c < Y <= y1c``,
+    lower-y endpoint first) and ``(X > x0c & X > x1c) | cross < 0``. Every
+    rounding step of ``cross`` is monotone in X, so along a row that hit
+    test flips from false to true once: each (row, edge) pair scatters its
+    ±1 at its first hit column and a running sum along the row gives the
+    winding number — O(rows·edges + rows·cols) instead of a
+    rows×cols×edges test, with the same pixels bit for bit."""
+    if len(x) == 0:
+        return _NO_PIXELS
     sx = width / (xmax - xmin)
     sy = height / (ymax - ymin)
-    e0, e1, einc = [], [], []
-    gxmin = gymin = np.inf
-    gxmax = gymax = -np.inf
-    for ring in parts:
-        xs = np.fromiter((p["x"] for p in ring), dtype=np.float64)
-        ys = np.fromiter((p["y"] for p in ring), dtype=np.float64)
-        gxmin, gxmax = min(gxmin, xs.min()), max(gxmax, xs.max())
-        gymin, gymax = min(gymin, ys.min()), max(gymax, ys.max())
-        xc = (xs - xmin) * sx - 0.5
-        yc = (ys - ymin) * sy - 0.5
-        x0, y0 = xc, yc
-        x1, y1 = np.roll(xc, -1), np.roll(yc, -1)
-        up = y1 > y0
-        dn = y1 < y0
-        for lo_x, lo_y, hi_x, hi_y, inc in (
-            (x0[up], y0[up], x1[up], y1[up], 1),
-            (x1[dn], y1[dn], x0[dn], y0[dn], -1),
-        ):
-            for j in range(len(lo_x)):
-                e0.append((lo_x[j], lo_y[j]))
-                e1.append((hi_x[j], hi_y[j]))
-                einc.append(inc)
-    if not e0:
-        return np.empty((0, 2), dtype=np.int64)
-    e0 = np.asarray(e0)  # (E,2) lower-y endpoint
-    e1 = np.asarray(e1)  # (E,2) upper-y endpoint
-    einc = np.asarray(einc)
+    xa, ya, xb, yb = ring_edges((x - xmin) * sx - 0.5, (y - ymin) * sy - 0.5,
+                                ring_sizes)
+    up, dn = yb > ya, yb < ya
+    # lower-y endpoint (x0c, y0c), upper-y endpoint (x1c, y1c)
+    x0c = np.concatenate([xa[up], xb[dn]])
+    y0c = np.concatenate([ya[up], yb[dn]])
+    x1c = np.concatenate([xb[up], xa[dn]])
+    y1c = np.concatenate([yb[up], ya[dn]])
+    inc = np.repeat([1.0, -1.0], [up.sum(), dn.sum()])
 
-    startx, starty = _snap_px(np.array([max(gxmin, xmin)]), xmin, xmax, width)[0], \
-        _snap_px(np.array([max(gymin, ymin)]), ymin, ymax, height)[0]
-    stopx = _snap_px(np.array([min(gxmax, xmax)]), xmin, xmax, width)[0] + 1
-    stopy = _snap_px(np.array([min(gymax, ymax)]), ymin, ymax, height)[0] + 1
-    xi = np.arange(max(startx, 0), min(stopx, width))
-    yi = np.arange(max(starty, 0), min(stopy, height))
-    if len(xi) == 0 or len(yi) == 0:
-        return np.empty((0, 2), dtype=np.int64)
-    XI, YI = np.meshgrid(xi, yi)  # (Y,X)
-    # (Y,X,E) eligibility: edge covers row if y0c < yi <= y1c
-    y0c = e0[:, 1][None, None, :]
-    y1c = e1[:, 1][None, None, :]
-    x0c = e0[:, 0][None, None, :]
-    x1c = e1[:, 0][None, None, :]
-    Y = YI[:, :, None]
-    X = XI[:, :, None]
-    covers = (y0c < Y) & (Y <= y1c)
-    left = (X > x0c) & (X > x1c)
-    cross = (x1c - x0c) * (Y - y0c) - (y1c - y0c) * (X - x0c)
-    hit = covers & (left | (cross < 0))
-    wn = (hit * einc[None, None, :]).sum(axis=2)
-    ys_in, xs_in = np.nonzero(wn != 0)
-    return np.stack([XI[ys_in, xs_in], YI[ys_in, xs_in]], axis=1)
+    startx, starty = _snap_px(np.array([max(x.min(), xmin)]), xmin, xmax, width)[0], \
+        _snap_px(np.array([max(y.min(), ymin)]), ymin, ymax, height)[0]
+    stopx = _snap_px(np.array([min(x.max(), xmax)]), xmin, xmax, width)[0] + 1
+    stopy = _snap_px(np.array([min(y.max(), ymax)]), ymin, ymax, height)[0] + 1
+    c0, c1 = max(startx, 0), min(stopx, width)
+    r0, r1 = max(starty, 0), min(stopy, height)
+    if c1 <= c0 or r1 <= r0 or len(inc) == 0:
+        return _NO_PIXELS
+    # rows each edge covers: integers Y with y0c < Y <= y1c, inside [r0, r1)
+    lo = np.clip(np.floor(y0c) + 1, r0, r1).astype(np.int64)
+    hi = np.clip(np.floor(y1c) + 1, r0, r1).astype(np.int64)
+    n = np.maximum(hi - lo, 0)
+    e = np.repeat(np.arange(len(n)), n)
+    Y = (np.repeat(lo - (np.cumsum(n) - n), n)
+         + np.arange(len(e))).astype(np.float64)
+    x0c, y0c, x1c, y1c = x0c[e], y0c[e], x1c[e], y1c[e]
+    a = (x1c - x0c) * (Y - y0c)
+    b = y1c - y0c
+
+    def hit(X):
+        return ((X > x0c) & (X > x1c)) | (a - b * (X - x0c) < 0)
+
+    # first hit column: float estimate, then exact ±1 steps; c1 = no hit
+    with np.errstate(divide="ignore", invalid="ignore"):
+        est = np.fmin(np.floor(np.fmax(x0c, x1c)), np.floor(x0c + a / b)) + 1
+    X = np.clip(np.nan_to_num(est, nan=c1), c0, c1)
+    while True:
+        back = (X > c0) & hit(X - 1)
+        fwd = (X < c1) & ~hit(X)
+        if not (back.any() or fwd.any()):
+            break
+        X = X - back + fwd
+    cols = c1 - c0 + 1
+    idx = (Y.astype(np.int64) - r0) * cols + (X.astype(np.int64) - c0)
+    delta = np.bincount(idx, weights=inc[e], minlength=(r1 - r0) * cols)
+    wn = np.cumsum(delta.reshape(r1 - r0, cols), axis=1)[:, :-1]
+    ri, ci = np.nonzero(wn != 0)
+    return np.stack([ci + c0, ri + r0], axis=1)
 
 
-def _make_grouped_kernel(kernel, value_col: str | None = None):
-    """Grouped burn kernel; with ``value_col`` each burned pixel row
-    carries its geometry's scalar value (for sum/mean/max/min pixel
-    reductions), else 1.0 (presence/count)."""
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            pix = kernel(int(r.width), int(r.height), float(r.xmin), float(r.ymin),
-                         float(r.xmax), float(r.ymax), r.parts)
-            if len(pix):
-                val = float(getattr(r, value_col)) if value_col else 1.0
-                rows.append(
-                    pd.DataFrame({
-                        "canvas_id": np.full(len(pix), r.canvas_id, dtype=np.int64),
-                        "row": (int(r.height) - 1 - pix[:, 1]).astype(np.int32),
-                        "col": pix[:, 0].astype(np.int32),
-                        "value": np.full(len(pix), val),
-                    })
-                )
-        if not rows:
-            return pd.DataFrame({"canvas_id": pd.Series([], dtype="int64"),
-                                 "row": pd.Series([], dtype="int32"),
-                                 "col": pd.Series([], dtype="int32"),
-                                 "value": pd.Series([], dtype="float64")})
-        return pd.concat(rows, ignore_index=True)
+def _flat_parts(parts: pa.Array) -> tuple:
+    """``(x, y, ring_sizes, n_rings)`` of a ``parts`` column
+    (``array<array<struct<x, y>>>``) straight from its Arrow offsets: every
+    vertex flat, each ring's size, each row's ring count; a null list
+    counts as empty."""
+    rings = parts.flatten()
+    pts = rings.flatten()
+    x, y = (pc.struct_field(pts, c).cast(pa.float64()).to_numpy(zero_copy_only=False)
+            for c in ("x", "y"))
+    return (x, y, pc.fill_null(pc.list_value_length(rings), 0).to_numpy(),
+            pc.fill_null(pc.list_value_length(parts), 0).to_numpy())
 
-    return run
+
+def _burn_batches(kernel, with_value: bool):
+    """mapInArrow body: one kernel call per (canvas, geometry) row, one
+    ``(canvas_id, row, col, value)`` batch out per batch in. Each burned
+    pixel carries its geometry's ``_val`` (sum/mean/max/min pixel
+    reductions) or 1.0 (presence/count)."""
+    def burn(batches):
+        for b in batches:
+            x, y, ring_sizes, n_rings = _flat_parts(b.column("parts"))
+            ring_end = np.cumsum(n_rings)
+            vert_end = np.r_[0, np.cumsum(ring_sizes)]
+            cid, w, h, x0, y0, x1, y1 = (
+                b.column(c).to_numpy()
+                for c in ("canvas_id", "width", "height", "xmin", "ymin", "xmax", "ymax"))
+            pix, owner = [_NO_PIXELS], [np.zeros(0, dtype=np.int64)]
+            for i, (r_lo, r_hi) in enumerate(zip(ring_end - n_rings, ring_end)):
+                v_lo, v_hi = vert_end[r_lo], vert_end[r_hi]
+                p = kernel(int(w[i]), int(h[i]), float(x0[i]), float(y0[i]),
+                           float(x1[i]), float(y1[i]), x[v_lo:v_hi],
+                           y[v_lo:v_hi], ring_sizes[r_lo:r_hi])
+                pix.append(p)
+                owner.append(np.full(len(p), i))
+            pix, owner = np.concatenate(pix), np.concatenate(owner)
+            value = (b.column("_val").take(pa.array(owner)) if with_value
+                     else pa.array(np.ones(len(owner))))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cid[owner]),
+                 pa.array((h[owner] - 1 - pix[:, 1]).astype(np.int32)),
+                 pa.array(pix[:, 0].astype(np.int32)), value],
+                names=["canvas_id", "row", "col", "value"])
+
+    return burn
 
 
 def pixel_coords(raster: DataFrame, canvas_df: DataFrame) -> DataFrame:

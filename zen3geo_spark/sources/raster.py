@@ -12,9 +12,6 @@ container; the engine's scan substrate is:
   filter → partition pruning, free.
 * ``scan_vectors`` — a GeoParquet-style table (geom_id, geom_type, parts,
   bbox cols, crs, attrs) — SURVEY.md §1 row 5.
-* ``scan_binary_assets`` — ``spark.read.format('binaryFile')`` over raw
-  asset files + a decode hook via mapInArrow/mapInPandas
-  (operators/multimodal.py holds the stubbed decode kernels).
 * ``open_asset`` — XpySTACAssetReader's engine-dispatch: format name →
   the right Spark reader.
 """
@@ -49,11 +46,6 @@ def scan_vectors(spark: SparkSession, path: str,
             & (F.col("miny") < qymax) & (F.col("maxy") > qymin)
         )
     return df
-
-
-def scan_binary_assets(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Raw asset scan: (path, modificationTime, length, content binary)."""
-    return spark.read.format("binaryFile").load(path_glob)
 
 
 ENGINES = {"parquet", "json", "csv", "binaryFile", "netpbm", "zarr_like"}
