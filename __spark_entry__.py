@@ -13,6 +13,10 @@ centroid re-normalization the Spark kernel performs).
 
 from __future__ import annotations
 
+import os
+import pathlib
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -104,6 +108,32 @@ MULTI_POLYS = [(0, DONUT), (1, TWO_PART)]
 # ---------------------------------------------------------------------------
 # shared builders
 # ---------------------------------------------------------------------------
+
+GEN_ASSETS = pathlib.Path(__file__).resolve().parent / ".gen_assets"
+
+
+def _published(name: str, build: Callable[[str], object]) -> str:
+    """Path of the generated input ``.gen_assets/<name>``, built on first
+    use: ``build(path)`` writes into a unique temp sibling, which one
+    rename then publishes whole, so a reader sees no directory or a
+    complete one. A concurrent caller that loses the rename race drops
+    its copy and uses the winner's."""
+    d = GEN_ASSETS / name
+    if not d.exists():
+        GEN_ASSETS.mkdir(parents=True, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f".{name}.", dir=GEN_ASSETS)
+        os.chmod(tmp, 0o755)  # mkdtemp's owner-only mode would be published
+        try:
+            build(tmp)
+            try:
+                os.rename(tmp, d)
+            except OSError:  # lost the race: another caller published d
+                if not d.is_dir():
+                    raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return str(d)
+
 
 def _points_df(spark: SparkSession) -> DataFrame:
     """Pages → extracted+parsed points (point_id = page id)."""
@@ -389,17 +419,13 @@ def q_zorder_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst inline the 5-step bit-spread into all 64 predicates — the
     stored-column layout is both the correct scale pattern and the fast
     plan.)"""
-    import pathlib
-
     from zen3geo_spark.functions.zorder import optimize_zorder
 
     minlat, minlon, maxlat, maxlon = ZBBOX
     ranges = z_ranges_for_bbox(minlat, minlon, maxlat, maxlon, ZRES)
-    d = pathlib.Path(__file__).resolve().parent / ".gen_assets" / f"ztable_{N_PAGES}"
-    if not (d / "_SUCCESS").exists():
-        pts = optimize_zorder(_points_df(spark), str(d), res=ZRES, n_files=8)
-    else:
-        pts = spark.read.parquet(str(d))
+    d = _published(f"ztable_{N_PAGES}", lambda path: optimize_zorder(
+        _points_df(spark), path, res=ZRES, n_files=8))
+    pts = spark.read.parquet(d)
     return (pts.filter(z_range_predicate(F.col("z"), ranges))
             .filter((F.col("lat_us") >= minlat) & (F.col("lat_us") <= maxlat)
                     & (F.col("lon_us") >= minlon) & (F.col("lon_us") <= maxlon))
@@ -488,7 +514,7 @@ def q_rasterize_world_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(0, 360, 180, -180.0, -90.0, 180.0, 90.0, "OGC:CRS84")],
         "canvas_id long, width int, height int, xmin double, ymin double, xmax double, ymax double, crs string",
     )
-    return rasterize(canvas, geoms, validate=False).select("row", "col", "value")
+    return rasterize(canvas, geoms).select("row", "col", "value")
 
 
 def q_rasterize_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,7 +535,7 @@ def q_rasterize_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(0, 360, 180, -180.0, -90.0, 180.0, 90.0, "OGC:CRS84")],
         "canvas_id long, width int, height int, xmin double, ymin double, xmax double, ymax double, crs string",
     )
-    out = rasterize(canvas, geoms, agg="mean", validate=False, value_col="pval")
+    out = rasterize(canvas, geoms, agg="mean", value_col="pval")
     return out.select("row", "col", F.round("value", 6).alias("value"))
 
 
@@ -1258,20 +1284,18 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     are suppressed by cross-batch state, and the append-mode output is
     exactly the distinct fingerprint set (deterministic whichever
     arrival won). Oracle: SELECT DISTINCT fingerprint FROM documents."""
-    import pathlib
-
     from zen3geo_spark.streaming.windows import stream_dedup_to_memory
 
-    d = pathlib.Path(__file__).resolve().parent / ".gen_assets" / \
-        f"stream_docs_{pathlib.Path(sf_dir).name}"
-    if not (d / "_SUCCESS").exists():
+    def build(path: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", "text")
-        docs.coalesce(1).write.mode("overwrite").parquet(str(d))
+        docs.coalesce(1).write.mode("overwrite").parquet(path)
         dup = docs.filter(F.col("doc_id") % 2 == 0).select(
             (F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-        dup.coalesce(1).write.mode("append").parquet(str(d))
-    return stream_dedup_to_memory(spark, str(d))
+        dup.coalesce(1).write.mode("append").parquet(path)
+
+    return stream_dedup_to_memory(
+        spark, _published(f"stream_docs_{pathlib.Path(sf_dir).name}", build))
 
 
 def q_stream_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1281,15 +1305,11 @@ def q_stream_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded input this must emit exactly the batch aggregate, so the
     micro-batch execution of the extraction+index path is value-hash-
     checked against the same SQL twin as the batch cell counts."""
-    import pathlib
-
     from zen3geo_spark.streaming.windows import stream_cell_counts_to_memory
 
-    d = pathlib.Path(__file__).resolve().parent / ".gen_assets" / \
-        f"stream_pages_{N_PAGES}"
-    if not (d / "_SUCCESS").exists():
-        synth_pages(spark, N_PAGES).write.mode("overwrite").parquet(str(d))
-    return stream_cell_counts_to_memory(spark, str(d), res=6)
+    d = _published(f"stream_pages_{N_PAGES}", lambda path: synth_pages(
+        spark, N_PAGES).write.mode("overwrite").parquet(path))
+    return stream_cell_counts_to_memory(spark, d, res=6)
 
 
 def q_wrap_bbox_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1479,14 +1499,11 @@ def q_binary_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """binaryFile ingestion end-to-end: real netpbm PGM files on disk →
     binary rows → Arrow-batched decode (second real codec) → per-file
     grayscale stats."""
-    import pathlib
-
     from zen3geo_spark.operators.multimodal import (
         scan_pgm_assets, write_pgm_assets,
     )
 
-    d = pathlib.Path(__file__).resolve().parent / ".gen_assets" / "pgm"
-    write_pgm_assets(d, N_PGM_ASSETS)
+    d = _published("pgm", lambda path: write_pgm_assets(path, N_PGM_ASSETS))
     out = scan_pgm_assets(spark, d)
     return out.select("asset_id", "height", "width",
                       F.round("mean_px", 6).alias("mean_px"),
@@ -1510,14 +1527,11 @@ def q_stac_asset_engines(spark: SparkSession, sf_dir: str) -> DataFrame:
     table) — joined into one per-item readout. The unsupported-engine
     error contract is pytest-asserted (test_datapipes_xpystac.py:96-102
     parity)."""
-    import pathlib
-
     from zen3geo_spark.sources.raster import (
         open_asset, write_stac_sidecar_assets,
     )
 
-    d = pathlib.Path(__file__).resolve().parent / ".gen_assets" / "sidecar"
-    write_stac_sidecar_assets(d)
+    d = pathlib.Path(_published("sidecar", write_stac_sidecar_assets))
     items = open_asset(spark, str(d / "items.jsonl"), engine="json").select(
         F.col("item_id").cast("long").alias("item_id"),
         "collection",
@@ -1540,21 +1554,19 @@ def q_zarr_like_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune metric is pytest-asserted via plan_chunks) and decodes exact
     float32 values with pixel-center world coords. Values follow a
     deterministic formula so DuckDB regenerates them without the files."""
-    import pathlib
-
     import numpy as np
 
     from zen3geo_spark.sources.raster import open_asset
     from zen3geo_spark.sources.zarr_like import write_zarr_like_store
 
-    d = pathlib.Path(__file__).resolve().parent / ".gen_assets" / "zarr_like"
-    if not (d / ".zmeta.json").exists():
+    def build(path: str) -> None:
         h, w = 40, 64
         arr = ((np.arange(h)[:, None] * 31 + np.arange(w)[None, :] * 17)
                % 251).astype("float32")
-        write_zarr_like_store(str(d), arr, chunks=(16, 16),
+        write_zarr_like_store(path, arr, chunks=(16, 16),
                               grid=(100.0, 500.0, 10.0), fill_value=-9.0)
-    px = open_asset(spark, str(d), engine="zarr_like",
+
+    px = open_asset(spark, _published("zarr_like", build), engine="zarr_like",
                     bbox_idx=(10, 25, 20, 50))
     return px.select("y_idx", "x_idx", "value", "x", "y")
 

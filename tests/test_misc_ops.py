@@ -559,3 +559,54 @@ def test_layout_rle_audit_collapse(spark):
     pts = E._points_df(spark).withColumn(
         "cell", cell_encode(F.col("lat_us"), F.col("lon_us"), 6))
     assert r.runs_zorder == pts.select("cell").distinct().count()
+
+
+def test_published_assets_race_leaves_one_complete_dir(tmp_path, monkeypatch):
+    """Eight concurrent writers of one generated input (more than the
+    cores), all past the existence check at once: each writes its own temp
+    sibling, one rename publishes, every writer gets the same complete
+    directory, a reader never sees it half written and no temp sibling is
+    left behind. No Spark."""
+    import pathlib
+    import threading
+
+    import __spark_entry__ as E
+
+    monkeypatch.setattr(E, "GEN_ASSETS", tmp_path / "gen")
+    final = tmp_path / "gen" / "docs"
+    n = 8
+    all_building = threading.Barrier(n, timeout=30)
+    done = threading.Event()
+    got, seen, errors = [], [], []
+
+    def build(path):
+        all_building.wait()
+        for i in range(50):
+            (pathlib.Path(path) / f"part-{i:02d}").write_text(str(i))
+
+    def publish():
+        try:
+            got.append(E._published("docs", build))
+        except Exception as e:  # surfaced by the asserts below
+            errors.append(e)
+
+    def reader():
+        while not done.is_set():
+            if final.exists():
+                seen.append(len(list(final.iterdir())))
+
+    threads = [threading.Thread(target=publish) for _ in range(n)]
+    watch = threading.Thread(target=reader)
+    watch.start()
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    done.set()
+    watch.join(timeout=60)
+    assert not any(t.is_alive() for t in threads + [watch])
+    assert not errors and got == [str(final)] * n
+    assert sorted(p.name for p in final.iterdir()) == [f"part-{i:02d}" for i in range(50)]
+    assert all((final / f"part-{i:02d}").read_text() == str(i) for i in range(50))
+    assert set(seen) <= {50}
+    assert [p.name for p in (tmp_path / "gen").iterdir()] == ["docs"]

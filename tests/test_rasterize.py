@@ -93,24 +93,94 @@ def test_rasterize_empty_vector(spark):
         rasterize(canvas, geoms)
 
 
-def test_rasterize_validate_false_pairs_vector_sets(spark):
-    """Two canvases, two vector sets: validate=False pairs each set with its
-    own canvas, exactly as validate=True does, instead of burning every
-    geometry onto every canvas."""
+def test_rasterize_pairs_vector_sets_with_their_canvases(spark):
+    """Two canvases, two vector sets: each set burns only onto its own
+    canvas (vset_id == canvas_id), not every geometry onto every canvas."""
     canvas = fixtures.canvas_rasterize(spark, n=2)
     base = fixtures.geometries_datashader(spark)
     poly = base.filter(F.col("geom_type") == "polygon").withColumn("vset_id", F.lit(0))
     line = base.filter(F.col("geom_type") == "linestring")
     # vector set 1 holds the line's vertices as a polygon (a different burn)
     other = line.withColumn("geom_type", F.lit("polygon")).withColumn("vset_id", F.lit(1))
-    geoms = poly.union(other)
 
-    def burn(validate):
-        return sorted(tuple(r) for r in rasterize(canvas, geoms, validate=validate).collect())
+    def pixels(df):
+        return sorted((r["row"], r["col"]) for r in df.collect())
 
-    checked = burn(True)
-    assert {r[0] for r in checked} == {0, 1}
-    assert burn(False) == checked
+    burned = rasterize(canvas, poly.union(other))
+    on0 = pixels(burned.filter(F.col("canvas_id") == 0))
+    on1 = pixels(burned.filter(F.col("canvas_id") == 1))
+    one = fixtures.canvas_rasterize(spark, n=1)
+    assert len(on0) == 15  # the reference's Polygon=15 golden
+    assert on0 == pixels(rasterize(one, poly.drop("vset_id")))
+    assert on1 == pixels(rasterize(one, other.drop("vset_id")))
+    assert on0 != on1
+
+
+def test_validate_rasterize_inputs_is_one_spark_action(spark, monkeypatch):
+    """The contract checks read one aggregate over both tables: one
+    ``collect`` on valid inputs, and one before each contract error."""
+    from zen3geo_spark.operators.rasterize import validate_rasterize_inputs
+
+    calls = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def counted(self):
+        calls.append(1)
+        return collect(self)
+
+    base = fixtures.geometries_datashader(spark)
+    pts = base.filter(F.col("geom_type") == "multipoint")
+    two_sets = pts.withColumn("vset_id", F.lit(0)).union(pts.withColumn("vset_id", F.lit(1)))
+    bad = [
+        (fixtures.canvas_rasterize(spark, n=3), two_sets, ValueError, "Unmatched lengths"),
+        (fixtures.canvas_rasterize(spark, n=1, crs=None), pts, AttributeError,
+         "datashader.Canvas"),
+        (fixtures.canvas_rasterize(spark, n=1),
+         pts.withColumn("crs", F.lit(None).cast("string")), AttributeError, "input geometries"),
+        (fixtures.canvas_rasterize(spark, n=1),
+         base.withColumn("geom_type", F.lit("geometrycollection")), NotImplementedError,
+         "Unsupported geometry type: GeometryCollection"),
+        (fixtures.canvas_rasterize(spark, n=1), base.filter(F.col("geom_id") > 99),
+         ValueError, "Cannot infer spatialpandas geometry type"),
+    ]
+    canvas2 = fixtures.canvas_rasterize(spark, n=2)
+    monkeypatch.setattr(frame, "collect", counted)
+    assert validate_rasterize_inputs(canvas2, two_sets) == (2, 2, "point")
+    assert len(calls) == 1
+    for canvas, geoms, exc, msg in bad:
+        calls.clear()
+        with pytest.raises(exc, match=msg):
+            validate_rasterize_inputs(canvas, geoms)
+        assert len(calls) == 1
+
+
+def test_rasterize_mixed_kinds_and_bad_aggs(spark):
+    canvas = fixtures.canvas_rasterize(spark, n=1)
+    base = fixtures.geometries_datashader(spark)
+    with pytest.raises(NotImplementedError, match="Unsupported mixed geometry types"):
+        rasterize(canvas, base)
+    with pytest.raises(NotImplementedError, match="Unsupported geometry type: circularstring"):
+        rasterize(canvas, base.withColumn("geom_type", F.lit("circularstring")))
+    pts = base.filter(F.col("geom_type") == "multipoint")
+    with pytest.raises(ValueError, match="requires value_col"):
+        rasterize(canvas, pts, agg="mean")
+    with pytest.raises(ValueError, match="unsupported point agg 'median'"):
+        rasterize(canvas, pts, agg="median")
+
+
+def test_rasterize_point_sum_without_value_col_counts(spark):
+    """Every point carries value 1.0 when no value_col is given, so sum is
+    count on the golden canvas (Point=3)."""
+    canvas = fixtures.canvas_rasterize(spark, n=1)
+    pts = fixtures.geometries_datashader(spark).filter(F.col("geom_type") == "multipoint")
+
+    def burn(agg):
+        return sorted(tuple(r) for r in rasterize(canvas, pts, agg=agg).collect())
+
+    counted = burn("count")
+    assert sum(r[3] for r in counted) == 3
+    assert burn("sum") == counted
 
 
 def _brute_force_polygon(width, height, xmin, ymin, xmax, ymax, x, y, ring_sizes):

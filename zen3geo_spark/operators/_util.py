@@ -6,8 +6,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pair_all(left: DataFrame, right: DataFrame,
-             broadcast_right: bool = True) -> DataFrame:
+def pair_all(left: DataFrame, right: DataFrame) -> DataFrame:
     """Intentional pair-every-row-with-every-row as a CONSTANT-KEY
     equi-join: physically a BroadcastHashJoin (build = the small side)
     instead of the BroadcastNestedLoopJoin a bare crossJoin produces.
@@ -24,11 +23,7 @@ def pair_all(left: DataFrame, right: DataFrame,
         return df.withColumn(
             "_pk", F.pmod(F.xxhash64(F.col(df.columns[0])), F.lit(1)))
 
-    l = key(left)
-    r = key(right)
-    if broadcast_right:
-        r = F.broadcast(r)
-    return l.join(r, "_pk").drop("_pk")
+    return key(left).join(F.broadcast(key(right)), "_pk").drop("_pk")
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

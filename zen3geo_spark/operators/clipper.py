@@ -59,13 +59,11 @@ def validate_single_vector(geoms_df: DataFrame) -> None:
         )
 
 
-def clip_vector_with_rectangle(geoms_df: DataFrame, chips_df: DataFrame,
-                               validate: bool = True) -> DataFrame:
+def clip_vector_with_rectangle(geoms_df: DataFrame, chips_df: DataFrame) -> DataFrame:
     """For each chip, clip each bbox-overlapping geometry to the chip
     rectangle. Output: one row per surviving (chip, geometry) with exact
     clipped-polygon bounds and vertex count."""
-    if validate:
-        validate_single_vector(geoms_df)
+    validate_single_vector(geoms_df)
     from zen3geo_spark.operators._util import pair_all
     # broadcast pairing + bbox-overlap filter: for a broadcast small side
     # this is work-equivalent to a nested-loop range join, but plans as a
@@ -124,8 +122,7 @@ def suggested_warp_grid(xmin: float, ymin: float, xmax: float, ymax: float,
 CLIP_CRS_SCHEMA = CLIP_SCHEMA + ", crs string"
 
 
-def clip_vector_with_rectangle_crs(geoms_df: DataFrame, chips_df: DataFrame,
-                                   validate: bool = True) -> DataFrame:
+def clip_vector_with_rectangle_crs(geoms_df: DataFrame, chips_df: DataFrame) -> DataFrame:
     """Per-chip-CRS clipper (the reference's different-CRS path,
     geopandas.py:164-172): each chip carries its own ``crs`` and bounds in
     that CRS; geometry VERTICES are forward-transformed to the chip's CRS
@@ -138,8 +135,7 @@ def clip_vector_with_rectangle_crs(geoms_df: DataFrame, chips_df: DataFrame,
     bbox overlap in a COMMON CRS (the same-CRS ``clip_vector_with_
     rectangle`` path) before falling into the per-CRS kernel.
     """
-    if validate:
-        validate_single_vector(geoms_df)
+    validate_single_vector(geoms_df)
     from zen3geo_spark.operators._util import pair_all
     pairs = pair_all(chips_df, geoms_df.drop("vset_id")
                      .withColumnRenamed("crs", "geom_crs"))

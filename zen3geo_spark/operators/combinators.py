@@ -108,11 +108,9 @@ def zipper(left: DataFrame, right: DataFrame, order_left: list[str],
     return l.join(r, "_pos").drop("_pos")
 
 
-def forker(df: DataFrame, n: int = 2, cache: bool = True) -> list[DataFrame]:
+def forker(df: DataFrame, n: int = 2) -> list[DataFrame]:
     """Forker ≙ plan reuse; cache() avoids the reference's recompute."""
-    if cache:
-        df = df.cache()
-    return [df] * n
+    return [df.cache()] * n
 
 
 def batcher(df: DataFrame, batch_size: int, order: list[str]) -> DataFrame:

@@ -164,19 +164,16 @@ def parse_wav(buf: bytes) -> tuple[np.ndarray, int, int]:
 
 
 def write_pgm_assets(asset_dir, n: int) -> None:
-    """Materialize ``n`` deterministic PGM files ``asset_####.pgm`` under
-    ``asset_dir`` (idempotent — skipped when already present), sized
-    w = 20 + id%8, h = 12 + id%4. These back the binaryFile ingestion
-    path: real files on disk → ``spark.read.format('binaryFile')`` →
-    Arrow-batched decode."""
+    """Write ``n`` deterministic PGM files ``asset_####.pgm`` under
+    ``asset_dir``, sized w = 20 + id%8, h = 12 + id%4. These back the
+    binaryFile ingestion path: real files on disk →
+    ``spark.read.format('binaryFile')`` → Arrow-batched decode."""
     import os
 
     os.makedirs(asset_dir, exist_ok=True)
     for i in range(n):
-        p = os.path.join(asset_dir, f"asset_{i:04d}.pgm")
-        if not os.path.exists(p):
-            with open(p, "wb") as f:
-                f.write(pgm_bytes(i, 20 + i % 8, 12 + i % 4))
+        with open(os.path.join(asset_dir, f"asset_{i:04d}.pgm"), "wb") as f:
+            f.write(pgm_bytes(i, 20 + i % 8, 12 + i % 4))
 
 
 def scan_pgm_assets(spark, asset_dir) -> DataFrame:

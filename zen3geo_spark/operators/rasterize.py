@@ -10,7 +10,7 @@ Point=3 / Line=13 / Polygon=15, tests/test_datapipes_datashader.py:77-104):
 
 * points — ``floor((v - vmin)/(vmax - vmin) * n)`` with the max edge snapped
   to the last pixel (datashader ``map_onto_pixel``). Pure SQL: stays inside
-  whole-stage codegen, shuffles once for the groupBy(pixel) count.
+  whole-stage codegen.
 * lines — integer Bresenham between edge-snapped endpoint pixels
   (datashader ``draw_segment``).
 * polygons — winding-number test at the integer pixel lattice in canvas
@@ -20,11 +20,14 @@ Point=3 / Line=13 / Polygon=15, tests/test_datapipes_datashader.py:77-104):
   a row adds its ±1 from its first hit column on, and a running sum along
   the row gives the winding number.
 
-Lines and polygons burn map-side: the canvas side (one metadata row per
-canvas) is broadcast, so each (canvas, geometry) pair stays in its
-geometry's partition, and ``mapInArrow`` calls the kernel once per pair on
-vertex arrays read straight from the Arrow list offsets. The only shuffle
-is the pixel aggregate that merges overlapping geometries.
+A ``rasterize`` call runs one Spark action, the contract check, which
+also yields the geometry kind and the pairing rule. Lines and polygons burn
+map-side: the canvas side (one metadata row per canvas) is broadcast, so
+each (canvas, geometry) pair stays in its geometry's partition, and
+``mapInArrow`` calls the kernel once per pair on vertex arrays read
+straight from the Arrow list offsets. Every kind emits the same
+``(canvas_id, row, col, value)`` rows into one pixel aggregate, the only
+shuffle, which merges overlapping geometries with the requested reduction.
 
 Output is a long-form raster ``(canvas_id, row, col, value)`` where row 0 is
 the NORTH row (equivalent to the reference's final reproject to affine
@@ -45,13 +48,23 @@ from zen3geo_spark.operators.spatial_join import ring_edges
 
 RASTER_SCHEMA = "canvas_id long, row int, col int, value double"
 
-DEFAULT_AGG = {"multipoint": "count", "point": "count",
-               "linestring": "any", "line": "any",
-               "polygon": "any", "multipolygon": "any"}
+_KINDS = {"point": "point", "multipoint": "point",
+          "line": "line", "linestring": "line", "multilinestring": "line",
+          "polygon": "polygon", "multipolygon": "polygon"}
+_DEFAULT_AGG = {"point": "count", "line": "any", "polygon": "any"}
 
-_POINT_TYPES = {"multipoint", "point"}
-_LINE_TYPES = {"linestring", "line", "multilinestring"}
-_POLY_TYPES = {"polygon", "multipolygon"}
+# per-pixel reductions over the (canvas_id, row, col, value) rows every
+# geometry kind emits; ``value`` is the geometry's ``value_col`` for the
+# value reductions, else 1.0 (so sum without value_col counts)
+_PIXEL_AGGS = {
+    "any": lambda v: F.lit(1.0),
+    "count": lambda v: F.count("*").cast("double"),
+    "sum": F.sum,
+    "mean": F.avg,
+    "max": F.max,
+    "min": F.min,
+}
+_VALUE_AGGS = ("sum", "mean", "max", "min")
 
 
 def validate_rasterize_inputs(canvas_df: DataFrame, geoms_df: DataFrame) -> tuple[int, int, str]:
@@ -60,54 +73,58 @@ def validate_rasterize_inputs(canvas_df: DataFrame, geoms_df: DataFrame) -> tupl
     Returns (n_canvas, n_vector_sets, geom_kind). The reference raises these
     at stream-iteration time (datashader.py:176-226); Spark's analogue is
     plan-build time — same exception types and messages so tests transfer.
-    ONE aggregated pass per input table (counts, null-crs tallies, distinct
-    geometry kinds, vector-set count all ride one aggregate each) instead
-    of a driver action per check — at 100 TB the checks cost two small
-    jobs, and ``validate=False`` skips them entirely.
+    Every check reads ONE aggregate over the union of both tables' check
+    columns (side, null crs, geometry type, vector set): one Spark action
+    per ``rasterize`` call.
     """
-    crow = canvas_df.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.col("crs").isNull().cast("int")), F.lit(0)).alias("nullcrs"),
-    ).collect()[0]
-    n_canvas = crow["n"]
-    vset = "vset_id" if "vset_id" in geoms_df.columns else None
-    aggs = [
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.col("crs").isNull().cast("int")), F.lit(0)).alias("nullcrs"),
+    canvas = F.col("canvas")
+    has_vset = "vset_id" in geoms_df.columns
+    vset = F.col("vset_id") if has_vset else F.lit(None)
+    checks = canvas_df.select(
+        F.lit(True).alias("canvas"), F.col("crs").isNull().alias("nullcrs"),
+        F.lit(None).cast("string").alias("geom_type"),
+        F.lit(None).cast("long").alias("vset_id"),
+    ).unionByName(geoms_df.select(
+        F.lit(False).alias("canvas"), F.col("crs").isNull().alias("nullcrs"),
+        "geom_type", vset.cast("long").alias("vset_id"),
+    ))
+    row = checks.agg(
+        F.count(F.when(canvas, 1)).alias("n_canvas"),
+        F.count(F.when(~canvas, 1)).alias("n_geoms"),
+        F.count(F.when(canvas & F.col("nullcrs"), 1)).alias("canvas_nullcrs"),
+        F.count(F.when(~canvas & F.col("nullcrs"), 1)).alias("geoms_nullcrs"),
         F.collect_set("geom_type").alias("kinds"),
-    ]
-    if vset:
-        aggs.append(F.countDistinct(vset).alias("nv"))
-    grow = geoms_df.agg(*aggs).collect()[0]
-    n_vec = grow["nv"] if vset else min(grow["n"], 1)
+        F.size(F.collect_set("vset_id")).alias("nv"),
+    ).collect()[0]
+    n_canvas = row["n_canvas"]
+    n_vec = row["nv"] if has_vset else min(row["n_geoms"], 1)
     if n_vec > 1 and n_vec != n_canvas:
         raise ValueError(
             f"Unmatched lengths for the canvas datapipe ({n_canvas}) and "
             f"vector datapipe ({n_vec})"
         )
-    if crow["nullcrs"] > 0:
+    if row["canvas_nullcrs"] > 0:
         raise AttributeError(
             "Missing crs information for datashader.Canvas; please set it "
             "(e.g. canvas.crs = 'OGC:CRS84')"
         )
-    if grow["nullcrs"] > 0:
+    if row["geoms_nullcrs"] > 0:
         raise AttributeError(
             "Missing crs information for input geometries (geopandas.GeoSeries)"
         )
-    kinds = list(grow["kinds"])
-    if any(k == "geometrycollection" for k in kinds):
-        raise NotImplementedError(
-            "Unsupported geometry type: GeometryCollection"
-        )
+    kinds = sorted(row["kinds"])
+    unknown = [k for k in kinds if k not in _KINDS]
+    if unknown:
+        name = "GeometryCollection" if "geometrycollection" in unknown else unknown[0]
+        raise NotImplementedError(f"Unsupported geometry type: {name}")
     if not kinds:
         raise ValueError(
             "Cannot infer spatialpandas geometry type from empty input"
         )
-    kind_sets = {("point" if k in _POINT_TYPES else "line" if k in _LINE_TYPES else
-                  "polygon" if k in _POLY_TYPES else k) for k in kinds}
-    if len(kind_sets) > 1:
+    kind_set = {_KINDS[k] for k in kinds}
+    if len(kind_set) > 1:
         raise NotImplementedError(f"Unsupported mixed geometry types: {kinds}")
-    return n_canvas, n_vec, kind_sets.pop()
+    return n_canvas, n_vec, kind_set.pop()
 
 
 def _paired(canvas_df: DataFrame, geoms_df: DataFrame, n_vec: int) -> DataFrame:
@@ -125,106 +142,66 @@ def _paired(canvas_df: DataFrame, geoms_df: DataFrame, n_vec: int) -> DataFrame:
 
 
 def rasterize(canvas_df: DataFrame, geoms_df: DataFrame, agg: str | None = None,
-              validate: bool = True, value_col: str | None = None) -> DataFrame:
+              value_col: str | None = None) -> DataFrame:
     """Burn geometries onto canvases → long-form raster (north-up rows).
 
-    ``agg`` mirrors the reference's pluggable datashader reduction
-    (datashader.py:49-55,228-242) for EVERY geometry kind: points support
-    count/any/sum/mean/max/min; lines/polygons support any (presence),
-    count (geometries covering the pixel), and sum/mean/max/min of
-    ``value_col`` — a per-geometry scalar (road speed, polygon attribute)
-    reduced over the geometries whose burn covers each pixel, matching
-    datashader's value-carrying reductions.
+    One Spark action (:func:`validate_rasterize_inputs`) picks the
+    geometry kind and the pairing; the rest is one plan. Every kind emits
+    ``(canvas_id, row, col, value)`` rows — points by SQL binning,
+    lines/polygons by the map-side burn — and one ``groupBy`` pixel
+    aggregate reduces them. ``agg`` mirrors the reference's pluggable
+    datashader reduction (datashader.py:49-55,228-242) for every kind:
+    any (presence), count (points or geometries per pixel), and
+    sum/mean/max/min of ``value_col`` — a per-geometry scalar (point value,
+    road speed, polygon attribute). sum without ``value_col`` counts.
     """
-    if validate:
-        _, n_vec, kind = validate_rasterize_inputs(canvas_df, geoms_df)
-    else:
-        # one job: the geometry kinds, and the vector-set count that picks
-        # the pairing rule validate=True uses
-        vset = "vset_id" in geoms_df.columns
-        row = geoms_df.agg(
-            F.collect_set("geom_type").alias("kinds"),
-            *([F.countDistinct("vset_id").alias("nv")] if vset else []),
-        ).collect()[0]
-        n_vec = row["nv"] if vset else 1
-        kinds = row["kinds"]
-        kind = ("point" if kinds[0] in _POINT_TYPES else
-                "line" if kinds[0] in _LINE_TYPES else "polygon")
-    agg = agg or DEFAULT_AGG.get(kind, "count" if kind == "point" else "any")
+    _, n_vec, kind = validate_rasterize_inputs(canvas_df, geoms_df)
+    agg = agg or _DEFAULT_AGG[kind]
+    if agg not in _PIXEL_AGGS:
+        raise ValueError(f"unsupported {kind} agg '{agg}'")
+    if agg in ("mean", "max", "min") and value_col is None:
+        raise ValueError(f"{kind} agg '{agg}' requires value_col "
+                         "(a per-geometry scalar)")
+    vcol = value_col if agg in _VALUE_AGGS else None
     pairs = _paired(canvas_df, geoms_df, n_vec)
     if kind == "point":
-        return _rasterize_points_sql(pairs, agg, value_col)
-    if agg in ("mean", "max", "min") and value_col is None:
-        raise ValueError(f"line/polygon agg '{agg}' requires value_col "
-                         "(a per-geometry scalar)")
-    kernel = _line_kernel if kind == "line" else _polygon_kernel
-    vcol = value_col if agg in ("sum", "mean", "max", "min") else None
-    burned = pairs.select(
-        F.col("canvas_id").cast("long"), F.col("width").cast("int"),
-        F.col("height").cast("int"),
-        *(F.col(c).cast("double") for c in ("xmin", "ymin", "xmax", "ymax")),
-        "parts",
-        *([F.col(vcol).cast("double").alias("_val")] if vcol else []),
-    ).mapInArrow(_burn_batches(kernel, vcol is not None), RASTER_SCHEMA)
-    finals = {
-        "any": F.lit(1.0),
-        "count": F.count("*").cast("double"),
-        "sum": F.sum("value"),
-        "mean": F.avg("value"),
-        "max": F.max("value"),
-        "min": F.min("value"),
-    }
-    if agg not in finals:
-        raise ValueError(f"unsupported line/polygon agg '{agg}'")
-    # sum without value_col keeps the legacy coverage-count semantics
-    # (each burned pixel row carries value 1.0)
-    return burned.groupBy("canvas_id", "row", "col").agg(
-        finals[agg].alias("value")
+        pixels = _bin_points(pairs, vcol)
+    else:
+        kernel = _line_kernel if kind == "line" else _polygon_kernel
+        pixels = pairs.select(
+            F.col("canvas_id").cast("long"), F.col("width").cast("int"),
+            F.col("height").cast("int"),
+            *(F.col(c).cast("double") for c in ("xmin", "ymin", "xmax", "ymax")),
+            "parts",
+            *([F.col(vcol).cast("double").alias("_val")] if vcol else []),
+        ).mapInArrow(_burn_batches(kernel, vcol is not None), RASTER_SCHEMA)
+    return pixels.groupBy("canvas_id", "row", "col").agg(
+        _PIXEL_AGGS[agg]("value").alias("value")
     )
 
 
-_POINT_AGGS = {
-    "count": lambda v: F.count("*").cast("double"),
-    "any": lambda v: F.lit(1.0),
-    "sum": lambda v: F.sum(v),
-    "mean": lambda v: F.avg(v),
-    "max": lambda v: F.max(v),
-    "min": lambda v: F.min(v),
-}
-
-
-def _rasterize_points_sql(pairs: DataFrame, agg: str,
-                          value_col: str | None = None) -> DataFrame:
+def _bin_points(pairs: DataFrame, vcol: str | None) -> DataFrame:
     """Pure-SQL point binning: explode → affine floor-bin w/ edge snap →
-    groupBy pixel. No Python in the hot path; one shuffle (map-side
-    partial aggregation for every supported reduction)."""
-    if agg not in _POINT_AGGS:
-        raise ValueError(f"unsupported point agg '{agg}'")
-    if agg in ("sum", "mean", "max", "min") and value_col is None:
-        if agg == "sum":
-            value_col = None  # sum of implicit ones == count
-            agg = "count"
-        else:
-            raise ValueError(f"point agg '{agg}' requires value_col")
-    vcols = [F.col(value_col).alias("_val")] if value_col else []
+    ``(canvas_id, row, col, value)``, the rows the burn kernels emit. No
+    Python in the hot path; the pixel aggregate partially aggregates
+    map-side before its one shuffle."""
     pts = pairs.select(
         "canvas_id", "width", "height", "xmin", "ymin", "xmax", "ymax",
-        *vcols,
+        (F.col(vcol) if vcol else F.lit(1.0)).cast("double").alias("value"),
         F.explode(F.flatten("parts")).alias("pt"),
     )
     fx = (F.col("pt.x") - F.col("xmin")) / (F.col("xmax") - F.col("xmin")) * F.col("width")
     fy = (F.col("pt.y") - F.col("ymin")) / (F.col("ymax") - F.col("ymin")) * F.col("height")
-    xi = F.least(F.floor(fx).cast("int"), F.col("width") - 1)
+    col = F.least(F.floor(fx).cast("int"), F.col("width") - 1)
     yi = F.least(F.floor(fy).cast("int"), F.col("height") - 1)
-    binned = (
-        pts.withColumn("col", xi)
+    return (
+        pts.withColumn("col", col)
         .withColumn("yi", yi)
         .filter((F.col("col") >= 0) & (F.col("col") < F.col("width"))
                 & (F.col("yi") >= 0) & (F.col("yi") < F.col("height")))
-        .withColumn("row", F.col("height") - 1 - F.col("yi"))
-    )
-    return binned.groupBy("canvas_id", "row", "col").agg(
-        _POINT_AGGS[agg]("_val").alias("value")
+        .select(F.col("canvas_id").cast("long"),
+                (F.col("height") - 1 - F.col("yi")).cast("int").alias("row"),
+                F.col("col").cast("int"), "value")
     )
 
 

@@ -22,16 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, *,
-                   buckets: int = 16, sort: bool = True,
-                   mode: str = "overwrite") -> None:
-    """Persist ``df`` as a parquet table bucketed (and optionally sorted)
-    by ``key``. Bucket metadata lives in the catalog, so readers joining
-    on ``key`` skip the shuffle; ``sortBy`` additionally removes the
-    sort stage of a sort-merge join."""
-    w = df.write.mode(mode).format("parquet").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+                   buckets: int = 16) -> None:
+    """Persist ``df`` as a parquet table (overwriting it) bucketed and
+    sorted by ``key``. Bucket metadata lives in the catalog, so readers
+    joining on ``key`` skip the shuffle; ``sortBy`` additionally removes
+    the sort stage of a sort-merge join."""
+    (df.write.mode("overwrite").format("parquet")
+     .bucketBy(buckets, key).sortBy(key).saveAsTable(table))
 
 
 def colocated_join(spark: SparkSession, left_table: str, right_table: str,

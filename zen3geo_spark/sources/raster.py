@@ -133,10 +133,7 @@ def write_stac_sidecar_assets(asset_dir) -> None:
 
     d = pathlib.Path(asset_dir)
     d.mkdir(parents=True, exist_ok=True)
-    jpath, cpath = d / "items.jsonl", d / "pixels.csv"
-    if jpath.exists() and cpath.exists():
-        return
-    with open(jpath, "w") as f:
+    with open(d / "items.jsonl", "w") as f:
         for i in range(N_SIDECAR_ITEMS):
             f.write(_json.dumps({
                 "item_id": i,
@@ -144,7 +141,7 @@ def write_stac_sidecar_assets(asset_dir) -> None:
                 "lat_us": (i * 5_000_003) % 180_000_001 - 90_000_000,
                 "lon_us": (i * 9_000_007) % 360_000_001 - 180_000_000,
             }, sort_keys=True) + "\n")
-    with open(cpath, "w") as f:
+    with open(d / "pixels.csv", "w") as f:
         f.write("item_id,px,v\n")
         for i in range(N_SIDECAR_ITEMS):
             for j in range(10 + i % 5):
