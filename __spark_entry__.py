@@ -61,7 +61,7 @@ from zen3geo_spark.operators.similarity import (
 )
 from zen3geo_spark.operators.stacker import build_overviews, stack
 from zen3geo_spark.operators.spatial_join import (
-    knn_join_bruteforce, knn_join_cells, points_in_polygons,
+    knn_join_bruteforce, knn_join_cells, pip_refine_sql, points_in_polygons,
     radius_join_points, radius_join_sql_duckdb,
 )
 from zen3geo_spark.operators.stac import search
@@ -3191,17 +3191,13 @@ def oracle_sql() -> dict[str, str]:
       and lon_us between {zminlon} and {zmaxlon}
     """
 
+    edges_rel = f"(select * from {edges})"
     pip_core = f"""
     {pts_cte}
-    select p.point_id, e.geom_id
-    from pts p join {edges}
-      on ((e.y1 > p.lat_us) != (e.y2 > p.lat_us))
-    group by p.point_id, e.geom_id, p.lat_us, p.lon_us
-    having sum(case when p.lon_us < cast(e.x2 - e.x1 as double) * cast(p.lat_us - e.y1 as double)
-                                     / cast(e.y2 - e.y1 as double) + e.x1
-                    then 1 else 0 end) % 2 = 1
+    select point_id, geom_id from ({pip_refine_sql("pts", edges_rel)})
     """
 
+    px_points = "(select pixel_id as point_id, lat_us, lon_us from px)"
     zonal_stats_sql = f"""
     with px as (
       select id as pixel_id,
@@ -3211,13 +3207,8 @@ def oracle_sql() -> dict[str, str]:
       from range({36 * 61}) t(id)
     ),
     inside as (
-      select p.pixel_id, e.geom_id
-      from px p join {edges}
-        on ((e.y1 > p.lat_us) != (e.y2 > p.lat_us))
-      group by p.pixel_id, e.geom_id, p.lat_us, p.lon_us
-      having sum(case when p.lon_us < cast(e.x2 - e.x1 as double) * cast(p.lat_us - e.y1 as double)
-                                       / cast(e.y2 - e.y1 as double) + e.x1
-                      then 1 else 0 end) % 2 = 1
+      select point_id as pixel_id, geom_id
+      from ({pip_refine_sql(px_points, edges_rel)})
     )
     select geom_id, count(*) as n_px, sum(value) as sum_val,
            round(avg(value), 6) as mean_val,

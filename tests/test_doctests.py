@@ -7,13 +7,14 @@ import doctest
 
 import pytest
 
+import zen3geo_spark.functions.geo as geo
 import zen3geo_spark.functions.hilbert as hilbert
 import zen3geo_spark.functions.zorder as zorder
 import zen3geo_spark.operators.dedup as dedup
 import zen3geo_spark.operators.multimodal as multimodal
 
 
-@pytest.mark.parametrize("mod", [zorder, hilbert, dedup, multimodal],
+@pytest.mark.parametrize("mod", [geo, zorder, hilbert, dedup, multimodal],
                          ids=lambda m: m.__name__)
 def test_module_doctests(mod):
     res = doctest.testmod(mod, verbose=False)

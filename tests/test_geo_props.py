@@ -187,3 +187,55 @@ def test_quadkey_bijective_with_cell_and_prefix_property(spark):
     pre = df.select(F.substring("qk", 1, 4).alias("p"), "c4").distinct()
     assert pre.count() == pre.select("p").distinct().count() \
         == pre.select("c4").distinct().count()
+
+
+def test_grid_forms_agree_in_and_out_of_range(spark, grid_edge_rows):
+    """The Column, Spark SQL, DuckDB and Python forms of the grid give
+    the same cell, parent and Hilbert ids on every row, in range or not.
+    All of them truncate: the Column path used to floor, so at res 4
+    lat -90.000001 was cell 247 there and 263 in both SQL forms."""
+    import duckdb
+    import pandas as pd
+
+    from zen3geo_spark.functions.geo import (
+        MAX_RES, cell_id_sql, cell_parent_sql, point_iy_ix, point_iy_ix_py,
+    )
+    from zen3geo_spark.functions.hilbert import hilbert_cte_sql, hilbert_encode
+
+    rng = np.random.RandomState(11)
+    rows = list(zip(rng.randint(-90_000_000, 90_000_001, 200).tolist(),
+                    rng.randint(-180_000_000, 180_000_001, 200).tolist()))
+    rows += grid_edge_rows
+    pdf = pd.DataFrame([(i, la, lo) for i, (la, lo) in enumerate(rows)],
+                       columns=["point_id", "lat_us", "lon_us"])
+    df = spark.createDataFrame(pdf)
+    con = duckdb.connect()
+    con.register("pts", pdf)
+    for res, pres in ((4, 2), (MAX_RES, 9)):
+        cell = cell_encode("lat_us", "lon_us", res)
+        iy, ix = point_iy_ix("lat_us", "lon_us", res)
+        spark_sql = cell_id_sql("lat_us", "lon_us", res, "spark")
+        got = df.select(
+            "point_id", cell.alias("c"), F.expr(spark_sql).alias("c_sql"),
+            cell_parent(cell, res, pres).alias("p"),
+            F.expr(cell_parent_sql(spark_sql, res, pres, "spark")).alias("p_sql"),
+            hilbert_encode("lat_us", "lon_us", res).alias("h"),
+            iy.alias("iy"), ix.alias("ix"),
+        ).orderBy("point_id").collect()
+        duck_cell = cell_id_sql("p.lat_us", "p.lon_us", res, "duckdb")
+        duck = con.sql(
+            f"with recursive "
+            f"{hilbert_cte_sql('pts', 'point_id', 'lat_us', 'lon_us', res)}"
+            f"select p.point_id, {duck_cell},"
+            f" {cell_parent_sql(duck_cell, res, pres, 'duckdb')}, h.hd"
+            f" from pts p join hcells h on h.point_id = p.point_id"
+            f" order by p.point_id").fetchall()
+        assert len(got) == len(duck) == len(rows)
+        for r, (pid, c, p, hd) in zip(got, duck):
+            assert r.point_id == pid
+            assert (r.c, r.p, r.h) == (r.c_sql, r.p_sql, hd) == (c, p, hd), rows[pid]
+            assert (r.iy, r.ix) == point_iy_ix_py(*rows[pid], res), rows[pid]
+        if res == 4:
+            cells = {rows[r.point_id]: r.c for r in got}
+            assert cells[(-90_000_001, 0)] == 263
+            assert cells[(0, -190_000_000)] == 368

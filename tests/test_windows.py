@@ -152,6 +152,12 @@ def test_stream_pair_join_equals_batch(spark):
     got = sorted(map(tuple, stream_pair_join_to_memory(
         spark, path, lookback="2 hours",
         name="t_stream_pair").collect()))
+    batch = _batch_pairs(spark, path)
+    assert got == batch and len(got) > 0
+
+
+def _batch_pairs(spark, path):
+    """Batch twin of stream_pair_join_to_memory with a 2-hour lookback."""
     ev = spark.read.parquet(path)
     p = ev.filter("event_type = 'purchase'").selectExpr(
         "event_id as l_id", "user_id as l_user",
@@ -159,8 +165,65 @@ def test_stream_pair_join_equals_batch(spark):
     v = ev.filter("event_type = 'view'").selectExpr(
         "event_id as r_id", "user_id as r_user",
         "cast(ts as timestamp) as r_ts")
-    batch = sorted(map(tuple, p.join(
+    return sorted(map(tuple, p.join(
         v, (p.l_user == v.r_user)
         & (v.r_ts >= p.l_ts - F.expr("interval 2 hours"))
         & (v.r_ts < p.l_ts)).select("l_user", "l_id", "r_id").collect()))
-    assert got == batch and len(got) > 0
+
+
+def test_stream_runners_remove_their_checkpoints(spark, tmp_path):
+    """Every memory runner returns the batch rows and leaves no
+    checkpoint directory behind: the memory sink keeps its rows in the
+    session's memory, so the checkpoint is only needed while the query
+    runs."""
+    import os
+    import tempfile
+
+    from zen3geo_spark.functions.geo import (
+        cell_encode, extract_first_geotag, micro_from_str,
+    )
+    from zen3geo_spark.functions.text import fingerprint
+    from zen3geo_spark.streaming.windows import (
+        stream_cell_counts_to_memory, stream_dedup_to_memory,
+        stream_pair_join_to_memory, stream_tumbling_to_memory,
+    )
+
+    def ckpts():
+        return {d for d in os.listdir(tempfile.gettempdir()) if "_ckpt_" in d}
+
+    # 7 minutes apart, so each purchase has a same-user view 70 minutes
+    # before it (user = i % 5, type = i % 3)
+    t0 = dt.datetime(2024, 1, 1)
+    events = str(tmp_path / "events")
+    _ev(spark, [(i, t0 + dt.timedelta(minutes=7 * i), i % 5,
+                 ("view", "purchase", "click")[i % 3], float(i),
+                 f'{{"k": {i % 4}}}') for i in range(60)]).write.parquet(events)
+    texts = [f"page {i} lat={i % 90}.{i:06d} lon=-{i % 180}.000001 x"
+             for i in range(40)] + ["no tag", "Page  0 LAT"]
+    pages = spark.createDataFrame([(t,) for t in texts], "text string")
+    pages.write.parquet(str(tmp_path / "pages"))
+    pages.union(pages).write.parquet(str(tmp_path / "docs"))
+    lat_s, lon_s = extract_first_geotag(F.col("text"))
+    cells = (pages.filter(lat_s != "")
+             .groupBy(cell_encode(micro_from_str(lat_s), micro_from_str(lon_s),
+                                  6).alias("cell"))
+             .count())
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    before = ckpts()
+    runs = [
+        (stream_tumbling_to_memory(spark, events, name="t_ck_tumble"),
+         rows(tumbling_event_stats(spark.read.parquet(events)))),
+        (stream_cell_counts_to_memory(spark, str(tmp_path / "pages"),
+                                      name="t_ck_cells"), rows(cells)),
+        (stream_dedup_to_memory(spark, str(tmp_path / "docs"),
+                                name="t_ck_dedup"),
+         rows(pages.select(fingerprint(F.col("text")).alias("fp")).distinct())),
+        (stream_pair_join_to_memory(spark, events, name="t_ck_pairs"),
+         _batch_pairs(spark, events)),
+    ]
+    for got, want in runs:
+        assert rows(got) == want and len(want) > 1
+    assert ckpts() == before

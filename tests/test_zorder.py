@@ -4,6 +4,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from zen3geo_spark.functions.geo import point_iy_ix_py
 from zen3geo_spark.functions.zorder import (
     MAX_ZRES,
     _morton_py,
@@ -46,10 +47,11 @@ def test_spark_encode_matches_python_kernel(spark):
         assert got[i] == _morton_py(iy, ix, 12), (i, lat, lon)
 
 
-def test_spark_sql_twin_matches_column(spark):
+def test_spark_sql_twin_matches_column(spark, grid_edge_rows):
     df = spark.range(300).selectExpr(
         "cast(id * 1234567 % 180000001 - 90000000 as long) as lat_us",
-        "cast(id * 7654321 % 360000001 - 180000000 as long) as lon_us")
+        "cast(id * 7654321 % 360000001 - 180000000 as long) as lon_us"
+    ).union(spark.createDataFrame(grid_edge_rows, "lat_us long, lon_us long"))
     expr = zorder_sql("lat_us", "lon_us", 12, "spark")
     n_diff = df.select(
         (F.expr(expr) != zorder_encode("lat_us", "lon_us", 12)).alias("d")
@@ -137,16 +139,15 @@ def test_encode_plan_is_pure_codegen(spark):
 
 @pytest.mark.parametrize("res", [25, MAX_ZRES])
 def test_encode_exact_at_max_res(spark, res):
-    """res >= 25 pushes the naive double-division numerator past 2^53;
-    the split-shift integer divide must stay bit-exact vs pure Python."""
-    from zen3geo_spark.functions.zorder import _grid_coord, with_zorder
+    """res >= 25 pushes the grid-index numerator past 2^53, where a
+    double division is off by one; the Column path's integer divide must
+    stay bit-exact vs pure Python."""
+    from zen3geo_spark.functions.zorder import with_zorder
     rng = random.Random(42)
     rows = [(i,
              rng.randint(-90_000_000, 90_000_000),
              rng.randint(-180_000_000, 180_000_000)) for i in range(3000)]
-    want = {i: _morton_py(_grid_coord(la, 90_000_000, 180_000_001, res),
-                          _grid_coord(lo, 180_000_000, 360_000_001, res),
-                          res)
+    want = {i: _morton_py(*point_iy_ix_py(la, lo, res), res)
             for i, la, lo in rows}
     df = spark.createDataFrame(rows, "id long, lat_us long, lon_us long")
     got = {r["id"]: r["z"] for r in
@@ -206,8 +207,6 @@ def test_bbox_cover_budget_property_adversarial():
     every z inside the bbox stays inside some range."""
     from hypothesis import given, settings, strategies as st
 
-    from zen3geo_spark.functions.zorder import _grid_coord, _morton_py
-
     lat = st.integers(min_value=-90_000_000, max_value=90_000_000)
     lon = st.integers(min_value=-180_000_000, max_value=180_000_000)
 
@@ -226,8 +225,7 @@ def test_bbox_cover_budget_property_adversarial():
         pts += [(rnd.randint(lat0, lat1), rnd.randint(lon0, lon1))
                 for _ in range(8)]
         for la, lo_ in pts:
-            z = _morton_py(_grid_coord(la, 90000000, 180000001, res),
-                           _grid_coord(lo_, 180000000, 360000001, res), res)
+            z = _morton_py(*point_iy_ix_py(la, lo_, res), res)
             assert any(a <= z <= b for a, b in ranges)
 
     prop()

@@ -10,14 +10,15 @@ The cell index is an H3/S2-style hierarchical quad grid (SURVEY.md §7):
 at resolution ``r`` the globe is a ``2^r × 2^r`` lat/lon grid;
 ``cell = 2^(2r) + iy * 2^r + ix`` (the leading term disambiguates
 resolutions, like H3's resolution bits). Parent = integer-halve the (iy,ix)
-pair. Exactness, not H3 bit-compatibility, is the contract
-(reference semantics are grid math — /root/reference/zen3geo/datapipes/
-datashader.py:352-368 canvas grids, xbatcher.py:105-116 chip grids).
+pair. The grid section below owns every formula of the grid. Exactness,
+not H3 bit-compatibility, is the contract (reference semantics are grid
+math: zen3geo's datapipes/datashader.py:352-368 canvas grids,
+xbatcher.py:105-116 chip grids).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Deterministic geotag grammar used by the synthetic pages table and the
@@ -36,103 +37,169 @@ def sql_int_div(engine: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# cell index (integer fixed-point: micro-degrees in, bigint cell out)
+# the quad cell grid (integer fixed-point: micro-degrees in, bigint out)
 # ---------------------------------------------------------------------------
+#
+# This section owns the grid: every other module (the cell operators, the
+# covers, the Morton and Hilbert numberings, the spatial joins) calls these
+# functions instead of restating a formula. Each comes in the forms its
+# callers need: a Spark Column, engine SQL text (``engine`` is "spark" or
+# "duckdb") and a Python int for query planning. Every division is
+# SQL integer division, which truncates toward zero: Spark's ``div`` (also
+# the Column form, via ``F.call_function``), DuckDB's ``//`` and
+# :func:`_tdiv`. So the forms agree on every input, in range or not.
+#
+# At resolution r an axis of half-width OFF micro-degrees has 2^r indexes,
+#     k = ((v + OFF) * 2^r) div (2 * OFF + 1)
+# where the +1 maps v = +OFF into the last index without a clip. Rows (iy)
+# index latitude (OFF = 90e6), columns (ix) longitude (OFF = 180e6), and
+#     cell = 4^r + iy * 2^r + ix
+# where the leading term tells resolutions apart.
 
-MAX_RES = 20  # (x - pmod) / d stays < 2^53, so the idiv trick is exact
+_LAT = (90000000, 180000001)  # (OFF, 2 * OFF + 1) of the row axis
+_LON = (180000000, 360000001)  # ... and of the column axis
+
+# Finest resolution cell_encode accepts. Every formula here is exact bigint
+# to res 30; 20 keeps a row >= 171 micro-degrees (~19 m) tall and a cell id
+# below 2^41.
+MAX_RES = 20
 
 
-def _idiv(x: Column, d: int) -> Column:
-    """Exact non-negative integer division as Column ops (JVM codegen).
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
 
-    floor(bigint/int) would route through double division and can disagree
-    with the oracle's true integer `//` at quotient boundaries; this stays
-    exact for x < 2^53.
-    """
-    return ((x - F.pmod(x, F.lit(d))) / F.lit(d)).cast("long")
+
+def col_div(x: Column, d: int) -> Column:
+    """Spark's native integral divide as a Column (``x div d``: exact on
+    bigint, truncating toward zero like the SQL forms)."""
+    return F.call_function("div", x, F.lit(d))
+
+
+def _tdiv(a: int, d: int) -> int:
+    """SQL integer division on Python ints (truncates toward zero)."""
+    q = abs(a) // d
+    return q if a >= 0 else -q
+
+
+def _index_sql(v: str, axis: tuple[int, int], res: int, engine: str) -> str:
+    off, span = axis
+    return f"(((({v}) + {off}) * {1 << res}){_DIV[engine]}{span})"
+
 
 def cell_iy_sql(lat_micro: str, res: int, engine: str) -> str:
-    """Row index of the lat/lon quad grid at resolution ``res``.
-
-    Integer-only: ((lat_micro + 90e6) * 2^res) // (180e6 + 1).  The +1
-    denominator maps lat=+90 exactly to the last row without a clip.
-    Safe for res <= 30 (1.8e8 * 2^30 < 2^63).
-    """
-    d = _DIV[engine]
-    return f"(({lat_micro} + 90000000) * {1 << res}){d}180000001"
+    """Row index of ``lat_micro`` at resolution ``res``, as engine SQL."""
+    return _index_sql(lat_micro, _LAT, res, engine)
 
 
 def cell_ix_sql(lon_micro: str, res: int, engine: str) -> str:
-    d = _DIV[engine]
-    return f"(({lon_micro} + 180000000) * {1 << res}){d}360000001"
+    """Column index of ``lon_micro`` at resolution ``res``, as engine SQL."""
+    return _index_sql(lon_micro, _LON, res, engine)
 
 
-def cell_id_sql(lat_micro: str, lon_micro: str, res: int, engine: str) -> str:
-    iy = cell_iy_sql(lat_micro, res, engine)
-    ix = cell_ix_sql(lon_micro, res, engine)
+def point_iy_ix(lat_micro: Column | str, lon_micro: Column | str,
+                res: int) -> tuple[Column, Column]:
+    """(row, col) index of a micro-degree point as bigint Columns."""
+    return tuple(col_div((_col(v).cast("long") + off) * F.lit(1 << res), span)
+                 for v, (off, span) in ((lat_micro, _LAT), (lon_micro, _LON)))
+
+
+def point_iy_ix_py(lat_micro: int, lon_micro: int, res: int) -> tuple[int, int]:
+    """(row, col) index of a micro-degree point, for query planning.
+
+    >>> point_iy_ix_py(0, 0, 1)                 # equator, meridian
+    (0, 0)
+    >>> point_iy_ix_py(1, 180_000_000, 1)       # just north; lon +180
+    (1, 1)
+    >>> point_iy_ix_py(89_999_999, -180_000_000, 4)
+    (15, 0)
+    """
+    return tuple(_tdiv((v + off) << res, span)
+                 for v, (off, span) in ((lat_micro, _LAT), (lon_micro, _LON)))
+
+
+def cell_from_iy_ix(iy: Column, ix: Column, res: int) -> Column:
+    """Cell id of a (row, col) pair of Columns."""
+    return (F.lit(1 << (2 * res)) + iy * F.lit(1 << res) + ix).cast("long")
+
+
+def cell_from_iy_ix_sql(iy: str, ix: str, res: int) -> str:
+    """Cell id of a (row, col) pair, as SQL (no division: any engine)."""
     return f"({1 << (2 * res)} + ({iy}) * {1 << res} + ({ix}))"
 
 
-def split_antimeridian_bbox(
-        min_lon_us: int, max_lon_us: int) -> list[tuple[int, int]]:
-    """Normalize a possibly antimeridian-crossing longitude interval
-    into 1–2 non-wrapping [lo, hi] intervals. A bbox given as
-    (min_lon=170°, max_lon=-170°) means the 20° strip ACROSS the
-    dateline; a naive BETWEEN silently matches the 340° complement
-    instead. Planning-time (driver) helper — the output intervals feed
-    ordinary pushdown-able range predicates."""
-    if min_lon_us <= max_lon_us:
-        return [(min_lon_us, max_lon_us)]
-    return [(min_lon_us, 180_000_000), (-180_000_000, max_lon_us)]
-
-
-def cell_parent_sql(cell: str, res: int, parent_res: int, engine: str) -> str:
-    """Engine-neutral SQL twin of :func:`cell_parent` (non-negative
-    bigint math only, so plain integer division is exact in both
-    dialects)."""
-    if parent_res > res:
-        raise ValueError(f"parent_res {parent_res} must be <= res {res}")
-    d = _DIV[engine]
-    body = f"(({cell}) - {1 << (2 * res)})"
-    iy = f"({body}{d}{1 << res})"
-    ix = f"({body} - {iy} * {1 << res})"
-    shift = res - parent_res
-    piy = f"({iy}{d}{1 << shift})"
-    pix = f"({ix}{d}{1 << shift})"
-    return f"({1 << (2 * parent_res)} + {piy} * {1 << parent_res} + {pix})"
+def cell_id_sql(lat_micro: str, lon_micro: str, res: int, engine: str) -> str:
+    return cell_from_iy_ix_sql(cell_iy_sql(lat_micro, res, engine),
+                                cell_ix_sql(lon_micro, res, engine), res)
 
 
 def cell_encode(lat_micro: Column | str, lon_micro: Column | str, res: int) -> Column:
     """Spark Column: hierarchical cell id from micro-degree ints."""
     if res > MAX_RES:
         raise ValueError(f"res {res} exceeds MAX_RES {MAX_RES}")
-    lat_micro = F.col(lat_micro) if isinstance(lat_micro, str) else lat_micro
-    lon_micro = F.col(lon_micro) if isinstance(lon_micro, str) else lon_micro
-    iy = _idiv((lat_micro + F.lit(90000000)).cast("long") * F.lit(1 << res), 180000001)
-    ix = _idiv((lon_micro + F.lit(180000000)).cast("long") * F.lit(1 << res), 360000001)
-    return (F.lit(1 << (2 * res)) + iy * F.lit(1 << res) + ix).cast("long")
-
-
-def cell_parent(cell: Column, res: int, parent_res: int) -> Column:
-    """Parent cell at a coarser resolution (pure bigint math)."""
-    if parent_res > res:
-        raise ValueError(f"parent_res {parent_res} must be <= res {res}")
-    body = cell - F.lit(1 << (2 * res))
-    iy = _idiv(body, 1 << res)
-    ix = body - iy * F.lit(1 << res)
-    shift = res - parent_res
-    piy = _idiv(iy, 1 << shift)
-    pix = _idiv(ix, 1 << shift)
-    return (F.lit(1 << (2 * parent_res)) + piy * F.lit(1 << parent_res) + pix).cast(
-        "long"
-    )
+    return cell_from_iy_ix(*point_iy_ix(lat_micro, lon_micro, res), res)
 
 
 def cell_iy_ix(cell: Column, res: int) -> tuple[Column, Column]:
+    """(row, col) of a cell id Column."""
     body = cell - F.lit(1 << (2 * res))
-    iy = _idiv(body, 1 << res)
-    ix = (body - iy * F.lit(1 << res)).cast("long")
-    return iy, ix
+    return col_div(body, 1 << res), body % F.lit(1 << res)
+
+
+def cell_iy_ix_sql(cell: str, res: int, engine: str) -> tuple[str, str]:
+    """(row, col) of a cell id, as engine SQL."""
+    body = f"(({cell}) - {1 << (2 * res)})"
+    return f"({body}{_DIV[engine]}{1 << res})", f"({body} % {1 << res})"
+
+
+def _check_parent(res: int, parent_res: int) -> None:
+    if parent_res > res:
+        raise ValueError(f"parent_res {parent_res} must be <= res {res}")
+
+
+def cell_parent(cell: Column, res: int, parent_res: int) -> Column:
+    """Parent cell at a coarser resolution: halve (row, col) per level."""
+    _check_parent(res, parent_res)
+    k = 1 << (res - parent_res)
+    iy, ix = cell_iy_ix(cell, res)
+    return cell_from_iy_ix(col_div(iy, k), col_div(ix, k), parent_res)
+
+
+def cell_parent_sql(cell: str, res: int, parent_res: int, engine: str) -> str:
+    """Engine SQL twin of :func:`cell_parent`."""
+    _check_parent(res, parent_res)
+    d, k = _DIV[engine], 1 << (res - parent_res)
+    iy, ix = cell_iy_ix_sql(cell, res, engine)
+    return cell_from_iy_ix_sql(f"{iy}{d}{k}", f"{ix}{d}{k}", parent_res)
+
+
+def cell_bounds_sql(iy: str, ix: str, res: int,
+                    engine: str) -> tuple[str, str, str, str]:
+    """Closed integer bounds ``(lat_lo, lat_hi, lon_lo, lon_hi)`` of cell
+    (``iy``, ``ix``) in micro-degrees: the v with index k on an axis are
+    ceil(k * span / 2^r) - OFF .. ceil((k + 1) * span / 2^r) - 1 - OFF,
+    with ceil(a / n) = (a + n - 1) div n for a >= 0."""
+    n, d = 1 << res, _DIV[engine]
+
+    def axis(k, off, span):
+        return (f"((({k}) * {span} + {n - 1}){d}{n} - {off})",
+                f"(((({k}) + 1) * {span} + {n - 1}){d}{n} - {off + 1})")
+
+    return (*axis(iy, *_LAT), *axis(ix, *_LON))
+
+
+def cell_center_sql(iy: str, ix: str, res: int, engine: str) -> tuple[str, str]:
+    """Integer centre ``(lat, lon)`` of cell (``iy``, ``ix``) in
+    micro-degrees (the floor of the midpoint)."""
+    n, d = 1 << res, _DIV[engine]
+    return tuple(f"(((2 * ({k}) + 1) * {span}){d}{2 * n} - {off})"
+                 for k, (off, span) in ((iy, _LAT), (ix, _LON)))
+
+
+def min_cell_height_us(res: int) -> int:
+    """Height of the shortest cell at ``res`` in micro-degrees (rows are
+    the narrower axis; their heights are the floor or ceil of
+    span / 2^res)."""
+    return _LAT[1] >> res
 
 
 def cell_neighbors(cell: Column, res: int) -> Column:
@@ -147,8 +214,78 @@ def cell_neighbors(cell: Column, res: int) -> Column:
         for dx in (-1, 0, 1):
             ny = F.greatest(F.lit(0), F.least(F.lit(n - 1), iy + F.lit(dy)))
             nx = (ix + F.lit(dx) + F.lit(n)) % F.lit(n)
-            out.append(F.lit(1 << (2 * res)) + ny * F.lit(n) + nx)
+            out.append(cell_from_iy_ix(ny, nx, res))
     return F.array_distinct(F.array(*out))
+
+
+def ring_adjacent_sql(a: tuple[str, str], b: tuple[str, str], res: int) -> str:
+    """SQL predicate: (row, col) ``b`` lies in the 3x3 ring of ``a`` — the
+    pairs the exploded :func:`cell_neighbors` ring yields (self included):
+    rows within one, columns within one or across the lon wrap."""
+    (ay, ax), (by, bx) = a, b
+    dx = f"abs(({ax}) - ({bx}))"
+    return (f"(abs(({ay}) - ({by})) <= 1"
+            f" and ({dx} <= 1 or {dx} = {(1 << res) - 1}))")
+
+
+def cells_adjacent_sql(a: str, b: str, res: int, engine: str) -> str:
+    """:func:`ring_adjacent_sql` over two cell id expressions."""
+    return ring_adjacent_sql(cell_iy_ix_sql(a, res, engine),
+                             cell_iy_ix_sql(b, res, engine), res)
+
+
+def explode_bbox_cells(df: DataFrame, lat_lo: Column | str, lat_hi: Column | str,
+                       lon_lo: Column | str, lon_hi: Column | str,
+                       res: int) -> DataFrame:
+    """``df`` with one row per grid cell of each row's micro-degree bbox
+    (Columns or column names), as bigint columns ``iy`` and ``ix``. Both
+    index ranges are clamped to the grid, so a bbox reaching past the
+    poles or the antimeridian explodes only the cells that exist."""
+    n = 1 << res
+    (iy0, ix0), (iy1, ix1) = (point_iy_ix(lat_lo, lon_lo, res),
+                              point_iy_ix(lat_hi, lon_hi, res))
+
+    def span(lo, hi):
+        lo, hi = (F.least(F.greatest(k, F.lit(0)), F.lit(n - 1)) for k in (lo, hi))
+        return F.explode(F.sequence(lo, hi))
+
+    return df.withColumn("iy", span(iy0, iy1)).withColumn("ix", span(ix0, ix1))
+
+
+def bbox_cells_sql(rel: str, lat_lo: str, lat_hi: str, lon_lo: str,
+                   lon_hi: str, res: int) -> str:
+    """DuckDB twin of :func:`explode_bbox_cells`: every row of ``rel``
+    once per grid cell of its bbox, with columns ``iy`` and ``ix``.
+    ``unnest(generate_series(..))`` in the SELECT list is DuckDB's
+    correlated-range idiom; two stages make the cross product (one
+    stage would zip them)."""
+    e, n = "duckdb", 1 << res
+
+    def clamp(k):
+        return f"least(greatest({k}, 0), {n - 1})"
+
+    return f"""
+      select * exclude (_ix0, _ix1), unnest(generate_series(_ix0, _ix1)) as ix
+      from (
+        select *, {clamp(cell_ix_sql(lon_lo, res, e))} as _ix0,
+               {clamp(cell_ix_sql(lon_hi, res, e))} as _ix1,
+               unnest(generate_series({clamp(cell_iy_sql(lat_lo, res, e))},
+                                      {clamp(cell_iy_sql(lat_hi, res, e))})) as iy
+        from {rel}
+      )"""
+
+
+def split_antimeridian_bbox(
+        min_lon_us: int, max_lon_us: int) -> list[tuple[int, int]]:
+    """Normalize a possibly antimeridian-crossing longitude interval
+    into 1–2 non-wrapping [lo, hi] intervals. A bbox given as
+    (min_lon=170°, max_lon=-170°) means the 20° strip ACROSS the
+    dateline; a naive BETWEEN silently matches the 340° complement
+    instead. Planning-time (driver) helper — the output intervals feed
+    ordinary pushdown-able range predicates."""
+    if min_lon_us <= max_lon_us:
+        return [(min_lon_us, max_lon_us)]
+    return [(min_lon_us, 180_000_000), (-180_000_000, max_lon_us)]
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .geo import sql_int_div
+from .geo import cell_ix_sql, cell_iy_sql, col_div, point_iy_ix, sql_int_div
 
 MAX_HRES = 26
 
@@ -60,25 +60,24 @@ def hilbert_d_np(iy, ix, res: int):
 
 
 def hilbert_encode(lat_micro: Column | str, lon_micro: Column | str, res: int) -> Column:
-    """Spark Column: Hilbert cell id from micro-degree ints (Arrow-batched
-    numpy kernel; grid coords shared with the quad/Morton indexes)."""
+    """Spark Column: Hilbert cell id from micro-degree ints. The grid
+    (row, col) comes from the shared JVM index; the Arrow-batched numpy
+    kernel only walks the curve."""
     if res > MAX_HRES:
         raise ValueError(f"res {res} exceeds MAX_HRES {MAX_HRES}")
 
     @pandas_udf("long")
-    def _h(lat: pd.Series, lon: pd.Series) -> pd.Series:
+    def _h(iy: pd.Series, ix: pd.Series) -> pd.Series:
         # null-propagate like the JVM cell/zorder paths: compute on
         # 0-filled copies, then mask the output back to null
-        bad = lat.isna().to_numpy() | lon.isna().to_numpy()
-        iy = ((lat.fillna(0).to_numpy(np.int64) + 90000000) << res) // 180000001
-        ix = ((lon.fillna(0).to_numpy(np.int64) + 180000000) << res) // 360000001
-        out = pd.Series(hilbert_d_np(iy, ix, res), dtype="Int64")
+        bad = iy.isna().to_numpy() | ix.isna().to_numpy()
+        out = pd.Series(hilbert_d_np(iy.fillna(0).to_numpy(np.int64),
+                                     ix.fillna(0).to_numpy(np.int64), res),
+                        dtype="Int64")
         out[bad] = pd.NA
         return out
 
-    lat_micro = F.col(lat_micro) if isinstance(lat_micro, str) else lat_micro
-    lon_micro = F.col(lon_micro) if isinstance(lon_micro, str) else lon_micro
-    return _h(lat_micro, lon_micro)
+    return _h(*point_iy_ix(lat_micro, lon_micro, res))
 
 
 def hilbert_parent(d: Column | str, res: int, parent_res: int) -> Column:
@@ -86,8 +85,7 @@ def hilbert_parent(d: Column | str, res: int, parent_res: int) -> Column:
     if parent_res > res:
         raise ValueError(f"parent_res {parent_res} must be <= res {res}")
     d = F.col(d) if isinstance(d, str) else d
-    k = 1 << (2 * (res - parent_res))
-    return ((d - F.pmod(d, F.lit(k))) / F.lit(k)).cast("long")
+    return col_div(d, 1 << (2 * (res - parent_res)))
 
 
 def hilbert_cte_sql(points_rel: str, id_col: str, lat_micro: str,
@@ -103,8 +101,8 @@ def hilbert_cte_sql(points_rel: str, id_col: str, lat_micro: str,
     return f"""
     hseed as (
       select {id_col},
-             ((({lon_micro}) + 180000000) * {n}){dv}360000001 as x,
-             ((({lat_micro}) + 90000000) * {n}){dv}180000001 as y,
+             {cell_ix_sql(lon_micro, res, engine)} as x,
+             {cell_iy_sql(lat_micro, res, engine)} as y,
              cast(0 as bigint) as d,
              cast({n >> 1} as bigint) as s
       from {points_rel}

@@ -21,15 +21,17 @@ web-page corpus, per BASELINE.json's north rule (H3/S2 cell-encode).
 Portable-SQL note: left-shift is written ``* 2^n`` and right-shift
 ``div 2^n`` (via :func:`zen3geo_spark.functions.geo.sql_int_div`) because
 Spark SQL lacks ``<<`` and DuckDB lacks ``shiftleft``; both share ``&``
-and ``|`` on BIGINT.  Values stay < 2^53 for res <= 26, so every step is
-exact in either engine.
+and ``|`` on BIGINT.  The grid indexes come from :mod:`.geo`, which owns
+the grid, so ``z`` and the quad ``cell`` always agree on a point's square.
 """
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .geo import cell_ix_sql, cell_iy_sql, sql_int_div
+from .geo import (
+    cell_ix_sql, cell_iy_sql, col_div, point_iy_ix, point_iy_ix_py, sql_int_div,
+)
 
 # bit-spread magic masks: value < 2^26 -> even bit positions of a < 2^52 word
 # (classic "interleave by binary magic numbers" — public-domain bit-twiddling)
@@ -40,49 +42,20 @@ _SPREAD = [
     (2, 0x3333333333333333),
     (1, 0x5555555555555555),
 ]
-MAX_ZRES = 26  # 2 * 26 = 52 interleaved bits < 2^53: exact in double-free SQL
-
-# grid-coordinate constants shared with geo.cell_iy_sql/cell_ix_sql
-_LAT_OFF, _LAT_DEN = 90000000, 180000001
-_LON_OFF, _LON_DEN = 180000000, 360000001
-
-
-def _grid_idx_col(v_micro: Column, off: int, denom: int, res: int) -> Column:
-    """Exact ``((v + off) << res) // denom`` as a Spark Column.
-
-    Spark Columns have no integral-divide operator, and the naive
-    ``(x - pmod(x, d)) / d`` runs as DOUBLE division — the numerator
-    reaches ``denom * 2^res > 2^53`` for res >= 25, where doubles lose
-    integer exactness (off-by-one grid indexes that silently disagree
-    with :func:`zorder_sql`'s true ``div`` and the DuckDB oracle).  So
-    split the shift: with ``a = (v+off) << r1`` and ``r2 = res - r1``,
-
-        (a << r2) // denom  ==  (a // denom) << r2  +  ((a % denom) << r2) // denom
-
-    Every division numerator is now < denom * 2^13 < 2^41, where the
-    pmod/divide trick IS exact in double arithmetic.  Pure long ops —
-    stays inside WholeStageCodegen.
-    """
-    r1 = res // 2
-    r2 = res - r1
-    a = (v_micro + F.lit(off)).cast("long") * F.lit(1 << r1)
-    rem = F.pmod(a, F.lit(denom))
-    q1 = ((a - rem) / F.lit(denom)).cast("long")
-    b = rem * F.lit(1 << r2)
-    q2 = ((b - F.pmod(b, F.lit(denom))) / F.lit(denom)).cast("long")
-    return q1 * F.lit(1 << r2) + q2
+# bits kept per axis (the first spread mask confines each index to them):
+# z < 2^52, so ids and range bounds stay exact even where a consumer holds
+# them as doubles (pandas, JSON)
+MAX_ZRES = 26
 
 
-def _spread_sql(e: str, engine: str) -> str:
+def _spread_sql(e: str) -> str:
     """SQL: spread the low 26 bits of ``e`` onto even bit positions."""
-    d = sql_int_div(engine)
     # first mask confines the input so the widening multiplies cannot
     # carry into a neighbour's lane
     out = f"(({e}) & {(1 << MAX_ZRES) - 1})"
     for shift, mask in _SPREAD:
         # x = (x | (x << shift)) & mask   with << as * 2^shift
         out = f"((({out}) | (({out}) * {1 << shift})) & {mask})"
-    _ = d  # engine only matters for div; spread is pure * & |
     return out
 
 
@@ -96,25 +69,20 @@ def _spread_col(c: Column) -> Column:
 def zorder_sql(lat_micro: str, lon_micro: str, res: int, engine: str) -> str:
     """Morton id at ``res`` from micro-degree ints — one SQL expression.
 
-    Shares the grid-coordinate formulas with the quad index
-    (``geo.cell_iy_sql`` / ``cell_ix_sql``) so ``z`` and ``cell`` agree on
-    which grid square a point lands in; only the numbering differs.
+    Same grid indexes as the quad ``cell``; only the numbering differs.
     """
     if res > MAX_ZRES:
         raise ValueError(f"res {res} exceeds MAX_ZRES {MAX_ZRES}")
     iy = cell_iy_sql(lat_micro, res, engine)
     ix = cell_ix_sql(lon_micro, res, engine)
-    return f"(({_spread_sql(ix, engine)}) | (({_spread_sql(iy, engine)}) * 2))"
+    return f"(({_spread_sql(ix)}) | (({_spread_sql(iy)}) * 2))"
 
 
 def zorder_encode(lat_micro: Column | str, lon_micro: Column | str, res: int) -> Column:
     """Spark Column: Morton cell id (pure bigint ops, WholeStageCodegen)."""
     if res > MAX_ZRES:
         raise ValueError(f"res {res} exceeds MAX_ZRES {MAX_ZRES}")
-    lat_micro = F.col(lat_micro) if isinstance(lat_micro, str) else lat_micro
-    lon_micro = F.col(lon_micro) if isinstance(lon_micro, str) else lon_micro
-    iy = _grid_idx_col(lat_micro, _LAT_OFF, _LAT_DEN, res)
-    ix = _grid_idx_col(lon_micro, _LON_OFF, _LON_DEN, res)
+    iy, ix = point_iy_ix(lat_micro, lon_micro, res)
     return _spread_col(ix).bitwiseOR(_spread_col(iy) * F.lit(2)).cast("long")
 
 
@@ -132,12 +100,9 @@ def with_zorder(df, lat_micro: str, lon_micro: str, res: int, out: str = "z"):
     if res > MAX_ZRES:
         raise ValueError(f"res {res} exceeds MAX_ZRES {MAX_ZRES}")
     zy, zx = f"__{out}_y", f"__{out}_x"
-    df = df.withColumns({
-        zy: _grid_idx_col(F.col(lat_micro), _LAT_OFF, _LAT_DEN, res)
-            .bitwiseAND(F.lit((1 << MAX_ZRES) - 1)),
-        zx: _grid_idx_col(F.col(lon_micro), _LON_OFF, _LON_DEN, res)
-            .bitwiseAND(F.lit((1 << MAX_ZRES) - 1)),
-    })
+    iy, ix = point_iy_ix(lat_micro, lon_micro, res)
+    mask = F.lit((1 << MAX_ZRES) - 1)
+    df = df.withColumns({zy: iy.bitwiseAND(mask), zx: ix.bitwiseAND(mask)})
     for shift, mask in _SPREAD:
         df = df.withColumns({
             c: F.col(c).bitwiseOR(F.col(c) * F.lit(1 << shift))
@@ -155,8 +120,7 @@ def zorder_parent(z: Column | str, res: int, parent_res: int) -> Column:
     if parent_res > res:
         raise ValueError(f"parent_res {parent_res} must be <= res {res}")
     z = F.col(z) if isinstance(z, str) else z
-    d = 1 << (2 * (res - parent_res))
-    return ((z - F.pmod(z, F.lit(d))) / F.lit(d)).cast("long")
+    return col_div(z, 1 << (2 * (res - parent_res)))
 
 
 def zorder_parent_sql(z: str, res: int, parent_res: int, engine: str) -> str:
@@ -189,19 +153,6 @@ def _morton_py(iy: int, ix: int, res: int) -> int:
     return spread(ix) | (spread(iy) << 1)
 
 
-def _grid_coord(val_micro: int, off: int, denom: int, res: int) -> int:
-    """Exact grid index (planning-side twin of :func:`_grid_idx_col`).
-
-    >>> _grid_coord(0, 90_000_000, 180_000_001, 1)      # equator -> row 0
-    0
-    >>> _grid_coord(1, 90_000_000, 180_000_001, 1)      # just north -> row 1
-    1
-    >>> _grid_coord(89_999_999, 90_000_000, 180_000_001, 4)  # top row
-    15
-    """
-    return ((val_micro + off) << res) // denom
-
-
 def z_ranges_for_bbox(
     min_lat_micro: int,
     min_lon_micro: int,
@@ -221,10 +172,8 @@ def z_ranges_for_bbox(
     Returned ranges are sorted and adjacent ones merged, so a 10^12-row
     scan becomes ``len(ranges)`` BETWEEN pushdown predicates.
     """
-    iy0 = _grid_coord(min_lat_micro, 90000000, 180000001, res)
-    iy1 = _grid_coord(max_lat_micro, 90000000, 180000001, res)
-    ix0 = _grid_coord(min_lon_micro, 180000000, 360000001, res)
-    ix1 = _grid_coord(max_lon_micro, 180000000, 360000001, res)
+    iy0, ix0 = point_iy_ix_py(min_lat_micro, min_lon_micro, res)
+    iy1, ix1 = point_iy_ix_py(max_lat_micro, max_lon_micro, res)
 
     out: list[tuple[int, int]] = []
     # stack of (level, iy_base, ix_base): a node at `level` spans

@@ -33,14 +33,21 @@ reference test.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from zen3geo_spark.functions.geo import (
+    bbox_cells_sql,
+    cell_bounds_sql,
+    cell_center_sql,
     cell_encode,
+    cell_from_iy_ix,
+    cell_from_iy_ix_sql,
     cell_id_sql,
     cell_neighbors,
     cell_parent,
     cell_parent_sql,
+    cells_adjacent_sql,
+    explode_bbox_cells,
 )
 
 
@@ -223,24 +230,11 @@ def cover_polygon_cells(polys: DataFrame, edges: DataFrame, res: int,
     it; at 10^12 scale the polygon side is dimension-sized and the
     whole cover is a broadcast-scale computation.
     """
-    n = 1 << res
-    iy_lo = f"((miny_us + 90000000) * {n}) div 180000001"
-    iy_hi = f"((maxy_us + 90000000) * {n}) div 180000001"
-    ix_lo = f"((minx_us + 180000000) * {n}) div 360000001"
-    ix_hi = f"((maxx_us + 180000000) * {n}) div 360000001"
-    cand = (polys
-            .select("geom_id",
-                    F.expr(f"explode(sequence({iy_lo}, {iy_hi}))").alias("iy"),
-                    F.expr(f"{ix_lo}").alias("ix_lo"),
-                    F.expr(f"{ix_hi}").alias("ix_hi"))
-            .select("geom_id", "iy",
-                    F.expr("explode(sequence(ix_lo, ix_hi))").alias("ix"))
-            .select("geom_id", "iy", "ix",
-                    # integer cell-center micro-degrees (floor midpoint)
-                    F.expr(f"((2 * iy + 1) * 180000001) div {2 * n} - 90000000")
-                    .alias("clat"),
-                    F.expr(f"((2 * ix + 1) * 360000001) div {2 * n} - 180000000")
-                    .alias("clon")))
+    clat, clon = cell_center_sql("iy", "ix", res, "spark")
+    cand = (explode_bbox_cells(polys, "miny_us", "maxy_us", "minx_us",
+                               "maxx_us", res)
+            .select("geom_id", "iy", "ix", F.expr(clat).alias("clat"),
+                    F.expr(clon).alias("clon")))
     crossing = ((F.col("e.y1") > F.col("clat"))
                 != (F.col("e.y2") > F.col("clat")))
     x_at = ((F.col("e.x2") - F.col("e.x1")).cast("double")
@@ -255,9 +249,7 @@ def cover_polygon_cells(polys: DataFrame, edges: DataFrame, res: int,
                    .alias("hits"))
               .filter(F.col("hits") % 2 == 1))
     cells = inside.select(
-        "geom_id",
-        (F.lit(1 << (2 * res)) + F.col("iy") * F.lit(n) + F.col("ix"))
-        .cast("long").alias("cell"))
+        "geom_id", cell_from_iy_ix(F.col("iy"), F.col("ix"), res).alias("cell"))
     return compact_cells(cells, res, min_res, group_cols=("geom_id",))
 
 
@@ -266,34 +258,16 @@ def cover_polygon_cells_sql(edges_values: str, res: int, min_res: int) -> str:
     the edge list, correlated generate_series for the candidate grid,
     ray-cast parity, grouped compact. ``edges_values`` is a VALUES
     relation aliased ``e(geom_id, x1, y1, x2, y2)``."""
-    n = 1 << res
+    clat, clon = cell_center_sql("iy", "ix", res, "duckdb")
+    bbox = f"""(select geom_id, min(least(y1, y2)) as ylo,
+                      max(greatest(y1, y2)) as yhi, min(least(x1, x2)) as xlo,
+                      max(greatest(x1, x2)) as xhi
+               from {edges_values} group by geom_id)"""
     cells_sql = f"""
-      select c.geom_id,
-             {1 << (2 * res)} + c.iy * {n} + c.ix as cell
+      select c.geom_id, {cell_from_iy_ix_sql("c.iy", "c.ix", res)} as cell
       from (
-        -- unnest(generate_series(..)) in the SELECT list is DuckDB's
-        -- correlated-range idiom (the table function rejects lateral
-        -- column parameters); two stages = cross product, one zips
-        select geom_id, iy, ix,
-               ((2 * iy + 1) * 180000001) // {2 * n} - 90000000 as clat,
-               ((2 * ix + 1) * 360000001) // {2 * n} - 180000000 as clon
-        from (
-          select geom_id, iy,
-                 unnest(generate_series(ix_lo, ix_hi)) as ix
-          from (
-            select geom_id,
-                   unnest(generate_series(iy_lo, iy_hi)) as iy,
-                   ix_lo, ix_hi
-            from (
-              select geom_id,
-                     ((min(least(y1, y2)) + 90000000) * {n}) // 180000001 as iy_lo,
-                     ((max(greatest(y1, y2)) + 90000000) * {n}) // 180000001 as iy_hi,
-                     ((min(least(x1, x2)) + 180000000) * {n}) // 360000001 as ix_lo,
-                     ((max(greatest(x1, x2)) + 180000000) * {n}) // 360000001 as ix_hi
-              from {edges_values} group by geom_id
-            ) g0
-          ) g1
-        ) g2
+        select geom_id, iy, ix, {clat} as clat, {clon} as clon
+        from ({bbox_cells_sql(bbox, "ylo", "yhi", "xlo", "xhi", res)})
       ) c
       join {edges_values} on e.geom_id = c.geom_id
       where (e.y1 > c.clat) != (e.y2 > c.clat)
@@ -325,78 +299,41 @@ def cover_segment_cells(segments: DataFrame, res: int) -> DataFrame:
     polygon cover; no per-step iteration, so one segment spanning the
     globe still costs one bounded explode, not a DDA walk.
     """
-    n = 1 << res
-    base = segments.select(
-        "seg_id", "x1", "y1", "x2", "y2",
-        F.least("y1", "y2").alias("ylo"), F.greatest("y1", "y2").alias("yhi"),
-        F.least("x1", "x2").alias("xlo"), F.greatest("x1", "x2").alias("xhi"))
-    cand = (base
-            .withColumn("iy", F.expr(
-                f"explode(sequence(((ylo + 90000000) * {n}) div 180000001,"
-                f" ((yhi + 90000000) * {n}) div 180000001))"))
-            .withColumn("ix", F.expr(
-                f"explode(sequence(((xlo + 180000000) * {n}) div 360000001,"
-                f" ((xhi + 180000000) * {n}) div 360000001))")))
-    # closed integer bounds of cell (iy, ix): lat rows are
-    # [ceil(iy*M/n) - 90e6, ceil((iy+1)*M/n) - 1 - 90e6] with
-    # M = 180000001 (the +1 denominator makes ceil = (k*M + n - 1) div n)
-    cell_bounds = (
-        f"cast((iy * 180000001 + {n - 1}) div {n} - 90000000 as bigint)",
-        f"cast(((iy + 1) * 180000001 + {n - 1}) div {n} - 1 - 90000000 as bigint)",
-        f"cast((ix * 360000001 + {n - 1}) div {n} - 180000000 as bigint)",
-        f"cast(((ix + 1) * 360000001 + {n - 1}) div {n} - 1 - 180000000 as bigint)",
-    )
-    lat_lo, lat_hi, lon_lo, lon_hi = cell_bounds
-    # cross product of (segment direction) x (corner - start), exact
-    cross = (f"((x2 - x1) * ({{cy}} - y1) - (y2 - y1) * ({{cx}} - x1))")
-    corners = [cross.format(cy=cy, cx=cx)
-               for cy in (lat_lo, lat_hi) for cx in (lon_lo, lon_hi)]
-    line_touches = (f"not (({corners[0]}) > 0 and ({corners[1]}) > 0 and "
-                    f"({corners[2]}) > 0 and ({corners[3]}) > 0) and "
-                    f"not (({corners[0]}) < 0 and ({corners[1]}) < 0 and "
-                    f"({corners[2]}) < 0 and ({corners[3]}) < 0)")
+    cand = explode_bbox_cells(segments.select("seg_id", "x1", "y1", "x2", "y2"),
+                              F.least("y1", "y2"), F.greatest("y1", "y2"),
+                              F.least("x1", "x2"), F.greatest("x1", "x2"), res)
     # bbox overlap is by construction (candidates come from the
     # segment's bbox), so the line test completes the rect-segment
     # intersection for axis-aligned rects
-    return (cand.filter(F.expr(line_touches))
+    return (cand.filter(F.expr(_segment_touches_sql(res, "spark")))
             .select("seg_id",
-                    (F.lit(1 << (2 * res)) + F.col("iy") * F.lit(n)
-                     + F.col("ix")).cast("long").alias("cell")))
+                    cell_from_iy_ix(F.col("iy"), F.col("ix"), res).alias("cell")))
+
+
+def _segment_touches_sql(res: int, engine: str) -> str:
+    """The segment's LINE passes through the closed rectangle of cell
+    (iy, ix): the cross products of (segment direction) x (corner -
+    start) at the four corners are not all strictly one-signed, over
+    columns (x1, y1, x2, y2, iy, ix) — exact integer SQL."""
+    lat_lo, lat_hi, lon_lo, lon_hi = cell_bounds_sql("iy", "ix", res, engine)
+    corners = [f"((x2 - x1) * ({cy} - y1) - (y2 - y1) * ({cx} - x1))"
+               for cy in (lat_lo, lat_hi) for cx in (lon_lo, lon_hi)]
+    gt = " and ".join(f"{c} > 0" for c in corners)
+    lt = " and ".join(f"{c} < 0" for c in corners)
+    return f"not ({gt}) and not ({lt})"
 
 
 def cover_segment_cells_sql(segments_sql: str, res: int) -> str:
     """DuckDB twin of :func:`cover_segment_cells` (identical integer
     predicate). ``segments_sql`` must yield
     ``(seg_id, x1, y1, x2, y2)``."""
-    n = 1 << res
-    lat_lo = f"((iy * 180000001 + {n - 1}) // {n} - 90000000)"
-    lat_hi = f"(((iy + 1) * 180000001 + {n - 1}) // {n} - 1 - 90000000)"
-    lon_lo = f"((ix * 360000001 + {n - 1}) // {n} - 180000000)"
-    lon_hi = f"(((ix + 1) * 360000001 + {n - 1}) // {n} - 1 - 180000000)"
-    cross = "((x2 - x1) * ({cy} - y1) - (y2 - y1) * ({cx} - x1))"
-    corners = [cross.format(cy=cy, cx=cx)
-               for cy in (lat_lo, lat_hi) for cx in (lon_lo, lon_hi)]
-    gt = " and ".join(f"({c}) > 0" for c in corners)
-    lt = " and ".join(f"({c}) < 0" for c in corners)
+    seg = ("(select seg_id, x1, y1, x2, y2, least(y1, y2) as ylo,"
+           " greatest(y1, y2) as yhi, least(x1, x2) as xlo,"
+           f" greatest(x1, x2) as xhi from ({segments_sql}))")
     return f"""
-    with _seg as (select * from ({segments_sql})),
-    _c1 as (
-      select seg_id, x1, y1, x2, y2,
-             unnest(generate_series(
-               ((least(y1, y2) + 90000000) * {n}) // 180000001,
-               ((greatest(y1, y2) + 90000000) * {n}) // 180000001)) as iy,
-             ((least(x1, x2) + 180000000) * {n}) // 360000001 as ixlo,
-             ((greatest(x1, x2) + 180000000) * {n}) // 360000001 as ixhi
-      from _seg
-    ),
-    _c2 as (
-      select seg_id, x1, y1, x2, y2, iy,
-             unnest(generate_series(ixlo, ixhi)) as ix
-      from _c1
-    )
-    select seg_id, {1 << (2 * res)} + iy * {n} + ix as cell
-    from _c2
-    where not ({gt}) and not ({lt})
+    select seg_id, {cell_from_iy_ix_sql("iy", "ix", res)} as cell
+    from ({bbox_cells_sql(seg, "ylo", "yhi", "xlo", "xhi", res)})
+    where {_segment_touches_sql(res, "duckdb")}
     """
 
 
@@ -415,36 +352,21 @@ def cover_disk_cells(points: DataFrame, radius_us: int, res: int,
     distance from the point to the rectangle's NEAREST point (clamp to
     the rect) <= r^2 — products stay < 2^58 in micro-degrees, no FP.
     """
-    n = 1 << res
     r = int(radius_us)
     base = points.select(
         F.col(id_col).alias("point_id"),
         F.col(lat_col).alias("py"), F.col(lon_col).alias("px"))
-    cand = (base
-            .withColumn("iy", F.expr(
-                f"explode(sequence("
-                f"greatest((((py - {r}) + 90000000) * {n}) div 180000001, 0),"
-                f"least((((py + {r}) + 90000000) * {n}) div 180000001, {n - 1})))"))
-            .withColumn("ix", F.expr(
-                f"explode(sequence("
-                f"greatest((((px - {r}) + 180000000) * {n}) div 360000001, 0),"
-                f"least((((px + {r}) + 180000000) * {n}) div 360000001, {n - 1})))")))
-    pred = _disk_rect_pred_sql(r, n, engine="spark")
-    return (cand.filter(F.expr(pred))
+    cand = explode_bbox_cells(base, F.col("py") - r, F.col("py") + r,
+                              F.col("px") - r, F.col("px") + r, res)
+    return (cand.filter(F.expr(_disk_rect_pred_sql(r, res, "spark")))
             .select("point_id",
-                    (F.lit(1 << (2 * res)) + F.col("iy") * F.lit(n)
-                     + F.col("ix")).cast("long").alias("cell")))
+                    cell_from_iy_ix(F.col("iy"), F.col("ix"), res).alias("cell")))
 
 
-def _disk_rect_pred_sql(r: int, n: int, engine: str) -> str:
+def _disk_rect_pred_sql(r: int, res: int, engine: str) -> str:
     """squared-distance(point, rect) <= r^2 over columns
-    (py, px, iy, ix) — engine-neutral integer SQL (the `div`/`//`
-    spelling is the only dialect difference)."""
-    d = {"spark": " div ", "duckdb": " // "}[engine]
-    lat_lo = f"((iy * 180000001 + {n - 1}){d}{n} - 90000000)"
-    lat_hi = f"(((iy + 1) * 180000001 + {n - 1}){d}{n} - 1 - 90000000)"
-    lon_lo = f"((ix * 360000001 + {n - 1}){d}{n} - 180000000)"
-    lon_hi = f"(((ix + 1) * 360000001 + {n - 1}){d}{n} - 1 - 180000000)"
+    (py, px, iy, ix) — engine-neutral integer SQL."""
+    lat_lo, lat_hi, lon_lo, lon_hi = cell_bounds_sql("iy", "ix", res, engine)
     dy = f"greatest(greatest({lat_lo} - py, py - {lat_hi}), 0)"
     dx = f"greatest(greatest({lon_lo} - px, px - {lon_hi}), 0)"
     return f"(({dy}) * ({dy}) + ({dx}) * ({dx})) <= {r * r}"
@@ -453,31 +375,14 @@ def _disk_rect_pred_sql(r: int, n: int, engine: str) -> str:
 def cover_disk_cells_sql(points_sql: str, radius_us: int, res: int) -> str:
     """DuckDB twin of :func:`cover_disk_cells`. ``points_sql`` must
     yield ``(point_id, lat_us, lon_us)``."""
-    n = 1 << res
     r = int(radius_us)
-    pred = _disk_rect_pred_sql(r, n, engine="duckdb")
+    pts = (f"(select point_id, lat_us as py, lon_us as px, lat_us - {r} as ylo,"
+           f" lat_us + {r} as yhi, lon_us - {r} as xlo, lon_us + {r} as xhi"
+           f" from ({points_sql}))")
     return f"""
-    with _p as (select point_id, lat_us as py, lon_us as px
-                from ({points_sql})),
-    _c1 as (
-      select point_id, py, px,
-             unnest(generate_series(
-               greatest((((py - {r}) + 90000000) * {n}) // 180000001, 0),
-               least((((py + {r}) + 90000000) * {n}) // 180000001, {n - 1})))
-             as iy
-      from _p
-    ),
-    _c2 as (
-      select point_id, py, px, iy,
-             unnest(generate_series(
-               greatest((((px - {r}) + 180000000) * {n}) // 360000001, 0),
-               least((((px + {r}) + 180000000) * {n}) // 360000001, {n - 1})))
-             as ix
-      from _c1
-    )
-    select point_id, {1 << (2 * res)} + iy * {n} + ix as cell
-    from _c2
-    where {pred}
+    select point_id, {cell_from_iy_ix_sql("iy", "ix", res)} as cell
+    from ({bbox_cells_sql(pts, "ylo", "yhi", "xlo", "xhi", res)})
+    where {_disk_rect_pred_sql(r, res, "duckdb")}
     """
 
 
@@ -501,7 +406,6 @@ def moran_i(points: DataFrame, res: int,
     the occupied bbox), one bounded ring explode + equi-join, three
     scalar aggregates. No cross join, no window.
     """
-    n = 1 << res
     counts = (points
               .select(cell_encode(F.col(lat_col), F.col(lon_col), res)
                       .alias("cell"))
@@ -553,7 +457,6 @@ def local_moran(points: DataFrame, res: int,
     the statistic itself is cross-engine hashable (inference thresholds
     are a presentation concern).
     """
-    n_side = 1 << res
     counts = (points
               .select(cell_encode(F.col(lat_col), F.col(lon_col), res)
                       .alias("cell"))
@@ -592,7 +495,6 @@ def local_moran(points: DataFrame, res: int,
 
 def local_moran_sql_duckdb(points_sql: str, res: int) -> str:
     """DuckDB twin of :func:`local_moran`."""
-    n = 1 << res
     base = 1 << (2 * res)
     cell = cell_id_sql("lat_us", "lon_us", res, "duckdb")
     return f"""
@@ -610,10 +512,7 @@ def local_moran_sql_duckdb(points_sql: str, res: int) -> str:
     _nb as (
       select a.cell as cell, sum(b.xr) as sxb
       from _r a join _r b on a.cell <> b.cell
-      where abs(((a.cell - {base}) // {n}) - ((b.cell - {base}) // {n})) <= 1
-        and (abs(((a.cell - {base}) % {n}) - ((b.cell - {base}) % {n})) <= 1
-             or abs(((a.cell - {base}) % {n}) - ((b.cell - {base}) % {n}))
-                = {n - 1})
+      where {cells_adjacent_sql("a.cell", "b.cell", res, "duckdb")}
       group by a.cell
     )
     select r.cell, r.x, r.xr * n.sxb as lisa_num,
@@ -631,7 +530,6 @@ def moran_i_sql_duckdb(points_sql: str, res: int) -> str:
     """DuckDB twin of :func:`moran_i` (same lattice, same clamp/wrap
     adjacency, same scaled-integer floor arithmetic).
     ``points_sql`` must yield (lat_us, lon_us)."""
-    n = 1 << res
     base = 1 << (2 * res)
     cell = cell_id_sql("lat_us", "lon_us", res, "duckdb")
     return f"""
@@ -648,10 +546,7 @@ def moran_i_sql_duckdb(points_sql: str, res: int) -> str:
     _adj as (
       select a.xr as xa, b.xr as xb
       from _r a join _r b on a.cell <> b.cell
-      where abs(((a.cell - {base}) // {n}) - ((b.cell - {base}) // {n})) <= 1
-        and (abs(((a.cell - {base}) % {n}) - ((b.cell - {base}) % {n})) <= 1
-             or abs(((a.cell - {base}) % {n}) - ((b.cell - {base}) % {n}))
-                = {n - 1})
+      where {cells_adjacent_sql("a.cell", "b.cell", res, "duckdb")}
     ),
     _s as (select count(*) as w, sum(xa * xb) as num from _adj),
     _d as (select sum(xr * xr) as den from _r)
@@ -669,12 +564,8 @@ def grid_dbscan_edges_sql(core_sql: str, res: int) -> str:
     the same ring semantics as :func:`cell_neighbors`: latitude rows
     clamp (boundary rows have no wrap partner), longitude wraps mod
     ``2^res``. Feed to ``components_sql_duckdb``."""
-    n = 1 << res
-    base = 1 << (2 * res)
     return f"""
     select a.cell as u, b.cell as v
     from ({core_sql}) a join ({core_sql}) b on a.cell <> b.cell
-    where abs(((a.cell - {base}) // {n}) - ((b.cell - {base}) // {n})) <= 1
-      and (abs(((a.cell - {base}) % {n}) - ((b.cell - {base}) % {n})) <= 1
-           or abs(((a.cell - {base}) % {n}) - ((b.cell - {base}) % {n})) = {n - 1})
+    where {cells_adjacent_sql("a.cell", "b.cell", res, "duckdb")}
     """

@@ -31,10 +31,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-_LAT_SPAN = 180_000_001
-_LON_SPAN = 360_000_001
-_LAT_MIN = -90_000_000
-_LON_MIN = -180_000_000
+from zen3geo_spark.functions.geo import (
+    cell_encode, cell_from_iy_ix, cell_ix_sql, cell_iy_sql, cell_neighbors,
+    explode_bbox_cells,
+)
 
 T_SCALE = 64  # fixed-point projection resolution
 
@@ -51,40 +51,20 @@ def map_match(points: DataFrame, segments: DataFrame,
     ``d2`` the snapped squared distance in udeg^2 (T^2-descaled,
     non-negative integer division).
     """
-    n = 1 << res
     T = T_SCALE
-
-    def iy(c):
-        return F.expr(f"(({c}) - ({_LAT_MIN})) * {n} div {_LAT_SPAN}")
-
-    def ix(c):
-        return F.expr(f"(({c}) - ({_LON_MIN})) * {n} div {_LON_SPAN}")
-
     # segment registration: every cell the bbox overlaps
-    seg = (segments
-           .withColumn("_iy0", iy("least(y1, y2)"))
-           .withColumn("_iy1", iy("greatest(y1, y2)"))
-           .withColumn("_ix0", ix("least(x1, x2)"))
-           .withColumn("_ix1", ix("greatest(x1, x2)"))
-           .withColumn("_giy", F.explode(F.expr("sequence(_iy0, _iy1)")))
-           .withColumn("_gix", F.explode(F.expr("sequence(_ix0, _ix1)")))
-           .select("seg_id", "x1", "y1", "x2", "y2",
-                   (F.col("_giy") * n + F.col("_gix")).alias("block")))
-    # point probe: the 3x3 ring (clamp lat, wrap lon) as an in-row
-    # array_distinct — no dedup shuffle
-    ring = []
-    for dy_ in (-1, 0, 1):
-        for dx_ in (-1, 0, 1):
-            ny = F.greatest(F.lit(0), F.least(F.lit(n - 1),
-                                              F.col("_piy") + dy_))
-            nx = (F.col("_pix") + dx_ + n) % n
-            ring.append(ny * n + nx)
-    pt = (points
-          .withColumn("_piy", iy("lat_us")).withColumn("_pix", ix("lon_us"))
-          .select("point_id", "lat_us", "lon_us",
-                  F.explode(F.array_distinct(F.array(*ring))).alias("block")))
+    seg = explode_bbox_cells(segments, F.least("y1", "y2"), F.greatest("y1", "y2"),
+                             F.least("x1", "x2"), F.greatest("x1", "x2"), res)
+    seg = seg.select("seg_id", "x1", "y1", "x2", "y2",
+                     cell_from_iy_ix(F.col("iy"), F.col("ix"), res).alias("cell"))
+    # point probe: the 3x3 ring as an in-row array_distinct — no dedup
+    # shuffle
+    pt = points.select(
+        "point_id", "lat_us", "lon_us",
+        F.explode(cell_neighbors(cell_encode("lat_us", "lon_us", res), res))
+        .alias("cell"))
 
-    c = pt.join(seg, "block")
+    c = pt.join(seg, "cell")
     dx, dy = F.col("x2") - F.col("x1"), F.col("y2") - F.col("y1")
     # wrap the point->anchor longitude delta onto (-180e6, 180e6]: ring
     # probes wrap across the antimeridian, so the raw delta can be
@@ -121,10 +101,10 @@ def map_match_sql(points_sql: str, segments_sql: str, res: int = 6) -> str:
     T = T_SCALE
 
     def iy(c):
-        return f"((({c}) - ({_LAT_MIN})) * {n} // {_LAT_SPAN})"
+        return cell_iy_sql(c, res, "duckdb")
 
     def ix(c):
-        return f"((({c}) - ({_LON_MIN})) * {n} // {_LON_SPAN})"
+        return cell_ix_sql(c, res, "duckdb")
 
     ring_ix_hit = " or ".join(
         f"((p.pix + {d} + {n}) % {n}) between s.six0 and s.six1"

@@ -29,32 +29,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# world bounds in micro-degrees
-_LAT_SPAN = 180_000_001
-_LON_SPAN = 360_000_001
-_LAT_MIN = -90_000_000
-_LON_MIN = -180_000_000
+from zen3geo_spark.functions.geo import (
+    cell_encode, cell_from_iy_ix, explode_bbox_cells,
+)
 
 
 def _cell_ids(df: DataFrame, res: int, pfx: str) -> DataFrame:
     """Explode a rect relation (id, x1, y1, x2, y2) to one row per
     overlapped grid cell at ``res`` (the registration step)."""
-    n = 1 << res
+    return (explode_bbox_cells(df, f"{pfx}y1", f"{pfx}y2", f"{pfx}x1",
+                               f"{pfx}x2", res)
+            .withColumn("cell", cell_from_iy_ix(F.col("iy"), F.col("ix"), res))
+            .drop("iy", "ix"))
 
-    # integer cell-index ranges via the same scaling as cell_encode
-    def iy(c):
-        return F.expr(f"(({c}) - ({_LAT_MIN})) * {n} div {_LAT_SPAN}")
 
-    def ix(c):
-        return F.expr(f"(({c}) - ({_LON_MIN})) * {n} div {_LON_SPAN}")
-
-    return (df
-            .withColumn("_iy0", iy(f"{pfx}y1")).withColumn("_iy1", iy(f"{pfx}y2"))
-            .withColumn("_ix0", ix(f"{pfx}x1")).withColumn("_ix1", ix(f"{pfx}x2"))
-            .withColumn("_giy", F.explode(F.expr("sequence(_iy0, _iy1)")))
-            .withColumn("_gix", F.explode(F.expr("sequence(_ix0, _ix1)")))
-            .withColumn("block", F.col("_giy") * n + F.col("_gix"))
-            .drop("_iy0", "_iy1", "_ix0", "_ix1"))
+def _ref_cell(res: int):
+    """Cell of the bbox intersection's min corner: the reference-point
+    rule lets only this cell emit a pair (no distinct needed)."""
+    return cell_encode(F.greatest("ay1", "by1"), F.greatest("ax1", "bx1"), res)
 
 
 def rect_overlay_join(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
@@ -67,20 +59,15 @@ def rect_overlay_join(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
     for every pair with POSITIVE intersection area (open-interval
     semantics: edge-touching rects do not match), exact µdeg² bigint.
     """
-    n = 1 << res
     ra = _cell_ids(a, res, "a")
     rb = _cell_ids(b, res, "b")
-    j = ra.join(rb, "block")
+    j = ra.join(rb, "cell")
     ox1 = F.greatest("ax1", "bx1")
     oy1 = F.greatest("ay1", "by1")
     wdt = F.least("ax2", "bx2") - ox1
     hgt = F.least("ay2", "by2") - oy1
-    # reference point: only the cell containing the intersection's min
-    # corner emits the pair (kills duplicates without a distinct)
-    ref_iy = F.expr(f"((greatest(ay1, by1)) - ({_LAT_MIN})) * {n} div {_LAT_SPAN}")
-    ref_ix = F.expr(f"((greatest(ax1, bx1)) - ({_LON_MIN})) * {n} div {_LON_SPAN}")
     return (j.filter((wdt > 0) & (hgt > 0)
-                     & (F.col("block") == ref_iy * n + ref_ix))
+                     & (F.col("cell") == _ref_cell(res)))
             .select("a_id", "b_id", (wdt * hgt).cast("long").alias("inter_area")))
 
 
@@ -145,7 +132,6 @@ def segment_intersect_join(a: DataFrame, b: DataFrame,
     the DIRECT theta join, so a hash match proves the blocked plan
     exact. Output: (a_id, b_id), one row per properly-crossing pair.
     """
-    n = 1 << res
     na = a.selectExpr("a_id", "asx0", "asy0", "asx1", "asy1",
                       "least(asx0, asx1) as ax1",
                       "least(asy0, asy1) as ay1",
@@ -158,16 +144,14 @@ def segment_intersect_join(a: DataFrame, b: DataFrame,
                       "greatest(bsy0, bsy1) as by2")
     ra = _cell_ids(na, res, "a")
     rb = _cell_ids(nb, res, "b")
-    j = ra.join(F.broadcast(rb), "block")
+    j = ra.join(F.broadcast(rb), "cell")
     # closed-interval bbox overlap (zero-width bboxes of axis-parallel
     # segments still meet); reference point = bbox-intersection min corner
-    ref_iy = F.expr(f"((greatest(ay1, by1)) - ({_LAT_MIN})) * {n} div {_LAT_SPAN}")
-    ref_ix = F.expr(f"((greatest(ax1, bx1)) - ({_LON_MIN})) * {n} div {_LON_SPAN}")
     cross = proper_cross_sql("asx0", "asy0", "asx1", "asy1",
                              "bsx0", "bsy0", "bsx1", "bsy1")
     return (j.filter((F.least("ax2", "bx2") >= F.greatest("ax1", "bx1"))
                      & (F.least("ay2", "by2") >= F.greatest("ay1", "by1"))
-                     & (F.col("block") == ref_iy * n + ref_ix))
+                     & (F.col("cell") == _ref_cell(res)))
             .filter(F.expr(cross))
             .select("a_id", "b_id"))
 
@@ -211,7 +195,6 @@ def polygon_intersect_join(ea: DataFrame, eb: DataFrame,
     DuckDB twin (:func:`polygon_intersect_sql`) is the direct theta
     join, so a hash match proves the blocked plan exact.
     """
-    n = 1 << res
 
     def meta(e, pid, pfx):
         x0, y0, x1, y1 = (f"{pfx}ex0", f"{pfx}ey0", f"{pfx}ex1", f"{pfx}ey1")
@@ -226,12 +209,10 @@ def polygon_intersect_join(ea: DataFrame, eb: DataFrame,
     ma, mb = meta(ea, "a_id", "a"), meta(eb, "b_id", "b")
     ca = _cell_ids(ma, res, "a")
     cb = _cell_ids(mb, res, "b")
-    ref_iy = F.expr(f"((greatest(ay1, by1)) - ({_LAT_MIN})) * {n} div {_LAT_SPAN}")
-    ref_ix = F.expr(f"((greatest(ax1, bx1)) - ({_LON_MIN})) * {n} div {_LON_SPAN}")
-    cand = (ca.join(F.broadcast(cb), "block")
+    cand = (ca.join(F.broadcast(cb), "cell")
             .filter((F.least("ax2", "bx2") >= F.greatest("ax1", "bx1"))
                     & (F.least("ay2", "by2") >= F.greatest("ay1", "by1"))
-                    & (F.col("block") == ref_iy * n + ref_ix))
+                    & (F.col("cell") == _ref_cell(res)))
             .select("a_id", "b_id", "avx", "avy", "bvx", "bvy")
             .localCheckpoint(eager=False))
 

@@ -38,12 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from zen3geo_spark.functions.geo import (
+    cell_center_sql,
     cell_encode,
     cell_id_sql,
+    cell_iy_ix_sql,
     cell_neighbors,
+    cells_adjacent_sql,
 )
-
-_DIV = {"spark": " div ", "duckdb": " // "}
 
 
 # ---------------------------------------------------------------------------
@@ -310,15 +311,10 @@ def idw_accumulate(points: DataFrame, res: int, value_col: str,
     cand = pts.select(
         F.explode(cell_neighbors(F.col("_pcell"), res)).alias("cell"),
         "lat_us", "lon_us", F.col(value_col).alias("_v"))
-    n = 1 << res
-    base = 1 << (2 * res)
-    cand = (cand
-            .withColumn("lat_c_us", F.expr(
-                f"((2 * ((cell - {base}) div {n}) + 1) * 180000001) "
-                f"div {2 * n} - 90000000"))
-            .withColumn("lon_c_us", F.expr(
-                f"((2 * ((cell - {base}) - ((cell - {base}) div {n}) * {n}) + 1)"
-                f" * 360000001) div {2 * n} - 180000000")))
+    lat_c, lon_c = cell_center_sql(*cell_iy_ix_sql("cell", res, "spark"), res,
+                                   "spark")
+    cand = (cand.withColumn("lat_c_us", F.expr(lat_c))
+            .withColumn("lon_c_us", F.expr(lon_c)))
     d2 = ((F.col("lat_us") - F.col("lat_c_us"))
           * (F.col("lat_us") - F.col("lat_c_us"))
           + (F.col("lon_us") - F.col("lon_c_us"))
@@ -340,7 +336,8 @@ def idw_accumulate_sql(points_sql: str, res: int, value_col: str,
     exploded ``cell_neighbors`` produces."""
     n = 1 << res
     base = 1 << (2 * res)
-    pcell = cell_id_sql("p.lat_us", "p.lon_us", res, "duckdb")
+    lat_c, lon_c = cell_center_sql(*cell_iy_ix_sql("cell", res, "duckdb"), res,
+                                   "duckdb")
     return f"""
     with _p as ({points_sql}),
     _pc as (select *, {cell_id_sql('lat_us', 'lon_us', res, 'duckdb')} as pcell
@@ -349,17 +346,10 @@ def idw_accumulate_sql(points_sql: str, res: int, value_col: str,
     _cand as (
       select t.cell, p.lat_us, p.lon_us, p.{value_col} as _v
       from _grid t join _pc p
-        on abs(((t.cell - {base}) // {n}) - ((p.pcell - {base}) // {n})) <= 1
-       and (abs(((t.cell - {base}) % {n}) - ((p.pcell - {base}) % {n})) <= 1
-            or abs(((t.cell - {base}) % {n}) - ((p.pcell - {base}) % {n}))
-               = {n - 1})
+        on {cells_adjacent_sql("t.cell", "p.pcell", res, "duckdb")}
     ),
     _ctr as (
-      select *,
-             ((2 * ((cell - {base}) // {n}) + 1) * 180000001)
-               // {2 * n} - 90000000 as lat_c_us,
-             ((2 * ((cell - {base}) - ((cell - {base}) // {n}) * {n}) + 1)
-               * 360000001) // {2 * n} - 180000000 as lon_c_us
+      select *, {lat_c} as lat_c_us, {lon_c} as lon_c_us
       from _cand
     ),
     _w as (

@@ -39,12 +39,11 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from zen3geo_spark.operators._util import pair_all
-from zen3geo_spark.operators.spatial_join import ring_edges
+from zen3geo_spark.operators.spatial_join import flat_parts, ring_edges
 
 RASTER_SCHEMA = "canvas_id long, row int, col int, value double"
 
@@ -322,19 +321,6 @@ def _polygon_kernel(width, height, xmin, ymin, xmax, ymax, x, y,
     return np.stack([ci + c0, ri + r0], axis=1)
 
 
-def _flat_parts(parts: pa.Array) -> tuple:
-    """``(x, y, ring_sizes, n_rings)`` of a ``parts`` column
-    (``array<array<struct<x, y>>>``) straight from its Arrow offsets: every
-    vertex flat, each ring's size, each row's ring count; a null list
-    counts as empty."""
-    rings = parts.flatten()
-    pts = rings.flatten()
-    x, y = (pc.struct_field(pts, c).cast(pa.float64()).to_numpy(zero_copy_only=False)
-            for c in ("x", "y"))
-    return (x, y, pc.fill_null(pc.list_value_length(rings), 0).to_numpy(),
-            pc.fill_null(pc.list_value_length(parts), 0).to_numpy())
-
-
 def _burn_batches(kernel, with_value: bool):
     """mapInArrow body: one kernel call per (canvas, geometry) row, one
     ``(canvas_id, row, col, value)`` batch out per batch in. Each burned
@@ -342,7 +328,7 @@ def _burn_batches(kernel, with_value: bool):
     reductions) or 1.0 (presence/count)."""
     def burn(batches):
         for b in batches:
-            x, y, ring_sizes, n_rings = _flat_parts(b.column("parts"))
+            x, y, ring_sizes, n_rings = flat_parts(b.column("parts"))
             ring_end = np.cumsum(n_rings)
             vert_end = np.r_[0, np.cumsum(ring_sizes)]
             cid, w, h, x0, y0, x1, y1 = (

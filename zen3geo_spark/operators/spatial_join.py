@@ -15,12 +15,13 @@ the 10^12-row shape needs an equi-join plan:
    and the candidates carry ids, cells and coordinates only, never
    polygon vertices;
 4. exact even-odd ray-cast refine, vectorized numpy over (points × edges)
-   per polygon (``pip_inside``) against one edge table built once from
-   ``parts`` (``pip_edges``). After a broadcast join the candidates are
-   refined map-side (``mapInArrow``, no shuffle) against edges collected
-   once on the driver and shipped in the UDF closure; after a shuffle
-   join they are collected per polygon, joined to its edge row and
-   refined with ``mapInArrow``, one row per polygon group;
+   per polygon (``pip_inside``) against ring edges decoded from the
+   polygon's ``parts`` (``_parts_edges``). After a broadcast join the
+   candidates are refined map-side (``mapInArrow``, no shuffle) against
+   edges collected once on the driver and shipped in the UDF closure;
+   after a shuffle join they are collected per polygon, joined to its
+   ``parts`` row and refined with ``mapInArrow``, one row per polygon
+   group;
 5. hot-cell salting, shuffle join only: cells whose point count exceeds a
    threshold get a salt ∈ [0,F); the polygon-cell side replicates F ways
    and so do the edge rows of polygons touching a hot cell. Identical
@@ -43,26 +44,23 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from zen3geo_spark.functions.geo import cell_encode, cell_ix_sql, cell_iy_sql
+from zen3geo_spark.functions.geo import (
+    cell_encode, cell_from_iy_ix, cell_ix_sql, cell_iy_sql, explode_bbox_cells,
+    min_cell_height_us, ring_adjacent_sql,
+)
 
 
 def polygon_cover_cells(polys: DataFrame, res: int) -> DataFrame:
     """Covering cells (bbox cover) per polygon at resolution ``res``.
 
-    Input needs micro-degree bbox cols (minx_us, miny_us, maxx_us, maxy_us).
+    Input needs micro-degree bbox cols (minx_us, miny_us, maxx_us, maxy_us);
+    output is the input's columns plus ``cell``, one row per cell of the
+    bbox (clamped to the grid).
     """
-    iy0 = F.expr(cell_iy_sql("miny_us", res, "spark"))
-    iy1 = F.expr(cell_iy_sql("maxy_us", res, "spark"))
-    ix0 = F.expr(cell_ix_sql("minx_us", res, "spark"))
-    ix1 = F.expr(cell_ix_sql("maxx_us", res, "spark"))
-    base = F.lit(1 << (2 * res))
-    n = F.lit(1 << res)
-    return (
-        polys.select("*", F.explode(F.sequence(iy0, iy1)).alias("_iy"))
-        .select("*", F.explode(F.sequence(ix0, ix1)).alias("_ix"))
-        .select("*", (base + F.col("_iy") * n + F.col("_ix")).alias("cell"))
-        .drop("_iy", "_ix")
-    )
+    cells = explode_bbox_cells(polys, "miny_us", "maxy_us", "minx_us",
+                               "maxx_us", res)
+    return (cells.withColumn("cell", cell_from_iy_ix(F.col("iy"), F.col("ix"), res))
+            .drop("iy", "ix"))
 
 
 def tag_point_cells(points: DataFrame, res: int,
@@ -72,20 +70,6 @@ def tag_point_cells(points: DataFrame, res: int,
 
 PIP_SCHEMA_SUFFIX = "point_id long, geom_id long, lat_us long, lon_us long"
 _PIP_COLS = ["point_id", "geom_id", "lat_us", "lon_us"]
-
-
-def pip_edges(polys: DataFrame) -> DataFrame:
-    """The refine's polygon side, one row per polygon: ``geom_id``, every
-    ring's vertices as flat ``x``/``y`` double arrays (rings concatenated
-    in order) and ``ring_sizes``. Built in SQL from ``parts``; nothing
-    downstream of it reads ``parts``."""
-    flat = F.flatten("parts")
-    return polys.select(
-        "geom_id",
-        F.transform(flat, lambda p: p.x.cast("double")).alias("x"),
-        F.transform(flat, lambda p: p.y.cast("double")).alias("y"),
-        F.transform("parts", F.size).alias("ring_sizes"),
-    )
 
 
 def ring_edges(x: np.ndarray, y: np.ndarray, ring_sizes) -> tuple:
@@ -98,6 +82,29 @@ def ring_edges(x: np.ndarray, y: np.ndarray, ring_sizes) -> tuple:
     full = sizes > 0
     nxt[ends[full] - 1] = (ends - sizes)[full]
     return x, y, x[nxt], y[nxt]
+
+
+def flat_parts(parts: pa.Array) -> tuple:
+    """``(x, y, ring_sizes, n_rings)`` of a ``parts`` column
+    (``array<array<struct<x, y>>>``) straight from its Arrow offsets: every
+    vertex flat as float64, each ring's size, each row's ring count; a null
+    list counts as empty."""
+    rings = parts.flatten()
+    pts = rings.flatten()
+    x, y = (pc.struct_field(pts, c).cast(pa.float64()).to_numpy(zero_copy_only=False)
+            for c in ("x", "y"))
+    return (x, y, pc.fill_null(pc.list_value_length(rings), 0).to_numpy(),
+            pc.fill_null(pc.list_value_length(parts), 0).to_numpy())
+
+
+def _parts_edges(parts: pa.ChunkedArray) -> tuple[np.ndarray, tuple]:
+    """Vertices per row of a ``parts`` column, and every row's ring edges
+    as flat ``(x1, y1, x2, y2)`` arrays in row order."""
+    x, y, ring_sizes, n_rings = flat_parts(parts.combine_chunks())
+    vert_end = np.r_[0, np.cumsum(ring_sizes)]
+    ring_end = np.cumsum(n_rings)
+    return (vert_end[ring_end] - vert_end[ring_end - n_rings],
+            ring_edges(x, y, ring_sizes))
 
 
 def pip_inside(px: np.ndarray, py: np.ndarray, edges: tuple) -> np.ndarray:
@@ -143,28 +150,11 @@ def pip_inside(px: np.ndarray, py: np.ndarray, edges: tuple) -> np.ndarray:
     return (crossings % 2) == 1
 
 
-def _flat_lists(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
-    """(values, per-row lengths) of a list column, straight from its Arrow
-    buffers; a null list counts as empty."""
-    arr = col.combine_chunks()
-    lengths = pc.fill_null(pc.list_value_length(arr), 0)
-    return arr.flatten().to_numpy(), lengths.to_numpy()
-
-
-def _table_edges(t: pa.Table) -> tuple[np.ndarray, tuple]:
-    """Vertices per row of an edge table, and every row's edges as flat
-    ``(x1, y1, x2, y2)`` arrays in row order."""
-    x, n_vert = _flat_lists(t.column("x"))
-    y, _ = _flat_lists(t.column("y"))
-    ring_sizes, _ = _flat_lists(t.column("ring_sizes"))
-    return n_vert, ring_edges(x, y, ring_sizes)
-
-
 def _edge_index(edges: DataFrame) -> tuple:
     """Every polygon's edges collected once on the driver: geom_ids sorted,
     each one's (start, length) into the flat x1/y1/x2/y2 arrays."""
     t = edges.toArrow()
-    n_vert, flat = _table_edges(t)
+    n_vert, flat = _parts_edges(t.column("parts"))
     gid = t.column("geom_id").to_numpy()
     order = np.argsort(gid)
     starts = np.cumsum(n_vert) - n_vert
@@ -216,12 +206,12 @@ def _refine_map_side(index: tuple):
 def _refine_grouped(batches):
     """mapInArrow body for the shuffle path: each row is one (geom_id[,
     salt]) group, its candidates collected in ``pts`` next to its
-    polygon's edge arrays; one kernel call per row."""
+    polygon's ``parts``; one kernel call per row."""
     for b in batches:
         if b.num_rows == 0:
             continue
         t = pa.Table.from_batches([b])
-        n_vert, edges = _table_edges(t)
+        n_vert, edges = _parts_edges(t.column("parts"))
         pts = t.column("pts").combine_chunks()
         n_pts = pc.list_value_length(pts).to_numpy()
         flat = pts.flatten()
@@ -288,7 +278,7 @@ def points_in_polygons(points: DataFrame, polys: DataFrame, res: int = 7,
     pts = tag_point_cells(points, res)
     pcs = polygon_cover_cells(
         polys.select("geom_id", "minx_us", "miny_us", "maxx_us", "maxy_us"), res)
-    edges = pip_edges(polys)
+    edges = polys.select("geom_id", "parts")
     if broadcast_polys is None:
         # LIMIT-bounded planning probe: costs at most BROADCAST_CELL_ROWS exploded
         # rows, never a full count of a huge polygon table
@@ -327,7 +317,7 @@ def points_in_polygons(points: DataFrame, polys: DataFrame, res: int = 7,
     cand = pts.join(pcs, ["cell", *keys[1:]]).filter(in_bbox).select(
         *cand_cols, *keys[1:])
     # one row per (geom_id[, salt]) group, its candidates collected next
-    # to its polygon's edge arrays: an inner join, so a polygon without
+    # to its polygon's ``parts``: an inner join, so a polygon without
     # candidates never reaches Python. Grouping on salt keeps a hot
     # polygon's refine work split across salt_factor tasks (the whole
     # point of the salt)
@@ -411,12 +401,11 @@ def ring_guarantee_udeg(res: int) -> int:
 
     A point outside the ring differs by ≥2 in lat row index (or lon col
     index), so at least one full intermediate cell separates the two —
-    cell extents are floor-or-ceil of span/2^res, minus slack for the
-    integer grid boundaries. Lat rows are the narrower axis, hence the
-    180000001 numerator. Conservative by construction: underestimating
-    only triggers a harmless extra escalation level.
+    the shortest cell's height, minus slack for the integer grid
+    boundaries. Conservative by construction: underestimating only
+    triggers a harmless extra escalation level.
     """
-    return max((180000001 >> res) - 2, 0)
+    return max(min_cell_height_us(res) - 2, 0)
 
 
 def knn_join_cells(queries: DataFrame, targets: DataFrame, k: int, res: int,
@@ -598,7 +587,6 @@ def radius_join_sql_duckdb(points_rel: str, radius_m: float, res: int,
     ix = cell_ix_sql("lon_us", res, "duckdb")
     hav = haversine_m_sql("a.lat_us", "a.lon_us", "b.lat_us", "b.lon_us",
                           "duckdb")
-    wrap = (1 << res) - 1
     return f"""
 , pr as (
   select point_id, lat_us, lon_us, {iy} as iy, {ix} as ix
@@ -607,8 +595,7 @@ def radius_join_sql_duckdb(points_rel: str, radius_m: float, res: int,
 select a.point_id as id_a, b.point_id as id_b,
        cast(floor({hav} / 100.0) as bigint) as dist_hm
 from pr a join pr b
-  on abs(a.iy - b.iy) <= 1
- and (abs(a.ix - b.ix) <= 1 or abs(a.ix - b.ix) = {wrap})
+  on {ring_adjacent_sql(("a.iy", "a.ix"), ("b.iy", "b.ix"), res)}
  and a.point_id < b.point_id
 where {hav} <= {float(radius_m)}
 """

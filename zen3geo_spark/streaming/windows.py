@@ -15,8 +15,47 @@ the classic lag/cumsum gaps-and-islands rewrite produce identical rows.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _source_dir(path: str) -> str:
+    """``FileStreamSource`` lists a DIRECTORY: when ``path`` is a single
+    parquet file (as each table of the test data is), a per-path
+    directory under /tmp holding one symlink to it stands in — the file
+    itself is never copied."""
+    if not os.path.isfile(path):
+        return path
+    tag = hashlib.md5(path.encode()).hexdigest()[:12]
+    src_dir = f"/tmp/zen3geo_stream_src_{tag}"
+    os.makedirs(src_dir, exist_ok=True)
+    link = os.path.join(src_dir, "part-0.parquet")
+    if not os.path.lexists(link):
+        os.symlink(path, link)
+    return src_dir
+
+
+def _run_to_memory(spark, stream: DataFrame, name: str, mode: str):
+    """Run ``stream`` into the memory sink ``name`` under ``availableNow``
+    (stopping a running query of that name first) and return the sink's
+    table. The sink keeps its rows in the session's memory, not in the
+    checkpoint, so the checkpoint is a temporary directory removed once
+    the query ends."""
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
+    with tempfile.TemporaryDirectory(prefix="zen3geo_ckpt_") as ckpt:
+        (stream.writeStream.format("memory").queryName(name)
+         .outputMode(mode)
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True)
+         .start()
+         .awaitTermination())
+    return spark.table(name)
 
 
 def with_watermark_ts(events: DataFrame, watermark: str = "2 hours",
@@ -109,36 +148,13 @@ def stream_tumbling_to_memory(spark, events_path: str,
     resume tests. Memory sink is driver-sized: the OUTPUT here is
     windows × event_types (tiny), never the event stream.
 
-    ``FileStreamSource`` lists a DIRECTORY; when ``events_path`` is a
-    single parquet file (the driver's testdata layout), a per-path
-    symlink directory under /tmp stands in — the file itself is never
-    copied.
+    A single parquet file is streamed through a symlink directory
+    (:func:`_source_dir`).
     """
-    import hashlib
-    import os
-    import tempfile
-
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     schema = spark.read.parquet(events_path).schema
-    src_dir = events_path
-    if os.path.isfile(events_path):
-        tag = hashlib.md5(events_path.encode()).hexdigest()[:12]
-        src_dir = f"/tmp/zen3geo_stream_src_{tag}"
-        os.makedirs(src_dir, exist_ok=True)
-        link = os.path.join(src_dir, "part-0.parquet")
-        if not os.path.lexists(link):
-            os.symlink(events_path, link)
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    q = (tumbling_event_stats(stream, window)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="zst_ckpt_"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.table(name)
+    stream = spark.readStream.schema(schema).parquet(_source_dir(events_path))
+    return _run_to_memory(spark, tumbling_event_stats(stream, window), name,
+                          "complete")
 
 
 def windowed_anomaly(events: DataFrame, window: str = "6 hours",
@@ -225,15 +241,10 @@ def stream_cell_counts_to_memory(spark, pages_dir: str, res: int = 6,
     must emit exactly the batch aggregate, so the micro-batch execution
     of the extraction+index pipeline itself is value-hash-checkable.
     Memory sink holds cell-cardinality rows (<= 4^res), never pages."""
-    import tempfile
-
     from zen3geo_spark.functions.geo import (
         cell_encode, extract_first_geotag, micro_from_str,
     )
 
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     schema = spark.read.parquet(pages_dir).schema
     stream = spark.readStream.schema(schema).parquet(pages_dir)
     lat_s, lon_s = extract_first_geotag(F.col("text"))
@@ -244,13 +255,7 @@ def stream_cell_counts_to_memory(spark, pages_dir: str, res: int = 6,
     agg = (pts.groupBy(
         cell_encode(F.col("lat_us"), F.col("lon_us"), res).alias("cell"))
         .count().withColumnRenamed("count", "n_pages"))
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="zsc_ckpt_"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _run_to_memory(spark, agg, name, "complete")
 
 
 def stream_dedup_to_memory(spark, docs_dir: str, text_col: str = "text",
@@ -268,26 +273,15 @@ def stream_dedup_to_memory(spark, docs_dir: str, text_col: str = "text",
     was kept). At 10^12 rows the state is fingerprint-cardinality and
     HDFS-backed; a production run bounds it with a watermark on the
     ingest timestamp (dropDuplicatesWithinWatermark)."""
-    import tempfile
-
     from zen3geo_spark.functions.text import fingerprint
 
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     schema = spark.read.parquet(docs_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(docs_dir))
     kept = (stream.select(fingerprint(F.col(text_col)).alias("fp"))
             .dropDuplicates(["fp"]))
-    q = (kept.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="zsd_ckpt_"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _run_to_memory(spark, kept, name, "append")
 
 
 def stream_pair_join_to_memory(spark, events_path: str,
@@ -309,22 +303,8 @@ def stream_pair_join_to_memory(spark, events_path: str,
     value-hash-checkable against the DuckDB twin. Output is id pairs
     only (ints ⇒ hash-exact), driver-sized at the test scale.
     """
-    import hashlib
-    import os
-    import tempfile
-
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     schema = spark.read.parquet(events_path).schema
-    src_dir = events_path
-    if os.path.isfile(events_path):
-        tag = hashlib.md5(events_path.encode()).hexdigest()[:12]
-        src_dir = f"/tmp/zen3geo_stream_src_{tag}"
-        os.makedirs(src_dir, exist_ok=True)
-        link = os.path.join(src_dir, "part-0.parquet")
-        if not os.path.lexists(link):
-            os.symlink(events_path, link)
+    src_dir = _source_dir(events_path)
 
     def side(tp, pfx):
         # watermarks require TIMESTAMP (LTZ); the parquet source is NTZ.
@@ -342,11 +322,5 @@ def stream_pair_join_to_memory(spark, events_path: str,
         right,
         F.expr(f"l_user = r_user and r_ts >= l_ts - interval {lookback} "
                "and r_ts < l_ts"))
-    q = (joined.select("l_user", "l_id", "r_id")
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="zsj_ckpt_"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _run_to_memory(spark, joined.select("l_user", "l_id", "r_id"), name,
+                          "append")
