@@ -1016,11 +1016,14 @@ def _tiles_table(spark: SparkSession) -> DataFrame:
 
 def q_tile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster scan with pyramid-level + band pruning → per-band stats
-    (the RioXarrayReader overview_level semantics)."""
-    tiles = _tiles_table(spark)
-    # same predicate shape sources.raster.scan_tiles pushes onto a
-    # parquet tile table (level/band are partition columns there)
-    pruned = tiles.filter((F.col("level") == 1) & F.col("band").isin([0]))
+    (the RioXarrayReader overview_level semantics) over a parquet tile
+    table partitioned by level and band."""
+    from zen3geo_spark.sources.raster import scan_tiles
+
+    d = _published("tiles", lambda path: _tiles_table(spark).write
+                   .mode("overwrite").partitionBy("level", "band")
+                   .parquet(path))
+    pruned = scan_tiles(spark, d, overview_level=1, bands=[0])
     return pruned.groupBy("band").agg(
         F.count("*").alias("n_px"),
         F.round(F.sum("value"), 4).alias("sum_val"),
@@ -1031,18 +1034,16 @@ def q_tile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_vector_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector scan with bbox predicate pruning (PyogrioReader + the
     denormalized-bbox GeoParquet layout, SURVEY.md §1 row 5)."""
-    geoms = spark.range(500).selectExpr(
+    from zen3geo_spark.sources.raster import scan_vectors
+
+    d = _published("vectors", lambda path: spark.range(500).selectExpr(
         "id as geom_id",
         "cast(-170 + (id * 7 % 340) as double) as minx",
         "cast(-80 + (id * 11 % 160) as double) as miny",
         "cast(-170 + (id * 7 % 340) + 5 as double) as maxx",
         "cast(-80 + (id * 11 % 160) + 4 as double) as maxy",
-    )
-    qxmin, qymin, qxmax, qymax = -30.0, -20.0, 40.0, 35.0
-    hit = geoms.filter(
-        (F.col("minx") < qxmax) & (F.col("maxx") > qxmin)
-        & (F.col("miny") < qymax) & (F.col("maxy") > qymin)
-    )
+    ).write.mode("overwrite").parquet(path))
+    hit = scan_vectors(spark, d, bbox=(-30.0, -20.0, 40.0, 35.0))
     return hit.select("geom_id", "minx", "miny", "maxx", "maxy")
 
 

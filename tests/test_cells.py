@@ -11,6 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from zen3geo_spark.functions.geo import MAX_RES
 from zen3geo_spark.operators.cells import (
     compact_cells,
     compact_cells_sql,
@@ -57,6 +58,19 @@ def test_uncompact_inverts_compact(spark):
     comp = compact_cells(_cells_df(spark, ids), 4, 0)
     back = sorted(r.cell for r in uncompact_cells(comp, 4).collect())
     assert back == ids  # identity, and no duplicates (partition property)
+
+    # MAX_RES: a full 4x4 block in the grid's last rows and columns
+    # (compacts two levels up, 16 children on the way back) plus two lone
+    # cells, one of them the grid's first
+    side, base = 1 << MAX_RES, 1 << (2 * MAX_RES)
+    block = [base + iy * side + ix for iy in range(side - 4, side)
+             for ix in range(side - 4, side)]
+    ids = sorted(block + [base, base + side + 5])
+    comp = compact_cells(_cells_df(spark, ids), MAX_RES, MAX_RES - 2)
+    assert sorted(r.cell_res for r in comp.collect()) == [MAX_RES - 2,
+                                                          MAX_RES, MAX_RES]
+    back = sorted(r.cell for r in uncompact_cells(comp, MAX_RES).collect())
+    assert back == ids
 
 
 def test_compact_sql_twin_matches(spark):

@@ -194,7 +194,7 @@ def test_streaming_available_now_incremental(spark, tmp_path):
 
 def test_multimodal_plumbing(spark):
     media = synth_media(spark, 30)
-    decoded = decode_image(media, fake=True, out_h=4, out_w=4)
+    decoded = decode_image(media, out_h=4, out_w=4)
     rows = decoded.collect()
     assert len(rows) == 10  # ids % 3 == 0
     assert all(len(r["pixels"]) == 4 * 4 * 3 for r in rows)
@@ -204,7 +204,7 @@ def test_multimodal_plumbing(spark):
     f0 = frames.groupBy("media_id").count()
     assert f0.count() == 10  # ids % 3 == 2
     # deterministic: same plan twice → same bytes
-    again = {(r["media_id"], tuple(r["pixels"])) for r in decode_image(media, fake=True).collect()}
+    again = {(r["media_id"], tuple(r["pixels"])) for r in decode_image(media).collect()}
     first = {(r["media_id"], tuple(r["pixels"])) for r in rows}
     assert again == first
 

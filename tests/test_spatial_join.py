@@ -6,8 +6,8 @@ from pyspark.sql import functions as F
 
 from zen3geo_spark.functions.geo import cell_encode, cell_parent
 from zen3geo_spark.operators.spatial_join import (
-    find_hot_cells, knn_join_bruteforce, knn_join_cells, pip_refine_sql,
-    points_in_polygons,
+    _knn_ring_topk, find_hot_cells, knn_join_bruteforce, knn_join_cells,
+    pip_refine_sql, points_in_polygons,
 )
 from zen3geo_spark.sources.fixtures import GEOM_SCHEMA, with_bbox
 
@@ -288,8 +288,8 @@ def test_knn_cells_ring_escalation_exactness(spark):
         for r in knn_join_bruteforce(queries, targets, k=1).collect())
     # the one-pass ring path really is wrong on this data (the trap is live)
     one_pass = {r["query_id"]: r["target_id"]
-                for r in knn_join_cells(queries, targets, k=1, res=res,
-                                        escalate=False).collect()}
+                for r in _knn_ring_topk(queries, targets, k=1,
+                                        res=res).collect()}
     assert one_pass[0] == 101
     escalated = sorted(
         (r["query_id"], r["rk"], r["target_id"])

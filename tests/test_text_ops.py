@@ -289,14 +289,20 @@ def test_connected_components_warns_when_unconverged(spark):
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "a_id long, b_id long")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        # local_contraction=False: at test scale AQE coalesces the edge
-        # list to one partition, so the union-find pass alone would solve
-        # the chain and the loop would (correctly) not warn
-        out = connected_components(chain, max_iters=1,
-                                   local_contraction=False)
-        assert any("converge" in str(x.message) for x in w)
+    # at test scale AQE coalesces the edge list to one partition, so the
+    # local union-find pass alone would solve the chain and the loop would
+    # (correctly) not warn: keep the shuffle's partitions so the chain
+    # spans several partitions and survives the contraction
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            connected_components(chain, max_iters=1)
+            assert any("converge" in str(x.message) for x in w)
+    finally:
+        spark.conf.set(key, prev)
     # and the converged run does NOT warn
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")

@@ -34,18 +34,18 @@ _CHARS_SPARK = r"regexp_replace({w}, '(.)', ' $1 ')"
 _CHARS_DUCK = r"regexp_replace({w}, '(.)', ' \1 ', 'g')"
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, n) over lowercase alpha words — the ONE corpus-sized pass."""
     toks = docs.select(F.explode(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("word"))
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"))
     return (toks.filter(F.col("word").rlike("^[a-z]+$"))
             .groupBy("word").agg(F.count("*").alias("n")))
 
 
-def word_counts_sql_duckdb(rel: str, text_col: str = "text") -> str:
+def word_counts_sql_duckdb(rel: str) -> str:
     return f"""
     select word, count(*) as n from (
-      select unnest(regexp_split_to_array(lower(trim({text_col})), '\\s+'))
+      select unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
              as word
       from {rel}
     ) where regexp_matches(word, '^[a-z]+$')

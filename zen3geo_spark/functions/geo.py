@@ -145,6 +145,14 @@ def cell_iy_ix(cell: Column, res: int) -> tuple[Column, Column]:
     return col_div(body, 1 << res), body % F.lit(1 << res)
 
 
+def mixed_cell_iy_ix(cell: Column, res: Column) -> tuple[Column, Column]:
+    """(row, col) of a cell id Column whose resolution ``res`` is read per
+    row (a compacted cell set mixes resolutions)."""
+    side = F.call_function("shiftleft", F.lit(1).cast("long"), res)
+    body = cell - side * side
+    return F.call_function("div", body, side), body % side
+
+
 def cell_iy_ix_sql(cell: str, res: int, engine: str) -> tuple[str, str]:
     """(row, col) of a cell id, as engine SQL."""
     body = f"(({cell}) - {1 << (2 * res)})"
@@ -580,8 +588,7 @@ def geo_to_image_coords(x: Column, y: Column, xmin: Column, ymax: Column,
     return (x - xmin) / resx, (ymax - y) / resy
 
 
-def polygon_measures(polys: DataFrame, parts_col: str = "parts",
-                     id_col: str = "geom_id") -> DataFrame:
+def polygon_measures(polys: DataFrame) -> DataFrame:
     """Per-polygon area / centroid / perimeter over the engine's ring
     representation (``parts: array<array<struct<x,y>>>`` in integer
     micro-degrees) — the ``GeoSeries.area`` / ``.centroid`` /
@@ -598,7 +605,7 @@ def polygon_measures(polys: DataFrame, parts_col: str = "parts",
     rounded to 4 (their magnitudes make FP noise ~1e-8 — far below the
     rounding quantum).
     """
-    r = f"{parts_col}[0]"
+    r = "parts[0]"
     nxt = f"int((i + 1) % size({r}))"
     cross = (f"(cast({r}[i].x as bigint) * cast({r}[{nxt}].y as bigint)"
              f" - cast({r}[{nxt}].x as bigint) * cast({r}[i].y as bigint))")
@@ -615,7 +622,7 @@ def polygon_measures(polys: DataFrame, parts_col: str = "parts",
            f" (acc, i) -> acc + cast({r}[i].y + {r}[{nxt}].y as double)"
            f" * cast({cross} as double))")
     return polys.selectExpr(
-        id_col,
+        "geom_id",
         f"abs({signed2}) as area2_us",
         f"case when {signed2} > 0 then 1 else 0 end as ccw",
         f"round({cxn} / (3.0 * {signed2}), 4) as centroid_x_us",

@@ -89,20 +89,20 @@ def hilbert_parent(d: Column | str, res: int, parent_res: int) -> Column:
 
 
 def hilbert_cte_sql(points_rel: str, id_col: str, lat_micro: str,
-                    lon_micro: str, res: int, engine: str = "duckdb") -> str:
+                    lon_micro: str, res: int) -> str:
     """Recursive-CTE twin of :func:`hilbert_d_np` (DuckDB oracle).
 
     Carries ``(id, x, y, d, s)`` and applies one curve level per
     recursion step, ``s`` halving from 2^(res-1) to 0; the ``s = 0`` rows
     hold the finished ids.  Yields a relation ``(id_col, hd)``.
     """
-    dv = sql_int_div(engine)
+    dv = sql_int_div("duckdb")
     n = 1 << res
     return f"""
     hseed as (
       select {id_col},
-             {cell_ix_sql(lon_micro, res, engine)} as x,
-             {cell_iy_sql(lat_micro, res, engine)} as y,
+             {cell_ix_sql(lon_micro, res, "duckdb")} as x,
+             {cell_iy_sql(lat_micro, res, "duckdb")} as y,
              cast(0 as bigint) as d,
              cast({n >> 1} as bigint) as s
       from {points_rel}

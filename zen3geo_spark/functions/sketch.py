@@ -31,11 +31,11 @@ from zen3geo_spark.operators.dedup import (
 )
 
 
-def corpus_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_tokens(docs: DataFrame) -> DataFrame:
     """One row per token occurrence (lowercased, single-space split — the
     corpus tokenization shared across text.py/dedup.py/curation.py)."""
     return docs.select(
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token")
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("token")
     ).filter(F.col("token") != "")
 
 
@@ -46,8 +46,7 @@ def cm_bucket(token: Column, j: Column | int, width: int) -> Column:
                   F.lit(width))
 
 
-def count_min_build(docs: DataFrame, depth: int = 4, width: int = 512,
-                    text_col: str = "text") -> DataFrame:
+def count_min_build(docs: DataFrame, depth: int = 4, width: int = 512) -> DataFrame:
     """Build the sketch: DataFrame (j, bucket, cnt), ≤ depth·width rows.
 
     Each partition accumulates its ENTIRE token stream into one local
@@ -63,7 +62,7 @@ def count_min_build(docs: DataFrame, depth: int = 4, width: int = 512,
         grid = np.zeros((depth, width), dtype=np.int64)
         for pdf in batches:
             toks: list[str] = []
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 if t:
                     toks.extend(w for w in t.lower().split(" ") if w)
             if not toks:
@@ -78,7 +77,7 @@ def count_min_build(docs: DataFrame, depth: int = 4, width: int = 512,
         yield pd.DataFrame({"j": jj.astype(np.int32), "bucket": bb,
                             "cnt": grid[jj, bb]})
 
-    partials = docs.select(text_col).mapInPandas(
+    partials = docs.select("text").mapInPandas(
         partial, schema="j int, bucket long, cnt long")
     return partials.groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
 
@@ -103,8 +102,7 @@ def count_min_estimate(sketch: DataFrame, probes: DataFrame,
 
 
 def count_min_sql_duckdb(rel: str, probe_tokens: list[str],
-                         depth: int = 4, width: int = 512,
-                         text_col: str = "text") -> str:
+                         depth: int = 4, width: int = 512) -> str:
     """DuckDB twin: same tokenization, same double-hash buckets, same
     build + min-estimate, plus the exact count per probe so the query
     doubles as its own accuracy audit."""
@@ -113,7 +111,7 @@ def count_min_sql_duckdb(rel: str, probe_tokens: list[str],
     h2 = hash40_sql_duckdb("token", 2)
     return f"""
 with toks as (
-  select unnest(string_split(lower({text_col}), ' ')) as token from {rel}
+  select unnest(string_split(lower(text), ' ')) as token from {rel}
 ),
 toks_nz as (select token from toks where token <> ''),
 hashed as (select token, {h1} as h1, {h2} as h2 from toks_nz),
@@ -154,7 +152,13 @@ from est e left join exact x using (token)
 # as the count-min sketch, so DuckDB reproduces every word exactly and
 # the filter itself (not just the decisions) is cross-engine
 # deterministic. Words are 32-bit (mask < 2^32) so shift/OR semantics
-# are identical on both engines with no sign-bit edge.
+# are identical on both engines with no sign-bit edge. Build and probe
+# (Spark and DuckDB alike) read the one size below: a probe that hashed
+# into a different filter size would return false negatives.
+
+BLOOM_BITS = 1 << 15
+BLOOM_HASHES = 4
+
 
 def _with_key_hashes(df: DataFrame, key_col: str,
                      with_h2: bool = True) -> DataFrame:
@@ -182,16 +186,16 @@ def _with_key_hashes(df: DataFrame, key_col: str,
     return df.mapInPandas(partial, schema=schema)
 
 
-def bloom_build(keys: DataFrame, key_col: str, n_bits: int = 1 << 15,
-                n_hashes: int = 4) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
     """Build the filter over ``keys``: DataFrame (word, bits) with at
-    most n_bits/32 rows. One Arrow hash pass, one explode to k bit
+    most BLOOM_BITS/32 rows. One Arrow hash pass, one explode to k bit
     positions, one map-side-combinable ``bit_or`` groupBy — the only
     shuffle is bounded by the filter size, not the key count."""
     hashed = _with_key_hashes(keys.select(key_col), key_col)
     return (hashed
-            .withColumn("j", F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))))
-            .selectExpr(f"pmod(h1 + j * h2, {n_bits}) as bitpos")
+            .withColumn("j", F.explode(F.sequence(F.lit(0),
+                                                  F.lit(BLOOM_HASHES - 1))))
+            .selectExpr(f"pmod(h1 + j * h2, {BLOOM_BITS}) as bitpos")
             .selectExpr("bitpos div 32 as word",
                         "shiftleft(cast(1 as bigint), cast(bitpos % 32 as int)) as mask")
             .groupBy("word")
@@ -199,20 +203,20 @@ def bloom_build(keys: DataFrame, key_col: str, n_bits: int = 1 << 15,
 
 
 def bloom_probe(probes: DataFrame, bloom: DataFrame, key_col: str,
-                n_bits: int = 1 << 15, n_hashes: int = 4,
                 carry: tuple[str, ...] = ()) -> DataFrame:
     """Membership-test every probe row: (key, *carry, bloom_pass).
 
-    The filter broadcasts (≤ n_bits/32 rows); the probe side explodes to
+    The filter broadcasts (≤ BLOOM_BITS/32 rows); the probe side explodes to
     its k (word, mask) lookups, broadcast-left-joins, and a per-key
     all-k-bits-set reduction decides. No shuffle touches the probe data
     except the final per-key groupBy (map-side combinable, k rows per
     key)."""
     hashed = _with_key_hashes(probes.select(key_col, *carry), key_col)
     expanded = (hashed
-                .withColumn("j", F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))))
+                .withColumn("j", F.explode(F.sequence(
+                    F.lit(0), F.lit(BLOOM_HASHES - 1))))
                 .selectExpr(key_col, *carry,
-                            f"pmod(h1 + j * h2, {n_bits}) as bitpos")
+                            f"pmod(h1 + j * h2, {BLOOM_BITS}) as bitpos")
                 .selectExpr(key_col, *carry,
                             "bitpos div 32 as word",
                             "shiftleft(cast(1 as bigint), cast(bitpos % 32 as int)) as mask"))
@@ -227,8 +231,7 @@ def bloom_probe(probes: DataFrame, bloom: DataFrame, key_col: str,
                  .alias("bloom_pass")))
 
 
-def bloom_cte_sql_duckdb(keys_sel: str, key_col: str,
-                         n_bits: int = 1 << 15, n_hashes: int = 4) -> str:
+def bloom_cte_sql_duckdb(keys_sel: str, key_col: str) -> str:
     """DuckDB SELECT producing the identical (word, bits) filter over
     ``keys_sel`` (a relation/CTE name or parenthesized subquery)."""
     h1 = hash40_sql_duckdb(key_col, 1)
@@ -236,16 +239,15 @@ def bloom_cte_sql_duckdb(keys_sel: str, key_col: str,
     return f"""
 select bitpos // 32 as word, bit_or((1::bigint << (bitpos % 32)::int)) as bits
 from (
-  select ({h1} + j * {h2}) % {n_bits} as bitpos
+  select ({h1} + j * {h2}) % {BLOOM_BITS} as bitpos
   from {keys_sel},
-       (select unnest(generate_series(0, {n_hashes - 1})) as j)
+       (select unnest(generate_series(0, {BLOOM_HASHES - 1})) as j)
 )
 group by word"""
 
 
 def bloom_pass_sql_duckdb(probe_sel: str, bloom_rel: str, key_col: str,
-                          carry: tuple[str, ...] = (),
-                          n_bits: int = 1 << 15, n_hashes: int = 4) -> str:
+                          carry: tuple[str, ...] = ()) -> str:
     """DuckDB SELECT producing (key, *carry, bloom_pass) matching
     :func:`bloom_probe` exactly."""
     h1 = hash40_sql_duckdb(key_col, 1)
@@ -260,9 +262,9 @@ from (
          (1::bigint << (bitpos % 32)::int) as mask
   from (
     select {key_col}{carry_cols},
-           ({h1} + j * {h2}) % {n_bits} as bitpos
+           ({h1} + j * {h2}) % {BLOOM_BITS} as bitpos
     from {probe_sel},
-         (select unnest(generate_series(0, {n_hashes - 1})) as j)
+         (select unnest(generate_series(0, {BLOOM_HASHES - 1})) as j)
   )
 ) pc left join {bloom_rel} b using (word)
 group by {key_col}{carry_cols}"""
@@ -485,8 +487,7 @@ from (
 """
 
 
-def kmv_intersect(a_docs: DataFrame, b_docs: DataFrame, k: int = 256,
-                  text_col: str = "text") -> DataFrame:
+def kmv_intersect(a_docs: DataFrame, b_docs: DataFrame, k: int = 256) -> DataFrame:
     """KMV set-intersection sketch between two corpora's token
     vocabularies (Beyer et al. 2007 §4): keep the ``k`` minimum hash
     values of the UNION vocabulary (tie-broken by token — total order,
@@ -506,7 +507,7 @@ def kmv_intersect(a_docs: DataFrame, b_docs: DataFrame, k: int = 256,
     shared 40-bit polynomial hash makes every value cross-engine exact.
     """
     def side(docs, flag):
-        return (corpus_tokens(docs, text_col).select("token").distinct()
+        return (corpus_tokens(docs).select("token").distinct()
                 .select("token", F.lit(flag).alias("_side")))
 
     u = (side(a_docs, 0).unionByName(side(b_docs, 1))
@@ -524,14 +525,13 @@ def kmv_intersect(a_docs: DataFrame, b_docs: DataFrame, k: int = 256,
         .alias("union_est"))
 
 
-def kmv_intersect_sql_duckdb(a_rel: str, b_rel: str, k: int = 256,
-                             text_col: str = "text") -> str:
+def kmv_intersect_sql_duckdb(a_rel: str, b_rel: str, k: int = 256) -> str:
     """DuckDB twin of :func:`kmv_intersect` (same tokenization, same
     hash, same (h, token) total order)."""
     h = hash40_sql_duckdb("token", 1)
     def toks(rel, flag):
         return (f"select token, {flag} as _side from ("
-                f"select distinct unnest(string_split(lower({text_col}), ' ')) as token "
+                f"select distinct unnest(string_split(lower(text), ' ')) as token "
                 f"from {rel}) where token <> ''")
     return f"""
 with _u as (

@@ -148,7 +148,7 @@ def fingerprint_sql(col: str, engine: str) -> str:
     return f"md5(lower(regexp_replace(trim({col}), '\\s+', ' ', 'g')))"
 
 
-def unigram_logppl(docs, text_col: str = "text", id_col: str = "doc_id"):
+def unigram_logppl(docs):
     """Unigram-LM log-perplexity quality score (the CCNet-style
     perplexity filter shape, self-trained): token probabilities come from
     the corpus itself (count / total tokens, whitespace tokens WITH
@@ -166,8 +166,8 @@ def unigram_logppl(docs, text_col: str = "text", id_col: str = "doc_id"):
     from zen3geo_spark.operators._util import pair_all
 
     toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
     )
     tf = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = toks.agg(F.count("*").alias("total"))
@@ -177,11 +177,10 @@ def unigram_logppl(docs, text_col: str = "text", id_col: str = "doc_id"):
         F.avg(-F.log(F.col("cnt") / F.col("total"))).alias("logppl"))
 
 
-def unigram_logppl_sql_duckdb(rel: str, id_col: str = "doc_id",
-                              text_col: str = "text") -> str:
+def unigram_logppl_sql_duckdb(rel: str) -> str:
     """DuckDB twin of :func:`unigram_logppl`."""
-    toks = (f"select {id_col} as doc, unnest(regexp_split_to_array("
-            f"lower(trim({text_col})), '\\s+')) as tok from {rel}")
+    toks = (f"select doc_id as doc, unnest(regexp_split_to_array("
+            f"lower(trim(text)), '\\s+')) as tok from {rel}")
     return f"""
     with toks as ({toks}),
     tf as (select tok, count(*) as cnt from toks group by tok),
@@ -201,10 +200,12 @@ def _gram_expr(text: Column, n: int) -> Column:
         idx, lambda i: F.array_join(F.slice(words, i + 1, n), " "))
 
 
-def ngram_repetition_stats(docs, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           top_frac_max: float = 0.20,
-                           dup_frac_max: float = 0.30):
+# Gopher keep thresholds: top 2-gram share and repeated 3-gram share.
+GOPHER_TOP_BIGRAM_MAX = 0.20
+GOPHER_DUP_TRIGRAM_MAX = 0.30
+
+
+def ngram_repetition_stats(docs):
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1, adapted
     to single-line corpora): per doc, the fraction of 2-gram occurrences
     taken by the SINGLE most frequent 2-gram (``top_bigram_frac``) and
@@ -223,8 +224,8 @@ def ngram_repetition_stats(docs, text_col: str = "text",
         # array materializes once per doc instead of filter/project
         # pushdown re-evaluating the interpreted transform() HOF
         # (same rationale as curation.exploded_word_ngrams)
-        words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        e = (docs.select(F.col(id_col).alias("doc"), words.alias("_w"))
+        words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+        e = (docs.select(F.col("doc_id").alias("doc"), words.alias("_w"))
              .select("doc", "_w",
                      F.explode(F.sequence(
                          F.lit(0),
@@ -245,20 +246,17 @@ def ngram_repetition_stats(docs, text_col: str = "text",
         "doc",
         F.round("top_bigram_frac", 6).alias("top_bigram_frac"),
         F.round("dup_trigram_frac", 6).alias("dup_trigram_frac"),
-        ((F.col("top_bigram_frac") <= top_frac_max)
-         & (F.col("dup_trigram_frac") <= dup_frac_max)).alias("keep"))
+        ((F.col("top_bigram_frac") <= GOPHER_TOP_BIGRAM_MAX)
+         & (F.col("dup_trigram_frac") <= GOPHER_DUP_TRIGRAM_MAX)).alias("keep"))
 
 
-def ngram_repetition_sql_duckdb(rel: str, id_col: str = "doc_id",
-                                text_col: str = "text",
-                                top_frac_max: float = 0.20,
-                                dup_frac_max: float = 0.30) -> str:
+def ngram_repetition_sql_duckdb(rel: str) -> str:
     """DuckDB twin of :func:`ngram_repetition_stats` (same gram build as
     ``shingles_sql_duckdb`` but NON-distinct)."""
     def grams(n: int) -> str:
-        words = f"regexp_split_to_array(lower(trim({text_col})), '\\s+')"
+        words = "regexp_split_to_array(lower(trim(text)), '\\s+')"
         return (
-            f"select {id_col} as doc, unnest(list_transform("
+            f"select doc_id as doc, unnest(list_transform("
             f"generate_series(1, greatest(len({words}) - {n}, 0) + 1), "
             f"i -> array_to_string(({words})[i:i+{n - 1}], ' '))) as g "
             f"from {rel}")
@@ -275,14 +273,17 @@ def ngram_repetition_sql_duckdb(rel: str, id_col: str = "doc_id",
     tri as ({stats(3, '_t3', 'dup_trigram_frac')})
     select doc, round(top_bigram_frac, 6) as top_bigram_frac,
            round(dup_trigram_frac, 6) as dup_trigram_frac,
-           (top_bigram_frac <= {top_frac_max}
-            and dup_trigram_frac <= {dup_frac_max}) as keep
+           (top_bigram_frac <= {GOPHER_TOP_BIGRAM_MAX}
+            and dup_trigram_frac <= {GOPHER_DUP_TRIGRAM_MAX}) as keep
     from bi join tri using (doc)
     """
 
 
-def bm25_scores(docs, terms: list[str], text_col: str = "text",
-                id_col: str = "doc_id", k1: float = 1.2, b: float = 0.75):
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def bm25_scores(docs, terms: list[str]):
     """Okapi BM25 of a fixed term set over the corpus — the retrieval
     scorer of a training-data search/filter stage.
 
@@ -294,8 +295,8 @@ def bm25_scores(docs, terms: list[str], text_col: str = "text",
     from zen3geo_spark.operators._util import pair_all
 
     toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"))
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"))
     dl = toks.groupBy("doc").agg(F.count("*").alias("dl"))
     corpus = pair_all(
         docs.agg(F.count("*").alias("n_docs")),
@@ -307,23 +308,21 @@ def bm25_scores(docs, terms: list[str], text_col: str = "text",
                       corpus)
     idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5))
                 / (F.col("df") + F.lit(0.5)))
-    num = F.col("tf") * (F.lit(k1) + 1)
-    den = (F.col("tf") + F.lit(k1)
-           * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl")))
+    num = F.col("tf") * (F.lit(BM25_K1) + 1)
+    den = (F.col("tf") + F.lit(BM25_K1)
+           * (F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")))
     return (scored.withColumn("_s", idf * num / den)
             .groupBy("doc").agg(F.round(F.sum("_s"), 4).alias("bm25")))
 
 
-def bm25_sql_duckdb(rel: str, terms: list[str], id_col: str = "doc_id",
-                    text_col: str = "text", k1: float = 1.2,
-                    b: float = 0.75) -> str:
+def bm25_sql_duckdb(rel: str, terms: list[str]) -> str:
     """DuckDB twin of :func:`bm25_scores` (same arithmetic order:
     idf * (tf*(k1+1)) / (tf + k1*(1-b+b*dl/avgdl)), summed per doc)."""
     terms_sql = ", ".join(f"'{t}'" for t in terms)
     return f"""
     with toks as (
-      select {id_col} as doc,
-             unnest(regexp_split_to_array(lower(trim({text_col})), '\\s+')) as tok
+      select doc_id as doc,
+             unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) as tok
       from {rel}
     ),
     dl as (select doc, count(*) as dl from toks group by doc),
@@ -336,16 +335,16 @@ def bm25_sql_duckdb(rel: str, terms: list[str], id_col: str = "doc_id",
     df as (select tok, count(*) as df from tf group by tok)
     select tf.doc,
            round(sum(ln(1.0 + (c.n_docs - df.df + 0.5) / (df.df + 0.5))
-                     * (tf.tf * ({k1} + 1))
-                     / (tf.tf + {k1} * (1.0 - {b} + {b} * dl.dl / c.avgdl))),
+                     * (tf.tf * ({BM25_K1} + 1))
+                     / (tf.tf + {BM25_K1}
+                        * (1.0 - {BM25_B} + {BM25_B} * dl.dl / c.avgdl))),
                  4) as bm25
     from tf join df using (tok) join dl on tf.doc = dl.doc, corpus c
     group by tf.doc
     """
 
 
-def hashed_tfidf(docs, dim: int = 64, text_col: str = "text",
-                 id_col: str = "doc_id"):
+def hashed_tfidf(docs, dim: int = 64):
     """Hashing-trick TF-IDF vectorizer: token → portable 40-bit
     polynomial hash → bucket ``hash % dim``; weight = tf · (ln((N+1)/
     (df+1)) + 1) summed per (doc, bucket) — the feature extractor that
@@ -367,8 +366,8 @@ def hashed_tfidf(docs, dim: int = 64, text_col: str = "text",
             [t if isinstance(t, str) else "" for t in tok], _POWS1_NP))
 
     toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"))
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"))
     tf = toks.groupBy("doc", "tok").agg(F.count("*").alias("tf"))
     df = tf.groupBy("tok").agg(F.count("*").alias("df"))
     vocab = df.select("tok", "df",
@@ -381,16 +380,15 @@ def hashed_tfidf(docs, dim: int = 64, text_col: str = "text",
             .agg(F.round(F.sum("_w"), 6).alias("w")))
 
 
-def hashed_tfidf_sql_duckdb(rel: str, dim: int = 64, id_col: str = "doc_id",
-                            text_col: str = "text") -> str:
+def hashed_tfidf_sql_duckdb(rel: str, dim: int = 64) -> str:
     """DuckDB twin of :func:`hashed_tfidf` (same polynomial hash via
     ``hash40_sql_duckdb``, same idf arithmetic order)."""
     from zen3geo_spark.operators.dedup import hash40_sql_duckdb
 
     return f"""
     with toks as (
-      select {id_col} as doc,
-             unnest(regexp_split_to_array(lower(trim({text_col})), '\\s+')) as tok
+      select doc_id as doc,
+             unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) as tok
       from {rel}
     ),
     tf as (select doc, tok, count(*) as tf from toks group by doc, tok),
@@ -422,8 +420,7 @@ def classifier_weight_sql(bucket: str) -> str:
     return f"(({bucket} * {_CLS_A} + {_CLS_B}) % {_CLS_MOD} - {_CLS_OFF})"
 
 
-def linear_classifier_margin(docs, dim: int = 256, text_col: str = "text",
-                             id_col: str = "doc_id"):
+def linear_classifier_margin(docs, dim: int = 256):
     """fastText-style linear classifier inference over hashing-trick
     bag-of-words features: margin(doc) = Σ_tok tf(doc, tok) ·
     w[h(tok) mod dim], label = margin > 0 — the quality/spam gate
@@ -444,8 +441,8 @@ def linear_classifier_margin(docs, dim: int = 256, text_col: str = "text",
             [t if isinstance(t, str) else "" for t in tok], _POWS1_NP))
 
     toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))),
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))),
                           r"\s+")).alias("tok"))
     tf = toks.groupBy("doc", "tok").agg(F.count("*").alias("tf"))
     vocab = (tf.select("tok").distinct()
@@ -460,17 +457,15 @@ def linear_classifier_margin(docs, dim: int = 256, text_col: str = "text",
                     (F.col("margin") > 0).alias("label")))
 
 
-def linear_classifier_sql_duckdb(rel: str, dim: int = 256,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text") -> str:
+def linear_classifier_sql_duckdb(rel: str, dim: int = 256) -> str:
     """DuckDB twin of :func:`linear_classifier_margin` (same hash, same
     weight formula, same integer margin)."""
     from zen3geo_spark.operators.dedup import hash40_sql_duckdb
 
     return f"""
     with toks as (
-      select {id_col} as doc,
-             unnest(regexp_split_to_array(lower(trim({text_col})), '\\s+')) as tok
+      select doc_id as doc,
+             unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) as tok
       from {rel}
     ),
     tf as (select doc, tok, count(*) as tf from toks group by doc, tok),
@@ -490,12 +485,14 @@ def linear_classifier_sql_duckdb(rel: str, dim: int = 256,
 # Language Models via Importance Resampling")
 # ---------------------------------------------------------------------------
 
-def dsir_importance(docs, target_pred, text_col: str = "text",
-                    id_col: str = "doc_id", smoothing: float = 0.5):
+DSIR_SMOOTHING = 0.5   # Laplace add-k on the target unigram LM
+
+
+def dsir_importance(docs, target_pred):
     """Per-doc importance weight of the corpus against a target slice:
     log w(x) = mean over x's tokens of ln p_target(tok) − ln p_source(tok),
     with unigram LMs (whitespace tokens, repeats counted), the corpus
-    itself as the source distribution, and Laplace-``smoothing`` on the
+    itself as the source distribution, and Laplace ``DSIR_SMOOTHING`` on the
     target model (tokens the target never saw must not zero the weight).
     Resampling the corpus proportional to w concentrates it on the
     target's token mix — the DSIR selection step.
@@ -514,9 +511,9 @@ def dsir_importance(docs, target_pred, text_col: str = "text",
     from zen3geo_spark.operators._util import pair_all
 
     toks = docs.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         target_pred.alias("_tgt"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
     )
     tf = toks.groupBy("tok").agg(
         F.count("*").alias("cnt_src"),
@@ -529,8 +526,8 @@ def dsir_importance(docs, target_pred, text_col: str = "text",
     )
     ratio = pair_all(tf, scalars).select(
         "tok",
-        (F.log((F.col("cnt_tgt") + F.lit(smoothing))
-               / (F.col("total_tgt") + F.lit(smoothing) * F.col("vocab")))
+        (F.log((F.col("cnt_tgt") + F.lit(DSIR_SMOOTHING))
+               / (F.col("total_tgt") + F.lit(DSIR_SMOOTHING) * F.col("vocab")))
          - F.log(F.col("cnt_src") / F.col("total_src"))).alias("log_ratio"),
     )
     return (toks.join(ratio, "tok")
@@ -539,13 +536,12 @@ def dsir_importance(docs, target_pred, text_col: str = "text",
                  F.avg("log_ratio").alias("log_importance")))
 
 
-def dsir_sql_duckdb(rel: str, target_pred_sql: str, text_col: str = "text",
-                    id_col: str = "doc_id", smoothing: float = 0.5) -> str:
+def dsir_sql_duckdb(rel: str, target_pred_sql: str) -> str:
     """DuckDB twin of :func:`dsir_importance` (same LMs, same smoothing)."""
     return f"""
     with toks as (
-      select {id_col} as doc, ({target_pred_sql}) as _tgt,
-             unnest(regexp_split_to_array(lower(trim({text_col})), '\\s+')) as tok
+      select doc_id as doc, ({target_pred_sql}) as _tgt,
+             unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) as tok
       from {rel}
     ),
     tf as (select tok, count(*) as cnt_src,
@@ -555,8 +551,8 @@ def dsir_sql_duckdb(rel: str, target_pred_sql: str, text_col: str = "text",
                        count(*) as vocab
                 from tf),
     ratio as (select tok,
-                     ln((cnt_tgt + {smoothing}) /
-                        (total_tgt + {smoothing} * vocab))
+                     ln((cnt_tgt + {DSIR_SMOOTHING}) /
+                        (total_tgt + {DSIR_SMOOTHING} * vocab))
                      - ln(cast(cnt_src as double) / total_src) as log_ratio
               from tf, scalars)
     select doc, count(*) as n_toks, avg(log_ratio) as log_importance
@@ -565,8 +561,10 @@ def dsir_sql_duckdb(rel: str, target_pred_sql: str, text_col: str = "text",
     """
 
 
-def inverted_index(docs, text_col: str = "text", id_col: str = "doc_id",
-                   min_df: int = 2, max_df: int = 40):
+INVERTED_MIN_DF = 2
+
+
+def inverted_index(docs, min_df: int = INVERTED_MIN_DF, max_df: int = 40):
     """Positional inverted-index build — the index-construction stage of
     a web-scale search pipeline, as pure DataFrame ops.
 
@@ -585,8 +583,8 @@ def inverted_index(docs, text_col: str = "text", id_col: str = "doc_id",
     DuckDB twin's generate_subscripts exactly.
     """
     toks = (docs.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        F.col("doc_id").alias("doc"),
+        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .alias("pos", "tok"))
         .filter(F.col("tok") != ""))
     perdoc = (toks.groupBy("tok", "doc")
@@ -610,16 +608,14 @@ def inverted_index(docs, text_col: str = "text", id_col: str = "doc_id",
             .select(F.col("tok").alias("token"), "df", "postings"))
 
 
-def inverted_index_sql_duckdb(rel: str, text_col: str = "text",
-                              id_col: str = "doc_id", min_df: int = 2,
-                              max_df: int = 40) -> str:
+def inverted_index_sql_duckdb(rel: str, max_df: int = 40) -> str:
     """DuckDB twin of :func:`inverted_index` (same tokenization, same
     0-based raw-split positions, same delta encoding)."""
-    arr = f"regexp_split_to_array(lower(trim({text_col})), '\\s+')"
+    arr = "regexp_split_to_array(lower(trim(text)), '\\s+')"
     return f"""
     with toks as (
       select doc, tok, pos from (
-        select {id_col} as doc, unnest({arr}) as tok,
+        select doc_id as doc, unnest({arr}) as tok,
                generate_subscripts({arr}, 1) - 1 as pos
         from {rel}
       ) where tok <> ''
@@ -631,7 +627,7 @@ def inverted_index_sql_duckdb(rel: str, text_col: str = "text",
     ),
     dfc as (select tok, count(*) as df from perdoc group by tok),
     band as (select * from perdoc join dfc using (tok)
-             where df between {min_df} and {max_df}),
+             where df between {INVERTED_MIN_DF} and {max_df}),
     gapped as (
       select tok, df, doc,
              doc - coalesce(lag(doc) over (partition by tok order by doc),
@@ -646,9 +642,10 @@ def inverted_index_sql_duckdb(rel: str, text_col: str = "text",
     """
 
 
-def tf_cosine_pairs(docs, threshold: float = 0.8, text_col: str = "text",
-                    id_col: str = "doc_id", min_df: int = 2,
-                    max_df: int | None = None):
+TF_COSINE_MIN_DF = 2   # a token in one doc joins no pair
+
+
+def tf_cosine_pairs(docs, threshold: float = 0.8, max_df: int | None = None):
     """Document near-dup pairs by TF-cosine via a posting-list self-join
     — the sparse-vector analogue of the embedding near-dup path, built
     on the same tokenization as :func:`inverted_index`.
@@ -663,17 +660,17 @@ def tf_cosine_pairs(docs, threshold: float = 0.8, text_col: str = "text",
     Σ df(token)², so ``max_df`` (drop stopword-class tokens from the
     DOT, norms stay full-vector) is the cost knob — the same
     df-blocking recall trade as word_jaccard, exact when max_df is
-    None. ``min_df=2`` is free: a token in one doc joins no pair.
+    None. The ``TF_COSINE_MIN_DF`` floor of 2 is free.
     """
     toks = (docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .alias("tok"))
         .filter(F.col("tok") != ""))
     tf = toks.groupBy("doc", "tok").agg(F.count("*").alias("tf"))
     n2 = tf.groupBy("doc").agg(F.sum(F.col("tf") * F.col("tf")).alias("n2"))
     dfc = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    band = tf.join(dfc, "tok").filter(F.col("df") >= min_df)
+    band = tf.join(dfc, "tok").filter(F.col("df") >= TF_COSINE_MIN_DF)
     if max_df is not None:
         band = band.filter(F.col("df") <= max_df)
     a = band.select(F.col("doc").alias("a_id"), "tok",
@@ -694,18 +691,15 @@ def tf_cosine_pairs(docs, threshold: float = 0.8, text_col: str = "text",
             .select("a_id", "b_id", "dot", F.round("cos", 6).alias("cos")))
 
 
-def tf_cosine_pairs_sql_duckdb(rel: str, threshold: float = 0.8,
-                               text_col: str = "text",
-                               id_col: str = "doc_id", min_df: int = 2,
-                               max_df: int | None = None) -> str:
-    """DuckDB twin of :func:`tf_cosine_pairs` (same tokenization, same
-    integer dot/norms, same single-sqrt cosine)."""
-    cap = f"and df <= {max_df}" if max_df is not None else ""
+def tf_cosine_pairs_sql_duckdb(rel: str, threshold: float = 0.8) -> str:
+    """DuckDB twin of :func:`tf_cosine_pairs` at its default (no
+    ``max_df`` cut): same tokenization, same integer dot/norms, same
+    single-sqrt cosine."""
     return f"""
     with toks as (
       select doc, tok from (
-        select {id_col} as doc,
-               unnest(regexp_split_to_array(lower(trim({text_col})), '\\s+')) as tok
+        select doc_id as doc,
+               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) as tok
         from {rel}
       ) where tok <> ''
     ),
@@ -713,7 +707,7 @@ def tf_cosine_pairs_sql_duckdb(rel: str, threshold: float = 0.8,
     n2 as (select doc, sum(tf*tf) as n2 from tf group by doc),
     dfc as (select tok, count(*) as df from tf group by tok),
     band as (select tf.* from tf join dfc using (tok)
-             where df >= {min_df} {cap}),
+             where df >= {TF_COSINE_MIN_DF}),
     dots as (
       select a.doc as a_id, b.doc as b_id, sum(a.tf*b.tf) as dot
       from band a join band b on a.tok = b.tok and a.doc < b.doc
@@ -729,8 +723,7 @@ def tf_cosine_pairs_sql_duckdb(rel: str, threshold: float = 0.8,
     """
 
 
-def pmi_pairs(docs, text_col: str = "text", id_col: str = "doc_id",
-              min_df: int = 3, max_df: int = 60, min_pair: int = 3,
+def pmi_pairs(docs, min_df: int = 3, max_df: int = 60, min_pair: int = 3,
               max_doc_toks: int = 80):
     """Document-level token co-occurrence with exact PMI sufficient
     statistics → (tok_a, tok_b, n_ab, n_a, n_b, n_docs). The
@@ -748,21 +741,28 @@ def pmi_pairs(docs, text_col: str = "text", id_col: str = "doc_id",
     join is an equi-join on doc with fan-out ≤ max_doc_toks² and the
     counts are map-side combinable. n_a/n_b/n_docs are recomputed
     over the KEPT docs so the statistics are coherent with the pair
-    universe. All integer ⇒ bit-exact."""
+    universe. All integer ⇒ bit-exact.
+
+    ``kept`` feeds four branches (both pair sides, n_a, n_docs):
+    ``localCheckpoint`` on it and on ``dfc`` computes each once and cuts
+    the plan tree there, so no branch re-runs the explode and the guards
+    (the lineage caveat of ``operators/dedup.py`` applies)."""
     from zen3geo_spark.operators._util import pair_all
 
     dtok = (docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .alias("tok"))
         .filter(F.col("tok") != "")
         .distinct())
-    dfc = dtok.groupBy("tok").agg(F.count("*").alias("df"))
+    dfc = (dtok.groupBy("tok").agg(F.count("*").alias("df"))
+           .localCheckpoint(eager=False))
     band = (dtok.join(dfc.filter(F.col("df").between(min_df, max_df))
                       .select("tok"), "tok"))
     docsz = band.groupBy("doc").agg(F.count("*").alias("ntok"))
     kept = (band.join(docsz.filter(F.col("ntok") <= max_doc_toks)
-                      .select("doc"), "doc"))
+                      .select("doc"), "doc")
+            .localCheckpoint(eager=False))
     na = kept.groupBy("tok").agg(F.count("*").alias("n"))
     ndocs = kept.select("doc").distinct().agg(
         F.count("*").alias("n_docs"))
@@ -782,16 +782,15 @@ def pmi_pairs(docs, text_col: str = "text", id_col: str = "doc_id",
         ndocs).select("tok_a", "tok_b", "n_ab", "n_a", "n_b", "n_docs")
 
 
-def pmi_pairs_sql_duckdb(rel: str, text_col: str = "text",
-                         id_col: str = "doc_id", min_df: int = 3,
+def pmi_pairs_sql_duckdb(rel: str, min_df: int = 3,
                          max_df: int = 60, min_pair: int = 3,
                          max_doc_toks: int = 80) -> str:
     """DuckDB twin of :func:`pmi_pairs` (same guards, same universe)."""
     return f"""
     with dtok as (
-      select distinct {id_col} as doc, tok from (
-        select {id_col},
-               unnest(regexp_split_to_array(lower(trim({text_col})),
+      select distinct doc_id as doc, tok from (
+        select doc_id,
+               unnest(regexp_split_to_array(lower(trim(text)),
                                             '\\s+')) as tok
         from {rel}
       ) where tok <> ''
@@ -815,8 +814,7 @@ def pmi_pairs_sql_duckdb(rel: str, text_col: str = "text",
     """
 
 
-def textrank_keywords(docs, text_col: str = "text", id_col: str = "doc_id",
-                      min_df: int = 3, max_df: int = 60,
+def textrank_keywords(docs, min_df: int = 3, max_df: int = 60,
                       iters: int = 4):
     """TextRank keyword scores (Mihalcea & Tarau 2004): integer
     fixed-point PageRank over the word ADJACENCY graph (consecutive
@@ -844,8 +842,8 @@ def textrank_keywords(docs, text_col: str = "text", id_col: str = "doc_id",
 
     mass, damp_num, damp_den = 1_000_000_000, 85, 100
     toks = (docs.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        F.col("doc_id").alias("doc"),
+        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .alias("pos", "tok"))
         .filter(F.col("tok") != ""))
     dfc = (toks.select("doc", "tok").distinct()
@@ -887,17 +885,16 @@ def textrank_keywords(docs, text_col: str = "text", id_col: str = "doc_id",
     return ranks.select(F.col("node").alias("token"), "rank_fp")
 
 
-def textrank_sql_duckdb(rel: str, text_col: str = "text",
-                        id_col: str = "doc_id", min_df: int = 3,
+def textrank_sql_duckdb(rel: str, min_df: int = 3,
                         max_df: int = 60, iters: int = 4) -> str:
     """DuckDB twin of :func:`textrank_keywords` (unrolled supersteps,
     vocab count via scalar subquery — same floor-division masses)."""
     mass, dn, dd = 1_000_000_000, 85, 100
-    arr = f"regexp_split_to_array(lower(trim({text_col})), '\\s+')"
+    arr = "regexp_split_to_array(lower(trim(text)), '\\s+')"
     parts = [
         f"""toks as (
       select doc, tok, pos from (
-        select {id_col} as doc, unnest({arr}) as tok,
+        select doc_id as doc, unnest({arr}) as tok,
                generate_subscripts({arr}, 1) - 1 as pos
         from {rel}
       ) where tok <> '')""",
@@ -976,7 +973,7 @@ def readability_sql(col: str, engine: str) -> dict[str, str]:
     }
 
 
-def bigram_logppl(docs, text_col: str = "text", id_col: str = "doc_id"):
+def bigram_logppl(docs):
     """Bigram-LM log-perplexity (the CCNet perplexity filter upgraded
     one order): per-doc mean −ln p(w_i | w_{i−1}) with add-one (Laplace)
     smoothing over the observed vocabulary,
@@ -995,8 +992,8 @@ def bigram_logppl(docs, text_col: str = "text", id_col: str = "doc_id"):
     from zen3geo_spark.operators._util import pair_all
 
     toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        F.col("doc_id").alias("doc"),
+        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .alias("pos", "tok"))
     w = Window.partitionBy("doc").orderBy("pos")
     big = (toks.withColumn("nxt", F.lead("tok").over(w))
@@ -1011,14 +1008,13 @@ def bigram_logppl(docs, text_col: str = "text", id_col: str = "doc_id"):
         .alias("logppl"))
 
 
-def bigram_logppl_sql_duckdb(rel: str, id_col: str = "doc_id",
-                             text_col: str = "text") -> str:
+def bigram_logppl_sql_duckdb(rel: str) -> str:
     """DuckDB twin of :func:`bigram_logppl` (same window, same
     smoothing)."""
-    arr = f"regexp_split_to_array(lower(trim({text_col})), '\\s+')"
+    arr = "regexp_split_to_array(lower(trim(text)), '\\s+')"
     return f"""
     with toks as (
-      select {id_col} as doc, unnest({arr}) as tok,
+      select doc_id as doc, unnest({arr}) as tok,
              generate_subscripts({arr}, 1) as pos from {rel}
     ),
     big as (

@@ -168,7 +168,7 @@ def messy_url_sql(url: str, page_id: str, variant: int, engine: str) -> str:
 # robots.txt longest-prefix-match evaluation
 # ---------------------------------------------------------------------------
 
-def robots_decisions(pages, rules, url_col: str = "url"):
+def robots_decisions(pages, rules):
     """Evaluate robots.txt-style prefix rules against every page URL:
     ``rules`` is a flat ``(host, prefix, allow: int)`` dimension; the
     REP rule is longest-matching-prefix wins, Allow wins ties, and a URL
@@ -190,9 +190,9 @@ def robots_decisions(pages, rules, url_col: str = "url"):
     rlist = (rules.groupBy("host")
              .agg(F.collect_list(F.struct("prefix", "allow")).alias("rlist")))
     j = (pages
-         .withColumn("host", url_host(F.col(url_col)))
+         .withColumn("host", url_host(F.col("url")))
          .withColumn("_path",
-                     F.regexp_extract(F.col(url_col),
+                     F.regexp_extract(F.col("url"),
                                       r"^https?://[^/]+(/.*)$", 1))
          .join(F.broadcast(rlist), "host", "left"))
     # max over matched rules of (prefix length, allow): order-independent,

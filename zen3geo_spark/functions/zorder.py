@@ -86,7 +86,7 @@ def zorder_encode(lat_micro: Column | str, lon_micro: Column | str, res: int) ->
     return _spread_col(ix).bitwiseOR(_spread_col(iy) * F.lit(2)).cast("long")
 
 
-def with_zorder(df, lat_micro: str, lon_micro: str, res: int, out: str = "z"):
+def with_zorder(df, lat_micro: str, lon_micro: str, res: int):
     """Add a Morton-id column via CHAINED projections — the scale path.
 
     :func:`zorder_encode` as a single Column duplicates the sub-tree at
@@ -99,7 +99,7 @@ def with_zorder(df, lat_micro: str, lon_micro: str, res: int, out: str = "z"):
     """
     if res > MAX_ZRES:
         raise ValueError(f"res {res} exceeds MAX_ZRES {MAX_ZRES}")
-    zy, zx = f"__{out}_y", f"__{out}_x"
+    zy, zx = "__z_y", "__z_x"
     iy, ix = point_iy_ix(lat_micro, lon_micro, res)
     mask = F.lit((1 << MAX_ZRES) - 1)
     df = df.withColumns({zy: iy.bitwiseAND(mask), zx: ix.bitwiseAND(mask)})
@@ -109,7 +109,7 @@ def with_zorder(df, lat_micro: str, lon_micro: str, res: int, out: str = "z"):
                 .bitwiseAND(F.lit(mask))
             for c in (zy, zx)
         })
-    return (df.withColumn(out, F.col(zx).bitwiseOR(F.col(zy) * F.lit(2))
+    return (df.withColumn("z", F.col(zx).bitwiseOR(F.col(zy) * F.lit(2))
                           .cast("long"))
             .drop(zy, zx))
 
@@ -227,13 +227,13 @@ def z_range_predicate(z: Column | str, ranges: list[tuple[int, int]]) -> Column:
     return pred
 
 
-def optimize_zorder(df, path: str, lat_micro: str = "lat_us",
-                    lon_micro: str = "lon_us", res: int = 12,
-                    out: str = "z", n_files: int | None = None):
-    """``OPTIMIZE ZORDER BY`` for a lat/lon table: add the Morton id,
-    RANGE-partition on it (contiguous z-intervals per output file, so
-    parquet min/max footer stats are tight), sort within partitions
-    (tight row-group stats), write, and return the read-back frame.
+def optimize_zorder(df, path: str, res: int = 12,
+                    n_files: int | None = None):
+    """``OPTIMIZE ZORDER BY`` for a (lat_us, lon_us) table: add the
+    Morton id ``z``, RANGE-partition on it (contiguous z-intervals per
+    output file, so parquet min/max footer stats are tight), sort within
+    partitions (tight row-group stats), write, and return the read-back
+    frame.
 
     This is the data-layout half of the bbox range-scan story: after
     this write, any bbox compiles (``z_ranges_for_bbox``) to a handful
@@ -246,8 +246,8 @@ def optimize_zorder(df, path: str, lat_micro: str = "lat_us",
     spark = df.sparkSession
     if n_files is None:
         n_files = max(spark.sparkContext.defaultParallelism, 8)
-    zdf = with_zorder(df, lat_micro, lon_micro, res, out=out)
-    (zdf.repartitionByRange(n_files, out).sortWithinPartitions(out)
+    zdf = with_zorder(df, "lat_us", "lon_us", res)
+    (zdf.repartitionByRange(n_files, "z").sortWithinPartitions("z")
         .write.mode("overwrite").parquet(path))
     return spark.read.parquet(path)
 

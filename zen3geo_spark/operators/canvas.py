@@ -15,10 +15,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def canvas_from_grid(grid: DataFrame, canvas_id_col: str = "scene_id") -> DataFrame:
+def canvas_from_grid(grid: DataFrame) -> DataFrame:
     """Derive one canvas row per scene from long-form pixels with
     pixel-center coordinate columns (x, y)."""
-    agg = grid.groupBy(F.col(canvas_id_col).alias("canvas_id")).agg(
+    agg = grid.groupBy(F.col("scene_id").alias("canvas_id")).agg(
         F.countDistinct("x").alias("width"),
         F.countDistinct("y").alias("height"),
         F.min("x").alias("_cxmin"), F.max("x").alias("_cxmax"),

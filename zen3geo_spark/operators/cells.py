@@ -48,11 +48,11 @@ from zen3geo_spark.functions.geo import (
     cell_parent_sql,
     cells_adjacent_sql,
     explode_bbox_cells,
+    mixed_cell_iy_ix,
 )
 
 
 def compact_cells(cells: DataFrame, res: int, min_res: int = 0,
-                  cell_col: str = "cell",
                   group_cols: tuple[str, ...] = ()) -> DataFrame:
     """Compact a distinct cell set at resolution ``res``: replace every
     complete sibling quad by its parent, recursively down to
@@ -69,7 +69,7 @@ def compact_cells(cells: DataFrame, res: int, min_res: int = 0,
     if min_res > res:
         raise ValueError(f"min_res {min_res} must be <= res {res}")
     g = list(group_cols)
-    c = F.col(cell_col)
+    c = F.col("cell")
     # (cell, level, ancestor) for level = min_res .. res
     anc_structs = [
         F.struct(F.lit(lvl).alias("lvl"),
@@ -102,9 +102,8 @@ def compact_cells(cells: DataFrame, res: int, min_res: int = 0,
 
 
 def compact_cells_sql(cells_sql: str, res: int, min_res: int,
-                      engine: str = "duckdb",
                       group_cols: tuple[str, ...] = ()) -> str:
-    """Engine-neutral SQL twin of :func:`compact_cells`.
+    """DuckDB SQL twin of :func:`compact_cells`.
 
     ``cells_sql`` must yield columns ``(*group_cols, cell)`` (distinct
     not required). The bounded level range unrolls to a UNION ALL (the
@@ -116,7 +115,7 @@ def compact_cells_sql(cells_sql: str, res: int, min_res: int,
     gh = "".join(f"h.{c}, " for c in group_cols)
     arms = []
     for lvl in range(min_res, res + 1):
-        anc = cell_parent_sql("cell", res, lvl, engine)
+        anc = cell_parent_sql("cell", res, lvl, "duckdb")
         arms.append(
             f"select {gsel}cell, {lvl} as lvl, {anc} as anc from _cells")
     union = " union all ".join(arms)
@@ -144,38 +143,30 @@ def compact_cells_sql(cells_sql: str, res: int, min_res: int,
     """
 
 
-def uncompact_cells(cells: DataFrame, res: int,
-                    cell_col: str = "cell",
-                    res_col: str = "cell_res") -> DataFrame:
+def uncompact_cells(cells: DataFrame, res: int) -> DataFrame:
     """Inverse of :func:`compact_cells`: expand a mixed-resolution cell
     set back to uniform resolution ``res`` (fan-out ``4^(res-L)`` per
-    row — the caller bounds ``res - min(L)``). Output: ``(cell)``."""
-    c, r = cell_col, res_col
+    row — the caller bounds ``res - min(L)``). Reads ``(cell, cell_res)``
+    rows; output: ``(cell)``."""
     # children at res of a cell at level L: iy', ix' range over the
-    # (iy<<s .. iy<<s + 2^s - 1) block where s = res - L.  Pure bigint
-    # (shiftleft with column shift amounts is SQL-only, hence expr).
-    one = "cast(1 as bigint)"
+    # (iy<<s .. iy<<s + 2^s - 1) block where s = res - L; child k of the
+    # block sits at (k div 2^s, k % 2^s). Pure bigint.
+    iy, ix = mixed_cell_iy_ix(F.col("cell"), F.col("cell_res"))
+    side = F.call_function("shiftleft", F.lit(1).cast("long"),
+                           F.lit(res) - F.col("cell_res"))
+    k, s = F.col("k"), F.col("side")
     return (cells
-            .select(
-                F.expr(
-                    f"shiftleft(({c} - shiftleft({one}, {r} * 2)) div shiftleft({one}, {r}), {res} - {r})"
-                ).alias("y0"),
-                F.expr(
-                    f"shiftleft(({c} - shiftleft({one}, {r} * 2)) % shiftleft({one}, {r}), {res} - {r})"
-                ).alias("x0"),
-                F.expr(f"shiftleft({one}, {res} - {r})").alias("side"),
-                F.expr(f"shiftleft({one}, ({res} - {r}) * 2)").alias("nc"))
+            .select((iy * side).alias("y0"), (ix * side).alias("x0"),
+                    side.alias("side"))
             .select("y0", "x0", "side",
-                    F.explode(F.sequence(F.lit(0), F.col("nc") - 1)).alias("k"))
-            .select((F.shiftleft(F.lit(1).cast("long"), 2 * res)
-                     + (F.col("y0") + F.floor(F.col("k") / F.col("side")).cast("long"))
-                     * F.shiftleft(F.lit(1), res)
-                     + F.col("x0") + F.pmod(F.col("k"), F.col("side")))
+                    F.explode(F.sequence(F.lit(0).cast("long"), s * s - 1))
+                    .alias("k"))
+            .select(cell_from_iy_ix(F.col("y0") + F.call_function("div", k, s),
+                                    F.col("x0") + k % s, res)
                     .alias("cell")))
 
 
-def grid_dbscan(points: DataFrame, res: int, min_pts: int,
-                lat_col: str = "lat_us", lon_col: str = "lon_us") -> DataFrame:
+def grid_dbscan(points: DataFrame, res: int, min_pts: int) -> DataFrame:
     """Grid DBSCAN: cluster the res-``res`` cells holding >= ``min_pts``
     points via 8-neighbor connectivity. Output:
     ``(cell, cluster, n_pts)`` — cluster = min cell id in the component
@@ -191,7 +182,7 @@ def grid_dbscan(points: DataFrame, res: int, min_pts: int,
     from zen3geo_spark.operators.dedup import connected_components
 
     core = (points
-            .select(cell_encode(F.col(lat_col), F.col(lon_col), res).alias("cell"))
+            .select(cell_encode(F.col("lat_us"), F.col("lon_us"), res).alias("cell"))
             .groupBy("cell").agg(F.count("*").alias("n_pts"))
             .filter(F.col("n_pts") >= min_pts))
     core = core.localCheckpoint(eager=False)
@@ -337,10 +328,7 @@ def cover_segment_cells_sql(segments_sql: str, res: int) -> str:
     """
 
 
-def cover_disk_cells(points: DataFrame, radius_us: int, res: int,
-                     id_col: str = "point_id",
-                     lat_col: str = "lat_us",
-                     lon_col: str = "lon_us") -> DataFrame:
+def cover_disk_cells(points: DataFrame, radius_us: int, res: int) -> DataFrame:
     """Disk cover: every cell whose closed rectangle intersects the
     closed disk of ``radius_us`` micro-degrees around each point (the
     planar serving-area / geofence cover; for metric-exact radii pair
@@ -354,8 +342,8 @@ def cover_disk_cells(points: DataFrame, radius_us: int, res: int,
     """
     r = int(radius_us)
     base = points.select(
-        F.col(id_col).alias("point_id"),
-        F.col(lat_col).alias("py"), F.col(lon_col).alias("px"))
+        F.col("point_id"),
+        F.col("lat_us").alias("py"), F.col("lon_us").alias("px"))
     cand = explode_bbox_cells(base, F.col("py") - r, F.col("py") + r,
                               F.col("px") - r, F.col("px") + r, res)
     return (cand.filter(F.expr(_disk_rect_pred_sql(r, res, "spark")))
@@ -386,8 +374,7 @@ def cover_disk_cells_sql(points_sql: str, radius_us: int, res: int) -> str:
     """
 
 
-def moran_i(points: DataFrame, res: int,
-            lat_col: str = "lat_us", lon_col: str = "lon_us") -> DataFrame:
+def moran_i(points: DataFrame, res: int) -> DataFrame:
     """Global Moran's I — THE spatial-autocorrelation statistic — of
     page density over the FULL res-``res`` lattice (empty cells count
     as 0), with binary 8-neighbor weights (lon wraps, lat clamps — the
@@ -407,7 +394,7 @@ def moran_i(points: DataFrame, res: int,
     scalar aggregates. No cross join, no window.
     """
     counts = (points
-              .select(cell_encode(F.col(lat_col), F.col(lon_col), res)
+              .select(cell_encode(F.col("lat_us"), F.col("lon_us"), res)
                       .alias("cell"))
               .groupBy("cell").agg(F.count("*").alias("x")))
     spark = points.sparkSession
@@ -445,8 +432,7 @@ def moran_i(points: DataFrame, res: int,
         "moran_x1e4 long")
 
 
-def local_moran(points: DataFrame, res: int,
-                lat_col: str = "lat_us", lon_col: str = "lon_us") -> DataFrame:
+def local_moran(points: DataFrame, res: int) -> DataFrame:
     """LISA — Anselin's LOCAL Moran's I per cell, the hot/cold-spot
     cluster map: ``I_i ∝ X_i · Σ_j w_ij X_j`` with the same scaled
     integer residuals as :func:`moran_i` (X_i = N·x_i − T), queen
@@ -458,7 +444,7 @@ def local_moran(points: DataFrame, res: int,
     are a presentation concern).
     """
     counts = (points
-              .select(cell_encode(F.col(lat_col), F.col(lon_col), res)
+              .select(cell_encode(F.col("lat_us"), F.col("lon_us"), res)
                       .alias("cell"))
               .groupBy("cell").agg(F.count("*").alias("x")))
     spark = points.sparkSession

@@ -28,10 +28,10 @@ CLIP_SCHEMA = (
 
 
 def chip_bounds_from_grid(grid: DataFrame, clip_minx: float, clip_miny: float,
-                          clip_maxx: float, clip_maxy: float, chip_id: int,
-                          res_x: float = 1.0, res_y: float = 1.0) -> DataFrame:
+                          clip_maxx: float, clip_maxy: float, chip_id: int) -> DataFrame:
     """rio.clip_box-equivalent: select pixels whose CENTER lies in the box,
-    then report chip pixel-edge bounds (center extremes ± half pixel) —
+    then report chip pixel-edge bounds (center extremes ± half a unit
+    pixel) —
     matches rio bounds goldens (-1.5,-0.5,1.5,1.5)/(2.5,2.5,5.5,4.5)."""
     sel = grid.filter(
         (F.col("x") >= clip_minx) & (F.col("x") <= clip_maxx)
@@ -39,10 +39,10 @@ def chip_bounds_from_grid(grid: DataFrame, clip_minx: float, clip_miny: float,
     )
     return sel.groupBy().agg(
         F.lit(chip_id).cast("long").alias("chip_id"),
-        (F.min("x") - res_x / 2).alias("xmin"),
-        (F.min("y") - res_y / 2).alias("ymin"),
-        (F.max("x") + res_x / 2).alias("xmax"),
-        (F.max("y") + res_y / 2).alias("ymax"),
+        (F.min("x") - 0.5).alias("xmin"),
+        (F.min("y") - 0.5).alias("ymin"),
+        (F.max("x") + 0.5).alias("xmax"),
+        (F.max("y") + 0.5).alias("ymax"),
         F.countDistinct("y").alias("height"),
         F.countDistinct("x").alias("width"),
         F.first("crs").alias("crs"),
@@ -77,8 +77,7 @@ def clip_vector_with_rectangle(geoms_df: DataFrame, chips_df: DataFrame) -> Data
 
 
 def suggested_warp_grid(xmin: float, ymin: float, xmax: float, ymax: float,
-                        width: int, height: int, dst_crs: str,
-                        samples: int = 21) -> tuple:
+                        width: int, height: int, dst_crs: str) -> tuple:
     """GDALSuggestedWarpOutput-compatible destination grid for
     reprojecting a chip (the algorithm behind ``rio.reproject``'s default
     transform — public GDAL behavior, verified against the reference's
@@ -98,8 +97,8 @@ def suggested_warp_grid(xmin: float, ymin: float, xmax: float, ymax: float,
     from zen3geo_spark.functions.geo import crs_forward_np
 
     fwd = crs_forward_np(dst_crs)
-    ys = np.linspace(ymin, ymax, samples)
-    xs = np.linspace(xmin, xmax, samples)
+    ys = np.linspace(ymin, ymax, 21)
+    xs = np.linspace(xmin, xmax, 21)
     exs, eys = [], []
     for x_edge in (xmin, xmax):
         ex, ey = fwd(ys, np.full_like(ys, x_edge))

@@ -98,13 +98,13 @@ def flat_mapper(df: DataFrame, out_name: str, arr: Column) -> DataFrame:
 
 
 def zipper(left: DataFrame, right: DataFrame, order_left: list[str],
-           order_right: list[str], suffix: str = "_r") -> DataFrame:
+           order_right: list[str]) -> DataFrame:
     """Zipper ≙ positional pairing via scale-safe global ranks on both
     sides (``with_global_pos`` — no single-task Window) + equi-join."""
     l = with_global_pos(left, order_left)
     r = with_global_pos(right, order_right)
     for c in set(l.columns) & set(r.columns) - {"_pos"}:
-        r = r.withColumnRenamed(c, c + suffix)
+        r = r.withColumnRenamed(c, c + "_r")
     return l.join(r, "_pos").drop("_pos")
 
 

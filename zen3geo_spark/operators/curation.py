@@ -64,8 +64,7 @@ def word_ngrams(text: Column, n: int) -> Column:
 
 
 def exploded_word_ngrams(docs: DataFrame, n: int,
-                         carry_cols: tuple[str, ...],
-                         text_col: str = "text") -> DataFrame:
+                         carry_cols: tuple[str, ...]) -> DataFrame:
     """(carry..., n_grams, gram): one row per positional word n-gram.
 
     Value-identical to ``explode(word_ngrams(...))`` but an order of
@@ -80,7 +79,7 @@ def exploded_word_ngrams(docs: DataFrame, n: int,
     pre-Generate expressions are split/size (cheap), and the slice +
     concat_ws above the Generate bind to the materialized array column.
     """
-    words = F.split(F.lower(F.col(text_col)), " ")
+    words = F.split(F.lower(F.col("text")), " ")
     base = (docs.select(*carry_cols, words.alias("_w"))
             .filter(F.size("_w") >= n)
             .select(*carry_cols, "_w",
@@ -94,16 +93,14 @@ def exploded_word_ngrams(docs: DataFrame, n: int,
         .alias("gram"))
 
 
-def _ngrams_cte_duckdb(rel: str, n: int, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       extra_cols: str = "") -> str:
+def _ngrams_cte_duckdb(rel: str, n: int, extra_cols: str = "") -> str:
     """DuckDB CTE body producing (id, [extra_cols,] gram) rows identical
     to ``word_ngrams`` + explode: 1-based inclusive list slicing,
     generate_series empty when the doc is shorter than ``n`` words."""
     return (
-        f"w as (select {id_col}, {extra_cols + ', ' if extra_cols else ''}"
-        f"string_split(lower({text_col}), ' ') as w from {rel}),\n"
-        f"g as (select {id_col}, {extra_cols + ', ' if extra_cols else ''}"
+        f"w as (select doc_id, {extra_cols + ', ' if extra_cols else ''}"
+        f"string_split(lower(text), ' ') as w from {rel}),\n"
+        f"g as (select doc_id, {extra_cols + ', ' if extra_cols else ''}"
         f"len(w) - {n - 1} as n_grams,\n"
         f"       array_to_string(w[i:i+{n - 1}], ' ') as gram\n"
         f"     from w, unnest(generate_series(1, len(w) - {n - 1})) as t(i))"
@@ -114,9 +111,7 @@ def _ngrams_cte_duckdb(rel: str, n: int, id_col: str = "doc_id",
 # 1. test-set contamination
 # ---------------------------------------------------------------------------
 
-def contamination_check(docs: DataFrame, n: int = 5, bench_mod: int = 97,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def contamination_check(docs: DataFrame, n: int = 5, bench_mod: int = 97) -> DataFrame:
     """Per corpus document: total word-``n``-gram positions and how many
     of them occur anywhere in the benchmark split (documents whose id is
     divisible by ``bench_mod`` — a deterministic holdout stand-in; a real
@@ -131,33 +126,31 @@ def contamination_check(docs: DataFrame, n: int = 5, bench_mod: int = 97,
     count aggregate keyed by doc id. Nothing shuffles at corpus width
     except the final per-doc agg, and the scan prunes to (id, text).
     """
-    is_bench = F.pmod(F.col(id_col), F.lit(bench_mod)) == 0
+    is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == 0
     bench_vocab = (exploded_word_ngrams(docs.filter(is_bench), n,
-                                        (id_col,), text_col)
+                                        ("doc_id",))
                    .select("gram").distinct()
                    .withColumn("_hit", F.lit(1)))
     exploded = exploded_word_ngrams(docs.filter(~is_bench), n,
-                                    (id_col,), text_col)
+                                    ("doc_id",))
     return (exploded.join(F.broadcast(bench_vocab), "gram", "left")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.max("n_grams").alias("n_grams"),
                  F.count("_hit").alias("n_contaminated")))
 
 
-def contamination_sql_duckdb(rel: str, n: int = 5, bench_mod: int = 97,
-                             id_col: str = "doc_id",
-                             text_col: str = "text") -> str:
+def contamination_sql_duckdb(rel: str, n: int = 5, bench_mod: int = 97) -> str:
     """DuckDB twin of :func:`contamination_check`."""
     return f"""
-with {_ngrams_cte_duckdb(rel, n, id_col, text_col)},
-bench as (select distinct gram from g where {id_col} % {bench_mod} = 0),
-corpus as (select * from g where {id_col} % {bench_mod} <> 0)
-select {id_col},
+with {_ngrams_cte_duckdb(rel, n)},
+bench as (select distinct gram from g where doc_id % {bench_mod} = 0),
+corpus as (select * from g where doc_id % {bench_mod} <> 0)
+select doc_id,
        max(n_grams) as n_grams,
        count(*) filter (where gram in (select gram from bench))
            as n_contaminated
 from corpus
-group by {id_col}
+group by doc_id
 """
 
 
@@ -165,9 +158,7 @@ group by {id_col}
 # 2. duplicate-span inventory
 # ---------------------------------------------------------------------------
 
-def duplicate_span_inventory(docs: DataFrame, n: int = 8, top_k: int = 20,
-                             id_col: str = "doc_id", text_col: str = "text",
-                             source_col: str = "source") -> DataFrame:
+def duplicate_span_inventory(docs: DataFrame, n: int = 8, top_k: int = 20) -> DataFrame:
     """Top-``top_k`` most-repeated word ``n``-gram spans with their
     occurrence count, distinct-document spread, and distinct-source
     spread — ordered (count desc, gram asc), a total order, so the cut is
@@ -178,25 +169,23 @@ def duplicate_span_inventory(docs: DataFrame, n: int = 8, top_k: int = 20,
     for — before the shuffle) → TakeOrdered top-k (per-partition heaps +
     a top_k-sized driver merge, never a global sort materialization).
     """
-    ex = exploded_word_ngrams(docs, n, (id_col, source_col), text_col)
+    ex = exploded_word_ngrams(docs, n, ("doc_id", "source"))
     return (ex.groupBy("gram")
             .agg(F.count("*").alias("n_occurrences"),
-                 F.countDistinct(id_col).alias("n_docs"),
-                 F.countDistinct(source_col).alias("n_sources"))
+                 F.countDistinct("doc_id").alias("n_docs"),
+                 F.countDistinct("source").alias("n_sources"))
             .orderBy(F.col("n_occurrences").desc(), F.col("gram").asc())
             .limit(top_k))
 
 
-def duplicate_span_sql_duckdb(rel: str, n: int = 8, top_k: int = 20,
-                              id_col: str = "doc_id", text_col: str = "text",
-                              source_col: str = "source") -> str:
+def duplicate_span_sql_duckdb(rel: str, n: int = 8, top_k: int = 20) -> str:
     """DuckDB twin of :func:`duplicate_span_inventory`."""
     return f"""
-with {_ngrams_cte_duckdb(rel, n, id_col, text_col, extra_cols=source_col)}
+with {_ngrams_cte_duckdb(rel, n, extra_cols="source")}
 select gram,
        count(*) as n_occurrences,
-       count(distinct {id_col}) as n_docs,
-       count(distinct {source_col}) as n_sources
+       count(distinct doc_id) as n_docs,
+       count(distinct source) as n_sources
 from g
 group by gram
 order by n_occurrences desc, gram asc
@@ -213,11 +202,15 @@ def sample_hash(id_col: Column) -> Column:
     return F.pmod(id_col * F.lit(_HASH_A) + F.lit(_HASH_B), F.lit(100))
 
 
-def stratified_sample(docs: DataFrame, rates: dict[str, int],
-                      default_rate: int = 10, id_col: str = "doc_id",
-                      strat_col: str = "lang") -> DataFrame:
-    """Keep each document iff its hash bucket falls under its stratum's
-    keep-rate (percent). Returns ``docs`` filtered — reproducible
+# Default keep-rate (percent) of a ``lang`` stratum that ``rates`` does
+# not name, and the audit table's grouping.
+SAMPLE_DEFAULT_RATE = 10
+SAMPLE_GROUP_COLS = ("lang", "source")
+
+
+def stratified_sample(docs: DataFrame, rates: dict[str, int]) -> DataFrame:
+    """Keep each document iff its ``doc_id`` hash bucket falls under its
+    ``lang`` stratum's keep-rate (percent). Returns ``docs`` filtered — reproducible
     row-for-row across engines, retries, and cluster sizes (no rand()),
     which is what makes downsampling decisions auditable at 100 TB.
 
@@ -225,50 +218,43 @@ def stratified_sample(docs: DataFrame, rates: dict[str, int],
     hash — the filter pushes down to the scan alongside any other
     predicate.
     """
-    return docs.filter(
-        sample_hash(F.col(id_col)) < _rate_case(rates, default_rate, strat_col))
+    return docs.filter(sample_hash(F.col("doc_id"))
+                       < _rate_case(rates, SAMPLE_DEFAULT_RATE))
 
 
 def stratified_sample_summary(docs: DataFrame, rates: dict[str, int],
-                              default_rate: int = 10, id_col: str = "doc_id",
-                              strat_col: str = "lang",
-                              group_cols: tuple[str, ...] = ("lang", "source"),
+                              default_rate: int = SAMPLE_DEFAULT_RATE,
                               ) -> DataFrame:
     """Per-(stratum, source) totals and kept counts — the audit table a
     pipeline materializes next to the sampled output."""
-    kept = sample_hash(F.col(id_col)) < _rate_case(rates, default_rate,
-                                                   strat_col)
-    return (docs.groupBy(*group_cols)
+    kept = sample_hash(F.col("doc_id")) < _rate_case(rates, default_rate)
+    return (docs.groupBy(*SAMPLE_GROUP_COLS)
             .agg(F.count("*").alias("n_total"),
                  F.count(F.when(kept, 1)).alias("n_kept")))
 
 
-def _rate_case(rates: dict[str, int], default_rate: int,
-               strat_col: str) -> Column:
+def _rate_case(rates: dict[str, int], default_rate: int) -> Column:
+    """Per-row percent from the ``lang`` column: ``rates`` or the default."""
     rate = F.lit(default_rate)
     for k in sorted(rates):
-        rate = F.when(F.col(strat_col) == k, F.lit(rates[k])).otherwise(rate)
+        rate = F.when(F.col("lang") == k, F.lit(rates[k])).otherwise(rate)
     return rate
 
 
 def stratified_sample_sql_duckdb(rel: str, rates: dict[str, int],
-                                 default_rate: int = 10,
-                                 id_col: str = "doc_id",
-                                 strat_col: str = "lang",
-                                 group_cols: tuple[str, ...] = ("lang",
-                                                                "source"),
+                                 default_rate: int = SAMPLE_DEFAULT_RATE,
                                  ) -> str:
     """DuckDB twin of :func:`stratified_sample_summary` (same hash, same
     CASE)."""
     case = "case " + " ".join(
-        f"when {strat_col} = '{k}' then {rates[k]}" for k in sorted(rates)
+        f"when lang = '{k}' then {rates[k]}" for k in sorted(rates)
     ) + f" else {default_rate} end"
-    cols = ", ".join(group_cols)
+    cols = ", ".join(SAMPLE_GROUP_COLS)
     return f"""
 select {cols},
        count(*) as n_total,
        count(*) filter (
-           where ({id_col} * {_HASH_A} + {_HASH_B}) % 100 < {case}
+           where (doc_id * {_HASH_A} + {_HASH_B}) % 100 < {case}
        ) as n_kept
 from {rel}
 group by {cols}
@@ -310,13 +296,13 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("clean_text", clean)
 
 
-def pii_scrub_sql_duckdb(rel: str, text_col: str = "text") -> str:
+def pii_scrub_sql_duckdb(rel: str) -> str:
     """DuckDB twin of :func:`pii_scrub` (RE2 executes the same patterns;
     counts via regexp_extract_all, scrub via global regexp_replace)."""
     counts = ",\n       ".join(
-        f"len(regexp_extract_all({text_col}, '{pat}')) as n_{kind}"
+        f"len(regexp_extract_all(text, '{pat}')) as n_{kind}"
         for kind, pat, _ in PII_PATTERNS)
-    clean = text_col
+    clean = "text"
     for _, pat, token in PII_PATTERNS:
         clean = f"regexp_replace({clean}, '{pat}', '{token}', 'g')"
     return f"""
@@ -337,8 +323,7 @@ def url_host(url: Column) -> Column:
     return F.regexp_extract(url, r"^https?://([^/]+)/", 1)
 
 
-def url_blocklist_filter(pages: DataFrame, blocklist: DataFrame,
-                         url_col: str = "url") -> DataFrame:
+def url_blocklist_filter(pages: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Tag every page with the blocklist category of its URL host (NULL =
     not blocked) — the UT1-style domain-blocklist pass crawl pipelines
     run before any text processing. ``blocklist`` is a ``(host,
@@ -350,33 +335,37 @@ def url_blocklist_filter(pages: DataFrame, blocklist: DataFrame,
     (semi-join pushdown applies: the host extract + join key prune to a
     single-column scan of the dimension)."""
     return (pages
-            .withColumn("host", url_host(F.col(url_col)))
+            .withColumn("host", url_host(F.col("url")))
             .join(F.broadcast(blocklist.withColumnRenamed(
                 "category", "block_category")),
                 on="host", how="left"))
 
 
-def synth_blocklist(spark, n_hosts: int = 1000, mod: int = 17,
-                    resid: int = 3):
+# Synthetic host universe example-<k>.test, k < BLOCK_HOSTS; host k is
+# blocked iff k % BLOCK_MOD == BLOCK_RESID.
+BLOCK_HOSTS, BLOCK_MOD, BLOCK_RESID = 1000, 17, 3
+
+
+def synth_blocklist(spark):
     """Deterministic blocklist dimension over the synthetic host universe
-    ``example-<k>.test``: every ``mod``-th host is blocked, categories
-    rotate adult/malware/gambling (formula shared with the DuckDB twin)."""
-    return (spark.range(n_hosts)
-            .filter(F.pmod(F.col("id"), F.lit(mod)) == resid)
+    ``example-<k>.test``: every ``BLOCK_MOD``-th host is blocked,
+    categories rotate adult/malware/gambling (formula shared with the
+    DuckDB twin)."""
+    return (spark.range(BLOCK_HOSTS)
+            .filter(F.pmod(F.col("id"), F.lit(BLOCK_MOD)) == BLOCK_RESID)
             .selectExpr(
                 "concat('example-', cast(id as string), '.test') as host",
                 "case cast(id % 3 as int) when 0 then 'adult' "
                 "when 1 then 'malware' else 'gambling' end as category"))
 
 
-def synth_blocklist_sql_duckdb(n_hosts: int = 1000, mod: int = 17,
-                               resid: int = 3) -> str:
+def synth_blocklist_sql_duckdb() -> str:
     """DuckDB twin of :func:`synth_blocklist` (same formulas)."""
     return f"""
 select concat('example-', cast(id as varchar), '.test') as host,
        case cast(id % 3 as int) when 0 then 'adult'
             when 1 then 'malware' else 'gambling' end as category
-from range({n_hosts}) t(id) where id % {mod} = {resid}
+from range({BLOCK_HOSTS}) t(id) where id % {BLOCK_MOD} = {BLOCK_RESID}
 """
 
 
@@ -384,9 +373,7 @@ from range({n_hosts}) t(id) where id % {mod} = {resid}
 # 6. boilerplate chunk dedup (CCNet/RefinedWeb paragraph-dedup analogue)
 # ---------------------------------------------------------------------------
 
-def chunk_dedup(docs: DataFrame, chunk_words: int = 8, max_docs: int = 2,
-                id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def chunk_dedup(docs: DataFrame, chunk_words: int = 8, max_docs: int = 2) -> DataFrame:
     """Remove corpus-wide repeated spans from every document: tile each
     text into non-overlapping ``chunk_words``-word chunks, find chunks
     that occur in more than ``max_docs`` distinct documents (navigation
@@ -408,26 +395,26 @@ def chunk_dedup(docs: DataFrame, chunk_words: int = 8, max_docs: int = 2,
     Python nodes.
     """
     k = chunk_words
-    words = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " ")
-    base = docs.select(F.col(id_col), words.alias("_w"))
+    words = F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), " ")
+    base = docs.select(F.col("doc_id"), words.alias("_w"))
     # integer ceil-div: every doc has >= 1 word after split, so the
     # sequence below never runs descending.
     n_chunks = F.expr(f"(size(_w) + {k - 1}) div {k}")
     chunks = (base
               .withColumn("_i", F.explode(F.sequence(F.lit(1), n_chunks)))
-              .select(id_col, "_i",
+              .select("doc_id", "_i",
                       F.concat_ws(" ",
                                   F.slice(F.col("_w"),
                                           (F.col("_i") - 1) * k + 1, k))
                       .alias("chunk")))
     hot = (chunks.groupBy("chunk")
-           .agg(F.countDistinct(id_col).alias("_nd"))
+           .agg(F.countDistinct("doc_id").alias("_nd"))
            .filter(F.col("_nd") > max_docs)
            .select("chunk", F.lit(1).alias("_hot")))
     j = chunks.join(F.broadcast(hot), "chunk", "left")
     keep = F.when(F.col("_hot").isNull(),
                   F.struct(F.col("_i").alias("i"), F.col("chunk").alias("c")))
-    return (j.groupBy(id_col)
+    return (j.groupBy("doc_id")
             .agg(F.count("*").alias("n_chunks"),
                  F.count("_hot").alias("n_dropped"),
                  F.array_join(
@@ -435,28 +422,26 @@ def chunk_dedup(docs: DataFrame, chunk_words: int = 8, max_docs: int = 2,
                                  lambda x: x["c"]), " ").alias("clean_text")))
 
 
-def chunk_dedup_sql_duckdb(rel: str, chunk_words: int = 8, max_docs: int = 2,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> str:
+def chunk_dedup_sql_duckdb(rel: str, chunk_words: int = 8, max_docs: int = 2) -> str:
     """DuckDB twin of :func:`chunk_dedup` (same tiling, same hot rule,
     same in-order reassembly)."""
     k = chunk_words
     return f"""
 with w as (
-  select {id_col},
-         string_split(lower(coalesce({text_col}, '')), ' ') as w
+  select doc_id,
+         string_split(lower(coalesce(text, '')), ' ') as w
   from {rel}
 ),
 c as (
-  select {id_col}, i,
+  select doc_id, i,
          array_to_string(w[(i-1)*{k}+1:(i-1)*{k}+{k}], ' ') as chunk
   from w, unnest(generate_series(1, (len(w) + {k - 1}) // {k})) t(i)
 ),
 hot as (
   select chunk from c group by chunk
-  having count(distinct {id_col}) > {max_docs}
+  having count(distinct doc_id) > {max_docs}
 )
-select {id_col},
+select doc_id,
        count(*) as n_chunks,
        count(*) filter (where chunk in (select chunk from hot))
            as n_dropped,
@@ -464,7 +449,7 @@ select {id_col},
                 filter (where chunk not in (select chunk from hot)), '')
            as clean_text
 from c
-group by {id_col}
+group by doc_id
 """
 
 
@@ -480,9 +465,7 @@ _ORD_B = 54321
 _ORD_MOD = 100000007
 
 
-def pack_sequences(docs: DataFrame, budget: int = 256, n_shards: int = 8,
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int = 256, n_shards: int = 8) -> DataFrame:
     """Assign every document to a training sequence of at most ~``budget``
     whitespace tokens: documents are sharded by an arithmetic id hash,
     deterministically ordered within the shard (hash order — a cheap
@@ -502,38 +485,36 @@ def pack_sequences(docs: DataFrame, budget: int = 256, n_shards: int = 8,
     is a streaming frame, so memory per partition is O(1) beyond the
     sort.
     """
-    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    shard = F.pmod(F.col(id_col) * _HASH_A + _HASH_B, F.lit(n_shards))
-    ord_h = F.pmod(F.col(id_col) * _ORD_A + _ORD_B, F.lit(_ORD_MOD))
+    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    shard = F.pmod(F.col("doc_id") * _HASH_A + _HASH_B, F.lit(n_shards))
+    ord_h = F.pmod(F.col("doc_id") * _ORD_A + _ORD_B, F.lit(_ORD_MOD))
     from pyspark.sql import Window
     w = (Window.partitionBy("shard")
-         .orderBy("ord_h", id_col)
+         .orderBy("ord_h", "doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     return (docs
-            .select(F.col(id_col), shard.alias("shard"),
+            .select(F.col("doc_id"), shard.alias("shard"),
                     ord_h.alias("ord_h"), toks.alias("n_tokens"))
             .withColumn("_cum_before",
                         F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
-            .select(id_col, "shard",
+            .select("doc_id", "shard",
                     F.expr(f"_cum_before div {budget}").alias("seq_id"),
                     "n_tokens"))
 
 
-def pack_sequences_sql_duckdb(rel: str, budget: int = 256, n_shards: int = 8,
-                              id_col: str = "doc_id",
-                              text_col: str = "text") -> str:
+def pack_sequences_sql_duckdb(rel: str, budget: int = 256, n_shards: int = 8) -> str:
     """DuckDB twin of :func:`pack_sequences` (same hashes, same window)."""
     return f"""
 with d as (
-  select {id_col},
-         ({id_col} * {_HASH_A} + {_HASH_B}) % {n_shards} as shard,
-         ({id_col} * {_ORD_A} + {_ORD_B}) % {_ORD_MOD} as ord_h,
-         len(regexp_split_to_array(trim({text_col}), '\\s+')) as n_tokens
+  select doc_id,
+         (doc_id * {_HASH_A} + {_HASH_B}) % {n_shards} as shard,
+         (doc_id * {_ORD_A} + {_ORD_B}) % {_ORD_MOD} as ord_h,
+         len(regexp_split_to_array(trim(text), '\\s+')) as n_tokens
   from {rel}
 )
-select {id_col}, shard,
+select doc_id, shard,
        coalesce(sum(n_tokens) over (
-           partition by shard order by ord_h, {id_col}
+           partition by shard order by ord_h, doc_id
            rows between unbounded preceding and 1 preceding), 0)
            // {budget} as seq_id,
        n_tokens
@@ -545,15 +526,13 @@ from d
 # 8. per-source document cap (host-level crawl rebalancing)
 # ---------------------------------------------------------------------------
 
-def source_cap(docs: DataFrame, k: int = 10, n_salts: int = 4,
-               id_col: str = "doc_id", source_col: str = "source",
-               order_col: str = "n_chars") -> DataFrame:
+def source_cap(docs: DataFrame, k: int = 10, n_salts: int = 4) -> DataFrame:
     """Keep at most ``k`` documents per source (host/domain), preferring
-    the highest ``order_col`` with the id as a total-order tie-break —
+    the highest ``n_chars`` with ``doc_id`` as a total-order tie-break —
     the per-host cap crawl pipelines apply so that one giant forum
     doesn't dominate the corpus.
 
-    Returns the kept rows as ``(id, source, order_col, rk)`` with
+    Returns the kept rows as ``(doc_id, source, n_chars, rk)`` with
     ``rk`` the 1-based within-source rank.
 
     Scale shape: a one-window top-k per host melts down when one host
@@ -566,33 +545,31 @@ def source_cap(docs: DataFrame, k: int = 10, n_salts: int = 4,
     one sorts at most ``k * n_salts`` rows per source.
     """
     from pyspark.sql import Window
-    salt = F.pmod(F.col(id_col) * _HASH_A + _HASH_B, F.lit(n_salts))
-    w1 = (Window.partitionBy(source_col, "_salt")
-          .orderBy(F.col(order_col).desc(), F.col(id_col).asc()))
-    w2 = (Window.partitionBy(source_col)
-          .orderBy(F.col(order_col).desc(), F.col(id_col).asc()))
+    salt = F.pmod(F.col("doc_id") * _HASH_A + _HASH_B, F.lit(n_salts))
+    w1 = (Window.partitionBy("source", "_salt")
+          .orderBy(F.col("n_chars").desc(), F.col("doc_id").asc()))
+    w2 = (Window.partitionBy("source")
+          .orderBy(F.col("n_chars").desc(), F.col("doc_id").asc()))
     local = (docs
-             .select(id_col, source_col, order_col)
+             .select("doc_id", "source", "n_chars")
              .withColumn("_salt", salt)
              .withColumn("_r1", F.row_number().over(w1))
              .filter(F.col("_r1") <= k))
     return (local
             .withColumn("rk", F.row_number().over(w2))
             .filter(F.col("rk") <= k)
-            .select(id_col, source_col, order_col, "rk"))
+            .select("doc_id", "source", "n_chars", "rk"))
 
 
-def source_cap_sql_duckdb(rel: str, k: int = 10, id_col: str = "doc_id",
-                          source_col: str = "source",
-                          order_col: str = "n_chars") -> str:
+def source_cap_sql_duckdb(rel: str, k: int = 10) -> str:
     """DuckDB twin of :func:`source_cap` — the plain one-window top-k,
     which the salted two-phase form is exactly equal to."""
     return f"""
-select {id_col}, {source_col}, {order_col}, rk
+select doc_id, source, n_chars, rk
 from (
-  select {id_col}, {source_col}, {order_col},
-         row_number() over (partition by {source_col}
-                            order by {order_col} desc, {id_col} asc) as rk
+  select doc_id, source, n_chars,
+         row_number() over (partition by source
+                            order by n_chars desc, doc_id asc) as rk
   from {rel}
 )
 where rk <= {k}
@@ -604,8 +581,7 @@ where rk <= {k}
 # ---------------------------------------------------------------------------
 
 def epoch_mix(docs: DataFrame, targets: dict[str, int],
-              default_pct: int = 0, lang_col: str = "lang",
-              text_col: str = "text") -> DataFrame:
+              default_pct: int = 0) -> DataFrame:
     """Per-language token totals and the sampling weight that reshapes
     the corpus toward a target token mixture: ``weight = target_pct *
     total_tokens / (100 * lang_tokens)`` — weight > 1 means the language
@@ -622,13 +598,13 @@ def epoch_mix(docs: DataFrame, targets: dict[str, int],
     """
     from zen3geo_spark.operators._util import pair_all
 
-    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    per = (docs.select(F.col(lang_col).alias("lang"), toks.alias("_t"))
+    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    per = (docs.select(F.col("lang"), toks.alias("_t"))
            .groupBy("lang")
            .agg(F.count("*").alias("n_docs"),
                 F.sum("_t").alias("n_tokens")))
     total = per.agg(F.sum("n_tokens").alias("_total"))
-    tgt = _rate_case(targets, default_pct, "lang")
+    tgt = _rate_case(targets, default_pct)
     return (pair_all(per, total)
             .withColumn("target_pct", tgt)
             .select("lang", "n_docs", "n_tokens", "target_pct",
@@ -638,8 +614,7 @@ def epoch_mix(docs: DataFrame, targets: dict[str, int],
 
 
 def epoch_mix_sql_duckdb(rel: str, targets: dict[str, int],
-                         default_pct: int = 0, lang_col: str = "lang",
-                         text_col: str = "text") -> str:
+                         default_pct: int = 0) -> str:
     """DuckDB twin of :func:`epoch_mix` (same token split, same CASE,
     same arithmetic order)."""
     case = "case " + " ".join(
@@ -647,10 +622,10 @@ def epoch_mix_sql_duckdb(rel: str, targets: dict[str, int],
     ) + f" else {default_pct} end"
     return f"""
 with per as (
-  select {lang_col} as lang, count(*) as n_docs,
-         sum(len(regexp_split_to_array(trim({text_col}), '\\s+')))
+  select lang, count(*) as n_docs,
+         sum(len(regexp_split_to_array(trim(text), '\\s+')))
              as n_tokens
-  from {rel} group by {lang_col}
+  from {rel} group by lang
 ),
 tot as (select sum(n_tokens) as total from per)
 select lang, n_docs, n_tokens,

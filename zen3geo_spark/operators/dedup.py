@@ -129,11 +129,9 @@ def _batch_grams(texts, shingle_n: int):
     return list(uniq), np.asarray(all_idx, dtype=np.int64), np.asarray(offsets[:-1], dtype=np.int64)
 
 
-def shingle_table_pd(docs: DataFrame, text_col: str, id_col: str,
-                     shingle_n: int, out_id: str = "_vid",
-                     out_sh: str = "_vsh") -> DataFrame:
-    """(id, shingle-array) table via the Arrow kernel. Twin of the JVM
-    ``shingles`` Column (``_shingle_list`` is the pytest-asserted parity
+def shingle_table_pd(docs: DataFrame, shingle_n: int) -> DataFrame:
+    """(_vid, _vsh) = (doc_id, shingle array of text) via the Arrow
+    kernel. Twin of the JVM ``shingles`` Column (``_shingle_list`` is the pytest-asserted parity
     twin) — used on hot paths because the Column version's HOF lambda
     chain (transform/slice/array_join/array_distinct) runs in the
     expression interpreter at ~30 µs per gram (measured 8.3 s warm for a
@@ -144,17 +142,16 @@ def shingle_table_pd(docs: DataFrame, text_col: str, id_col: str,
             if len(pdf) == 0:
                 continue
             yield pd.DataFrame({
-                out_id: pdf[id_col].to_numpy(),
-                out_sh: [_shingle_list(t if isinstance(t, str) else "", shingle_n)
-                         for t in pdf[text_col]],
+                "_vid": pdf["doc_id"].to_numpy(),
+                "_vsh": [_shingle_list(t if isinstance(t, str) else "", shingle_n)
+                         for t in pdf["text"]],
             })
 
-    return _ensure_parallelism(docs).select(id_col, text_col).mapInPandas(
-        run, schema=f"{out_id} long, {out_sh} array<string>")
+    return _ensure_parallelism(docs).select("doc_id", "text").mapInPandas(
+        run, schema="_vid long, _vsh array<string>")
 
 
-def exploded_shingles_pd(docs: DataFrame, text_col: str, id_col: str,
-                         shingle_n: int) -> DataFrame:
+def exploded_shingles_pd(docs: DataFrame, shingle_n: int) -> DataFrame:
     """(doc, n_sh, sh) one-row-per-distinct-gram table via the Arrow
     kernel — the exploded twin of ``shingle_table_pd`` for blocking
     joins; n_sh is the doc's distinct-gram count."""
@@ -163,16 +160,16 @@ def exploded_shingles_pd(docs: DataFrame, text_col: str, id_col: str,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            uniq, idx, starts = _batch_grams(pdf[text_col], shingle_n)
+            uniq, idx, starts = _batch_grams(pdf["text"], shingle_n)
             n_per = np.diff(np.append(starts, len(idx)))
             un = np.asarray(uniq, dtype=object)
             yield pd.DataFrame({
-                "doc": np.repeat(pdf[id_col].to_numpy(), n_per),
+                "doc": np.repeat(pdf["doc_id"].to_numpy(), n_per),
                 "n_sh": np.repeat(n_per, n_per),
                 "sh": un[idx] if len(idx) else np.asarray([], dtype=object),
             })
 
-    return _ensure_parallelism(docs).select(id_col, text_col).mapInPandas(
+    return _ensure_parallelism(docs).select("doc_id", "text").mapInPandas(
         run, schema="doc long, n_sh int, sh string")
 
 
@@ -218,18 +215,17 @@ def _shingle_list(text: str, n: int) -> list[str]:
     return list(dict.fromkeys(" ".join(words[j:j + n]) for j in range(k)))
 
 
-def dedup_exact(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Keep the lowest-id representative per identical normalized text.
 
     One hash aggregate; at 100 TB this is the cheapest dedup pass and runs
     first to shrink everything downstream.
     """
     return (
-        docs.withColumn("fp", fingerprint(F.col(text_col)))
+        docs.withColumn("fp", fingerprint(F.col("text")))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count("*").alias("n_dups"),
         )
     )
@@ -307,8 +303,7 @@ def _permute_min(h: np.ndarray, starts: np.ndarray,
     return np.minimum.reduceat(vals, starts, axis=1)
 
 
-def minhash_table_pd(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", num_hashes: int = 16,
+def minhash_table_pd(docs: DataFrame, num_hashes: int = 16,
                      shingle_n: int = 3) -> DataFrame:
     """(doc, sig) signature table via ``mapInPandas`` — a plan-node
     materialization barrier. A ``pandas_udf`` column gets inlined by
@@ -324,20 +319,19 @@ def minhash_table_pd(docs: DataFrame, text_col: str = "text",
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            uniq, idx, starts = _batch_grams(pdf[text_col], shingle_n)
+            uniq, idx, starts = _batch_grams(pdf["text"], shingle_n)
             h = _poly_hash_batch(uniq, _POWS1_NP)[idx]
             mins = _permute_min(h, starts, a, b)
             yield pd.DataFrame({
-                "doc": pdf[id_col].to_numpy(),
+                "doc": pdf["doc_id"].to_numpy(),
                 "sig": [r.tolist() for r in mins.T],
             })
 
-    return docs.select(id_col, text_col).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc long, sig array<long>")
 
 
-def simhash_table_pd(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", shingle_n: int = 2) -> DataFrame:
+def simhash_table_pd(docs: DataFrame, shingle_n: int = 2) -> DataFrame:
     """(doc, sh) SimHash table via ``mapInPandas`` (single-evaluation
     barrier — see ``minhash_table_pd``). Value-identical to the
     ``simhash64``/``simhash64_agg`` Column paths and the DuckDB oracle
@@ -346,16 +340,16 @@ def simhash_table_pd(docs: DataFrame, text_col: str = "text",
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            uniq, idx, starts = _batch_grams(pdf[text_col], shingle_n)
+            uniq, idx, starts = _batch_grams(pdf["text"], shingle_n)
             h1 = _poly_hash_batch(uniq, _POWS1_NP)
             h2 = _poly_hash_batch(uniq, _POWS2_NP)
             h = (h1 + (h2 % (1 << 20)) * (1 << 40))[idx]
             yield pd.DataFrame({
-                "doc": pdf[id_col].to_numpy(),
+                "doc": pdf["doc_id"].to_numpy(),
                 "sh": _simhash_majority(h, starts),
             })
 
-    return docs.select(id_col, text_col).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc long, sh long")
 
 
@@ -448,8 +442,7 @@ def winnow_fingerprints_sql_duckdb(rel: str, id_col: str, col: str,
     """
 
 
-def banded_buckets(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", num_hashes: int = 16,
+def banded_buckets(docs: DataFrame, num_hashes: int = 16,
                    bands: int = 4, shingle_n: int = 3) -> DataFrame:
     """(doc, band, bucket): one LSH band-bucket row per document per band
     (bucket = md5 of that band's signature slice). The shared candidate
@@ -464,8 +457,7 @@ def banded_buckets(docs: DataFrame, text_col: str = "text",
     GC-freed instead of leaking in the CacheManager.
     """
     rows_per_band = num_hashes // bands
-    d = minhash_table_pd(_ensure_parallelism(docs), text_col=text_col,
-                         id_col=id_col, num_hashes=num_hashes,
+    d = minhash_table_pd(_ensure_parallelism(docs), num_hashes=num_hashes,
                          shingle_n=shingle_n)
     return d.select(
         "doc",
@@ -486,8 +478,7 @@ def banded_buckets(docs: DataFrame, text_col: str = "text",
     ).select("doc", "bb.band", "bb.bucket").localCheckpoint(eager=False)
 
 
-def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", num_hashes: int = 16,
+def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
                            bands: int = 4, shingle_n: int = 3,
                            max_bucket: int | None = None) -> DataFrame:
     """LSH candidate pairs: docs sharing any band of the minhash signature.
@@ -505,8 +496,7 @@ def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
     still surface through their other bands or the verify stage. Default
     None keeps exact all-bucket semantics (the oracle's).
     """
-    banded = banded_buckets(docs, text_col=text_col, id_col=id_col,
-                            num_hashes=num_hashes, bands=bands,
+    banded = banded_buckets(docs, num_hashes=num_hashes, bands=bands,
                             shingle_n=shingle_n)
     if max_bucket is not None:
         ok = (banded.groupBy("band", "bucket")
@@ -525,8 +515,7 @@ def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
 
 
 def incremental_neardup_flags(old_docs: DataFrame, new_docs: DataFrame,
-                              text_col: str = "text",
-                              id_col: str = "doc_id", num_hashes: int = 16,
+                              num_hashes: int = 16,
                               bands: int = 4,
                               shingle_n: int = 3) -> DataFrame:
     """Cross-snapshot near-dup screen: flag every NEW-snapshot document
@@ -546,25 +535,22 @@ def incremental_neardup_flags(old_docs: DataFrame, new_docs: DataFrame,
     buckets (at 10^12 old docs, that distinct is the band-bucket
     universe, amortizable as a maintained table across snapshots).
     """
-    old_b = banded_buckets(old_docs, text_col=text_col, id_col=id_col,
-                           num_hashes=num_hashes, bands=bands,
+    old_b = banded_buckets(old_docs, num_hashes=num_hashes, bands=bands,
                            shingle_n=shingle_n)
-    new_b = banded_buckets(new_docs, text_col=text_col, id_col=id_col,
-                           num_hashes=num_hashes, bands=bands,
+    new_b = banded_buckets(new_docs, num_hashes=num_hashes, bands=bands,
                            shingle_n=shingle_n)
     hit = (new_b
            .join(old_b.select("band", "bucket").distinct(),
                  ["band", "bucket"], "left_semi")
            .select("doc").distinct()
            .withColumn("_hit", F.lit(1)))
-    return (new_docs.select(F.col(id_col))
-            .join(hit, new_docs[id_col] == hit["doc"], "left")
-            .select(F.col(id_col),
+    return (new_docs.select(F.col("doc_id"))
+            .join(hit, new_docs["doc_id"] == hit["doc"], "left")
+            .select(F.col("doc_id"),
                     F.coalesce(F.col("_hit"), F.lit(0)).alias("collided")))
 
 
-def ngram_jaccard(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  shingle_n: int = 3, threshold: float = 0.8,
+def ngram_jaccard(docs: DataFrame, shingle_n: int = 3, threshold: float = 0.8,
                   max_df_frac: float | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity over candidate pairs.
 
@@ -588,8 +574,7 @@ def ngram_jaccard(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     # references don't multiply the kernel subtree into the physical plan
     # (as a plain persist does: execution deduped, plan still quadratic —
     # a 10^12-row audit showed 227 shuffle nodes from exactly that)
-    sh = exploded_shingles_pd(docs, text_col, id_col,
-                              shingle_n).localCheckpoint(eager=False)
+    sh = exploded_shingles_pd(docs, shingle_n).localCheckpoint(eager=False)
     if max_df_frac is not None:
         total = docs.agg(F.count("*").alias("_n_docs"))
         # shingles are distinct per doc, so count(*) IS document frequency
@@ -608,8 +593,7 @@ def ngram_jaccard(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
             .distinct()
         )
         return verify_jaccard_pairs(cand, docs, shingle_n=shingle_n,
-                                    threshold=threshold, text_col=text_col,
-                                    id_col=id_col)
+                                    threshold=threshold)
     inter = (
         sh.alias("l").join(sh.alias("r"), "sh")
         .filter(F.col("l.doc") < F.col("r.doc"))
@@ -674,7 +658,6 @@ def simhash64_sql_duckdb(hs: str, n: str) -> str:
 
 def verify_jaccard_pairs(cand: DataFrame, docs: DataFrame,
                          shingle_n: int = 2, threshold: float | None = None,
-                         text_col: str = "text", id_col: str = "doc_id",
                          cut_lineage: bool = True) -> DataFrame:
     """Exact n-gram Jaccard over CANDIDATE pairs (a_id, b_id) — the
     verify stage after LSH blocking — fully in the JVM.
@@ -719,9 +702,9 @@ def verify_jaccard_pairs(cand: DataFrame, docs: DataFrame,
     # shingling cost scales with |candidates| not |corpus|. An
     # un-broadcast semi would sort-merge-shuffle the whole corpus's text.
     cand_docs = docs.join(
-        F.broadcast(ids.withColumnRenamed("_vid", id_col)), id_col, "left_semi")
+        F.broadcast(ids.withColumnRenamed("_vid", "doc_id")), "doc_id", "left_semi")
     # candidate-sized (feeds both the a-side and b-side joins)
-    d = shingle_table_pd(cand_docs, text_col, id_col, shingle_n)
+    d = shingle_table_pd(cand_docs, shingle_n)
     if cut_lineage:
         d = d.localCheckpoint(eager=False)
     joined = (
@@ -786,9 +769,7 @@ def _local_cc_labels(sym: DataFrame) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
-                         a_col: str = "a_id", b_col: str = "b_id",
-                         node_col: str = "node", max_iters: int = 25,
-                         local_contraction: bool = True) -> DataFrame:
+                         max_iters: int = 25) -> DataFrame:
     """Connected components over an undirected edge list — the clustering
     step that turns near-dup PAIRS into dedup GROUPS (keep min-id per
     component, drop the rest). Two-level scheme (the MapReduce-CC
@@ -817,7 +798,7 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
       task-binary size at scale even though the data itself was cached;
     * final labels compose: component(node) = comp(local_label(node)).
 
-    ``nodes`` (optional, one ``node_col`` column) adds isolated vertices
+    ``nodes`` (optional, one ``node`` column) adds isolated vertices
     as their own singleton components. Returns (node, component) with
     component = min node id reachable — deterministic, so oracle-checkable
     against a recursive-CTE reachability query. Warns (loudly) if the
@@ -831,34 +812,27 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
     # localCheckpoint both caches and cuts lineage, so none of those
     # consumers can recompute the whole upstream candidate pipeline
     # (signature UDFs included), even after this function returns
-    sym = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).union(
-        edges.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
+    sym = edges.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")).union(
+        edges.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
     ).localCheckpoint(eager=False)
     verts = sym.select(F.col("u").alias("node")).distinct()
-    if local_contraction:
-        # local union-find labels (one label per (partition, node) —
-        # groupBy min canonicalizes nodes straddling partitions;
-        # connectivity between a node's several local labels is preserved
-        # because every original edge contracts through the canonical
-        # labels below)
-        base = (_local_cc_labels(sym.repartition(F.col("u")))
-                .groupBy("node").agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=False))
-        # contracted edge list
-        lu = base.withColumnRenamed("node", "u").withColumnRenamed("label", "_lu")
-        lv = base.withColumnRenamed("node", "v").withColumnRenamed("label", "_lv")
-        csym = (sym.join(lu, "u").join(lv, "v")
-                .filter(F.col("_lu") != F.col("_lv"))
-                .select(F.col("_lu").alias("u"), F.col("_lv").alias("v"))
-                .distinct().localCheckpoint(eager=False))
-    else:
-        # pure-iterative path (testing/ablation): identity local labels,
-        # iterate on the raw symmetric edge list
-        base = verts.withColumn("label", F.col("node"))
-        csym = sym.localCheckpoint(eager=False)
+    # local union-find labels (one label per (partition, node) — groupBy
+    # min canonicalizes nodes straddling partitions; connectivity between
+    # a node's several local labels is preserved because every original
+    # edge contracts through the canonical labels below)
+    base = (_local_cc_labels(sym.repartition(F.col("u")))
+            .groupBy("node").agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=False))
+    # contracted edge list
+    lu = base.withColumnRenamed("node", "u").withColumnRenamed("label", "_lu")
+    lv = base.withColumnRenamed("node", "v").withColumnRenamed("label", "_lv")
+    csym = (sym.join(lu, "u").join(lv, "v")
+            .filter(F.col("_lu") != F.col("_lv"))
+            .select(F.col("_lu").alias("u"), F.col("_lv").alias("v"))
+            .distinct().localCheckpoint(eager=False))
     singletons = None
     if nodes is not None:
-        singletons = (nodes.select(F.col(node_col).alias("node")).distinct()
+        singletons = (nodes.select(F.col("node")).distinct()
                       .join(verts, "node", "left_anti")
                       .select("node", F.col("node").alias("component")))
     labels = (csym.select("u").union(csym.select("v"))
@@ -970,16 +944,15 @@ def simhash64(text: Column, shingle_n: int = 2) -> Column:
     return out
 
 
-def simhash64_agg(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", shingle_n: int = 2) -> DataFrame:
+def simhash64_agg(docs: DataFrame, shingle_n: int = 2) -> DataFrame:
     """Value-identical to ``simhash64`` but computed as explode + 60
     codegen'd sum aggregates instead of per-row array lambdas (HOF lambdas
     run interpreted; this path is ~10x faster and map-side-combines, so the
     shuffle carries one row of bit counters per doc). Returns (doc, sh)."""
     ex = _ensure_parallelism(docs).select(
-        F.col(id_col).alias("doc"),
-        F.size(shingles(F.col(text_col), shingle_n)).alias("n"),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("g"),
+        F.col("doc_id").alias("doc"),
+        F.size(shingles(F.col("text"), shingle_n)).alias("n"),
+        F.explode(shingles(F.col("text"), shingle_n)).alias("g"),
     )
     h = ex.select(
         "doc", "n",
@@ -998,13 +971,12 @@ def simhash64_agg(docs: DataFrame, text_col: str = "text",
     return per.select("doc", sh.alias("sh"))
 
 
-def simhash_near_dups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      max_hamming: int = 3, shingle_n: int = 2) -> DataFrame:
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
+                      shingle_n: int = 2) -> DataFrame:
     """Near-dup pairs by SimHash: block on 16-bit chunks (a pair within
     hamming distance 3 shares at least one of 4 chunks — pigeonhole), then
     verify exact hamming distance. Equi-join on chunk, never all-pairs."""
-    d = simhash_table_pd(_ensure_parallelism(docs), text_col=text_col,
-                         id_col=id_col, shingle_n=shingle_n)
+    d = simhash_table_pd(_ensure_parallelism(docs), shingle_n=shingle_n)
     chunks = d.select(
         "doc", "sh",
         F.explode(F.array(*[
@@ -1029,8 +1001,11 @@ def simhash_near_dups(docs: DataFrame, text_col: str = "text", id_col: str = "do
     ).filter(F.col("hamming") <= max_hamming)
 
 
+KMV_SALT_PARTS = 32   # phase-1 fan-out of the per-key k-minimum cut
+
+
 def kmv_distinct(df: DataFrame, key_col: str, value_col: str,
-                 k: int = 64, salt_parts: int = 32) -> DataFrame:
+                 k: int = 64) -> DataFrame:
     """K-minimum-values distinct-count sketch per key (Bar-Yossef et al.
     — public construction): hash each distinct value with the shared
     40-bit polynomial hash, keep the k smallest hashes per key, estimate
@@ -1071,23 +1046,23 @@ def kmv_distinct(df: DataFrame, key_col: str, value_col: str,
     # SET is the same either way; that set is what the estimator reads)
     ktype = dict(d.dtypes)["key"]
     h = d.mapInPandas(run, schema=f"key {ktype}, h long").distinct()
-    return _kmv_estimate(h, k, salt_parts)
+    return _kmv_estimate(h, k)
 
 
-def _kmv_estimate(h: DataFrame, k: int, salt_parts: int) -> DataFrame:
+def _kmv_estimate(h: DataFrame, k: int) -> DataFrame:
     """Shared KMV tail over a (key, h) table: salted two-phase top-k →
     estimator. A sketch has FEW keys by construction (it summarizes per
     key), so a straight per-key window would funnel each key's whole
     distinct-hash set through one task at corpus scale. Phase 1 ranks
-    within (key, hash mod salt_parts) — salt_parts-way parallel, each
-    partition keeps <= k; phase 2 ranks the surviving <= salt_parts·k
+    within (key, hash mod KMV_SALT_PARTS) — KMV_SALT_PARTS-way parallel,
+    each partition keeps <= k; phase 2 ranks the surviving <= parts·k
     rows per key (bounded, trivially one task). The global k smallest
     are a subset of the per-salt k smallest, so the result is
     value-identical to the unsalted window (and the oracle)."""
     from pyspark.sql import Window
 
     w1 = Window.partitionBy("key", "_salt").orderBy(F.col("h").asc())
-    cand = (h.withColumn("_salt", F.pmod(F.col("h"), F.lit(salt_parts)))
+    cand = (h.withColumn("_salt", F.pmod(F.col("h"), F.lit(KMV_SALT_PARTS)))
             .withColumn("_rk", F.row_number().over(w1))
             .filter(F.col("_rk") <= k).drop("_salt", "_rk"))
     w2 = Window.partitionBy("key").orderBy(F.col("h").asc())
@@ -1105,8 +1080,7 @@ def _kmv_estimate(h: DataFrame, k: int, salt_parts: int) -> DataFrame:
 
 
 def kmv_distinct_shingles(docs: DataFrame, key_col: str, text_col: str,
-                          shingle_n: int, k: int = 64,
-                          salt_parts: int = 32) -> DataFrame:
+                          shingle_n: int, k: int = 64) -> DataFrame:
     """Fused KMV over word-shingle vocabularies: shingling, hashing AND
     per-batch (key, hash) dedup all happen inside one Arrow kernel, so
     neither the shingle strings nor their per-document repetition ever
@@ -1133,7 +1107,7 @@ def kmv_distinct_shingles(docs: DataFrame, key_col: str, text_col: str,
 
     ktype = dict(d.dtypes)["key"]
     h = d.mapInPandas(run, schema=f"key {ktype}, h long").distinct()
-    return _kmv_estimate(h, k, salt_parts)
+    return _kmv_estimate(h, k)
 
 
 def kmv_distinct_sql_duckdb(rel: str, key_col: str, value_col: str,
@@ -1156,15 +1130,14 @@ def kmv_distinct_sql_duckdb(rel: str, key_col: str, value_col: str,
     """
 
 
-def cluster_keep_best(comp: DataFrame, scores: DataFrame,
-                      score_col: str = "score") -> DataFrame:
+def cluster_keep_best(comp: DataFrame, scores: DataFrame) -> DataFrame:
     """Quality-aware dedup retention: per connected component (from
     :func:`connected_components`), keep the member with the highest
     score, ties to the lowest node id — what a production dedup pass
     actually retains (the best-quality copy), vs the min-id keep list
     ``component`` itself encodes.
 
-    ``comp`` is (node, component); ``scores`` is (node, <score_col>).
+    ``comp`` is (node, component); ``scores`` is (node, score).
     One equi-join + one per-component window; component sizes bound the
     window groups (same boundedness argument as the clustering that
     produced them). Determinism: the score must be a pure function of
@@ -1175,6 +1148,6 @@ def cluster_keep_best(comp: DataFrame, scores: DataFrame,
 
     j = comp.join(scores, "node")
     w = Window.partitionBy("component").orderBy(
-        F.col(score_col).desc(), F.col("node").asc())
+        F.col("score").desc(), F.col("node").asc())
     return (j.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") == 1).drop("_rk"))

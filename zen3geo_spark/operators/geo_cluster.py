@@ -44,8 +44,7 @@ def _assign_expr(cents: list[tuple[int, int, int]], x: str, y: str) -> str:
     return f"array_sort(array({items}))[0].id"
 
 
-def geo_kmeans(points: DataFrame, k: int = 12, rounds: int = 3,
-               x_col: str = "lon_us", y_col: str = "lat_us") -> DataFrame:
+def geo_kmeans(points: DataFrame, k: int = 12, rounds: int = 3) -> DataFrame:
     """Lloyd k-means on (x, y) µdeg points → one row per non-empty
     cluster after ``rounds`` updates: (cluster_id, n_points, cx, cy).
     Empty clusters keep their previous centroid (they can repopulate).
@@ -53,11 +52,11 @@ def geo_kmeans(points: DataFrame, k: int = 12, rounds: int = 3,
     cents = _seed_centroids(k)
     spark = points.sparkSession
     for _ in range(rounds):
-        cid = _assign_expr(cents, x_col, y_col)
-        upd = (points.selectExpr(f"{cid} as cid", x_col, y_col)
+        cid = _assign_expr(cents, "lon_us", "lat_us")
+        upd = (points.selectExpr(f"{cid} as cid", "lon_us", "lat_us")
                .groupBy("cid")
                .agg(F.count("*").alias("n"),
-                    F.sum(x_col).alias("sx"), F.sum(y_col).alias("sy"))
+                    F.sum("lon_us").alias("sx"), F.sum("lat_us").alias("sy"))
                .selectExpr("cid", "n",
                            floor_div_sql("sx", "n", "spark") + " as cx",
                            floor_div_sql("sy", "n", "spark") + " as cy")
@@ -65,40 +64,38 @@ def geo_kmeans(points: DataFrame, k: int = 12, rounds: int = 3,
         got = {r["cid"]: (r["cx"], r["cy"]) for r in upd}
         cents = [(i, *got[i]) if i in got else (i, x, y)
                  for i, x, y in cents]
-    cid = _assign_expr(cents, x_col, y_col)
+    cid = _assign_expr(cents, "lon_us", "lat_us")
     # SQL VALUES LocalRelation (not a pickled createDataFrame) — the
     # broadcast build stays JVM-only
     seeds = ", ".join(f"({i}, {x}L, {y}L)" for i, x, y in cents)
     cdf = spark.sql(f"select * from values {seeds} as t(cid, cx, cy)")
-    return (points.selectExpr(f"{cid} as cid", x_col, y_col)
+    return (points.selectExpr(f"{cid} as cid", "lon_us", "lat_us")
             .groupBy("cid")
             .agg(F.count("*").alias("n_points"))
             .join(cdf, "cid")
             .selectExpr("cid as cluster_id", "n_points", "cx", "cy"))
 
 
-def geo_kmeans_sql_duckdb(points_sql: str, k: int = 12, rounds: int = 3,
-                          x_col: str = "lon_us",
-                          y_col: str = "lat_us") -> str:
+def geo_kmeans_sql_duckdb(points_sql: str, k: int = 12, rounds: int = 3) -> str:
     """DuckDB twin: the identical recurrence unrolled — assignment via
     a k-fanout join + (dist², id) argmin window, update via the same
     floor division, empty clusters inheriting the previous centroid."""
     seeds = ", ".join(f"({i}, {x}, {y})" for i, x, y in _seed_centroids(k))
-    dx = f"(p.{x_col} - c.cx)"
-    dy = f"(p.{y_col} - c.cy)"
+    dx = "(p.lon_us - c.cx)"
+    dy = "(p.lat_us - c.cy)"
     parts = [f"_p as ({points_sql})",
              f"c0 as (select * from (values {seeds}) t(cid, cx, cy))"]
     for r in range(rounds):
         parts.append(f"""a{r} as (
-      select {x_col}, {y_col}, cid from (
-        select p.{x_col}, p.{y_col}, c.cid,
+      select lon_us, lat_us, cid from (
+        select p.lon_us, p.lat_us, c.cid,
                row_number() over (
-                 partition by p.{x_col}, p.{y_col}, p._rid
+                 partition by p.lon_us, p.lat_us, p._rid
                  order by {dx}*{dx} + {dy}*{dy}, c.cid) as rk
         from (select *, row_number() over () as _rid from _p) p, c{r} c
       ) where rk = 1)""")
         parts.append(f"""u{r} as (
-      select cid, count(*) as n, sum({x_col}) as sx, sum({y_col}) as sy
+      select cid, count(*) as n, sum(lon_us) as sx, sum(lat_us) as sy
       from a{r} group by cid)""")
         cxe = floor_div_sql("u.sx", "u.n", "duckdb")
         cye = floor_div_sql("u.sy", "u.n", "duckdb")
@@ -107,14 +104,14 @@ def geo_kmeans_sql_duckdb(points_sql: str, k: int = 12, rounds: int = 3,
              coalesce({cxe}, c.cx) as cx,
              coalesce({cye}, c.cy) as cy
       from c{r} c left join u{r} u on c.cid = u.cid)""")
-    dxf = f"(p.{x_col} - c.cx)"
-    dyf = f"(p.{y_col} - c.cy)"
+    dxf = "(p.lon_us - c.cx)"
+    dyf = "(p.lat_us - c.cy)"
     return ("with " + ",\n".join(parts) + f"""
     , af as (
       select cid from (
         select c.cid,
                row_number() over (
-                 partition by p.{x_col}, p.{y_col}, p._rid
+                 partition by p.lon_us, p.lat_us, p._rid
                  order by {dxf}*{dxf} + {dyf}*{dyf}, c.cid) as rk
         from (select *, row_number() over () as _rid from _p) p,
              c{rounds} c

@@ -17,15 +17,14 @@ from pyspark.sql import functions as F
 
 
 def mosaic_first_valid(cube: DataFrame, order_col: str = "tile",
-                       nodata: float | None = None,
-                       keys: tuple[str, ...] = ("band", "y_idx", "x_idx")) -> DataFrame:
+                       nodata: float | None = None) -> DataFrame:
     """Pick the first valid value along ``order_col`` per pixel."""
     valid = cube
     if nodata is not None:
         valid = cube.filter(F.col("value") != F.lit(nodata))
     else:
         valid = cube.filter(F.col("value").isNotNull())
-    return valid.groupBy(*keys).agg(
+    return valid.groupBy("band", "y_idx", "x_idx").agg(
         F.min_by("value", F.col(order_col)).alias("value"),
         F.min(order_col).alias("src"),
     )

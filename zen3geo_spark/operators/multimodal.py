@@ -5,11 +5,10 @@ feature-extract / resize / frame-sample run as Arrow-batched pandas UDFs
 over ``mapInPandas``. The image decode is a REAL codec for the netpbm
 family (PPM P6/P3 color, PGM P5/P2 grayscale — public specs, parsed with
 NumPy alone since no image libraries ship in this container); other
-formats raise ValueError at decode time. ``fake=True`` keeps the
-deterministic stand-in decoder for plumbing tests that don't care about
-bytes. ``write_pgm_assets``/``scan_pgm_assets`` exercise the binaryFile
-ingestion path end-to-end: real files on disk → binary rows → decode →
-per-file stats (only scalars cross the Arrow boundary back).
+formats raise ValueError at decode time. ``write_pgm_assets``/
+``scan_pgm_assets`` exercise the binaryFile ingestion path end-to-end:
+real files on disk → binary rows → decode → per-file stats (only
+scalars cross the Arrow boundary back).
 """
 
 from __future__ import annotations
@@ -208,13 +207,6 @@ def scan_pgm_assets(spark, asset_dir) -> DataFrame:
                      "mean_px double, min_px double, max_px double"))
 
 
-def _fake_decode(payload: bytes, height: int, width: int) -> np.ndarray:
-    """Deterministic stand-in decoder (plumbing tests)."""
-    seed = np.frombuffer(payload[:8].ljust(8, b"\0"), dtype=np.uint64)[0] % (2**31)
-    rng = np.random.RandomState(int(seed))
-    return rng.randint(0, 256, size=(height, width, 3)).astype(np.float64)
-
-
 def synth_media(spark, n: int) -> DataFrame:
     """Deterministic media table: image payloads are REAL binary P6 PPMs
     (``ppm_bytes``); audio/video payloads are opaque seeded bytes."""
@@ -253,12 +245,11 @@ def synth_media(spark, n: int) -> DataFrame:
     )
 
 
-def decode_image(media: DataFrame, fake: bool = False,
-                 out_h: int = 4, out_w: int = 4) -> DataFrame:
+def decode_image(media: DataFrame, out_h: int = 4,
+                 out_w: int = 4) -> DataFrame:
     """Decode + nearest-neighbor-resize images to (out_h, out_w, 3) via
     mapInPandas (Arrow-batched; binary in, flat pixel array out). The
-    real path parses netpbm PPM; non-PPM payloads raise ValueError.
-    ``fake=True`` uses the deterministic stand-in decoder instead."""
+    decoder parses netpbm PPM; non-PPM payloads raise ValueError."""
 
     oy = np.arange(out_h)
     ox = np.arange(out_w)
@@ -273,13 +264,8 @@ def decode_image(media: DataFrame, fake: bool = False,
             # header parse; resize gathers and the DataFrame build are
             # single vectorized ops over the whole batch
             px = np.empty((n, out_h * out_w * 3), dtype=np.float64)
-            for i, (payload, h, w) in enumerate(zip(pdf["payload"],
-                                                    pdf["height"],
-                                                    pdf["width"])):
-                if fake:
-                    img = _fake_decode(bytes(payload), int(h), int(w))
-                else:
-                    img = parse_ppm(bytes(payload))
+            for i, payload in enumerate(pdf["payload"]):
+                img = parse_ppm(bytes(payload))
                 px[i] = img[oy * img.shape[0] // out_h][:, ox * img.shape[1] // out_w].ravel()
             yield pd.DataFrame({
                 "media_id": pdf["media_id"].to_numpy(),

@@ -790,30 +790,32 @@ from _px p join _m m using (value)
 """
 
 
-def change_matrix(a: DataFrame, b: DataFrame,
-                  nodata: int = 0) -> DataFrame:
+CHANGE_NODATA = 0   # class of a pixel absent from one epoch
+
+
+def change_matrix(a: DataFrame, b: DataFrame) -> DataFrame:
     """Raster change detection: the class-transition matrix between two
     epoch rasters (the land-cover change-stats shape, here crawl
     density classes between snapshots). Inputs are sparse class
     rasters ``(row, col, cls)``; pixels absent from a side take
-    ``nodata``. One pixel-keyed full-outer equi-join (unique keys both
+    ``CHANGE_NODATA``. One pixel-keyed full-outer equi-join (unique keys both
     sides — skew-free, bucket-co-locatable) then a class-pair count
     whose cardinality is classes², not pixels. Integer ⇒ hash-exact."""
     ja = a.selectExpr("row", "col", "cls as _ca")
     jb = b.selectExpr("row", "col", "cls as _cb")
     return (ja.join(jb, ["row", "col"], "full_outer")
-            .selectExpr(f"coalesce(_ca, {nodata}) as cls_a",
-                        f"coalesce(_cb, {nodata}) as cls_b")
+            .selectExpr(f"coalesce(_ca, {CHANGE_NODATA}) as cls_a",
+                        f"coalesce(_cb, {CHANGE_NODATA}) as cls_b")
             .groupBy("cls_a", "cls_b")
             .agg(F.count("*").alias("n_pixels")))
 
 
-def change_matrix_sql(a_sql: str, b_sql: str, nodata: int = 0) -> str:
+def change_matrix_sql(a_sql: str, b_sql: str) -> str:
     """Engine-neutral twin of :func:`change_matrix`."""
     return f"""
     with _a as ({a_sql}), _b as ({b_sql})
-    select coalesce(a.cls, {nodata}) as cls_a,
-           coalesce(b.cls, {nodata}) as cls_b,
+    select coalesce(a.cls, {CHANGE_NODATA}) as cls_a,
+           coalesce(b.cls, {CHANGE_NODATA}) as cls_b,
            count(*) as n_pixels
     from _a a full outer join _b b
       on a.row = b.row and a.col = b.col

@@ -36,8 +36,7 @@ def _as_double(c: Column) -> Column:
 
 
 def cosine_topk_bruteforce(queries: DataFrame, targets: DataFrame, k: int,
-                           q_id: str = "query_id", t_id: str = "vec_id",
-                           q_vec: str = "embedding", t_vec: str = "embedding") -> DataFrame:
+                           q_id: str = "query_id") -> DataFrame:
     """Exact top-k by cosine; ties broken by target id. Broadcast the query
     side (queries are few; targets are the 100 TB side)."""
     from zen3geo_spark.operators._util import ensure_parallelism
@@ -45,9 +44,9 @@ def cosine_topk_bruteforce(queries: DataFrame, targets: DataFrame, k: int,
     from zen3geo_spark.operators._util import pair_all
 
     q = queries.select(F.col(q_id).alias("query_id"),
-                       _as_double(F.col(q_vec)).alias("qv"))
-    t = ensure_parallelism(targets.select(F.col(t_id).alias("target_id"),
-                                          _as_double(F.col(t_vec)).alias("tv")))
+                       _as_double(F.col("embedding")).alias("qv"))
+    t = ensure_parallelism(targets.select(F.col("vec_id").alias("target_id"),
+                                          _as_double(F.col("embedding")).alias("tv")))
     # all-pairs via constant-key equi-join (BroadcastHashJoin on the tiny
     # query side) — the exact baseline without a nested-loop plan node
     pairs = pair_all(t, q).select(
@@ -59,9 +58,7 @@ def cosine_topk_bruteforce(queries: DataFrame, targets: DataFrame, k: int,
             .select("query_id", "target_id", "cos", "rk"))
 
 
-def cosine_near_dup_pairs(emb: DataFrame, threshold: float,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          max_left: int | None = None) -> DataFrame:
+def cosine_near_dup_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a_id, b_id, cos) with
     a_id < b_id and cos >= threshold.
 
@@ -70,15 +67,12 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float,
     use it when one side fits in memory or on bounded candidate sets; the
     100 TB path blocks candidates first (``cosine_topk_lsh``'s hyperplane
     buckets) and verifies pairs with this same cosine expression.
-    ``max_left`` bounds the left side (a_id < max_left) to keep the pair
-    count linear in the table size rather than quadratic.
     """
     from zen3geo_spark.operators._util import ensure_parallelism
 
-    d = emb.select(F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v"))
+    d = emb.select(F.col("vec_id").alias("_id"),
+                   _as_double(F.col("embedding")).alias("_v"))
     left = d.select(F.col("_id").alias("a_id"), F.col("_v").alias("va"))
-    if max_left is not None:
-        left = left.filter(F.col("a_id") < max_left)
     # the streamed (non-broadcast) side carries the O(n^2) cosine work:
     # make sure it isn't a single scan partition
     right = ensure_parallelism(
@@ -91,42 +85,35 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float,
     )
 
 
-def cosine_near_dup_pairs_blocked(emb: DataFrame, threshold: float,
-                                  id_col: str = "vec_id", vec_col: str = "embedding",
-                                  n_blocks: int | None = 8,
-                                  target_block_rows: int = 4096) -> DataFrame:
+NEAR_DUP_BLOCKS = 8
+
+
+def cosine_near_dup_pairs_blocked(emb: DataFrame,
+                                  threshold: float) -> DataFrame:
     """Exact embedding-cosine near-dup pairs via block-matrix
     decomposition — the distributed replacement for the all-pairs
     nested-loop baseline (identical output, no join in the plan).
 
-    Each vector lands in block ``b = xxhash64(id) mod n_blocks`` and is
-    exploded to its ``n_blocks`` unordered block pairs (min(b,k),
-    max(b,k)); one grouped ``applyInPandas`` task per block pair computes
-    the full cross-block cosine matrix with a single NumPy matmul and
-    emits (a_id, b_id, cos) with a_id < b_id and cos >= threshold. Work is
-    O(n²/P) per task with P = n_blocks·(n_blocks+1)/2 tasks — pick
-    n_blocks so a block's vectors fit executor memory. Exact all-pairs is
-    intrinsically quadratic; at 100 TB the candidate-bounded paths
-    (``cosine_topk_lsh`` bucketing / IVF lists) replace it, but when the
-    contract IS "every pair above t", this shape is the one that scales:
-    sized tasks, vectorized scoring, no broadcast of the full table.
-
-    ``n_blocks=None`` auto-sizes from a count (parquet-statistics fast)
-    so each block holds ~``target_block_rows`` vectors — the matmul per
-    task is then (target² · dim) FLOPs with bounded memory regardless of
-    table size.
+    Each vector lands in block ``b = xxhash64(id) mod NEAR_DUP_BLOCKS``
+    and is exploded to its ``NEAR_DUP_BLOCKS`` unordered block pairs
+    (min(b,k), max(b,k)); one grouped ``applyInPandas`` task per block
+    pair computes the full cross-block cosine matrix with a single NumPy
+    matmul and emits (a_id, b_id, cos) with a_id < b_id and cos >=
+    threshold. Work is O(n²/P) per task with P = B·(B+1)/2 tasks for B
+    blocks — B must be large enough that a block's vectors fit executor
+    memory. Exact all-pairs is intrinsically quadratic; at 100 TB the
+    candidate-bounded paths (``cosine_topk_lsh`` bucketing / IVF lists)
+    replace it, but when the contract IS "every pair above t", this shape
+    is the one that scales: sized tasks, vectorized scoring, no broadcast
+    of the full table.
     """
-    import math
-
     from zen3geo_spark.operators._util import ensure_parallelism
 
-    if n_blocks is None:
-        n_rows = emb.count()  # planning pass; parquet count is metadata-fast
-        n_blocks = max(1, math.ceil(n_rows / target_block_rows))
+    n_blocks = NEAR_DUP_BLOCKS
 
     d = ensure_parallelism(emb.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("_b"),
+        F.col("vec_id").alias("_id"), _as_double(F.col("embedding")).alias("_v"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("_b"),
     ))
     mem = F.transform(
         F.sequence(F.lit(0), F.lit(n_blocks - 1)),
@@ -194,9 +181,7 @@ def _unit_rows(M: np.ndarray) -> np.ndarray:
 
 def cosine_topk_ivf(queries: DataFrame, targets: DataFrame, k: int,
                     n_lists: int = 16, n_probe: int = 4,
-                    train_iters: int = 0,
-                    q_id: str = "query_id", t_id: str = "vec_id",
-                    q_vec: str = "embedding", t_vec: str = "embedding") -> DataFrame:
+                    train_iters: int = 0) -> DataFrame:
     """IVF-style ANN: partition targets into ``n_lists`` inverted lists by
     nearest centroid, probe the ``n_probe`` nearest lists per query, exact
     cosine + top-k window over the probed candidates.
@@ -220,10 +205,10 @@ def cosine_topk_ivf(queries: DataFrame, targets: DataFrame, k: int,
     # executor loss fails fast instead of recomputing — under dynamic
     # allocation swap for reliable checkpoint() (see dedup.py module doc)
     t = ensure_parallelism(
-        targets.select(F.col(t_id).alias("target_id"),
-                       _as_double(F.col(t_vec)).alias("tv"))
+        targets.select(F.col("vec_id").alias("target_id"),
+                       _as_double(F.col("embedding")).alias("tv"))
     ).localCheckpoint(eager=False)
-    q = queries.select(F.col(q_id).alias("query_id"), _as_double(F.col(q_vec)).alias("qv"))
+    q = queries.select(F.col("query_id"), _as_double(F.col("embedding")).alias("qv"))
 
     cents = [r["tv"] for r in
              t.orderBy("target_id").limit(n_lists).collect()]
@@ -245,17 +230,18 @@ def cosine_topk_ivf(queries: DataFrame, targets: DataFrame, k: int,
         # at most n_lists rows per partition — which the driver combines
         # into the new codebook (an n_lists×dim planning collect, same
         # size class as the codebook itself). No shuffle, no 64-wide
-        # per-element aggregate walking tv[i] per row.
+        # per-element aggregate walking tv[i] per row. mapInPandas pickles
+        # lloyd at once, so it captures this round's codebook.
         cu = C_unit
 
-        def lloyd(batches, _cu=cu):
+        def lloyd(batches):
             S = np.zeros((n_lists, dim), dtype=np.float64)
             n = np.zeros(n_lists, dtype=np.int64)
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 M = np.array(pdf["tv"].tolist(), dtype=np.float64)
-                a = (_unit_rows(M) @ _cu.T).argmax(axis=1)
+                a = (_unit_rows(M) @ cu.T).argmax(axis=1)
                 for j in range(n_lists):
                     sel = a == j
                     if sel.any():
@@ -309,17 +295,16 @@ def cosine_topk_ivf(queries: DataFrame, targets: DataFrame, k: int,
 
 
 def cosine_topk_lsh(queries: DataFrame, targets: DataFrame, k: int, dim: int,
-                    n_planes: int = 8, n_tables: int = 4,
-                    q_id: str = "query_id", t_id: str = "vec_id",
-                    q_vec: str = "embedding", t_vec: str = "embedding") -> DataFrame:
+                    n_planes: int = 8, n_tables: int = 4) -> DataFrame:
     """ANN top-k: candidates = union over ``n_tables`` independent
     hyperplane tables of same-bucket targets, then exact cosine + window.
     Recall grows with n_tables; candidates stay equi-join-shaped."""
     from zen3geo_spark.operators._util import ensure_parallelism
 
-    q = queries.select(F.col(q_id).alias("query_id"), _as_double(F.col(q_vec)).alias("qv"))
+    q = queries.select(F.col("query_id"), _as_double(F.col("embedding")).alias("qv"))
     t = ensure_parallelism(
-        targets.select(F.col(t_id).alias("target_id"), _as_double(F.col(t_vec)).alias("tv")))
+        targets.select(F.col("vec_id").alias("target_id"),
+                       _as_double(F.col("embedding")).alias("tv")))
     planes_list = [_hyperplanes(dim, n_planes, seed=42 + tbl)
                    for tbl in range(n_tables)]
     buckets_udf = lsh_buckets_multi_pd(planes_list)
@@ -378,9 +363,7 @@ def int8_dot(a: Column, b: Column) -> Column:
     )
 
 
-def int8_topk(queries: DataFrame, targets: DataFrame, k: int,
-              q_id: str = "query_id", t_id: str = "vec_id",
-              q_vec: str = "embedding", t_vec: str = "embedding") -> DataFrame:
+def int8_topk(queries: DataFrame, targets: DataFrame, k: int) -> DataFrame:
     """Top-k by int8-quantized dot product — the coarse pass of a
     quantized re-ranking pipeline. Same plan shape as the float brute
     force (tiny query side broadcasts via the constant-key equi-join;
@@ -389,11 +372,11 @@ def int8_topk(queries: DataFrame, targets: DataFrame, k: int,
     result is reproducible to the bit on any cluster size."""
     from zen3geo_spark.operators._util import ensure_parallelism, pair_all
 
-    q = queries.select(F.col(q_id).alias("query_id"),
-                       quantize_int8(F.col(q_vec)).alias("qq"))
+    q = queries.select(F.col("query_id"),
+                       quantize_int8(F.col("embedding")).alias("qq"))
     t = ensure_parallelism(targets.select(
-        F.col(t_id).alias("target_id"),
-        quantize_int8(F.col(t_vec)).alias("tq")))
+        F.col("vec_id").alias("target_id"),
+        quantize_int8(F.col("embedding")).alias("tq")))
     pairs = pair_all(t, q).select(
         "query_id", "target_id",
         int8_dot(F.col("qq"), F.col("tq")).alias("dot_q"))
@@ -404,9 +387,7 @@ def int8_topk(queries: DataFrame, targets: DataFrame, k: int,
             .select("query_id", "target_id", "dot_q", "rk"))
 
 
-def bitext_mine(src: DataFrame, tgt: DataFrame, margin: float = 1.01,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def bitext_mine(src: DataFrame, tgt: DataFrame, margin: float = 1.01) -> DataFrame:
     """Margin-based bitext mining between two embedding groups (the
     LASER/CCMatrix parallel-corpus miner, simplified to forward ratio
     margin + mutual-best): a (src, tgt) pair is emitted iff tgt is src's
@@ -423,8 +404,7 @@ def bitext_mine(src: DataFrame, tgt: DataFrame, margin: float = 1.01,
     both sides are corpus-sized) + one broadcast semi-join for
     mutuality. No nested-loop plan nodes (pair_all constant-key join).
     """
-    fwd = cosine_topk_bruteforce(src, tgt, 2, q_id=id_col, t_id=id_col,
-                                 q_vec=vec_col, t_vec=vec_col)
+    fwd = cosine_topk_bruteforce(src, tgt, 2, q_id="vec_id")
     best = (fwd.filter(F.col("rk") == 1)
             .select(F.col("query_id").alias("src_id"),
                     F.col("target_id").alias("tgt_id"),
@@ -436,8 +416,7 @@ def bitext_mine(src: DataFrame, tgt: DataFrame, margin: float = 1.01,
     ok = (best.join(F.broadcast(second), "src_id", "left")
           .filter(F.col("cos2").isNull()
                   | (F.col("cos1") >= F.lit(margin) * F.col("cos2"))))
-    bwd = (cosine_topk_bruteforce(tgt, src, 1, q_id=id_col, t_id=id_col,
-                                  q_vec=vec_col, t_vec=vec_col)
+    bwd = (cosine_topk_bruteforce(tgt, src, 1, q_id="vec_id")
            .filter(F.col("rk") == 1)
            .select(F.col("target_id").alias("src_id"),
                    F.col("query_id").alias("tgt_id")))
@@ -485,8 +464,8 @@ where (x.cos2 is null or b.cos1 >= {margin} * x.cos2)
 # semantic dedup (cluster-then-prune, SemDeDup-style)
 # ---------------------------------------------------------------------------
 
-def semantic_dedup(emb: DataFrame, n_lists: int = 16, threshold: float = 0.6,
-                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def semantic_dedup(emb: DataFrame, n_lists: int = 16,
+                   threshold: float = 0.6) -> DataFrame:
     """Cluster-then-prune embedding dedup (the SemDeDup recipe): assign
     every vector to its nearest of ``n_lists`` deterministic centroids
     (the first ``n_lists`` vectors by id — same seeding as the IVF
@@ -514,8 +493,8 @@ def semantic_dedup(emb: DataFrame, n_lists: int = 16, threshold: float = 0.6,
     from zen3geo_spark.operators._util import ensure_parallelism, pair_all
 
     t = ensure_parallelism(
-        emb.select(F.col(id_col).alias("vec_id"),
-                   _as_double(F.col(vec_col)).alias("tv"))
+        emb.select(F.col("vec_id"),
+                   _as_double(F.col("embedding")).alias("tv"))
     ).localCheckpoint(eager=False)
     cents = t.orderBy("vec_id").limit(n_lists).select(
         F.col("vec_id").alias("list_id"), F.col("tv").alias("cv"))
@@ -570,11 +549,14 @@ where not exists (
 
 # ---------------------------------------------------------------- PQ ---
 
-def _pq_q8d(emb: DataFrame, dsub: int, vec_col: str,
-            id_col: str) -> DataFrame:
+# Subspaces, dims per subspace, centroids per subspace, Lloyd rounds.
+PQ_M, PQ_DSUB, PQ_K, PQ_ROUNDS = 4, 16, 16, 2
+
+
+def _pq_q8d(emb: DataFrame, dsub: int) -> DataFrame:
     """(id, s, d, val): int8-quantized coordinates keyed by subspace."""
-    return (emb.select(F.col(id_col).alias("id"),
-                       F.posexplode(quantize_int8(F.col(vec_col)))
+    return (emb.select(F.col("vec_id").alias("id"),
+                       F.posexplode(quantize_int8(F.col("embedding")))
                        .alias("i", "val"))
             .selectExpr("id", f"i div {dsub} as s", f"i % {dsub} as d",
                         "cast(val as bigint) as val"))
@@ -617,10 +599,8 @@ def _pq_lloyd(q8d: DataFrame, cent: DataFrame, rounds: int):
     return codes, cent
 
 
-def pq_train_codes(emb: DataFrame, m: int = 4, dsub: int = 16,
-                   k: int = 16, rounds: int = 2,
-                   vec_col: str = "embedding",
-                   id_col: str = "vec_id") -> DataFrame:
+def pq_train_codes(emb: DataFrame, m: int = PQ_M, dsub: int = PQ_DSUB,
+                   k: int = PQ_K, rounds: int = PQ_ROUNDS) -> DataFrame:
     """Product quantization (Jégou, Douze & Schmid 2011) over
     int8-quantized vectors: split each vector into ``m`` subspaces of
     ``dsub`` dims, k-means each subspace, and emit every vector's code
@@ -641,34 +621,32 @@ def pq_train_codes(emb: DataFrame, m: int = 4, dsub: int = 16,
     therefore stay identical.
     """
     spark = emb.sparkSession
-    q8d = _pq_q8d(emb, dsub, vec_col, id_col).localCheckpoint(eager=False)
+    q8d = _pq_q8d(emb, dsub).localCheckpoint(eager=False)
     codes, cent = _pq_lloyd(q8d, _pq_seed_cent(spark, m, dsub, k),
                             rounds)
     return codes.selectExpr("id as vec_id", "s", "code")
 
 
-def pq_train_sql_duckdb(rel: str, m: int = 4, dsub: int = 16,
-                        k: int = 16, rounds: int = 2,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> str:
-    """DuckDB twin of :func:`pq_train_codes`: identical recurrence,
-    unrolled; returns the CTE prefix ending in ``codes{rounds}`` and
-    ``cent{rounds}`` so callers can select codes or compose ADC search
-    on top."""
+def pq_train_sql_duckdb(rel: str, rounds: int = PQ_ROUNDS) -> str:
+    """DuckDB twin of :func:`pq_train_codes` (same ``PQ_M``, ``PQ_DSUB``
+    and ``PQ_K``): identical recurrence, unrolled; returns the CTE prefix
+    ending in ``codes{rounds}`` and ``cent{rounds}`` so callers can select
+    codes or compose ADC search on top."""
     from zen3geo_spark.operators.trajectory import floor_div_sql
 
-    q8 = (f"select {id_col} as id, generate_subscripts(e, 1) - 1 as i, "
+    q8 = (f"select vec_id as id, generate_subscripts(e, 1) - 1 as i, "
           f"cast(greatest(-128, least(127, "
           f"floor(cast(unnest(e) as double) * 256))) as bigint) as val "
-          f"from (select {id_col}, {vec_col} as e from {rel})")
+          f"from (select vec_id, embedding as e from {rel})")
     parts = [
-        f"q8d as (select id, i // {dsub} as s, i % {dsub} as d, val "
+        f"q8d as (select id, i // {PQ_DSUB} as s, i % {PQ_DSUB} as d, val "
         f"from ({q8}))",
         f"""cent0 as (
       select s.s, c.c, d.d,
              cast((s.s * 131 + c.c * 31 + d.d * 17) % 256 - 128 as bigint)
                as cval
-      from range({m}) as s(s), range({k}) as c(c), range({dsub}) as d(d))""",
+      from range({PQ_M}) as s(s), range({PQ_K}) as c(c),
+           range({PQ_DSUB}) as d(d))""",
     ]
     for r in range(rounds + 1):
         parts.append(f"""codes{r} as (
@@ -694,10 +672,8 @@ def pq_train_sql_duckdb(rel: str, m: int = 4, dsub: int = 16,
     return "with " + ",\n".join(parts)
 
 
-def pq_search_adc(emb: DataFrame, n_queries: int = 3, top_k: int = 5,
-                  m: int = 4, dsub: int = 16, k: int = 16,
-                  rounds: int = 2, vec_col: str = "embedding",
-                  id_col: str = "vec_id") -> DataFrame:
+def pq_search_adc(emb: DataFrame, n_queries: int = 3,
+                  top_k: int = 5) -> DataFrame:
     """Asymmetric-distance (ADC) top-k search over the PQ codes: each
     query's exact int8 subvector computes one m·k distance TABLE
     against the trained centroids (dimension-sized join), target
@@ -712,9 +688,9 @@ def pq_search_adc(emb: DataFrame, n_queries: int = 3, top_k: int = 5,
     from pyspark.sql.window import Window
 
     spark = emb.sparkSession
-    q8d = _pq_q8d(emb, dsub, vec_col, id_col).localCheckpoint(eager=False)
-    codes, cent = _pq_lloyd(q8d, _pq_seed_cent(spark, m, dsub, k),
-                            rounds)
+    q8d = _pq_q8d(emb, PQ_DSUB).localCheckpoint(eager=False)
+    codes, cent = _pq_lloyd(q8d, _pq_seed_cent(spark, PQ_M, PQ_DSUB, PQ_K),
+                            PQ_ROUNDS)
     dtab = (q8d.filter(F.col("id") < n_queries)
             .join(F.broadcast(cent), ["s", "d"])
             .groupBy(F.col("id").alias("qid"), "s", "c")
@@ -730,12 +706,10 @@ def pq_search_adc(emb: DataFrame, n_queries: int = 3, top_k: int = 5,
 
 
 def pq_search_sql_duckdb(rel: str, n_queries: int = 3, top_k: int = 5,
-                         m: int = 4, dsub: int = 16, k: int = 16,
-                         rounds: int = 2, vec_col: str = "embedding",
-                         id_col: str = "vec_id") -> str:
+                         rounds: int = PQ_ROUNDS) -> str:
     """DuckDB twin of :func:`pq_search_adc` built on the training CTE
     prefix."""
-    prefix = pq_train_sql_duckdb(rel, m, dsub, k, rounds, vec_col, id_col)
+    prefix = pq_train_sql_duckdb(rel, rounds)
     return f"""{prefix},
     dtab as (
       select q.id as qid, q.s, ct.c,

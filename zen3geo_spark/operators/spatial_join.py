@@ -63,9 +63,8 @@ def polygon_cover_cells(polys: DataFrame, res: int) -> DataFrame:
             .drop("iy", "ix"))
 
 
-def tag_point_cells(points: DataFrame, res: int,
-                    lat_col: str = "lat_us", lon_col: str = "lon_us") -> DataFrame:
-    return points.withColumn("cell", cell_encode(F.col(lat_col), F.col(lon_col), res))
+def tag_point_cells(points: DataFrame, res: int) -> DataFrame:
+    return points.withColumn("cell", cell_encode(F.col("lat_us"), F.col("lon_us"), res))
 
 
 PIP_SCHEMA_SUFFIX = "point_id long, geom_id long, lat_us long, lon_us long"
@@ -225,7 +224,7 @@ def _refine_grouped(batches):
             [pa.array(c[k]) for c in (pid, gid, lat, lon)], names=_PIP_COLS)
 
 
-def pip_refine_sql(points_rel: str, edges_rel: str, engine: str = "duckdb") -> str:
+def pip_refine_sql(points_rel: str, edges_rel: str) -> str:
     """Oracle SQL mirroring the numpy refine: points_rel(point_id, lat_us,
     lon_us) × edges_rel(geom_id, x1, y1, x2, y2) → inside pairs."""
     # double-arithmetic order mirrors the numpy kernel exactly:
@@ -408,8 +407,8 @@ def ring_guarantee_udeg(res: int) -> int:
     return max(min_cell_height_us(res) - 2, 0)
 
 
-def knn_join_cells(queries: DataFrame, targets: DataFrame, k: int, res: int,
-                   escalate: bool = True) -> DataFrame:
+def knn_join_cells(queries: DataFrame, targets: DataFrame, k: int,
+                   res: int) -> DataFrame:
     """Scale path kNN: 3×3-ring candidates at ``res`` + top-k window, with
     per-query RING ESCALATION so exactness is an invariant, not a density
     assumption.
@@ -422,16 +421,12 @@ def knn_join_cells(queries: DataFrame, targets: DataFrame, k: int, res: int,
     res=0 the single-cell grid makes the pass exact by construction, so
     the loop always terminates with brute-force-equal output. Escalation
     work is proportional to the unsettled queries only — the dense bulk
-    settles at the first level. ``escalate=False`` restores the one-pass
-    caller-trusts-density behavior.
+    settles at the first level.
 
     Levels are driver-side iterations (≤ res of them, typically 1); each
     level localCheckpoints its remaining-queries frame so lineage stays
     O(1) per level, and dead per-level blocks are freed eagerly.
     """
-    if not escalate:
-        return _knn_ring_topk(queries, targets, k, res)
-
     remaining = queries
     parts: list[DataFrame] = []
     r = res
@@ -468,7 +463,6 @@ def knn_join_cells(queries: DataFrame, targets: DataFrame, k: int, res: int,
 
 
 def zonal_stats(pixels: DataFrame, polys: DataFrame, res: int = 7,
-                value_col: str = "value", salt_factor: int = 0,
                 broadcast_polys: bool | None = None) -> DataFrame:
     """Zonal statistics: per-polygon aggregates of the raster pixels whose
     CENTERS fall inside the polygon — the classic raster×vector reduction,
@@ -479,10 +473,10 @@ def zonal_stats(pixels: DataFrame, polys: DataFrame, res: int = 7,
     shape. Returns (geom_id, n_px, sum_val, mean_val, min_val, max_val).
     """
     pts = pixels.select(F.col("pixel_id").alias("point_id"),
-                        "lat_us", "lon_us", F.col(value_col).alias("_zv"))
+                        "lat_us", "lon_us", F.col("value").alias("_zv"))
     inside = points_in_polygons(
         pts.select("point_id", "lat_us", "lon_us"), polys, res=res,
-        salt_factor=salt_factor, broadcast_polys=broadcast_polys)
+        broadcast_polys=broadcast_polys)
     joined = inside.join(pts.select("point_id", "_zv"), "point_id")
     return joined.groupBy("geom_id").agg(
         F.count("*").alias("n_px"),
@@ -541,10 +535,14 @@ def radius_join_guarantee(radius_m: float, res: int, max_abs_lat_us: int) -> Non
             f"and dlon {dlon_deg:.3f} <= {0.98*cell_lon:.3f} deg")
 
 
-def radius_join_points(points: DataFrame, radius_m: float, res: int,
-                       max_abs_lat_us: int = 83_000_000) -> DataFrame:
+# Latitude band (micro-degrees) the radius join serves: past it the 3x3
+# ring no longer covers a radius at the usable resolutions.
+RADIUS_MAX_ABS_LAT_US = 83_000_000
+
+
+def radius_join_points(points: DataFrame, radius_m: float, res: int) -> DataFrame:
     """All point pairs within ``radius_m`` great-circle metres, for points
-    with |lat| ≤ ``max_abs_lat_us`` (polar caps need a coarser res or a
+    with |lat| ≤ ``RADIUS_MAX_ABS_LAT_US`` (polar caps need a coarser res or a
     cap-local pass — out of contract here, validated at call time).
 
     Scale shape: cell equi-join only. Copy A explodes its 3×3 ring
@@ -557,8 +555,8 @@ def radius_join_points(points: DataFrame, radius_m: float, res: int,
     """
     from zen3geo_spark.functions.geo import cell_neighbors
 
-    radius_join_guarantee(radius_m, res, max_abs_lat_us)
-    pts = points.filter(F.abs(F.col("lat_us")) <= max_abs_lat_us)
+    radius_join_guarantee(radius_m, res, RADIUS_MAX_ABS_LAT_US)
+    pts = points.filter(F.abs(F.col("lat_us")) <= RADIUS_MAX_ABS_LAT_US)
     a = tag_point_cells(pts, res).select(
         F.col("point_id").alias("id_a"), F.col("lat_us").alias("a_lat"),
         F.col("lon_us").alias("a_lon"),
@@ -574,15 +572,14 @@ def radius_join_points(points: DataFrame, radius_m: float, res: int,
                          f"cast(floor({hav} / 100.0) as bigint) as dist_hm"))
 
 
-def radius_join_sql_duckdb(points_rel: str, radius_m: float, res: int,
-                           max_abs_lat_us: int = 83_000_000) -> str:
+def radius_join_sql_duckdb(points_rel: str, radius_m: float, res: int) -> str:
     """DuckDB twin: same cell grid, ring adjacency as |Δiy|≤1 ∧ (|Δix|≤1 ∨
     wrap), same haversine text, same hectometre bucket.
 
     Composes after an existing WITH chain that exposes ``points_rel``
     (point_id, lat_us, lon_us) — the returned string starts with
     ``, pr as (...)`` like the other oracle CTE fragments."""
-    radius_join_guarantee(radius_m, res, max_abs_lat_us)
+    radius_join_guarantee(radius_m, res, RADIUS_MAX_ABS_LAT_US)
     iy = cell_iy_sql("lat_us", res, "duckdb")
     ix = cell_ix_sql("lon_us", res, "duckdb")
     hav = haversine_m_sql("a.lat_us", "a.lon_us", "b.lat_us", "b.lon_us",
@@ -590,7 +587,7 @@ def radius_join_sql_duckdb(points_rel: str, radius_m: float, res: int,
     return f"""
 , pr as (
   select point_id, lat_us, lon_us, {iy} as iy, {ix} as ix
-  from {points_rel} where abs(lat_us) <= {max_abs_lat_us}
+  from {points_rel} where abs(lat_us) <= {RADIUS_MAX_ABS_LAT_US}
 )
 select a.point_id as id_a, b.point_id as id_b,
        cast(floor({hav} / 100.0) as bigint) as dist_hm
@@ -609,9 +606,7 @@ where {hav} <= {float(radius_m)}
 # repartitionByRange for co-located joins.
 # ---------------------------------------------------------------------------
 
-def str_pack_points(points: DataFrame, leaf_cap: int,
-                    id_col: str = "point_id",
-                    x_col: str = "lon_us", y_col: str = "lat_us") -> DataFrame:
+def str_pack_points(points: DataFrame, leaf_cap: int) -> DataFrame:
     """Pack points into STR leaves of ``leaf_cap``: slice the x-order
     into ceil(sqrt(N/cap)) vertical strips of cap·S consecutive points,
     then cut each strip into leaves of ``leaf_cap`` by y-order. Output:
@@ -640,8 +635,8 @@ def str_pack_points(points: DataFrame, leaf_cap: int,
     n_leaves = math.ceil(n / leaf_cap)
     s = math.ceil(math.sqrt(n_leaves))
     rx = with_global_pos(
-        points.select(F.col(id_col).alias("pid"),
-                      F.col(x_col).alias("px"), F.col(y_col).alias("py")),
+        points.select(F.col("point_id").alias("pid"),
+                      F.col("lon_us").alias("px"), F.col("lat_us").alias("py")),
         ["px", "pid"], "_rx")
     strip = rx.withColumn(
         "strip", F.expr(f"(_rx - 1) div {s * leaf_cap}"))

@@ -33,9 +33,7 @@ def snap_to_grid(tiles: DataFrame, xmin: float, ymax: float, res: float) -> Data
 
 
 def regrid_bilinear(tiles: DataFrame, src_grid: tuple[float, float, float],
-                    dst_grid: tuple[float, float, float, int, int],
-                    keys: tuple[str, ...] = ("time", "band"),
-                    value_col: str = "value") -> DataFrame:
+                    dst_grid: tuple[float, float, float, int, int]) -> DataFrame:
     """Bilinear regrid of a long-form pixel table — the reference's
     ``stackstac.stack(..., resampling=Resampling.bilinear)`` kwarg
     (/root/reference/zen3geo/datapipes/stackstac.py:184,
@@ -43,7 +41,7 @@ def regrid_bilinear(tiles: DataFrame, src_grid: tuple[float, float, float],
 
     * every TARGET pixel center explodes to its 4 surrounding SOURCE
       pixel indices with the separable weights (1−fx)(1−fy) … fx·fy;
-    * one equi-join on (keys…, sx, sy) attaches source values;
+    * one equi-join on (time, band, sx, sy) attaches source values;
     * sum(w·v)/sum(w) per target pixel — the weight renormalization
       gives GDAL-style edge clamping where a corner is missing.
 
@@ -57,12 +55,12 @@ def regrid_bilinear(tiles: DataFrame, src_grid: tuple[float, float, float],
     spark = tiles.sparkSession
 
     src = tiles.select(
-        *keys,
+        "time", "band",
         F.round((F.col("x") - F.lit(sxmin)) / F.lit(sres) - 0.5).cast("int").alias("sx"),
         F.round((F.lit(symax) - F.col("y")) / F.lit(sres) - 0.5).cast("int").alias("sy"),
-        F.col(value_col).alias("_v"),
+        F.col("value").alias("_v"),
     )
-    key_combos = tiles.select(*keys).distinct()
+    key_combos = tiles.select("time", "band").distinct()
     # target grid generated per key combo by nested explodes — no join
     # (and no cross product) between the key table and the grid
     tgt = (key_combos
@@ -90,18 +88,18 @@ def regrid_bilinear(tiles: DataFrame, src_grid: tuple[float, float, float],
         )
         for dy in (0, 1) for dx in (0, 1)
     ])
-    exploded = tgt.select(*keys, "x_idx", "y_idx", F.explode(corners).alias("c")) \
-        .select(*keys, "x_idx", "y_idx", "c.sx", "c.sy", "c.w")
-    joined = exploded.join(src, [*keys, "sx", "sy"])
-    return joined.groupBy(*keys, "y_idx", "x_idx").agg(
+    exploded = tgt.select("time", "band", "x_idx", "y_idx",
+                          F.explode(corners).alias("c")) \
+        .select("time", "band", "x_idx", "y_idx", "c.sx", "c.sy", "c.w")
+    joined = exploded.join(src, ["time", "band", "sx", "sy"])
+    return joined.groupBy("time", "band", "y_idx", "x_idx").agg(
         (F.sum(F.col("w") * F.col("_v")) / F.sum("w")).alias("value"))
 
 
-def build_overviews(tiles: DataFrame, levels: int = 2,
-                    agg: str = "avg") -> DataFrame:
+def build_overviews(tiles: DataFrame, levels: int = 2) -> DataFrame:
     """Build a multi-resolution pyramid (COG overviews / the reference's
     DataTree multi-resolution hierarchy, docs/multi-resolution.md:221-234):
-    level L+1 is the 2x2-block aggregate of level L.
+    level L+1 is the 2x2-block mean of level L.
 
     Input: long-form pixels (band, y_idx, x_idx, value) at level 0.
     Output: union of all levels with a ``level`` column — the table
@@ -109,7 +107,6 @@ def build_overviews(tiles: DataFrame, levels: int = 2,
     each reading the previous level (geometric shrink: the whole pyramid
     costs ~1/3 extra rows).
     """
-    agg_fn = {"avg": F.avg, "max": F.max, "min": F.min, "sum": F.sum}[agg]
     out = tiles.select(
         F.lit(0).alias("level"), "band", "y_idx", "x_idx", "value")
     levels_dfs = [out]
@@ -123,7 +120,7 @@ def build_overviews(tiles: DataFrame, levels: int = 2,
                 F.floor(F.col("y_idx") / 2).cast("int").alias("y_idx"),
                 F.floor(F.col("x_idx") / 2).cast("int").alias("x_idx"),
             )
-            .agg(agg_fn("value").alias("value"))
+            .agg(F.avg("value").alias("value"))
             .select(F.lit(lvl).alias("level"), "band", "y_idx", "x_idx", "value")
         )
         levels_dfs.append(cur)
@@ -140,12 +137,11 @@ _DTYPE_MAP = {
 }
 
 
-def _grid_lattice(df: DataFrame, width: int, height: int,
-                  keys: tuple[str, ...] = ("time", "band")) -> DataFrame:
-    """Full (keys… × y_idx × x_idx) lattice via nested explodes over the
-    DISTINCT key combos — no cartesian join, rows = |combos|·width·height
-    generated executor-side."""
-    return (df.select(*keys).distinct()
+def _grid_lattice(df: DataFrame, width: int, height: int) -> DataFrame:
+    """Full ((time, band) × y_idx × x_idx) lattice via nested explodes
+    over the DISTINCT key combos — no cartesian join, rows =
+    |combos|·width·height generated executor-side."""
+    return (df.select("time", "band").distinct()
             .select("*", F.explode(F.sequence(F.lit(0), F.lit(height - 1)))
                     .alias("y_idx"))
             .select("*", F.explode(F.sequence(F.lit(0), F.lit(width - 1)))

@@ -32,8 +32,7 @@ from zen3geo_spark.operators.combinators import with_global_pos
 SENTINEL = "\x01"  # sorts before every real token in both engines
 
 
-def suffix_ranks(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", rounds: int = 8) -> DataFrame:
+def suffix_ranks(docs: DataFrame, rounds: int = 8) -> DataFrame:
     """Global suffix ranks over the corpus token stream →
     ``(doc, pos, gpos, rank)``; ``pos`` is the 1-based token position in
     the doc, ``gpos`` the global corpus position (doc-major), ``rank``
@@ -46,8 +45,8 @@ def suffix_ranks(docs: DataFrame, text_col: str = "text",
     callers slicing repeated substrings can see document ends.
     """
     toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        F.col("doc_id").alias("doc"),
+        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .alias("pos0", "tok")).selectExpr("doc", "pos0 + 1 as pos", "tok")
     sent = (toks.groupBy("doc")
             .agg((F.max("pos") + 1).alias("pos"))
@@ -80,14 +79,13 @@ def suffix_ranks(docs: DataFrame, text_col: str = "text",
     return cur.select("doc", "pos", "gpos", F.col("r").alias("rank"))
 
 
-def suffix_ranks_sql_duckdb(rel: str, text_col: str = "text",
-                            id_col: str = "doc_id", rounds: int = 8) -> str:
+def suffix_ranks_sql_duckdb(rel: str, rounds: int = 8) -> str:
     """DuckDB twin: the identical recurrence, unrolled, with window
     dense_rank for the global numbering."""
-    arr = f"regexp_split_to_array(lower(trim({text_col})), '\\s+')"
+    arr = "regexp_split_to_array(lower(trim(text)), '\\s+')"
     parts = [
         f"""toks as (
-      select {id_col} as doc, generate_subscripts({arr}, 1) as pos,
+      select doc_id as doc, generate_subscripts({arr}, 1) as pos,
              unnest({arr}) as tok
       from {rel})""",
         """sent as (

@@ -32,13 +32,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(left: DataFrame, right: DataFrame, keys: list[str],
-              left_ts: str = "ts", right_ts: str = "ts",
-              right_suffix: str = "_r") -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
     """Backward as-of left join: every ``left`` row gains the columns of
-    the latest ``right`` row (same ``keys``) with ``right_ts`` ≤
-    ``left_ts``; NULLs when no prior right row exists. Right's key/ts
-    columns and any name collisions come back suffixed.
+    the latest ``right`` row (same ``keys``) whose ``ts`` is ≤ the left
+    row's ``ts``; NULLs when no prior right row exists. Right's key/ts
+    columns and any name collisions come back suffixed ``_r``.
 
     Matches DuckDB ``ASOF LEFT JOIN`` semantics (``>=`` match) — the
     ``asof_join`` driver query is value-hash-checked against exactly
@@ -52,14 +50,14 @@ def asof_join(left: DataFrame, right: DataFrame, keys: list[str],
 
     tagged_l = left.select(
         *keys,
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*lcols).alias("_l"),
         F.lit(None).cast(rstruct).alias("_r"),
     )
     tagged_r = right.select(
         *keys,
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.lit(None).cast(
             left.select(F.struct(*lcols).alias("_l")).schema["_l"].dataType
@@ -76,15 +74,13 @@ def asof_join(left: DataFrame, right: DataFrame, keys: list[str],
     out = matched.select(
         *keys,
         *[F.col(f"_l.{c}").alias(c) for c in lcols],
-        *[F.col(f"_m.{c}").alias(c + right_suffix) for c in rcols],
+        *[F.col(f"_m.{c}").alias(c + "_r") for c in rcols],
     )
     return out
 
 
 def interval_join(events: DataFrame, intervals: DataFrame,
-                  bucket_secs: int, ts_col: str = "ts",
-                  start_col: str = "start_ts",
-                  end_col: str = "end_ts") -> DataFrame:
+                  bucket_secs: int) -> DataFrame:
     """Range-containment join (the brief's "range join"): every event
     row paired with every interval containing its timestamp
     (``start <= ts < end``; intervals may overlap, so an event can
@@ -107,14 +103,14 @@ def interval_join(events: DataFrame, intervals: DataFrame,
     """
     b = int(bucket_secs)
     ev = events.withColumn(
-        "_b", F.expr(f"unix_timestamp({ts_col}) div {b}"))
+        "_b", F.expr(f"unix_timestamp(ts) div {b}"))
     iv = intervals.withColumn(
         "_b", F.expr(
-            f"explode(sequence(unix_timestamp({start_col}) div {b}, "
-            f"unix_timestamp({end_col}) div {b}))"))
+            f"explode(sequence(unix_timestamp(start_ts) div {b}, "
+            f"unix_timestamp(end_ts) div {b}))"))
     return (ev.join(iv, "_b")
-            .filter((F.col(ts_col) >= F.col(start_col))
-                    & (F.col(ts_col) < F.col(end_col)))
+            .filter((F.col("ts") >= F.col("start_ts"))
+                    & (F.col("ts") < F.col("end_ts")))
             .drop("_b"))
 
 
@@ -224,7 +220,7 @@ where _sp - least(0, _minsp) > {threshold}
 
 
 def merge_upsert(base: DataFrame, updates: DataFrame, key_col: str,
-                 ord_col: str, op_col: str = "op") -> DataFrame:
+                 ord_col: str) -> DataFrame:
     """MERGE INTO semantics (Iceberg/Delta upsert) as one equi-join:
     apply a change batch (``op`` = 'U' upsert / 'D' delete) onto a
     base snapshot → the next snapshot with an ``action`` audit column
@@ -241,11 +237,11 @@ def merge_upsert(base: DataFrame, updates: DataFrame, key_col: str,
     and bucket-co-locatable at 10^12 rows (the same layout argument as
     ``crawl_delta``)."""
     payload = [c for c in updates.columns
-               if c not in (key_col, ord_col, op_col)]
-    pick = ", ".join([ord_col, op_col] + payload)
+               if c not in (key_col, ord_col, "op")]
+    pick = ", ".join([ord_col, "op"] + payload)
     last = (updates.groupBy(key_col)
             .agg(F.expr(f"max(struct({pick}))").alias("_u"))
-            .select(key_col, F.col(f"_u.{op_col}").alias("_op"),
+            .select(key_col, F.col("_u.op").alias("_op"),
                     *[F.col(f"_u.{c}").alias(f"_u_{c}") for c in payload],
                     F.lit(1).alias("_in_upd")))
     bcols = [c for c in base.columns if c != key_col]
@@ -317,9 +313,7 @@ def snapshot_as_of_sql_duckdb(log_sql: str, key_col: str, ord_col: str,
     """
 
 
-def funnel_counts(events: DataFrame, stages: list[str],
-                  user_col: str = "user_id", ts_col: str = "ts",
-                  type_col: str = "event_type") -> DataFrame:
+def funnel_counts(events: DataFrame, stages: list[str]) -> DataFrame:
     """Ordered funnel analysis (the event-analytics staple): how many
     users reached stage k — where reaching stage k means an ordered
     chain e_1 < e_2 < … < e_k of events of the stage types, each
@@ -332,16 +326,16 @@ def funnel_counts(events: DataFrame, stages: list[str],
     partitioning (no per-event window, no explode). Output:
     (stage_idx, stage, n_users) with n_users non-increasing.
     """
-    cur = (events.filter(F.col(type_col) == stages[0])
-           .groupBy(user_col)
-           .agg(F.min(ts_col).alias("_t0")))
+    cur = (events.filter(F.col("event_type") == stages[0])
+           .groupBy("user_id")
+           .agg(F.min("ts").alias("_t0")))
     out = [(0, stages[0], cur)]
     for i, st in enumerate(stages[1:], start=1):
-        nxt = (events.filter(F.col(type_col) == st)
-               .join(out[-1][2].select(user_col, F.col("_t0")), user_col)
-               .filter(F.col(ts_col) > F.col("_t0"))
-               .groupBy(user_col)
-               .agg(F.min(ts_col).alias("_t0")))
+        nxt = (events.filter(F.col("event_type") == st)
+               .join(out[-1][2].select("user_id", F.col("_t0")), "user_id")
+               .filter(F.col("ts") > F.col("_t0"))
+               .groupBy("user_id")
+               .agg(F.min("ts").alias("_t0")))
         out.append((i, st, nxt))
     rows = None
     for i, st, df in out:
@@ -351,19 +345,17 @@ def funnel_counts(events: DataFrame, stages: list[str],
     return rows
 
 
-def funnel_counts_sql(rel: str, stages: list[str],
-                      user_col: str = "user_id", ts_col: str = "ts",
-                      type_col: str = "event_type") -> str:
+def funnel_counts_sql(rel: str, stages: list[str]) -> str:
     """Engine-neutral twin of :func:`funnel_counts`."""
     parts = [f"""s0 as (
-      select {user_col}, min({ts_col}) as t0 from {rel}
-      where {type_col} = '{stages[0]}' group by {user_col})"""]
+      select user_id, min(ts) as t0 from {rel}
+      where event_type = '{stages[0]}' group by user_id)"""]
     for i, st in enumerate(stages[1:], start=1):
         parts.append(f"""s{i} as (
-      select e.{user_col}, min(e.{ts_col}) as t0
-      from {rel} e join s{i - 1} p on e.{user_col} = p.{user_col}
-      where e.{type_col} = '{st}' and e.{ts_col} > p.t0
-      group by e.{user_col})""")
+      select e.user_id, min(e.ts) as t0
+      from {rel} e join s{i - 1} p on e.user_id = p.user_id
+      where e.event_type = '{st}' and e.ts > p.t0
+      group by e.user_id)""")
     sels = " union all ".join(
         f"select {i} as stage_idx, '{st}' as stage, "
         f"(select count(*) from s{i}) as n_users"

@@ -32,9 +32,9 @@ def write_bucketed(df: DataFrame, table: str, key: str, *,
 
 
 def colocated_join(spark: SparkSession, left_table: str, right_table: str,
-                   key: str, how: str = "inner") -> DataFrame:
+                   key: str) -> DataFrame:
     """Join two same-bucketed tables on their bucket key. With equal
     bucket counts the physical plan is a shuffle-free (and, with sorted
     buckets, sort-free) merge join regardless of table size — the plan
     shape that survives a 1000-executor 100 TB run."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
+    return spark.table(left_table).join(spark.table(right_table), key, "inner")

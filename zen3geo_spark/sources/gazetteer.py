@@ -38,14 +38,14 @@ def gazetteer_col_exprs(engine: str) -> dict[str, str]:
     }
 
 
-def synth_gazetteer(spark: SparkSession, n: int = GAZETTEER_N) -> DataFrame:
+def synth_gazetteer(spark: SparkSession) -> DataFrame:
     cols = gazetteer_col_exprs("spark")
-    return spark.range(n).selectExpr(
+    return spark.range(GAZETTEER_N).selectExpr(
         *[f"{expr} as {name}" for name, expr in cols.items()])
 
 
-def gazetteer_cte_sql(n: int = GAZETTEER_N) -> str:
+def gazetteer_cte_sql() -> str:
     """DuckDB relation body (SELECT ...) producing the same rows."""
     cols = gazetteer_col_exprs("duckdb")
     exprs = ", ".join(f"{expr} as {name}" for name, expr in cols.items())
-    return f"select {exprs} from (select g.range as id from range({n}) g)"
+    return f"select {exprs} from (select g.range as id from range({GAZETTEER_N}) g)"

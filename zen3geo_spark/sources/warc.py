@@ -52,31 +52,28 @@ PARSED_SCHEMA = (
 )
 
 
-def warc_serialize(pages: DataFrame, url_col: str = "url",
-                   ts_col: str = "warc_ts",
-                   payload_col: str = "html") -> DataFrame:
+def warc_serialize(pages: DataFrame) -> DataFrame:
     """One WARC/1.0 response record per page as a ``record`` binary
     column (plus the page's ``url``). Pure JVM expressions."""
     sb = lambda s: F.lit(s).cast("binary")  # noqa: E731
-    payload = F.col(payload_col).cast("binary")
+    payload = F.col("html").cast("binary")
     header = F.concat(
         sb("WARC/1.0" + _CRLF),
         sb("WARC-Type: response" + _CRLF),
-        sb("WARC-Target-URI: "), F.col(url_col).cast("binary"), sb(_CRLF),
+        sb("WARC-Target-URI: "), F.col("url").cast("binary"), sb(_CRLF),
         sb("WARC-Date: "),
-        F.date_format(F.col(ts_col), WARC_DATE_FMT).cast("binary"), sb(_CRLF),
+        F.date_format(F.col("warc_ts"), WARC_DATE_FMT).cast("binary"), sb(_CRLF),
         sb("Content-Length: "),
         F.length(payload).cast("string").cast("binary"), sb(_CRLF),
         sb(_CRLF),
     )
     return pages.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         F.concat(header, payload, sb(_CRLF + _CRLF)).alias("record"),
     )
 
 
-def warc_blobs(records: DataFrame, records_per_file: int,
-               id_col: str = "url") -> DataFrame:
+def warc_blobs(records: DataFrame, records_per_file: int) -> DataFrame:
     """Assemble records into bounded WARC objects: bucket = page id div
     ``records_per_file`` (page id parsed from the url), records
     concatenated in page-id order inside one Arrow pass per bucket.
@@ -119,13 +116,13 @@ def _parse_blob(blob: bytes) -> list[tuple[str, str, int, str]]:
     return out
 
 
-def warc_parse(blobs: DataFrame, blob_col: str = "blob") -> DataFrame:
+def warc_parse(blobs: DataFrame) -> DataFrame:
     """Parse WARC objects back to per-record rows (PARSED_SCHEMA). One
     Arrow-batched pass; each blob visited exactly once."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for raw in pdf[blob_col]:
+            for raw in pdf["blob"]:
                 rows.extend(_parse_blob(bytes(raw)))
             yield pd.DataFrame(
                 rows, columns=["url", "warc_date", "content_length",

@@ -45,15 +45,14 @@ META_NAME = ".zmeta.json"
 
 def write_zarr_like_store(path: str, values, chunks: tuple[int, int],
                           grid: tuple[float, float, float],
-                          dtype: str = "float32",
                           fill_value: float = 0.0) -> dict:
-    """Write a 2-D numpy array as a zarr-like chunked store (fixture /
-    sink path). ``grid`` = (xmin, ymax, res) of the pixel-center lattice,
-    north-up. Returns the consolidated metadata dict."""
+    """Write a 2-D numpy array as a float32 zarr-like chunked store
+    (fixture / sink path). ``grid`` = (xmin, ymax, res) of the
+    pixel-center lattice, north-up. Returns the consolidated metadata
+    dict."""
     import numpy as np
 
-    if dtype not in _DTYPES:
-        raise ValueError(f"dtype {dtype!r}: one of {sorted(_DTYPES)}")
+    dtype = "float32"
     os.makedirs(path, exist_ok=True)
     arr = np.asarray(values).astype(_DTYPES[dtype])
     h, w = arr.shape

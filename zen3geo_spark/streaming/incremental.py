@@ -19,7 +19,7 @@ from zen3geo_spark.functions.geo import (
 )
 
 
-def extract_and_encode(pages: DataFrame, res: int = 7) -> DataFrame:
+def extract_and_encode(pages: DataFrame) -> DataFrame:
     """The shared batch/streaming transformation: geotag extraction →
     micro-degree parse → cell encode. Pure JVM expressions."""
     lat_s, lon_s = extract_first_geotag(F.col("text"))
@@ -31,15 +31,15 @@ def extract_and_encode(pages: DataFrame, res: int = 7) -> DataFrame:
         "url", "warc_ts", "lang", "lat_str", "lon_str",
         micro_from_str(F.col("lat_str")).alias("lat_us"),
         micro_from_str(F.col("lon_str")).alias("lon_us"),
-    ).withColumn("cell", cell_encode(F.col("lat_us"), F.col("lon_us"), res))
+    ).withColumn("cell", cell_encode(F.col("lat_us"), F.col("lon_us"), 7))
 
 
 def run_incremental(spark: SparkSession, pages_dir: str, out_dir: str,
-                    checkpoint_dir: str, res: int = 7) -> None:
+                    checkpoint_dir: str) -> None:
     """Process new page files since the last run, then stop."""
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
     stream = spark.readStream.schema(schema).parquet(pages_dir)
-    result = extract_and_encode(stream, res)
+    result = extract_and_encode(stream)
     q = (
         result.writeStream.format("parquet")
         .option("path", out_dir)

@@ -186,8 +186,11 @@ def _lsh_update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
                             "b_id": [p[1] for p in pairs]})
 
 
-def streaming_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
-                             bands: int = 4, shingle_n: int = 3) -> DataFrame:
+# Minhash length, LSH bands and shingle width of the stream path.
+LSH_HASHES, LSH_BANDS, LSH_SHINGLE = 16, 4, 3
+
+
+def streaming_lsh_candidates(docs: DataFrame) -> DataFrame:
     """Near-dup CANDIDATE pairs on a document stream: minhash signature
     (same Column kernel as the batch path) → band buckets → per-bucket
     anchor state → (a_id, b_id) with a = the bucket's first-ever doc.
@@ -198,10 +201,10 @@ def streaming_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
 
     from zen3geo_spark.operators.dedup import minhash_signature
 
-    rows_per_band = num_hashes // bands
+    rows_per_band = LSH_HASHES // LSH_BANDS
     sig = docs.select(
         F.col("doc_id").alias("doc"),
-        minhash_signature(F.col("text"), num_hashes, shingle_n).alias("sig"))
+        minhash_signature(F.col("text"), LSH_HASHES, LSH_SHINGLE).alias("sig"))
     banded = sig.select(
         "doc",
         F.explode(F.array(*[
@@ -214,7 +217,7 @@ def streaming_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
                         lambda v: v.cast("string"),
                     ), "|")).alias("bucket"),
             )
-            for b in range(bands)
+            for b in range(LSH_BANDS)
         ])).alias("bb"),
     ).select("doc", "bb.band", "bb.bucket")
     return banded.groupBy("band", "bucket").applyInPandasWithState(
@@ -224,15 +227,13 @@ def streaming_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
 
 
 def run_streaming_lsh(spark: SparkSession, docs_dir: str, out_dir: str,
-                      checkpoint_dir: str, num_hashes: int = 16,
-                      bands: int = 4, shingle_n: int = 3) -> None:
+                      checkpoint_dir: str) -> None:
     """availableNow incremental near-dup candidates: each run appends the
     newly discovered (a_id, b_id) pairs; bucket anchors persist in the
     state store, so a doc arriving in a LATER run still pairs against the
     first run's anchor."""
     stream = spark.readStream.schema(DOCS_STREAM_SCHEMA).parquet(docs_dir)
-    cand = streaming_lsh_candidates(stream, num_hashes=num_hashes,
-                                    bands=bands, shingle_n=shingle_n)
+    cand = streaming_lsh_candidates(stream)
     q = (cand.writeStream
          .format("parquet")
          .option("path", out_dir)

@@ -58,16 +58,14 @@ def _run_to_memory(spark, stream: DataFrame, name: str, mode: str):
     return spark.table(name)
 
 
-def with_watermark_ts(events: DataFrame, watermark: str = "2 hours",
-                      ts_col: str = "ts") -> DataFrame:
+def with_watermark_ts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Streaming late-data bound; a no-op marker for batch DataFrames."""
     if events.isStreaming:
-        return events.withWatermark(ts_col, watermark)
+        return events.withWatermark("ts", watermark)
     return events
 
 
-def tumbling_event_stats(events: DataFrame, window: str = "6 hours",
-                         ts_col: str = "ts") -> DataFrame:
+def tumbling_event_stats(events: DataFrame, window: str = "6 hours") -> DataFrame:
     """Per-(window, event_type) count / value sum / mean of props.k.
 
     Same plan for batch and streaming input (pass through
@@ -75,7 +73,7 @@ def tumbling_event_stats(events: DataFrame, window: str = "6 hours",
     """
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
     return (
-        events.groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
+        events.groupBy(F.window(F.col("ts"), window).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -88,22 +86,21 @@ def tumbling_event_stats(events: DataFrame, window: str = "6 hours",
     )
 
 
-def session_stats(events: DataFrame, gap: str = "30 minutes",
-                  ts_col: str = "ts", key_col: str = "user_id") -> DataFrame:
+def session_stats(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Per-user session windows (gap-merged): events closer than ``gap``
     to the previous event share a session. Output keyed by the session's
     first event time; ``session_last`` is the last event (Spark's
     session_window end minus the gap)."""
-    w = F.session_window(F.col(ts_col), gap).alias("w")
+    w = F.session_window(F.col("ts"), gap).alias("w")
     return (
-        events.groupBy(w, F.col(key_col))
+        events.groupBy(w, F.col("user_id"))
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
-            F.max(ts_col).alias("session_last"),
+            F.max("ts").alias("session_last"),
         )
         .select(
-            F.col(key_col),
+            F.col("user_id"),
             F.col("w.start").alias("session_start"),
             "session_last", "n_events", "sum_value",
         )
@@ -158,9 +155,7 @@ def stream_tumbling_to_memory(spark, events_path: str,
 
 
 def windowed_anomaly(events: DataFrame, window: str = "6 hours",
-                     trail: int = 4, factor: int = 2,
-                     ts_col: str = "ts",
-                     key_col: str = "event_type") -> DataFrame:
+                     trail: int = 4, factor: int = 2) -> DataFrame:
     """Volume-spike detection per key: count events in tumbling windows,
     compare each window against the mean of the previous ``trail``
     OBSERVED windows for that key (row frame, so gaps don't dilute the
@@ -179,8 +174,8 @@ def windowed_anomaly(events: DataFrame, window: str = "6 hours",
     cross-engine exact; ``trail_avg`` is rounded only for display.
     """
     counts = (events
-              .groupBy(F.window(F.col(ts_col), window).alias("w"),
-                       F.col(key_col).alias("key"))
+              .groupBy(F.window(F.col("ts"), window).alias("w"),
+                       F.col("event_type").alias("key"))
               .agg(F.count("*").alias("n"))
               .select("key", F.col("w.start").alias("window_start"), "n"))
     from pyspark.sql import Window as W
@@ -201,16 +196,14 @@ def windowed_anomaly(events: DataFrame, window: str = "6 hours",
 
 
 def windowed_anomaly_sql_duckdb(rel: str, window_sec: int = 21600,
-                                trail: int = 4, factor: int = 2,
-                                ts_col: str = "ts",
-                                key_col: str = "event_type") -> str:
+                                trail: int = 4, factor: int = 2) -> str:
     """DuckDB twin of :func:`windowed_anomaly` (same epoch-floor window,
     same row frame, same integer spike compare)."""
     return f"""
 with counts as (
-  select {key_col} as key,
+  select event_type as key,
          TIMESTAMP '1970-01-01 00:00:00'
-           + to_seconds(cast(floor(epoch({ts_col}) / {window_sec})
+           + to_seconds(cast(floor(epoch(ts) / {window_sec})
                              * {window_sec} as bigint)) as window_start,
          count(*) as n
   from {rel} group by 1, 2
@@ -258,9 +251,7 @@ def stream_cell_counts_to_memory(spark, pages_dir: str, res: int = 6,
     return _run_to_memory(spark, agg, name, "complete")
 
 
-def stream_dedup_to_memory(spark, docs_dir: str, text_col: str = "text",
-                           name: str = "stream_dedup_out",
-                           max_files_per_trigger: int = 1):
+def stream_dedup_to_memory(spark, docs_dir: str, name: str = "stream_dedup_out"):
     """Exact dedup through the REAL streaming engine: ``readStream``
     over a bounded documents directory → content fingerprint →
     streaming ``dropDuplicates`` (the stateful dedup operator, state =
@@ -277,16 +268,14 @@ def stream_dedup_to_memory(spark, docs_dir: str, text_col: str = "text",
 
     schema = spark.read.parquet(docs_dir).schema
     stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
+              .option("maxFilesPerTrigger", 1)
               .parquet(docs_dir))
-    kept = (stream.select(fingerprint(F.col(text_col)).alias("fp"))
+    kept = (stream.select(fingerprint(F.col("text")).alias("fp"))
             .dropDuplicates(["fp"]))
     return _run_to_memory(spark, kept, name, "append")
 
 
 def stream_pair_join_to_memory(spark, events_path: str,
-                               left_type: str = "purchase",
-                               right_type: str = "view",
                                lookback: str = "2 hours",
                                name: str = "stream_pair_join_out"):
     """Stream-STREAM inner join through the real streaming engine: two
@@ -317,7 +306,7 @@ def stream_pair_join_to_memory(spark, events_path: str,
                             f"cast(ts as timestamp) as {pfx}_ts")
                 .withWatermark(f"{pfx}_ts", "365 days"))
 
-    left, right = side(left_type, "l"), side(right_type, "r")
+    left, right = side("purchase", "l"), side("view", "r")
     joined = left.join(
         right,
         F.expr(f"l_user = r_user and r_ts >= l_ts - interval {lookback} "
