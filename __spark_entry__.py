@@ -867,8 +867,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs above 0.4: exact block-matrix
-    decomposition (NumPy matmul per block pair, no join — replaces the
-    all-pairs nested-loop baseline with identical output)."""
+    decomposition (NumPy matmul per block pair, no join in the plan)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = cosine_near_dup_pairs_blocked(emb, threshold=0.4)
     return out.select("a_id", "b_id", F.round("cos", 6).alias("cos"))

@@ -7,8 +7,8 @@ from pyspark.sql import functions as F
 
 from zen3geo_spark.operators.curation import (
     contamination_check, contamination_sql_duckdb, duplicate_span_inventory,
-    duplicate_span_sql_duckdb, sample_hash, stratified_sample,
-    stratified_sample_sql_duckdb, stratified_sample_summary, word_ngrams,
+    duplicate_span_sql_duckdb, exploded_word_ngrams, sample_hash,
+    stratified_sample, stratified_sample_sql_duckdb, stratified_sample_summary,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -35,12 +35,10 @@ def _duck(sql):
 def test_word_ngrams_golden(spark):
     df = spark.createDataFrame(
         [(1, "A b c d"), (2, "x y"), (3, "")], "id long, text string")
-    rows = {r["id"]: r["g"] for r in df.select(
-        "id", word_ngrams(F.col("text"), 3).alias("g")).collect()}
-    assert rows[1] == ["a b c", "b c d"]
-    # shorter than n: EMPTY, not a descending-sequence artifact
-    assert rows[2] == []
-    assert rows[3] == []
+    rows = sorted((r["id"], r["n_grams"], r["gram"]) for r in
+                  exploded_word_ngrams(df, 3, ("id",)).collect())
+    # shorter than n (ids 2, 3): NO rows, not a descending-sequence artifact
+    assert rows == [(1, 2, "a b c"), (1, 2, "b c d")]
 
 
 def test_contamination_golden(spark):
@@ -159,53 +157,42 @@ def test_url_blocklist_broadcast_plan_and_counts(spark):
 
 
 def test_exploded_word_ngrams_matches_array_form(spark):
-    """The index-explode fast path must be row-identical to
-    explode(word_ngrams(...)) — including the short-doc (< n words)
-    drop and positional duplicates."""
-    from zen3geo_spark.operators.curation import (
-        exploded_word_ngrams, word_ngrams,
-    )
+    """The index-explode n-grams must be row-identical to the DuckDB
+    twin's array slices (``_ngrams_cte_duckdb``) — including the
+    short-doc (< n words) drop, positional duplicates and case folding."""
+    from zen3geo_spark.operators.curation import _ngrams_cte_duckdb
 
-    docs = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b"), (3, "x x x x"), (4, "solo"),
-         (5, "Tok tok TOK tok")],
-        "doc_id bigint, text string")
+    rows = [(1, "a b c d e"), (2, "a b"), (3, "x x x x"), (4, "solo"),
+            (5, "Tok tok TOK tok")]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     fast = [(r.doc_id, r.n_grams, r.gram) for r in
             exploded_word_ngrams(docs, 3, ("doc_id",)).collect()]
-    slow = [(r.doc_id, r.n, r.gram) for r in
-            docs.select("doc_id",
-                        word_ngrams(F.col("text"), 3).alias("_g"))
-            .filter(F.size("_g") > 0)
-            .select("doc_id", F.size("_g").alias("n"),
-                    F.explode("_g").alias("gram")).collect()]
-    assert sorted(fast) == sorted(slow) and len(fast) > 0
+    con = duckdb.connect()
+    con.execute("create table docs (doc_id bigint, text varchar)")
+    con.executemany("insert into docs values (?, ?)", rows)
+    duck = con.execute(f"with {_ngrams_cte_duckdb('docs', 3)} "
+                       "select doc_id, n_grams, gram from g").fetchall()
+    assert sorted(fast) == sorted(duck) and len(fast) > 0
 
 
-def test_gopher_gram_fast_path_matches_gram_expr(spark):
-    """ngram_repetition_stats' inline index-explode must be
-    row-identical to explode(_gram_expr(...)) — including the
-    whole-doc gram that short docs produce under the greatest() guard."""
-    from zen3geo_spark.functions.text import _gram_expr
+def test_gopher_repetition_matches_duckdb_short_docs(spark):
+    """ngram_repetition_stats must equal its DuckDB twin on padded,
+    short (< n words: one whole-doc gram under the greatest() guard),
+    all-repeat and empty docs, and on the hand-computed test's docs."""
+    from zen3geo_spark.functions.text import (
+        ngram_repetition_sql_duckdb, ngram_repetition_stats,
+    )
 
-    docs = spark.createDataFrame(
-        [(1, " pad  a b c "), (2, "xy"), (3, "a a a")],
-        "doc_id bigint, text string")
-    n = 2
-    slow = [(r.doc_id, r.g) for r in docs.select(
-        "doc_id", F.explode(_gram_expr(F.col("text"), n)).alias("g")
-    ).collect()]
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    fast = [(r.doc_id, r.g) for r in
-            docs.select("doc_id", words.alias("_w"))
-            .select("doc_id", "_w",
-                    F.explode(F.sequence(
-                        F.lit(0),
-                        F.greatest(F.size("_w") - n, F.lit(0))))
-                    .alias("_i"))
-            .select("doc_id", F.array_join(
-                F.slice(F.col("_w"), F.col("_i") + 1, n), " ").alias("g"))
-            .collect()]
-    assert sorted(fast) == sorted(slow) and len(fast) > 0
+    rows = [(1, " pad  a b c "), (2, "xy"), (3, "a a a"), (4, ""),
+            (5, "a b a b a"), (6, "w x y z q r")]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = sorted(tuple(r) for r in ngram_repetition_stats(docs).collect())
+    con = duckdb.connect()
+    con.execute("create table documents (doc_id bigint, text varchar)")
+    con.executemany("insert into documents values (?, ?)", rows)
+    want = sorted(con.execute(
+        ngram_repetition_sql_duckdb("documents")).fetchall())
+    assert got == want and len(got) == len(rows)
 
 
 # ---------------------------------------------------------------------------

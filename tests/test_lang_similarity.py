@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from zen3geo_spark.functions.text import lang_id
 from zen3geo_spark.operators.mosaic import mosaic_first_valid
-from zen3geo_spark.operators.similarity import cosine_near_dup_pairs
+from zen3geo_spark.operators.similarity import cosine_near_dup_pairs_blocked
 from zen3geo_spark.operators.stacker import stack
 
 
@@ -44,7 +44,7 @@ def test_cosine_near_dup_pairs(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {(r["a_id"], r["b_id"]): r["cos"]
-           for r in cosine_near_dup_pairs(emb, threshold=0.9).collect()}
+           for r in cosine_near_dup_pairs_blocked(emb, threshold=0.9).collect()}
     assert set(got) == {(0, 1)}
     assert math.isclose(got[(0, 1)], 1.0 / math.sqrt(1.0001), rel_tol=1e-12)
     # id ordering invariant: a_id < b_id always
@@ -54,7 +54,7 @@ def test_cosine_near_dup_pairs(spark):
 def test_cosine_near_dup_all_pairs(spark):
     rows = [(i, [1.0, 0.0]) for i in range(5)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    all_pairs = cosine_near_dup_pairs(emb, threshold=0.99).count()
+    all_pairs = cosine_near_dup_pairs_blocked(emb, threshold=0.99).count()
     assert all_pairs == 10  # C(5,2)
 
 

@@ -2,12 +2,10 @@
 extracted text per url across engines, extraction paths, and parallelism."""
 
 import duckdb
-import pandas as pd
 from pyspark.sql import functions as F
 
 from zen3geo_spark.functions.geo import (
-    extract_all_geotags, extract_first_geotag, geotag_extract_pandas,
-    micro_from_str,
+    extract_all_geotags, extract_first_geotag, micro_from_str,
 )
 from zen3geo_spark.sources.pages import pages_cte_sql, synth_pages
 
@@ -24,21 +22,6 @@ def test_pages_match_duckdb_bitexact(spark):
         f"select url, warc_ts, text, lang from ({pages_cte_sql(n)}) order by url"
     ).fetchall()
     assert [(r.url, r.warc_ts, r.text, r.lang) for r in sp] == [tuple(r) for r in dd]
-
-
-def test_extraction_jvm_vs_pandas_byte_identical(spark):
-    """The JVM regexp path and the Arrow/pandas path must agree byte-for-byte
-    per url (the per-row invariant)."""
-    pages = synth_pages(spark, 500)
-    lat, lon = extract_first_geotag(F.col("text"))
-    jvm = {
-        r["url"]: (r["lat"], r["lon"])
-        for r in pages.select("url", lat.alias("lat"), lon.alias("lon")).collect()
-    }
-    pdf = pages.select("url", "text").toPandas()
-    pex = geotag_extract_pandas(pdf["text"])
-    pand = dict(zip(pdf["url"], zip(pex["lat_str"], pex["lon_str"])))
-    assert jvm == pand
 
 
 def test_extraction_invariant_across_parallelism(spark):

@@ -137,25 +137,21 @@ def test_lsh_ann_recall_at_smallscale(spark, emb):
 
 
 def test_hash_kernel_parity_mixed_case(spark):
-    """The pandas hash kernels, their Column twins, and the DuckDB oracle
-    expressions must agree on MIXED-CASE and unicode input (the lowercase
-    normalization lives in all three paths)."""
+    """The pandas hash kernels (the engine's one Spark path) and the
+    DuckDB oracle expressions must agree on MIXED-CASE and unicode input
+    (the lowercase normalization lives in both)."""
     from zen3geo_spark.operators.dedup import (
         gram_hash60_sql_duckdb, gram_hashes40_sql_duckdb,
-        minhash_signature, minhash_signature_sql_duckdb, minhash_table_pd,
-        shingles_sql_duckdb, simhash64, simhash64_agg, simhash64_sql_duckdb,
-        simhash_table_pd,
+        minhash_signature_sql_duckdb, minhash_table_pd, shingles_sql_duckdb,
+        simhash64_sql_duckdb, simhash_table_pd,
     )
 
     rows = [(0, "The Quick BROWN Fox jumps"), (1, "héllo WÖRLD ünïcode text"),
             (2, "plain lowercase words here"), (3, "  Trim ME  ")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    sig_col = {r["doc_id"]: list(r["s"]) for r in
-               df.select("doc_id", minhash_signature(F.col("text"), 8, 2).alias("s")).collect()}
     sig_pd = {r["doc"]: list(r["sig"]) for r in
               minhash_table_pd(df, num_hashes=8, shingle_n=2).collect()}
-    assert sig_col == sig_pd
 
     grams = shingles_sql_duckdb("text", 2)
     con = duckdb.connect()
@@ -168,12 +164,8 @@ def test_hash_kernel_parity_mixed_case(spark):
         f"select doc_id, {minhash_signature_sql_duckdb('hs', 8)} from h").fetchall())
     assert sig_pd == {k: list(v) for k, v in sig_duck.items()}
 
-    sh_col = {r["doc_id"]: r["s"] for r in
-              df.select("doc_id", simhash64(F.col("text"), 2).alias("s")).collect()}
     sh_pd = {r["doc"]: r["sh"] for r in
              simhash_table_pd(df, shingle_n=2).collect()}
-    sh_agg = {r["doc"]: r["sh"] for r in simhash64_agg(df, shingle_n=2).collect()}
-    assert sh_col == sh_pd == sh_agg
     sh_duck = dict(con.sql(
         f"with sh as (select doc_id, {grams} as grams from t), "
         f"h as (select doc_id, list_transform(grams, g -> {gram_hash60_sql_duckdb('g')}) as hs, "
@@ -268,13 +260,15 @@ def test_minhash_bucket_cap_bounds_pathological_skew(spark):
 
 def test_kmv_sketch_accuracy_and_exact_smallkeys(spark):
     """KMV estimator: exact below k, within ~3/sqrt(k) relative error
-    above k (k=64 → ~37% bound; typical much tighter)."""
-    from zen3geo_spark.operators.dedup import kmv_distinct
+    above k (k=64 → ~37% bound; typical much tighter). One-word lowercase
+    values with ``shingle_n=1``: each value is its own single shingle."""
+    from zen3geo_spark.operators.dedup import kmv_distinct_shingles
 
     rows = ([("small", f"v{i}") for i in range(30)]
             + [("big", f"value-{i * 7919}") for i in range(3000)])
     df = spark.createDataFrame(rows, "key string, val string")
-    got = {r["key"]: r for r in kmv_distinct(df, "key", "val", k=64).collect()}
+    got = {r["key"]: r for r in kmv_distinct_shingles(
+        df, "key", "val", shingle_n=1, k=64).collect()}
     assert got["small"]["est_distinct"] == 30.0  # < k → exact
     est = got["big"]["est_distinct"]
     assert abs(est - 3000) / 3000 < 3 / (64 ** 0.5), est
@@ -329,7 +323,7 @@ def test_word_jaccard_df_blocking_recall_bound(spark):
 
 def test_hash_parity_non_bmp_all_three_paths(spark):
     """Non-BMP (emoji/astral) hash parity: the NumPy kernel (which
-    kmv_distinct and the LSH signatures route through), DuckDB's
+    kmv_distinct_shingles and the LSH signatures route through), DuckDB's
     ord()-based SQL, AND the Spark Column path must all agree — Spark 4's
     split('')/ascii operate on Unicode code points, not UTF-16 units, so
     the surrogate-pair divergence flagged in review does not occur."""

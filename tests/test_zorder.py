@@ -8,9 +8,9 @@ from zen3geo_spark.functions.geo import point_iy_ix_py
 from zen3geo_spark.functions.zorder import (
     MAX_ZRES,
     _morton_py,
+    with_zorder,
     z_range_predicate,
     z_ranges_for_bbox,
-    zorder_encode,
     zorder_parent,
     zorder_sql,
 )
@@ -40,7 +40,7 @@ def test_spark_encode_matches_python_kernel(spark):
                 for i in range(200))]
     df = spark.createDataFrame(rows, "id long, lat_us long, lon_us long")
     got = {r["id"]: r["z"] for r in
-           df.select("id", zorder_encode("lat_us", "lon_us", 12).alias("z")).collect()}
+           with_zorder(df, "lat_us", "lon_us", 12).collect()}
     for i, lat, lon in rows:
         iy = ((lat + 90_000_000) << 12) // 180_000_001
         ix = ((lon + 180_000_000) << 12) // 360_000_001
@@ -53,8 +53,8 @@ def test_spark_sql_twin_matches_column(spark, grid_edge_rows):
         "cast(id * 7654321 % 360000001 - 180000000 as long) as lon_us"
     ).union(spark.createDataFrame(grid_edge_rows, "lat_us long, lon_us long"))
     expr = zorder_sql("lat_us", "lon_us", 12, "spark")
-    n_diff = df.select(
-        (F.expr(expr) != zorder_encode("lat_us", "lon_us", 12)).alias("d")
+    n_diff = with_zorder(df, "lat_us", "lon_us", 12).select(
+        (F.expr(expr) != F.col("z")).alias("d")
     ).filter("d").count()
     assert n_diff == 0
 
@@ -64,9 +64,8 @@ def test_parent_prefix_containment(spark):
     df = spark.range(500).selectExpr(
         "cast(id * 999983 % 180000001 - 90000000 as long) as lat_us",
         "cast(id * 31337 % 360000001 - 180000000 as long) as lon_us")
-    z = zorder_encode("lat_us", "lon_us", 14)
-    p = zorder_parent(z, 14, 8)
-    bad = df.select(z.alias("z"), p.alias("p")).filter(
+    bad = with_zorder(df, "lat_us", "lon_us", 14).select(
+        "z", zorder_parent("z", 14, 8).alias("p")).filter(
         (F.col("z") < F.col("p") * (1 << 12))
         | (F.col("z") >= (F.col("p") + 1) * (1 << 12))).count()
     assert bad == 0
@@ -128,7 +127,7 @@ def test_encode_plan_is_pure_codegen(spark):
     df = spark.range(1000).selectExpr(
         "cast(id * 1234567 % 180000001 - 90000000 as long) as lat_us",
         "cast(id * 7654321 % 360000001 - 180000000 as long) as lon_us")
-    out = (df.select(zorder_encode("lat_us", "lon_us", 12).alias("z"))
+    out = (with_zorder(df, "lat_us", "lon_us", 12)
            .groupBy(zorder_parent(F.col("z"), 12, 6).alias("z6"))
            .count())
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -140,9 +139,8 @@ def test_encode_plan_is_pure_codegen(spark):
 @pytest.mark.parametrize("res", [25, MAX_ZRES])
 def test_encode_exact_at_max_res(spark, res):
     """res >= 25 pushes the grid-index numerator past 2^53, where a
-    double division is off by one; the Column path's integer divide must
+    double division is off by one; the Spark path's integer divide must
     stay bit-exact vs pure Python."""
-    from zen3geo_spark.functions.zorder import with_zorder
     rng = random.Random(42)
     rows = [(i,
              rng.randint(-90_000_000, 90_000_000),
@@ -150,13 +148,9 @@ def test_encode_exact_at_max_res(spark, res):
     want = {i: _morton_py(*point_iy_ix_py(la, lo, res), res)
             for i, la, lo in rows}
     df = spark.createDataFrame(rows, "id long, lat_us long, lon_us long")
-    got = {r["id"]: r["z"] for r in
-           df.select("id", zorder_encode("lat_us", "lon_us", res).alias("z"))
-           .collect()}
+    got = {r["id"]: r["z"]
+           for r in with_zorder(df, "lat_us", "lon_us", res).collect()}
     assert got == want
-    got_w = {r["id"]: r["z"]
-             for r in with_zorder(df, "lat_us", "lon_us", res).collect()}
-    assert got_w == want
 
 
 def test_bbox_cover_never_exceeds_budget():

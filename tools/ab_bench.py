@@ -22,7 +22,7 @@ import sys
 import time
 
 DEFAULT_QUERIES = (
-    "pip_join_salted,ann_ivf,zonal_stats,kmv_distinct,near_dup_verified,"
+    "pip_join_salted,ann_ivf_trained,zonal_stats,kmv_distinct,near_dup_verified,"
     "image_stats,word_jaccard"
 )
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

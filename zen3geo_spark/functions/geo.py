@@ -323,20 +323,6 @@ def extract_all_geotags(text: Column) -> Column:
     )
 
 
-def geotag_extract_pandas(texts):
-    """Arrow/pandas extraction path (pd.Series -> pd.DataFrame of lat/lon
-    strings). Exists to prove the vectorized-UDF path yields byte-identical
-    output to the JVM regexp path (tests/test_pages.py); operators use the
-    JVM path because it stays inside whole-stage codegen.
-    """
-    import re
-
-    ext = texts.str.extract(re.compile(LAT_LON_PATTERN), expand=True)
-    ext = ext.fillna("")
-    ext.columns = ["lat_str", "lon_str"]
-    return ext
-
-
 def extract_points_arrow(pages):
     """Arrow-vectorized scan→points: (url, text) → (point_id, lat_us,
     lon_us) via mapInPandas.

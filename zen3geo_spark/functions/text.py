@@ -191,15 +191,6 @@ def unigram_logppl_sql_duckdb(rel: str) -> str:
     """
 
 
-def _gram_expr(text: Column, n: int) -> Column:
-    """JVM word n-gram array (NON-distinct, positional — repetition
-    statistics need every occurrence, unlike the dedup shingles)."""
-    words = F.split(F.lower(F.trim(text)), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    return F.transform(
-        idx, lambda i: F.array_join(F.slice(words, i + 1, n), " "))
-
-
 # Gopher keep thresholds: top 2-gram share and repeated 3-gram share.
 GOPHER_TOP_BIGRAM_MAX = 0.20
 GOPHER_DUP_TRIGRAM_MAX = 0.30
@@ -215,15 +206,13 @@ def ngram_repetition_stats(docs):
 
     Scale shape: one explode per n, grams counted per (doc, gram) then
     folded per doc — two map-side-combinable aggregations keyed by the
-    doc id, no self-joins, no windows; everything JVM (the HOF gram
-    build runs once per doc, not per gram pair).
+    doc id, no self-joins, no windows; everything JVM (the words array
+    splits once per doc, each gram string builds once per row).
     """
     def stats(n: int, top_out: str, dup_out: str):
-        # index-explode, gram built once per row AFTER the Generate —
-        # value-identical to explode(_gram_expr(...)) but the words
-        # array materializes once per doc instead of filter/project
-        # pushdown re-evaluating the interpreted transform() HOF
-        # (same rationale as curation.exploded_word_ngrams)
+        # index-explode, gram built once per row AFTER the Generate: the
+        # words array materializes once per doc (same rationale as
+        # curation.exploded_word_ngrams)
         words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
         e = (docs.select(F.col("doc_id").alias("doc"), words.alias("_w"))
              .select("doc", "_w",

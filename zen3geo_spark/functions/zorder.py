@@ -59,13 +59,6 @@ def _spread_sql(e: str) -> str:
     return out
 
 
-def _spread_col(c: Column) -> Column:
-    out = c.bitwiseAND(F.lit((1 << MAX_ZRES) - 1))
-    for shift, mask in _SPREAD:
-        out = out.bitwiseOR(out * F.lit(1 << shift)).bitwiseAND(F.lit(mask))
-    return out
-
-
 def zorder_sql(lat_micro: str, lon_micro: str, res: int, engine: str) -> str:
     """Morton id at ``res`` from micro-degree ints — one SQL expression.
 
@@ -78,22 +71,16 @@ def zorder_sql(lat_micro: str, lon_micro: str, res: int, engine: str) -> str:
     return f"(({_spread_sql(ix)}) | (({_spread_sql(iy)}) * 2))"
 
 
-def zorder_encode(lat_micro: Column | str, lon_micro: Column | str, res: int) -> Column:
-    """Spark Column: Morton cell id (pure bigint ops, WholeStageCodegen)."""
-    if res > MAX_ZRES:
-        raise ValueError(f"res {res} exceeds MAX_ZRES {MAX_ZRES}")
-    iy, ix = point_iy_ix(lat_micro, lon_micro, res)
-    return _spread_col(ix).bitwiseOR(_spread_col(iy) * F.lit(2)).cast("long")
-
-
 def with_zorder(df, lat_micro: str, lon_micro: str, res: int):
-    """Add a Morton-id column via CHAINED projections — the scale path.
+    """Add the Morton-id column ``z`` via CHAINED projections — the one
+    Spark path (``zorder_sql`` is its SQL twin, ``_morton_py`` its Python
+    kernel).
 
-    :func:`zorder_encode` as a single Column duplicates the sub-tree at
-    every spread step (2^5 copies): Catalyst analysis goes quadratic and
-    the fused expression overflows whole-stage codegen's method-size
-    budget into interpreted eval.  Chaining ``withColumn`` keeps each
-    step a named intermediate computed ONCE — CollapseProject refuses to
+    A single Column expression would duplicate the sub-tree at every
+    spread step (2^5 copies): Catalyst analysis goes quadratic and the
+    fused expression overflows whole-stage codegen's method-size budget
+    into interpreted eval.  Chaining ``withColumn`` keeps each step a
+    named intermediate computed ONCE — CollapseProject refuses to
     re-inline a non-cheap alias referenced twice (SPARK-36718), so the
     executed plan stays one codegen'd Project with local-variable reuse.
     """
@@ -133,8 +120,8 @@ def zorder_parent_sql(z: str, res: int, parent_res: int, engine: str) -> str:
 # ---------------------------------------------------------------------------
 
 def _morton_py(iy: int, ix: int, res: int) -> int:
-    """Pure-Python Morton interleave (bit-parity twin of the SQL/Column
-    paths).
+    """Pure-Python Morton interleave (bit-parity twin of ``with_zorder``
+    and ``zorder_sql``).
 
     >>> _morton_py(0, 0, 4)
     0

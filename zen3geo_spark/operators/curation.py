@@ -21,8 +21,8 @@ these extend the engine's LLM-pipeline surface alongside
   of the document id, so the sample is reproducible row-for-row across
   engines, retries, and cluster sizes — no ``rand()``.
 
-Everything stays in whole-stage codegen: the n-gram expansion is
-``transform(sequence(...))`` over one ``split`` array, the benchmark
+Everything stays in whole-stage codegen: the n-gram expansion explodes
+a start-index ``sequence`` over one ``split`` array, the benchmark
 vocabulary is a broadcast semi-join (benchmark sets are small by
 construction), the sample hash is integer arithmetic. No Python, no UDF,
 no shuffle bigger than the final per-key aggregate. Each op ships a
@@ -45,39 +45,19 @@ _HASH_A = 2654435761
 _HASH_B = 12345
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """All positional word ``n``-grams of ``text`` (lowercased, split on
-    single spaces — the corpus tokenization used across text.py/dedup.py),
-    as an array of space-joined strings; empty array when the document
-    has fewer than ``n`` words.
-
-    The ``when`` guard matters: ``sequence(1, k)`` runs DESCENDING for
-    k < 1 in Spark, which would fabricate grams for short docs.
-    """
-    words = F.split(F.lower(text), " ")
-    k = F.size(words) - (n - 1)
-    return F.when(
-        k >= 1,
-        F.transform(F.sequence(F.lit(1), k),
-                    lambda i: F.concat_ws(" ", F.slice(words, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def exploded_word_ngrams(docs: DataFrame, n: int,
                          carry_cols: tuple[str, ...]) -> DataFrame:
-    """(carry..., n_grams, gram): one row per positional word n-gram.
+    """(carry..., n_grams, gram): one row per positional word ``n``-gram
+    of the lowercased text split on single spaces, grams space-joined;
+    documents with fewer than ``n`` words yield no rows.
+    ``_ngrams_cte_duckdb`` is its DuckDB twin.
 
-    Value-identical to ``explode(word_ngrams(...))`` but an order of
-    magnitude cheaper in-plan: exploding the START INDEX and building
-    each gram AFTER the Generate means the words array materializes
-    once per doc and each gram string is assembled exactly once per
-    output row. The array-building form pays 3-4 evaluations of the
-    interpreted transform() HOF per doc, because filter pushdown
-    substitutes the whole gram-array expression into the pre-Generate
-    Filter (size > 0, isnotnull) and Project — visible as the repeated
-    CASE WHEN transform(...) blocks in its physical plan. Here the only
-    pre-Generate expressions are split/size (cheap), and the slice +
-    concat_ws above the Generate bind to the materialized array column.
+    Exploding the START INDEX and building each gram AFTER the Generate
+    materializes the words array once per doc and each gram string once
+    per row. Building a gram array with ``transform(sequence(...))`` and
+    exploding it is an order of magnitude slower: filter pushdown copies
+    the interpreted HOF into the pre-Generate Filter and Project, so it
+    runs 3-4 times per doc.
     """
     words = F.split(F.lower(F.col("text")), " ")
     base = (docs.select(*carry_cols, words.alias("_w"))
@@ -94,8 +74,8 @@ def exploded_word_ngrams(docs: DataFrame, n: int,
 
 
 def _ngrams_cte_duckdb(rel: str, n: int, extra_cols: str = "") -> str:
-    """DuckDB CTE body producing (id, [extra_cols,] gram) rows identical
-    to ``word_ngrams`` + explode: 1-based inclusive list slicing,
+    """DuckDB CTE body producing (doc_id, [extra_cols,] n_grams, gram) rows
+    identical to ``exploded_word_ngrams``: 1-based inclusive list slicing,
     generate_series empty when the doc is shorter than ``n`` words."""
     return (
         f"w as (select doc_id, {extra_cols + ', ' if extra_cols else ''}"

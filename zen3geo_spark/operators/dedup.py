@@ -1,17 +1,21 @@
 """Deduplication suite for web-scale corpora.
 
 Exact (hash groupBy), MinHash+LSH (shingle → minhash → band → bucket-join),
-SimHash, and n-gram Jaccard — all over the ``documents`` table shape
-``(doc_id, text, ...)``. Hashing uses a 40-bit polynomial hash over unicode
-code points (h(s) = Σ code(s_i)·P^i mod M) — chosen because it is BOTH
-NumPy-vectorizable (one fused pass over a padded code-point matrix per
-Arrow batch, no per-shingle Python loop) and exactly expressible in DuckDB
-SQL (``ord``/``substr`` list arithmetic with the same precomputed power
-table), so every stage stays oracle-checkable bit-for-bit. MinHash
-signatures are per-seed affine permutations ``(a_j·h + b_j) mod (2^61-1)``
-of the base hash (Broder's min-wise permutation scheme — public
-construction); SimHash combines two independent 40-bit hashes into a
-60-bit gram hash for the majority-bit vote.
+SimHash, KMV distinct counts and n-gram Jaccard — all over the
+``documents`` table shape ``(doc_id, text, ...)``. Hashing uses a 40-bit
+polynomial hash over unicode code points (h(s) = Σ code(s_i)·P^i mod M) —
+chosen because it is BOTH NumPy-vectorizable (one fused pass over a padded
+code-point matrix per Arrow batch, no per-shingle Python loop) and exactly
+expressible in DuckDB SQL (``ord``/``substr`` list arithmetic with the
+same precomputed power table), so every stage stays oracle-checkable
+bit-for-bit. Each shingle kernel has ONE Spark path, the Arrow-batched
+NumPy kernel (``minhash_table_pd``, ``simhash_table_pd``,
+``kmv_distinct_shingles``, ...); the ``*_sql_duckdb`` expressions are its
+oracles. MinHash signatures are per-seed affine permutations
+``(a_j·h + b_j) mod (2^61-1)`` of the base hash (Broder's min-wise
+permutation scheme — public construction); SimHash combines two
+independent 40-bit hashes into a 60-bit gram hash for the majority-bit
+vote.
 
 Scale notes: every stage is a hash aggregate or equi-join on a derived
 key — no cross products. Candidate generation for near-dup is strictly
@@ -43,8 +47,8 @@ from pyspark.sql.types import ArrayType, LongType
 from zen3geo_spark.functions.text import fingerprint
 from zen3geo_spark.operators._util import ensure_parallelism as _ensure_parallelism
 
-# mirrors Java/RE2 \s (ASCII whitespace) used by the Spark/DuckDB shingle
-# split — Python's default \s is unicode-wide
+# mirrors the RE2 \s (ASCII whitespace) of the DuckDB shingle split —
+# Python's default \s is unicode-wide
 _WS = re.compile(r"\s+", flags=re.ASCII)
 
 # ---------------------------------------------------------------------------
@@ -131,11 +135,10 @@ def _batch_grams(texts, shingle_n: int):
 
 def shingle_table_pd(docs: DataFrame, shingle_n: int) -> DataFrame:
     """(_vid, _vsh) = (doc_id, shingle array of text) via the Arrow
-    kernel. Twin of the JVM ``shingles`` Column (``_shingle_list`` is the pytest-asserted parity
-    twin) — used on hot paths because the Column version's HOF lambda
-    chain (transform/slice/array_join/array_distinct) runs in the
-    expression interpreter at ~30 µs per gram (measured 8.3 s warm for a
-    5 k-doc / 256 k-gram corpus vs 0.3 s here)."""
+    kernel (``_shingle_list`` per row; ``shingles_sql_duckdb`` is its
+    oracle). A JVM Column form (transform/slice/array_join/array_distinct
+    HOF lambdas) runs in the expression interpreter at ~30 µs per gram
+    (measured 8.3 s warm for a 5 k-doc / 256 k-gram corpus vs 0.3 s here)."""
 
     def run(batches):
         for pdf in batches:
@@ -196,10 +199,10 @@ def gram_hash60_sql_duckdb(g: str) -> str:
 
 
 def _shingle_list(text: str, n: int) -> list[str]:
-    """Python twin of ``shingles``: distinct word n-grams, identical to the
-    Spark Column version including the lowercase normalization and the
-    short-text edge (one gram = the whole word list; empty text → one ''
-    gram).
+    """The shingle kernel: distinct word n-grams of the lowercased text,
+    split on ASCII whitespace. Identical to ``shingles_sql_duckdb``
+    including the short-text edge (one gram = the whole word list; empty
+    text → one '' gram).
 
     >>> _shingle_list("The quick brown fox", 2)
     ['the quick', 'quick brown', 'brown fox']
@@ -231,21 +234,13 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct, order-free)."""
-    words = F.split(F.lower(F.trim(text)), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.array_join(F.slice(words, i + 1, n), " ")
-    )
-    return F.array_distinct(grams)
-
-
 def gram_hash40(s: Column, which: int = 1) -> Column:
-    """Spark Column twin of ``_poly_hash_batch`` for one string expression:
-    Σ ascii(char_i)·P^(i-1) mod M over the first GRAM_CAP chars. HOF
-    lambdas run interpreted — this is the parity/documentation path; hot
-    paths use the vectorized pandas kernels (value-identical, pytest).
+    """Spark Column form of ``_poly_hash_batch`` for one string expression:
+    Σ ascii(char_i)·P^(i-1) mod M over the first GRAM_CAP chars. The JVM
+    key hash: ``sketch``, ``web``, ``linkgraph`` and the driver queries
+    hash keys with it inside a plan. Its HOF lambdas run interpreted, so
+    the shingle kernels here hash with the vectorized NumPy kernel instead
+    (value-identical, pytest).
 
     Unicode contract: Spark 4's ``split('')``/``ascii`` operate on code
     POINTS (not UTF-16 units), so this path agrees with the NumPy kernel
@@ -265,28 +260,6 @@ def gram_hash40(s: Column, which: int = 1) -> Column:
         F.aggregate(terms, F.lit(0).cast("long"), lambda a, v: a + v),
         F.lit(HASH_M),
     )
-
-
-def gram_hash60(s: Column) -> Column:
-    """60-bit SimHash gram hash: h1 + (h2 mod 2^20)·2^40 (mirrors
-    ``gram_hash60_sql_duckdb`` / the numpy kernel)."""
-    return gram_hash40(s, 1) + F.pmod(gram_hash40(s, 2), F.lit(1 << 20)) * F.lit(1 << 40)
-
-
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """Array of ``num_hashes`` minhash values: min over shingles of the
-    j-th affine permutation (a_j·h + b_j mod 2^61-1) of the 40-bit gram
-    hash. Value-identical to ``minhash_table_pd`` (parity-tested)."""
-    sh = shingles(text, shingle_n)
-    hs = F.transform(sh, lambda g: gram_hash40(g))
-    a, b = _perm_params(num_hashes)
-
-    def permute(j: int):
-        aj, bj = int(a[j]), int(b[j])
-        return lambda h: F.pmod(h * F.lit(aj) + F.lit(bj), F.lit(MINHASH_PRIME))
-
-    sigs = [F.array_min(F.transform(hs, permute(j))) for j in range(num_hashes)]
-    return F.array(*sigs)
 
 
 def _permute_min(h: np.ndarray, starts: np.ndarray,
@@ -311,8 +284,11 @@ def minhash_table_pd(docs: DataFrame, num_hashes: int = 16,
     ArrowEvalPython nodes per LSH plan = 4-8 full kernel evaluations);
     MapInPandas is a physical node, so the kernel runs exactly once per
     join side. One fused NumPy pass per Arrow batch: distinct grams hashed
-    once, per-doc minima via ``minimum.reduceat``. Value-identical to the
-    ``minhash_signature`` Column twin and the DuckDB oracle (parity-tested)."""
+    once, per-doc minima via ``minimum.reduceat``. The engine's one minhash
+    path: batch banding (``banded_buckets``) and the stream
+    (``streaming.stateful.streaming_lsh_candidates``) both run it.
+    Value-identical to the DuckDB oracle ``minhash_signature_sql_duckdb``
+    (parity-tested)."""
     a, b = _perm_params(num_hashes)
 
     def run(batches):
@@ -332,10 +308,11 @@ def minhash_table_pd(docs: DataFrame, num_hashes: int = 16,
 
 
 def simhash_table_pd(docs: DataFrame, shingle_n: int = 2) -> DataFrame:
-    """(doc, sh) SimHash table via ``mapInPandas`` (single-evaluation
-    barrier — see ``minhash_table_pd``). Value-identical to the
-    ``simhash64``/``simhash64_agg`` Column paths and the DuckDB oracle
-    (parity-tested)."""
+    """(doc, sh) 60-bit SimHash table via ``mapInPandas`` (single-evaluation
+    barrier — see ``minhash_table_pd``): bit b is set when the majority of
+    the doc's shingles have bit b set in their 60-bit gram hash
+    h1 + (h2 mod 2^20)·2^40. Value-identical to the DuckDB oracle
+    ``simhash64_sql_duckdb`` (parity-tested)."""
     def run(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -456,10 +433,19 @@ def banded_buckets(docs: DataFrame, num_hashes: int = 16,
     multiply the MapInPandas subtree into the physical plan; blocks are
     GC-freed instead of leaking in the CacheManager.
     """
-    rows_per_band = num_hashes // bands
     d = minhash_table_pd(_ensure_parallelism(docs), num_hashes=num_hashes,
                          shingle_n=shingle_n)
-    return d.select(
+    return band_rows(d, num_hashes, bands).localCheckpoint(eager=False)
+
+
+def band_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc, band, bucket) from a (doc, sig) minhash table: one row per
+    document per band, bucket = md5 of that band's signature slice. The
+    batch (``banded_buckets``) and stream
+    (``streaming.stateful.streaming_lsh_candidates``) candidate
+    generators band alike, so their buckets match."""
+    rows_per_band = num_hashes // bands
+    return sig.select(
         "doc",
         F.explode(
             F.array(*[
@@ -475,7 +461,7 @@ def banded_buckets(docs: DataFrame, num_hashes: int = 16,
                 for b in range(bands)
             ])
         ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket").localCheckpoint(eager=False)
+    ).select("doc", "bb.band", "bb.bucket")
 
 
 def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
@@ -608,12 +594,12 @@ def ngram_jaccard(docs: DataFrame, shingle_n: int = 3, threshold: float = 0.8,
 
 
 def shingles_sql_duckdb(col: str, n: int) -> str:
-    """DuckDB expression mirroring ``shingles``: distinct word n-grams.
+    """DuckDB expression mirroring ``_shingle_list``: distinct word n-grams.
 
-    Spark generates i in 0..greatest(size-n, 0) and takes slice(words,
-    i+1, n); here i in 1..greatest(len-n, 0)+1 with the inclusive slice
-    words[i : i+n-1] — identical gram sets, including the short-text case
-    (one gram = the whole word list)."""
+    The kernel takes words[j:j+n] for j in 0..max(len-n, 0); here i in
+    1..greatest(len-n, 0)+1 with the inclusive slice words[i : i+n-1] —
+    identical gram sets, including the short-text case (one gram = the
+    whole word list)."""
     words = f"regexp_split_to_array(lower(trim({col})), '\\s+')"
     return (
         f"list_distinct(list_transform("
@@ -629,7 +615,7 @@ def gram_hashes40_sql_duckdb(grams: str) -> str:
 
 
 def minhash_signature_sql_duckdb(hs: str, num_hashes: int) -> str:
-    """DuckDB expression mirroring ``minhash_signature`` over an
+    """DuckDB expression mirroring ``minhash_table_pd`` over an
     already-hashed bigint list expression ``hs``: per-seed min of the
     affine permutations (a_j·h + b_j mod 2^61-1)."""
     a, b = _perm_params(num_hashes)
@@ -642,10 +628,10 @@ def minhash_signature_sql_duckdb(hs: str, num_hashes: int) -> str:
 
 
 def simhash64_sql_duckdb(hs: str, n: str) -> str:
-    """DuckDB expression mirroring ``simhash64`` given ``hs`` (list of
-    bigint shingle hashes) and ``n`` (shingle count): bit b set when the
-    majority of shingle hashes have bit b set; same (v % 2^(b+1)) >= 2^b
-    bit test as the Spark side."""
+    """DuckDB expression mirroring ``simhash_table_pd`` given ``hs`` (list
+    of 60-bit ``gram_hash60_sql_duckdb`` shingle hashes) and ``n`` (shingle
+    count): bit b set when the majority of shingle hashes have bit b set,
+    tested as (v % 2^(b+1)) >= 2^b."""
     terms = []
     for b in range(60):
         lo, hi = 1 << b, 1 << (b + 1)
@@ -918,59 +904,6 @@ def components_sql_duckdb(edges_sql: str, nodes_sql: str,
     """
 
 
-def simhash64(text: Column, shingle_n: int = 2) -> Column:
-    """60-bit SimHash: bit b of the result is 1 when the majority of
-    shingles have bit b set in their 60-bit polynomial gram hash.
-
-    Pure array expressions; no UDF (parity path for ``simhash_table_pd``).
-    """
-    sh = shingles(text, shingle_n)
-    h = F.transform(sh, lambda s: gram_hash60(s))
-    n = F.size(sh)
-    def bit_pred(b: int):
-        # single-arg lambda via closure: a `b=b` default would make PySpark
-        # treat it as the two-arg (value, index) lambda form
-        lo, hi = 1 << b, 1 << (b + 1)
-        return lambda v: (v % F.lit(hi)) >= F.lit(lo)
-
-    bits = []
-    for b in range(60):
-        # bit test as pure arithmetic ((v % 2^(b+1)) >= 2^b)
-        ones = F.size(F.filter(h, bit_pred(b)))
-        bits.append(F.when(ones * 2 > n, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def simhash64_agg(docs: DataFrame, shingle_n: int = 2) -> DataFrame:
-    """Value-identical to ``simhash64`` but computed as explode + 60
-    codegen'd sum aggregates instead of per-row array lambdas (HOF lambdas
-    run interpreted; this path is ~10x faster and map-side-combines, so the
-    shuffle carries one row of bit counters per doc). Returns (doc, sh)."""
-    ex = _ensure_parallelism(docs).select(
-        F.col("doc_id").alias("doc"),
-        F.size(shingles(F.col("text"), shingle_n)).alias("n"),
-        F.explode(shingles(F.col("text"), shingle_n)).alias("g"),
-    )
-    h = ex.select(
-        "doc", "n",
-        gram_hash60(F.col("g")).alias("h"),
-    )
-    ones = [
-        F.sum(((F.col("h") % F.lit(1 << (b + 1))) >= F.lit(1 << b)).cast("int")).alias(f"_o{b}")
-        for b in range(60)
-    ]
-    per = h.groupBy("doc", "n").agg(*ones)
-    sh = None
-    for b in range(60):
-        bit = (F.when(F.col(f"_o{b}") * 2 > F.col("n"), F.lit(1 << b).cast("long"))
-               .otherwise(F.lit(0).cast("long")))
-        sh = bit if sh is None else sh + bit
-    return per.select("doc", sh.alias("sh"))
-
-
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
                       shingle_n: int = 2) -> DataFrame:
     """Near-dup pairs by SimHash: block on 16-bit chunks (a pair within
@@ -1004,53 +937,8 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
 KMV_SALT_PARTS = 32   # phase-1 fan-out of the per-key k-minimum cut
 
 
-def kmv_distinct(df: DataFrame, key_col: str, value_col: str,
-                 k: int = 64) -> DataFrame:
-    """K-minimum-values distinct-count sketch per key (Bar-Yossef et al.
-    — public construction): hash each distinct value with the shared
-    40-bit polynomial hash, keep the k smallest hashes per key, estimate
-    |distinct| ≈ (k−1) / (max_kept / HASH_M) when ≥ k values exist (else
-    the exact count). DETERMINISTIC — unlike HLL sketches, the same data
-    yields the same estimate on every engine, so the sketch itself is
-    oracle-checkable bit-for-bit (``kmv_distinct_sql_duckdb``).
-
-    Scale shape: hash → one distinct (of 8-byte hashes, not strings) →
-    salted two-phase top-k → one aggregate. No collect_list of unbounded
-    groups. The hash runs
-    through the vectorized NumPy kernel (``_poly_hash_batch`` via
-    mapInPandas), not the interpreted HOF Column path — the 64-element
-    zip_with/aggregate lambda chain runs in the expression interpreter
-    per row and was this query's dominant cost (~5x slower than the
-    Arrow-batched kernel). Values are identical (three-way non-BMP
-    parity pytest-asserted).
-    """
-    from pyspark.sql import Window
-
-    d = df.select(F.col(key_col).alias("key"), F.col(value_col).alias("val"))
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # factorize: value vocabularies repeat heavily, hash each
-            # distinct value once per Arrow batch
-            codes, uniq = pd.factorize(pdf["val"], use_na_sentinel=False)
-            vals = [v if isinstance(v, str) else "" for v in uniq]
-            hu = _poly_hash_batch(vals, _POWS1_NP).astype(np.int64)
-            yield pd.DataFrame({"key": pdf["key"], "h": hu[codes]})
-
-    # hash BEFORE deduplicating: the single distinct then shuffles (key,
-    # 8-byte hash) rows instead of (key, string) — a distinct-by-value
-    # pass first would add a full shuffle of the raw strings for an
-    # identical result (equal values hash equal, so the distinct hash
-    # SET is the same either way; that set is what the estimator reads)
-    ktype = dict(d.dtypes)["key"]
-    h = d.mapInPandas(run, schema=f"key {ktype}, h long").distinct()
-    return _kmv_estimate(h, k)
-
-
 def _kmv_estimate(h: DataFrame, k: int) -> DataFrame:
-    """Shared KMV tail over a (key, h) table: salted two-phase top-k →
+    """KMV tail over a (key, h) table: salted two-phase top-k →
     estimator. A sketch has FEW keys by construction (it summarizes per
     key), so a straight per-key window would funnel each key's whole
     distinct-hash set through one task at corpus scale. Phase 1 ranks
@@ -1081,14 +969,15 @@ def _kmv_estimate(h: DataFrame, k: int) -> DataFrame:
 
 def kmv_distinct_shingles(docs: DataFrame, key_col: str, text_col: str,
                           shingle_n: int, k: int = 64) -> DataFrame:
-    """Fused KMV over word-shingle vocabularies: shingling, hashing AND
-    per-batch (key, hash) dedup all happen inside one Arrow kernel, so
-    neither the shingle strings nor their per-document repetition ever
-    hit a shuffle — the single distinct downstream sees only the
-    already-deduplicated (key, 8-byte hash) pairs of each batch.
-    Value-identical to ``kmv_distinct`` over exploded ``shingles()``
-    (same ``_shingle_list``/``_poly_hash_batch`` kernels as the minhash
-    signatures; parity pytest-covered) and to the DuckDB oracle."""
+    """K-minimum-values distinct-count sketch (Bar-Yossef et al. — public
+    construction) per key over word-shingle vocabularies: keep the k
+    smallest distinct gram hashes, estimate |distinct| ≈ (k−1) /
+    (max_kept / HASH_M) when ≥ k exist (else the exact count).
+    Deterministic, unlike HLL, so the sketch itself is oracle-checkable
+    bit-for-bit (``kmv_distinct_sql_duckdb``). Shingling, hashing AND
+    per-batch (key, hash) dedup run in one Arrow kernel, so no shingle
+    string ever hits a shuffle. With ``shingle_n=1`` on one-word values
+    it counts distinct values."""
 
     d = docs.select(F.col(key_col).alias("key"), F.col(text_col).alias("val"))
 
@@ -1112,7 +1001,8 @@ def kmv_distinct_shingles(docs: DataFrame, key_col: str, text_col: str,
 
 def kmv_distinct_sql_duckdb(rel: str, key_col: str, value_col: str,
                             k: int = 64) -> str:
-    """DuckDB twin of :func:`kmv_distinct` (same hash, same estimator)."""
+    """DuckDB twin of :func:`kmv_distinct_shingles` over (key, shingle)
+    rows (same hash, same estimator)."""
     return f"""
     with _d as (select distinct {key_col} as key, {value_col} as val from {rel}),
     _h as (select distinct key, {hash40_sql_duckdb('val', 1)} as h from _d),

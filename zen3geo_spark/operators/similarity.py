@@ -58,41 +58,15 @@ def cosine_topk_bruteforce(queries: DataFrame, targets: DataFrame, k: int,
             .select("query_id", "target_id", "cos", "rk"))
 
 
-def cosine_near_dup_pairs(emb: DataFrame, threshold: float) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (a_id, b_id, cos) with
-    a_id < b_id and cos >= threshold.
-
-    This is the exactness baseline (all-pairs). It is deliberately a
-    broadcast nested-loop: the id inequality is the only join condition, so
-    use it when one side fits in memory or on bounded candidate sets; the
-    100 TB path blocks candidates first (``cosine_topk_lsh``'s hyperplane
-    buckets) and verifies pairs with this same cosine expression.
-    """
-    from zen3geo_spark.operators._util import ensure_parallelism
-
-    d = emb.select(F.col("vec_id").alias("_id"),
-                   _as_double(F.col("embedding")).alias("_v"))
-    left = d.select(F.col("_id").alias("a_id"), F.col("_v").alias("va"))
-    # the streamed (non-broadcast) side carries the O(n^2) cosine work:
-    # make sure it isn't a single scan partition
-    right = ensure_parallelism(
-        d.select(F.col("_id").alias("b_id"), F.col("_v").alias("vb"))
-    )
-    pairs = F.broadcast(left).join(right, F.col("a_id") < F.col("b_id"))
-    return (
-        pairs.select("a_id", "b_id", cosine(F.col("va"), F.col("vb")).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-
-
 NEAR_DUP_BLOCKS = 8
 
 
 def cosine_near_dup_pairs_blocked(emb: DataFrame,
                                   threshold: float) -> DataFrame:
     """Exact embedding-cosine near-dup pairs via block-matrix
-    decomposition — the distributed replacement for the all-pairs
-    nested-loop baseline (identical output, no join in the plan).
+    decomposition: every pair (a_id < b_id) with cosine >= ``threshold``,
+    with no join in the plan (an all-pairs id-inequality join would plan
+    as a broadcast nested loop).
 
     Each vector lands in block ``b = xxhash64(id) mod NEAR_DUP_BLOCKS``
     and is exploded to its ``NEAR_DUP_BLOCKS`` unordered block pairs
@@ -123,7 +97,9 @@ def cosine_near_dup_pairs_blocked(emb: DataFrame,
     exploded = d.select("_id", "_v", "_b", F.explode(mem).alias("_bp")).select(
         "_id", "_v", "_b", F.col("_bp.bi").alias("bi"), F.col("_bp.bj").alias("bj"))
 
-    def score(key, pdf: pd.DataFrame):
+    # unannotated on purpose: applyInPandas infers the eval type from any
+    # type hint and warns on every plan build when the hints are partial
+    def score(key, pdf):
         bi, bj = int(key[0]), int(key[1])
         ids = pdf["_id"].to_numpy()
         V = np.array(pdf["_v"].tolist(), dtype=np.float64)

@@ -192,34 +192,17 @@ LSH_HASHES, LSH_BANDS, LSH_SHINGLE = 16, 4, 3
 
 def streaming_lsh_candidates(docs: DataFrame) -> DataFrame:
     """Near-dup CANDIDATE pairs on a document stream: minhash signature
-    (same Column kernel as the batch path) → band buckets → per-bucket
-    anchor state → (a_id, b_id) with a = the bucket's first-ever doc.
-    Pairs may repeat across bands/batches; downstream dedups with the
-    same ``distinct()`` the batch pipeline uses. State: ONE long per
-    non-empty bucket, across micro-batches and availableNow runs."""
-    from pyspark.sql import functions as F
+    and band buckets from the batch path's kernels (``minhash_table_pd``,
+    a ``mapInPandas`` that runs on a stream, then ``band_rows``) →
+    per-bucket anchor state → (a_id, b_id) with a = the bucket's
+    first-ever doc. Pairs may repeat across bands/batches; downstream
+    dedups with the same ``distinct()`` the batch pipeline uses. State:
+    ONE long per non-empty bucket, across micro-batches and availableNow
+    runs."""
+    from zen3geo_spark.operators.dedup import band_rows, minhash_table_pd
 
-    from zen3geo_spark.operators.dedup import minhash_signature
-
-    rows_per_band = LSH_HASHES // LSH_BANDS
-    sig = docs.select(
-        F.col("doc_id").alias("doc"),
-        minhash_signature(F.col("text"), LSH_HASHES, LSH_SHINGLE).alias("sig"))
-    banded = sig.select(
-        "doc",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.array_join(
-                    F.transform(
-                        F.slice(F.col("sig"), b * rows_per_band + 1,
-                                rows_per_band),
-                        lambda v: v.cast("string"),
-                    ), "|")).alias("bucket"),
-            )
-            for b in range(LSH_BANDS)
-        ])).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
+    sig = minhash_table_pd(docs, num_hashes=LSH_HASHES, shingle_n=LSH_SHINGLE)
+    banded = band_rows(sig, LSH_HASHES, LSH_BANDS)
     return banded.groupBy("band", "bucket").applyInPandasWithState(
         _lsh_update, outputStructType=_LSH_OUT, stateStructType=_LSH_STATE,
         outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout,
